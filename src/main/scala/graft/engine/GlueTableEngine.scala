@@ -26,6 +26,12 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
   * read, and Spark executes it. No SQL re-serialization, no variables
   * — the idiomatic equivalents are documented per method.
   *
+  * Two caches, mirroring the reference's two (reference:
+  * src/glue-table-cache.ts:75-84): catalog metadata per table, and
+  * one [[TableSnapshot]] per table version — the file listing plus
+  * everything derived from it — so a listing and its derived state
+  * are loaded, evicted and invalidated together.
+  *
   * Scale notes (100 TB design):
   *  - Metadata and listings are driver-side and cached (LRU+TTL,
   *    single-flight) — O(#files) strings, never data.
@@ -48,36 +54,14 @@ final class GlueTableEngine(
 
   private def hadoopConf = Shim.classic(spark).sparkContext.hadoopConfiguration
   private val lister: FileLister = listerOverride.getOrElse(new HadoopFileLister(hadoopConf))
-  private lazy val iceberg = new IcebergSnapshotResolver(hadoopConf)
+  private[graft] lazy val iceberg = new IcebergSnapshotResolver(hadoopConf)
   private lazy val delta = new graft.listing.DeltaLogResolver(spark)
   private lazy val hudi = new graft.listing.HudiTimelineResolver(hadoopConf)
 
   // Two caches, mirroring the reference (src/glue-table-cache.ts:75-84).
   private val metaCache = new TtlCache[CachedTableMetadata](
     config.maxEntries, config.tableMetadataTtlMs, config.errorCacheTtlMs)
-  private val listingCache = new TtlCache[Seq[S3FileInfo]](
-    config.maxEntries, config.s3ListingTtlMs, config.errorCacheTtlMs)
-  // Derived from listingCache entries (typed partition values per
-  // file, see [[typedListing]]); same TTL, invalidated together.
-  private val typedCache = new TtlCache[(org.apache.spark.sql.types.StructType, Seq[org.apache.spark.sql.Row])](
-    config.maxEntries, config.s3ListingTtlMs, config.errorCacheTtlMs)
-  // Per-file column ranges for data skipping (see [[readTable]]);
-  // derived from the listing like typedCache, same TTL/invalidation.
-  private val statsCache = new TtlCache[Map[String, Map[String, graft.listing.ColRange]]](
-    config.maxEntries, config.s3ListingTtlMs, config.errorCacheTtlMs)
-  // Iceberg v2 delete files per table version (merge-on-read);
-  // same TTL/invalidation family as the listing.
-  private val deleteCache = new TtlCache[Seq[IcebergSnapshotResolver#IcebergDeleteFile]](
-    config.maxEntries, config.s3ListingTtlMs, config.errorCacheTtlMs)
-  // Canonical data-file path -> data sequence number per table
-  // version — scopes equality deletes (they apply only to files with
-  // a strictly smaller sequence); same TTL/invalidation family.
-  private val seqCache = new TtlCache[Map[String, Long]](
-    config.maxEntries, config.s3ListingTtlMs, config.errorCacheTtlMs)
-  // Delta deletion vectors per table version (merge-on-read row
-  // deletes: data-file path -> DV sidecar); same TTL/invalidation
-  // family as the listing.
-  private val dvCache = new TtlCache[Map[String, String]](
+  private val snapshots = new TtlCache[TableSnapshot](
     config.maxEntries, config.s3ListingTtlMs, config.errorCacheTtlMs)
 
   // ---------------------------------------------------------------- metadata
@@ -164,66 +148,152 @@ final class GlueTableEngine(
   /** Cached recursive file listing (≈ reference `__listS3FilesCached`
     * / `__listS3IcebergFilesCached`, src/glue-table-cache.ts:349-466).
     */
-  def files(database: String, table: String, versionOffset: Int = 0): Seq[S3FileInfo] = {
-    val meta = tableMetadata(database, table)
-    val key = s"$database.$table#v$versionOffset" // '.'/'#' delimiters: unambiguous for names with underscores
-    listingCache.get(key) {
-      Retry.withRetry() {
-        meta.tableType match {
-          case TableType.Iceberg =>
-            // Sizes AND identity-partition values come from the
-            // manifests themselves (spec fields
-            // `data_file.file_size_in_bytes` / `data_file.partition`)
-            // — zero extra metadata calls, and partitioned Iceberg
-            // tables prune like Hive ones (the reference never prunes
-            // Iceberg). Manifests carry no mtime; 0 = unknown.
-            iceberg.dataFilesDetailed(location(meta), versionOffset)
-              .map(f => S3FileInfo(f.path, f.partition, f.size, modTime = 0L,
-                bounds = f.bounds, rowCount = f.rowCount))
-          case TableType.Delta =>
-            // Same zero-extra-I/O contract as Iceberg: sizes,
-            // partition values, AND per-column stats ranges all come
-            // from the transaction log (add actions / checkpoint);
-            // the read path's skipping tier consumes the bounds
-            // without any footer reads. The SAME replay also yields
-            // the deletion-vector descriptors — ONE rawState replay
-            // feeds both, and priming dvCache here means
-            // countRows/readTable never replay the log (or re-read a
-            // checkpoint) just to learn whether DVs exist.
-            val (dfs, dvMap) =
-              delta.filesAndDeletionVectors(location(meta), versionOffset)
-            dvCache.get(s"$database.$table#dv#v$versionOffset")(dvMap)
-            dfs.map(f => S3FileInfo(f.path, f.partition, f.size, modTime = 0L,
-              bounds = f.bounds, rowCount = f.rowCount))
-          case TableType.Hudi =>
-            // COW latest-file-slice resolution from the .hoodie
-            // timeline: a directory listing would double-count every
-            // updated row (stale slice versions stay until cleaning).
-            // Hive-style partition segments in the path still prune
-            // via the standard extractors.
-            hudi.dataFilesDetailed(location(meta), versionOffset)
-              .map { f =>
-                // commit-stat partitionPaths use Hive k=v segments;
-                // surface them as listing partition values (parity
-                // with Delta/Iceberg listings — pruning itself works
-                // either way via the path extractors)
-                val pv = f.partitionPath.split('/').iterator
-                  .filter(_.contains('=')).map { seg =>
-                    val Array(k, v) = seg.split("=", 2)
-                    k -> java.net.URLDecoder.decode(v, "UTF-8")
-                  }.toMap
-                S3FileInfo(f.path, pv, f.size, modTime = 0L, bounds = Map.empty,
-                  rowCount = None) // Hudi commit stats carry no row counts
-              }
-          case _ =>
-            val root = lister.list(location(meta), meta.table.partitionKeys.map(_.name))
-            val external = outOfRootPartitions(meta).flatMap { case (pi, vals) =>
-              lister.list(pi.location.get, Nil).map(f => f.copy(partitionValues = vals))
-            }
-            root ++ external
-        }
+  def files(database: String, table: String, versionOffset: Int = 0): Seq[S3FileInfo] =
+    snapshot(database, table, versionOffset).files
+
+  /** One table version as the read path sees it: the file listing and
+    * everything the SAME metadata pass yields — Iceberg delete files,
+    * schema and partition spec from the one metadata JSON; Delta
+    * deletion vectors and schema from the one log replay; the Hudi
+    * schema from the timeline walk. The typed listing and the
+    * skipping stats are derived lazily, once per snapshot. One cache
+    * entry holds all of it, so a listing never pairs with derived
+    * state of another version.
+    */
+  private final class TableSnapshot(meta: CachedTableMetadata,
+      val files: Seq[S3FileInfo],
+      /** Schema the format's own metadata records (None: Hive/plain). */
+      val formatSchema: Option[StructType] = None,
+      /** Iceberg merge-on-read delete files. */
+      val deletes: Seq[IcebergSnapshotResolver#IcebergDeleteFile] = Nil,
+      /** Raw data-file path -> data sequence number; kept only when
+        * delete files exist (it scopes equality deletes). */
+      val dataSeq: Map[String, Long] = Map.empty,
+      /** Iceberg current partition spec `(field, source, transform)`. */
+      val specFields: Seq[(String, String, String)] = Nil,
+      /** Delta deletion vectors: data-file path -> DV sidecar. */
+      val dvs: Map[String, String] = Map.empty) {
+
+    /** The listing as collected local rows `(path, size, modTime,
+      * key1…keyN)`, partition values typed per [[partitionType]] — the
+      * driver-side seed of the [[PreListedFileIndex]]. Values are
+      * computed by the SAME extractor columns as [[listingDF]]
+      * (shared [[attachKeyColumns]]), so pruning and reading can never
+      * disagree on a partition value. One local job over O(#files)
+      * rows, driver-side metadata only.
+      */
+    lazy val typed: (StructType, Seq[Row]) = {
+      val pSchema = partitionSchemaOf(meta)
+      val sp = Shim.classic(spark)
+      import sp.implicits._
+      val base = files.map(f => (f.path, f.size, f.modTime, f.partitionValues))
+        .toList.toDF("path", "size", "modTime", "pv")
+      val typedDf = meta.table.partitionKeys.foldLeft(attachKeyColumns(meta, base)) {
+        (df, k) => df.withColumn(k.name, col(k.name).cast(pSchema(k.name).dataType))
       }
+      (pSchema, typedDf.drop("pv").collect().toSeq)
     }
+
+    /** Per-file column ranges for data skipping (see [[readTable]]),
+      * preferred source first —
+      *  1. Iceberg manifests' lower/upper_bounds and Delta add-action
+      *     stats: already decoded into the listing (S3FileInfo.bounds)
+      *     — zero extra I/O and no cap — this is the 10M-file path;
+      *  2. parquet/ORC footers, read once per snapshot on the driver
+      *     (parallel KB-scale GETs: serial footer GETs over S3 would
+      *     stall first-query planning by minutes at the cap) and
+      *     capped by footerStatsMaxFiles.
+      * Beyond the cap / for other formats / bound-less manifests the
+      * map stays empty and skipping degrades to a no-op.
+      */
+    lazy val stats: Map[String, Map[String, graft.listing.ColRange]] = {
+      val fmt = classification(meta)
+      val fromListing = files.filter(_.bounds.nonEmpty).map(f => f.path -> f.bounds).toMap
+      if (fromListing.nonEmpty) fromListing
+      else if ((fmt == "parquet" || fmt == "orc") &&
+          files.size <= config.footerStatsMaxFiles && config.footerStatsMaxFiles > 0) {
+        val read: String => Map[String, graft.listing.ColRange] =
+          if (fmt == "orc") graft.listing.FooterStats.readOrc(hadoopConf, _)
+          else graft.listing.FooterStats.read(hadoopConf, _)
+        onDriverPool(files.map(_.path))(p => p -> read(p)).toMap
+      } else Map.empty
+    }
+  }
+
+  private def snapshot(database: String, table: String, versionOffset: Int): TableSnapshot = {
+    val meta = tableMetadata(database, table)
+    // '.'/'#' delimiters: unambiguous for names with underscores
+    snapshots.get(s"$database.$table#v$versionOffset") {
+      Retry.withRetry()(loadSnapshot(meta, versionOffset))
+    }
+  }
+
+  private def loadSnapshot(meta: CachedTableMetadata, versionOffset: Int): TableSnapshot =
+    meta.tableType match {
+      case TableType.Iceberg =>
+        // Sizes AND identity-partition values come from the manifests
+        // themselves (spec fields `data_file.file_size_in_bytes` /
+        // `data_file.partition`) — zero extra metadata calls, and
+        // partitioned Iceberg tables prune like Hive ones (the
+        // reference never prunes Iceberg). Manifests carry no mtime;
+        // 0 = unknown.
+        val v = iceberg.resolve(location(meta), versionOffset)
+        new TableSnapshot(meta,
+          v.files.map(f => S3FileInfo(f.path, f.partition, f.size, modTime = 0L,
+            bounds = f.bounds, rowCount = f.rowCount)),
+          formatSchema = v.schema, deletes = v.deletes,
+          dataSeq = if (v.deletes.isEmpty) Map.empty else v.files.map(f => f.path -> f.seq).toMap,
+          specFields = v.specFields)
+      case TableType.Delta =>
+        // Same zero-extra-I/O contract as Iceberg: sizes, partition
+        // values, AND per-column stats ranges all come from the
+        // transaction log (add actions / checkpoint); the read path's
+        // skipping tier consumes the bounds without any footer reads.
+        // The SAME replay also yields the deletion-vector descriptors
+        // and the schema.
+        val (dfs, dvs, schema) = delta.versionAt(location(meta), versionOffset)
+        new TableSnapshot(meta,
+          dfs.map(f => S3FileInfo(f.path, f.partition, f.size, modTime = 0L,
+            bounds = f.bounds, rowCount = f.rowCount)),
+          formatSchema = schema, dvs = dvs)
+      case TableType.Hudi =>
+        // COW latest-file-slice resolution from the .hoodie timeline:
+        // a directory listing would double-count every updated row
+        // (stale slice versions stay until cleaning).
+        val (hfs, schema) = hudi.filesAndSchema(location(meta), versionOffset)
+        new TableSnapshot(meta, hfs.map { f =>
+          // commit-stat partitionPaths use Hive k=v segments; surface
+          // them as listing partition values (parity with Delta/Iceberg
+          // listings — pruning itself works either way via the path
+          // extractors)
+          val pv = f.partitionPath.split('/').iterator
+            .filter(_.contains('=')).map { seg =>
+              val Array(k, v) = seg.split("=", 2)
+              k -> java.net.URLDecoder.decode(v, "UTF-8")
+            }.toMap
+          S3FileInfo(f.path, pv, f.size, modTime = 0L, bounds = Map.empty,
+            rowCount = None) // Hudi commit stats carry no row counts
+        }, formatSchema = schema)
+      case _ =>
+        val root = lister.list(location(meta), meta.table.partitionKeys.map(_.name))
+        val external = outOfRootPartitions(meta).flatMap { case (pi, vals) =>
+          lister.list(pi.location.get, Nil).map(f => f.copy(partitionValues = vals))
+        }
+        new TableSnapshot(meta, root ++ external)
+    }
+
+  /** Run `f` over `xs` on a bounded driver-side thread pool — for
+    * KB-scale per-file metadata GETs (footers), which are
+    * latency-bound over object stores.
+    */
+  private def onDriverPool[A, B](xs: Seq[A])(f: A => B): Seq[B] = {
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(
+      math.min(16, math.max(1, xs.size)))
+    try {
+      import scala.jdk.CollectionConverters._
+      val tasks = xs.map(x => new java.util.concurrent.Callable[B] { override def call() = f(x) })
+      pool.invokeAll(tasks.asJava).asScala.map(_.get()).toSeq
+    } finally pool.shutdown()
   }
 
   /** The listing DataFrame: `path` + one extracted partition-value
@@ -246,7 +316,7 @@ final class GlueTableEngine(
   /** Attach one extracted partition-value column per key to a frame
     * with `path` (+ `pv`, the listing-time catalog values map)
     * columns. Shared by [[listingDF]] and the read path's
-    * [[typedListing]] so pruning and reading can never disagree on a
+    * [[TableSnapshot.typed]] so pruning and reading can never disagree on a
     * partition value.
     */
   private def attachKeyColumns(meta: CachedTableMetadata, base: DataFrame): DataFrame =
@@ -313,37 +383,18 @@ final class GlueTableEngine(
     */
   def countRows(database: String, table: String, versionOffset: Int = 0): Long = {
     val meta = tableMetadata(database, table)
-    val infos = files(database, table, versionOffset)
-    if (infos.isEmpty) return 0L
-    if (classification(meta) != "parquet")
+    val snap = snapshot(database, table, versionOffset)
+    if (snap.files.isEmpty) return 0L
+    // MOR deletes (Iceberg delete files, Delta deletion vectors)
+    // subtract rows that every per-file count (listing OR footer)
+    // still includes — only a real scan is exact
+    if (classification(meta) != "parquet" || snap.deletes.nonEmpty || snap.dvs.nonEmpty)
       return tableDF(database, table, versionOffset).count()
-    // MOR deletes subtract rows that every per-file count (listing
-    // OR footer) still includes — only a real scan is exact
-    if (meta.tableType == TableType.Iceberg &&
-        iceberg.deleteFilesDetailed(location(meta), versionOffset).nonEmpty)
-      return tableDF(database, table, versionOffset).count()
-    // same cache the listing build primes: job-free on a warm table
-    if (meta.tableType == TableType.Delta &&
-        dvCache.get(s"$database.$table#dv#v$versionOffset") {
-          delta.deletionVectors(location(meta), versionOffset)
-        }.nonEmpty)
-      return tableDF(database, table, versionOffset).count()
-    val (known, unknown) = infos.partition(_.rowCount.isDefined)
+    val (known, unknown) = snap.files.partition(_.rowCount.isDefined)
     val knownSum = known.flatMap(_.rowCount).sum
     if (unknown.isEmpty) return knownSum
     val conf = hadoopConf
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(16, math.max(1, unknown.size)))
-    val counts =
-      try {
-        import scala.jdk.CollectionConverters._
-        val tasks = unknown.map { f =>
-          new java.util.concurrent.Callable[Option[Long]] {
-            override def call() = graft.listing.FooterStats.rowCount(conf, f.path)
-          }
-        }
-        pool.invokeAll(tasks.asJava).asScala.map(_.get()).toSeq
-      } finally pool.shutdown()
+    val counts = onDriverPool(unknown)(f => graft.listing.FooterStats.rowCount(conf, f.path))
     if (counts.forall(_.isDefined)) knownSum + counts.flatten.sum
     else tableDF(database, table, versionOffset).count()
   }
@@ -478,11 +529,12 @@ final class GlueTableEngine(
     val meta = tableMetadata(database, table)
     require(meta.tableType == TableType.Delta,
       s"$database.$table is ${meta.tableType}, not a Delta table")
-    val loc = location(meta)
-    val fromFiles = files(database, table, fromOffset).map(_.path).toSet
-    val toFiles = files(database, table, toOffset).map(_.path).toSet
-    val dvFrom = delta.deletionVectors(loc, fromOffset)
-    val dvTo = delta.deletionVectors(loc, toOffset)
+    val from = snapshot(database, table, fromOffset)
+    val to = snapshot(database, table, toOffset)
+    val fromFiles = from.files.map(_.path).toSet
+    val toFiles = to.files.map(_.path).toSet
+    val dvFrom = from.dvs
+    val dvTo = to.dvs
     val ct = "_change_type"
     val legs = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     val added = toFiles -- fromFiles
@@ -511,7 +563,7 @@ final class GlueTableEngine(
       val pTo = posDf(dvTo)
       // mapped tables: raw files carry PHYSICAL names; the other legs
       // (readTable) emit logical ones — rename so the union agrees
-      val mapping = delta.dataSchemaAt(loc, toOffset)
+      val mapping = to.formatSchema
         .map(graft.listing.DeltaLogWriter.mappingOf).getOrElse(Map.empty)
       val raw0 = mapping.foldLeft(spark.read.parquet(dvChanged: _*)) {
           case (d, (l, ph)) => d.withColumnRenamed(ph, l)
@@ -559,9 +611,10 @@ final class GlueTableEngine(
     val meta = tableMetadata(database, table)
     require(meta.tableType == TableType.Iceberg,
       s"$database.$table is ${meta.tableType}, not an Iceberg table")
-    val loc = location(meta)
-    val fromFiles = files(database, table, fromOffset).map(_.path).toSet
-    val toFiles = files(database, table, toOffset).map(_.path).toSet
+    val from = snapshot(database, table, fromOffset)
+    val to = snapshot(database, table, toOffset)
+    val fromFiles = from.files.map(_.path).toSet
+    val toFiles = to.files.map(_.path).toSet
     val ct = "_change_type"
     val legs = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     val added = toFiles -- fromFiles
@@ -572,8 +625,8 @@ final class GlueTableEngine(
     if (removed.nonEmpty)
       legs += readTable(database, table, fromOffset, keep = Some(removed), proxied = false)
         .withColumn(ct, lit("delete"))
-    val delFrom = iceberg.deleteFilesDetailed(loc, fromOffset)
-    val delTo = iceberg.deleteFilesDetailed(loc, toOffset)
+    val delFrom = from.deletes
+    val delTo = to.deletes
     val delDelta = (delTo.map(_.path).toSet -- delFrom.map(_.path).toSet) ++
       (delFrom.map(_.path).toSet -- delTo.map(_.path).toSet)
     if (delDelta.nonEmpty) {
@@ -591,7 +644,7 @@ final class GlueTableEngine(
       // what the files hold); the legs project physical->logical in
       // ONE select at construction — mirroring the Delta changelog leg.
       val toLogical: DataFrame => DataFrame = {
-        val mapping = iceberg.dataSchemaAt(loc, toOffset)
+        val mapping = to.formatSchema
           .map(IcebergSnapshotResolver.mappingOf).getOrElse(Map.empty)
         if (mapping.isEmpty) identity
         else {
@@ -659,11 +712,12 @@ final class GlueTableEngine(
         // head sequence makes every older common file a candidate —
         // that rescan is the inherent cost of exact net row-level
         // CDC over predicate deletes, paid only on ranges that
-        // contain one.
-        val seqFrom = iceberg.dataFilesDetailed(loc, fromOffset)
-          .map(f => canonPath(f.path) -> f.seq).toMap
-        val seqTo = iceberg.dataFilesDetailed(loc, toOffset)
-          .map(f => canonPath(f.path) -> f.seq).toMap
+        // contain one. A version without delete files keeps no
+        // sequence numbers; a common file's data sequence is the same
+        // in both versions, and the version holding the changed delete
+        // keeps them.
+        val seqFrom = from.dataSeq.map { case (p, sq) => canonPath(p) -> sq }
+        val seqTo = to.dataSeq.map { case (p, sq) => canonPath(p) -> sq }
         val posDeltaPaths = deltaDels.filter(_.content == 1).map(_.path).distinct.sorted
         val posNamed: Set[String] =
           if (posDeltaPaths.isEmpty) Set.empty
@@ -681,14 +735,11 @@ final class GlueTableEngine(
           val raw = spark.read.parquet(cands: _*)
             .withColumn("__lfp", canonPathCol(col("_metadata").getField("file_path")))
             .withColumn("__lpos", col("_metadata").getField("row_index"))
-          def livePos(dels: Seq[IcebergSnapshotResolver#IcebergDeleteFile],
-              off: Int): DataFrame = {
-            val seqMap = iceberg.dataFilesDetailed(loc, off).map(f => f.path -> f.seq).toMap
-            applyIcebergDeletes(raw, dels, seqMap)
+          def livePos(v: TableSnapshot): DataFrame =
+            applyIcebergDeletes(raw, v.deletes, v.dataSeq)
               .select(col("__lfp").as("__fp"), col("__lpos").as("__pos"))
-          }
-          val pFrom = livePos(delFrom, fromOffset)
-          val pTo = livePos(delTo, toOffset)
+          val pFrom = livePos(from)
+          val pTo = livePos(to)
           val newlyDel = pFrom.join(pTo, Seq("__fp", "__pos"), "left_anti")
           val revived = pTo.join(pFrom, Seq("__fp", "__pos"), "left_anti")
           def leg(pos: DataFrame, kind: String): DataFrame =
@@ -779,27 +830,22 @@ final class GlueTableEngine(
     * scale, where an inference pass would read the whole table once
     * before the query. Without declared columns, infer from a SINGLE
     * file (Spark's own non-mergeSchema parquet read is equally
-    * single-footer). Keyed by that file's path — data files are
-    * immutable, so a changed listing re-infers.
+    * single-footer). Inference is memoized by that file's path — data
+    * files are immutable, so a changed listing re-infers, and aliases
+    * of the same files share one inference. `formatSchema` is the
+    * snapshot's format-recorded schema ([[TableSnapshot]]).
     */
   private val inferredSchemas = scala.collection.concurrent.TrieMap.empty[String, StructType]
   private def dataSchemaOf(meta: CachedTableMetadata, fmt: String, firstPath: String,
-      versionOffset: Int = 0): StructType = {
+      formatSchema: Option[StructType]): StructType = {
     val declared = Option(meta.table.columns).filter(_.nonEmpty).map { cols =>
       StructType(cols.map(c => StructField(c.name, DataType.fromDDL(c.dataType))))
     }
     // DELTA: the log's metaData is the authoritative schema — under
     // additive evolution, single-file inference would read from a
-    // pre-evolution file and silently drop the added columns. Cached
-    // per table+offset; invalidateTable clears it.
+    // pre-evolution file and silently drop the added columns.
     val fromLog: Option[StructType] =
-      if (declared.isEmpty && meta.tableType == TableType.Delta) {
-        val k = s"${meta.table.database}.${meta.table.name}#logschema#v$versionOffset"
-        inferredSchemas.get(k).orElse {
-          val s = delta.dataSchemaAt(location(meta), versionOffset)
-          s.foreach(inferredSchemas.put(k, _)); s
-        }
-      } else None
+      if (declared.isEmpty && meta.tableType == TableType.Delta) formatSchema else None
     val raw = declared.orElse(fromLog).getOrElse(inferredSchemas.getOrElseUpdate(firstPath, fmt match {
       case "csv"  => spark.read.option("header", "true").option("inferSchema", "true").csv(firstPath).schema
       case "json" => spark.read.json(firstPath).schema
@@ -817,16 +863,9 @@ final class GlueTableEngine(
     val extended =
       if (declared.isEmpty &&
           (meta.tableType == TableType.Iceberg || meta.tableType == TableType.Hudi)) {
-        val k = s"${meta.table.database}.${meta.table.name}#logschema#v$versionOffset"
-        val metaSchema = inferredSchemas.get(k).orElse {
-          val s =
-            if (meta.tableType == TableType.Iceberg)
-              iceberg.dataSchemaAt(location(meta), versionOffset)
-            else // Hudi: per-commit schema in the timeline's extraMetadata
-              graft.listing.HudiTimelineWriter.dataSchemaAt(spark, location(meta), versionOffset)
-          s.foreach(inferredSchemas.put(k, _)); s
-        }
-        metaSchema.fold(raw) { ms =>
+        // the metadata JSON's schema (Iceberg) / the timeline's
+        // per-commit schema (Hudi)
+        formatSchema.fold(raw) { ms =>
           // MAPPED mode (a rename/drop happened): the metadata/
           // timeline schema is AUTHORITATIVE, not an extension —
           // inference from a file would resurrect dropped bytes and
@@ -846,34 +885,6 @@ final class GlueTableEngine(
     val keyNames = meta.table.partitionKeys.map(_.name.toLowerCase).toSet
     StructType(extended.filterNot(f => keyNames.contains(f.name.toLowerCase)))
   }
-
-  // -------- typed listing
-
-  /** The full listing of one table version as collected local rows
-    * `(path, size, modTime, key1…keyN)`, partition values typed per
-    * [[partitionType]] — the driver-side seed of the
-    * [[PreListedFileIndex]]. Values are computed by the SAME
-    * extractor columns as [[listingDF]] (shared
-    * [[attachKeyColumns]]), so pruning and reading can never disagree
-    * on a partition value. Cached with the listing TTL: the
-    * evaluation is one local job over O(#files) rows, driver-side
-    * metadata only — same cost class as the listing itself.
-    */
-  private def typedListing(database: String, table: String,
-      versionOffset: Int): (StructType, Seq[Row]) =
-    typedCache.get(s"$database.$table#typed#v$versionOffset") {
-      val meta = tableMetadata(database, table)
-      val infos = files(database, table, versionOffset)
-      val pSchema = partitionSchemaOf(meta)
-      val sp = Shim.classic(spark)
-      import sp.implicits._
-      val base = infos.map(f => (f.path, f.size, f.modTime, f.partitionValues))
-        .toList.toDF("path", "size", "modTime", "pv")
-      val typed = meta.table.partitionKeys.foldLeft(attachKeyColumns(meta, base)) {
-        (df, k) => df.withColumn(k.name, col(k.name).cast(pSchema(k.name).dataType))
-      }
-      (pSchema, typed.drop("pv").collect().toSeq)
-    }
 
   // -------- the read
 
@@ -896,7 +907,8 @@ final class GlueTableEngine(
   private def readTable(database: String, table: String, versionOffset: Int,
       keep: Option[Set[String]], proxied: Boolean): DataFrame = {
     val meta = tableMetadata(database, table)
-    val (pSchema, allRows) = typedListing(database, table, versionOffset)
+    val snap = snapshot(database, table, versionOffset)
+    val (pSchema, allRows) = snap.typed
     val rows = keep.fold(allRows)(k => allRows.filter(r => k(r.getString(0))))
     val fmt = classification(meta)
     if (rows.isEmpty)
@@ -918,7 +930,7 @@ final class GlueTableEngine(
           128L * 1024 * 1024, r.getLong(2), new HadoopPath(rewrite(r.getString(0)))))
         (ir, statuses)
       }
-    val dataSchema = dataSchemaOf(meta, fmt, rows.head.getString(0), versionOffset)
+    val dataSchema = dataSchemaOf(meta, fmt, rows.head.getString(0), snap.formatSchema)
     // COLUMN MAPPING (Delta name mode / Iceberg field-id renames): a
     // renamed table's files carry the original PHYSICAL column names;
     // the log/metadata schema carries the logical ones plus the
@@ -937,51 +949,13 @@ final class GlueTableEngine(
       if (colMapping.isEmpty) dataSchema
       else StructType(dataSchema.fields.map(f =>
         f.copy(name = colMapping.getOrElse(f.name, f.name))))
-    // File-level data skipping (Delta/Iceberg-style): per-file column
-    // ranges, preferred source first —
-    //  1. Iceberg manifests' lower/upper_bounds: already decoded into
-    //     the cached listing (S3FileInfo.bounds) — zero extra I/O and
-    //     no cap — this is the 10M-file path;
-    //  2. parquet/ORC footers, read once per listing TTL on the
-    //     driver (parallel KB-scale GETs) and capped by
-    //     footerStatsMaxFiles.
-    // Beyond the cap / for other formats / bound-less manifests the
-    // map stays empty and skipping degrades to a no-op.
-    val statsByPath: Map[String, Map[String, graft.listing.ColRange]] = {
-      val cached = statsCache.get(s"$database.$table#stats#v$versionOffset") {
-        val fromListing = files(database, table, versionOffset)
-          .filter(_.bounds.nonEmpty).map(f => f.path -> f.bounds).toMap
-        if (fromListing.nonEmpty) fromListing
-        else if ((fmt == "parquet" || fmt == "orc") &&
-            allRows.size <= config.footerStatsMaxFiles && config.footerStatsMaxFiles > 0) {
-          val read: String => Map[String, graft.listing.ColRange] =
-            if (fmt == "orc") graft.listing.FooterStats.readOrc(hadoopConf, _)
-            else graft.listing.FooterStats.read(hadoopConf, _)
-          // parallel driver-side fetch: serial footer GETs over S3
-          // (~tens of ms each) would stall first-query planning by
-          // minutes at the cap
-          val pool = java.util.concurrent.Executors.newFixedThreadPool(
-            math.min(16, math.max(1, allRows.size)))
-          try {
-            import scala.jdk.CollectionConverters._
-            val tasks = allRows.map { r =>
-              val p = r.getString(0)
-              new java.util.concurrent.Callable[(String, Map[String, graft.listing.ColRange])] {
-                override def call() = p -> read(p)
-              }
-            }
-            pool.invokeAll(tasks.asJava).asScala.map(_.get()).toMap
-          } finally pool.shutdown()
-        } else Map.empty[String, Map[String, graft.listing.ColRange]]
-      }
-      val visible = if (proxied) cached.map { case (p, s) => rewrite(p) -> s } else cached
-      // Key by Hadoop Path canonical form: listFiles looks ranges up
-      // via FileStatus.getPath.toString, which normalizes the raw
-      // listing string (duplicate slashes in S3 keys, trailing
-      // slashes). A key/lookup mismatch is safe but silently turns
-      // skipping off for that file.
-      visible.map { case (p, s) => new HadoopPath(p).toString -> s }
-    }
+    // File-level data skipping (Delta/Iceberg-style): the snapshot's
+    // per-file column ranges, keyed by Hadoop Path canonical form:
+    // listFiles looks ranges up via FileStatus.getPath.toString, which
+    // normalizes the raw listing string (duplicate slashes in S3 keys,
+    // trailing slashes). A key/lookup mismatch is safe but silently
+    // turns skipping off for that file.
+    val statsByPath = snap.stats.map { case (p, st) => new HadoopPath(rewrite(p)).toString -> st }
     val options: Map[String, String] = fmt match {
       // With a declared schema Spark binds CSV columns BY POSITION
       // and ignores header names; enforceSchema=false makes every
@@ -1004,31 +978,17 @@ final class GlueTableEngine(
     // broadcasts; equality deletes anti-join null-safely on their
     // declared columns. Cost ∝ delete-file rows, never a data rewrite
     // — exactly Iceberg's own MOR contract.
-    val merged = if (meta.tableType == TableType.Iceberg) {
-      val deletes = deleteCache.get(s"${meta.table.database}.${meta.table.name}#del#v$versionOffset") {
-        iceberg.deleteFilesDetailed(location(meta), versionOffset)
-      }
-      if (deletes.isEmpty) base
+    // Delta merge-on-read subtracts deletion-vector rows: the same
+    // anti-join shape as Iceberg position deletes; per live
+    // descriptor, only rows naming files that CURRENTLY point at that
+    // sidecar apply (a superseded sidecar's rows for a re-DV'd file
+    // are a subset of its replacement's, and a rewritten file has a
+    // new physical path its old rows can never match).
+    val merged =
+      if (snap.deletes.nonEmpty) applyIcebergDeletes(base, snap.deletes, snap.dataSeq)
+      else if (snap.dvs.isEmpty) base
       else {
-        val dataSeq = seqCache.get(s"${meta.table.database}.${meta.table.name}#seq#v$versionOffset") {
-          iceberg.dataFilesDetailed(location(meta), versionOffset)
-            .map(f => f.path -> f.seq).toMap // raw paths; canonicalized at join time
-        }
-        applyIcebergDeletes(base, deletes, dataSeq)
-      }
-    } else if (meta.tableType == TableType.Delta) {
-      // Delta merge-on-read: subtract deletion-vector rows. Same
-      // anti-join shape as Iceberg position deletes; per live
-      // descriptor, only rows naming files that CURRENTLY point at
-      // that sidecar apply (a superseded sidecar's rows for a re-DV'd
-      // file are a subset of its replacement's, and a rewritten file
-      // has a new physical path its old rows can never match).
-      val dvs = dvCache.get(s"${meta.table.database}.${meta.table.name}#dv#v$versionOffset") {
-        delta.deletionVectors(location(meta), versionOffset)
-      }
-      if (dvs.isEmpty) base
-      else {
-        val del = dvs.groupBy(_._2).toSeq.sortBy(_._1).map { case (dvPath, m) =>
+        val del = snap.dvs.groupBy(_._2).toSeq.sortBy(_._1).map { case (dvPath, m) =>
           // canonPath (NOT .toUri.getPath, which drops the authority
           // of object-store URIs) so the isin literals match the
           // sidecar's canonPathCol-canonicalized file_path values
@@ -1045,7 +1005,6 @@ final class GlueTableEngine(
             col("__fp") === col("__del_fp") && col("__pos") === col("__del_pos"), "left_anti")
           .drop("__fp", "__pos")
       }
-    } else base
     if (colMapping.isEmpty) merged
     else merged.select(
       dataSchema.fields.toSeq.map(f =>
@@ -1053,21 +1012,6 @@ final class GlueTableEngine(
         pSchema.fields.toSeq.map(f => col(f.name)): _*)
   }
 
-  /** Scheme-insensitive canonical path column (delete files record
-    * raw writer paths; `_metadata.file_path` is a qualified URI).
-    *
-    * Also DECODES URI %-escapes: `_metadata.file_path` is a proper
-    * URI where a space in a partition value rides as `%20`, while
-    * manifests/logs carry the literal writer path — without decoding,
-    * every path-keyed comparison (MOR delete application, DV sidecar
-    * filters, changelog legs, sequence scoping) silently missed files
-    * in any partition whose value URI-encodes (found via a partitioned
-    * `4-NOT SPECIFIED` changelog: eq-delete seq scoping missed the
-    * encoded paths and killed same-sequence merge rows). Literal `+`
-    * is protected first (url_decode is form-decoding), and an
-    * undecodable stray `%` falls back to the raw form — which is what
-    * the driver-side [[canonPath]] preserves for the same string.
-    */
   /** Fixed-point form for PERSISTING canonical paths in delete/DV
     * sidecar files: escape every residual `%` as `%25` so that
     * [[canonPathCol]] applied to the STORED value decodes back to
@@ -1085,6 +1029,21 @@ final class GlueTableEngine(
   private[graft] def storedPathCol(c: Column): Column =
     regexp_replace(c, "%", "%25")
 
+  /** Scheme-insensitive canonical path column (delete files record
+    * raw writer paths; `_metadata.file_path` is a qualified URI).
+    *
+    * Also DECODES URI %-escapes: `_metadata.file_path` is a proper
+    * URI where a space in a partition value rides as `%20`, while
+    * manifests/logs carry the literal writer path — without decoding,
+    * every path-keyed comparison (MOR delete application, DV sidecar
+    * filters, changelog legs, sequence scoping) silently missed files
+    * in any partition whose value URI-encodes (found via a partitioned
+    * `4-NOT SPECIFIED` changelog: eq-delete seq scoping missed the
+    * encoded paths and killed same-sequence merge rows). Literal `+`
+    * is protected first (url_decode is form-decoding), and an
+    * undecodable stray `%` falls back to the raw form — which is what
+    * the driver-side [[canonPath]] preserves for the same string.
+    */
   private[graft] def canonPathCol(c: Column): Column = {
     val stripped = regexp_replace(c, "^[A-Za-z][A-Za-z0-9+.-]*:/+", "/")
     // %-gate: url_decode is only REACHED for paths that carry an
@@ -1232,6 +1191,17 @@ final class GlueTableEngine(
       name
     }
 
+  /** One-call textual conversion — the `convertGlueTableQuery`
+    * equivalent (reference: src/glue-table-cache.ts:242-251, which
+    * returns setup SQL ++ transformed query as one string): registers
+    * the `GLUE__db_tbl` views ([[setupFor]]) and returns the
+    * rewritten statement with the view names they now resolve to.
+    * `spark.sql(result.sql)` is runnable immediately;
+    * `result.toString` is the shippable combined artifact.
+    */
+  def convertGlueTableQuery(sql: String): GlueTableEngine.ConvertedQuery =
+    GlueTableEngine.ConvertedQuery(setupFor(sql), rewrittenSql(sql))
+
   /** Reference-parity textual surface (≈ the rewritten-query half of
     * `convertGlueTableQuery`, reference: src/glue-table-cache.ts:
     * 242-251): the input SQL with every `glue.db.tbl` reference
@@ -1246,17 +1216,6 @@ final class GlueTableEngine(
     * textual substitution is regex-based, handling optional backtick
     * quoting and the 2-part `glue.tbl` shorthand.
     */
-  /** One-call textual conversion — the `convertGlueTableQuery`
-    * equivalent (reference: src/glue-table-cache.ts:242-251, which
-    * returns setup SQL ++ transformed query as one string): registers
-    * the `GLUE__db_tbl` views ([[setupFor]]) and returns the
-    * rewritten statement with the view names they now resolve to.
-    * `spark.sql(result.sql)` is runnable immediately;
-    * `result.toString` is the shippable combined artifact.
-    */
-  def convertGlueTableQuery(sql: String): GlueTableEngine.ConvertedQuery =
-    GlueTableEngine.ConvertedQuery(setupFor(sql), rewrittenSql(sql))
-
   def rewrittenSql(sql: String): String =
     glueTableRefs(sql).foldLeft(sql) { case (s, (db, tbl)) =>
       val view = java.util.regex.Matcher.quoteReplacement(Naming.viewName(db, tbl))
@@ -1686,9 +1645,9 @@ final class GlueTableEngine(
     */
   private def icebergHiddenKeep(ref: GlueRefId, cond: Expression,
       quals: Set[String]): Option[Set[String]] = {
-    val meta = tableMetadata(ref.database, ref.table)
-    if (meta.tableType != TableType.Iceberg) return None
-    val specs = iceberg.hiddenSpecs(location(meta))
+    if (tableMetadata(ref.database, ref.table).tableType != TableType.Iceberg) return None
+    val snap = snapshot(ref.database, ref.table, 0)
+    val specs = snap.specFields.filter(_._3 != "identity")
     if (specs.isEmpty) return None
     import org.apache.spark.sql.catalyst.{expressions => ce}
     def split(e: Expression): Seq[Expression] = e match {
@@ -1808,7 +1767,7 @@ final class GlueTableEngine(
       }
     }
     if (fieldPreds.isEmpty) return None
-    val keep = files(ref.database, ref.table).filter { f =>
+    val keep = snap.files.filter { f =>
       fieldPreds.forall { case (field, ok) =>
         f.partitionValues.get(field) match {
           case Some(v) => ok(v)
@@ -1821,8 +1780,8 @@ final class GlueTableEngine(
 
   /** Append a batch to a registered Iceberg table as its next
     * snapshot. Returns the new sequence number.
-    */
-  /** `evolve = true` permits ADDITIVE schema evolution: a batch whose
+    *
+    * `evolve = true` permits ADDITIVE schema evolution: a batch whose
     * schema extends the table's as a strict prefix appends new
     * trailing columns (positional field ids stay stable), the evolved
     * schema publishes with the commit, and pre-evolution files read
@@ -2431,8 +2390,8 @@ final class GlueTableEngine(
 
   /** Append a batch to a registered Hudi table as its next completed
     * instant (new file groups — a pure insert). Returns the instant.
-    */
-  /** `evolve = true` permits ADDITIVE schema evolution, mirroring the
+    *
+    * `evolve = true` permits ADDITIVE schema evolution, mirroring the
     * Delta (g40) and Iceberg (g44) contracts: a batch whose schema
     * extends the table's recorded schema as a strict prefix appends
     * new trailing columns (the commit records the evolved schema in
@@ -2570,14 +2529,6 @@ final class GlueTableEngine(
     instant
   }
 
-  /** Iceberg small-file compaction (the OPTIMIZE analog): rewrite
-    * the live row set — with any merge-on-read deletes APPLIED — as
-    * `ceil(bytes/target)` files in one REWRITE snapshot whose
-    * manifest list references only the new manifest. Retired data
-    * and delete files stop being referenced (physical reclamation is
-    * [[expireIcebergSnapshots]]); earlier snapshots still
-    * time-travel. Returns the new sequence number.
-    */
   /** ROLLBACK a registered Iceberg table to an earlier snapshot as a
     * new snapshot ([[graft.listing.IcebergWriter.rollback]]): after
     * this, the latest read equals the time-travel read at
@@ -2594,6 +2545,14 @@ final class GlueTableEngine(
     v
   }
 
+  /** Iceberg small-file compaction (the OPTIMIZE analog): rewrite
+    * the live row set — with any merge-on-read deletes APPLIED — as
+    * `ceil(bytes/target)` files in one REWRITE snapshot whose
+    * manifest list references only the new manifest. Retired data
+    * and delete files stop being referenced (physical reclamation is
+    * [[expireIcebergSnapshots]]); earlier snapshots still
+    * time-travel. Returns the new sequence number.
+    */
   def compactIcebergTable(database: String, table: String,
       targetFileBytes: Long = 128L * 1024 * 1024): Long = {
     require(targetFileBytes > 0, "targetFileBytes must be positive")
@@ -2639,8 +2598,8 @@ final class GlueTableEngine(
     // manifestFiles walk spans every snapshot of a retained version);
     // this closes the data-file half.
     val keepData = ((0 until retainVersions).flatMap { off =>
-      iceberg.dataFilesDetailed(root, off).map(f => canonPath(f.path)) ++
-        iceberg.deleteFilesDetailed(root, off).map(f => canonPath(f.path))
+      val v = iceberg.resolve(root, off)
+      (v.files.map(_.path) ++ v.deletes.map(_.path)).map(canonPath)
     } ++ iceberg.refReachableFiles(root).map(canonPath)).toSet
     val keepMeta = (0 until retainVersions)
       .flatMap(off => iceberg.manifestFiles(root, off).map(canonPath)).toSet
@@ -2748,10 +2707,13 @@ final class GlueTableEngine(
     val fs = new HadoopPath(root).getFileSystem(hadoopConf)
     // live deletion-vector sidecars are referenced files too — a
     // vacuum that reclaimed one would silently RESURRECT its deleted
-    // rows on the next read
-    val referenced = (0 until retainVersions)
-      .flatMap(off => files(database, table, off).map(f => canonPath(f.path)) ++
-        delta.deletionVectors(root, off).values.map(canonPath)).toSet
+    // rows on the next read. Resolved fresh, never from the read
+    // cache: a snapshot cached before another writer's commit would
+    // miss that commit's data files and sidecars.
+    val referenced = (0 until retainVersions).flatMap { off =>
+      val (adds, dvs, _) = delta.versionAt(root, off)
+      (adds.map(_.path) ++ dvs.values).map(canonPath)
+    }.toSet
     def walk(p: HadoopPath): Seq[HadoopPath] =
       fs.listStatus(p).toSeq.flatMap { st =>
         val name = st.getPath.getName
@@ -2878,24 +2840,16 @@ final class GlueTableEngine(
 
   /** ≈ reference `clearCache` (src/glue-table-cache.ts:124-127). */
   def clearCache(): Unit = {
-    metaCache.invalidateAll(); listingCache.invalidateAll(); typedCache.invalidateAll()
-    statsCache.invalidateAll(); deleteCache.invalidateAll(); seqCache.invalidateAll()
+    metaCache.invalidateAll(); snapshots.invalidateAll()
   }
 
   /** ≈ reference `invalidateTable` (src/glue-table-cache.ts:206-215):
-    * drop the metadata key and every listing key containing
-    * `<db>_<tbl>`.
+    * drop the metadata key and every snapshot key containing
+    * `<db>.<tbl>`.
     */
   def invalidateTable(database: String, table: String): Unit = {
     metaCache.invalidate(s"$database.$table")
-    listingCache.invalidateMatching(s"$database.$table")
-    typedCache.invalidateMatching(s"$database.$table")
-    statsCache.invalidateMatching(s"$database.$table")
-    deleteCache.invalidateMatching(s"$database.$table")
-    seqCache.invalidateMatching(s"$database.$table")
-    dvCache.invalidateMatching(s"$database.$table")
-    inferredSchemas.keys.filter(_.startsWith(s"$database.$table#"))
-      .foreach(inferredSchemas.remove)
+    snapshots.invalidateMatching(s"$database.$table")
   }
 
   /** ≈ reference `close` (drops caches; the SparkSession is shared

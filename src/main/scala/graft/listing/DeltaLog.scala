@@ -924,11 +924,12 @@ final class DeltaLogResolver(spark: SparkSession) {
     * partition columns of the scan.
     */
   def dataSchemaAt(location: String, versionOffset: Int = 0): Option[StructType] =
-    rawState(location, versionOffset).flatMap { st =>
-      st.schemaString.flatMap(parseSchema).map { s =>
-        val pc = st.partitionColumns.map(_.toLowerCase).toSet
-        StructType(s.filterNot(f => pc.contains(f.name.toLowerCase)))
-      }
+    rawState(location, versionOffset).flatMap(dataSchemaOf)
+
+  private def dataSchemaOf(st: RawDeltaState): Option[StructType] =
+    st.schemaString.flatMap(parseSchema).map { s =>
+      val pc = st.partitionColumns.map(_.toLowerCase).toSet
+      StructType(s.filterNot(f => pc.contains(f.name.toLowerCase)))
     }
 
   /** Commit-time prior state in ONE log replay: (data schema if the
@@ -938,12 +939,7 @@ final class DeltaLogResolver(spark: SparkSession) {
     */
   private[listing] def commitState(location: String)
       : Option[(Option[StructType], Seq[String])] =
-    rawState(location, 0).map { st =>
-      val pc = st.partitionColumns.map(_.toLowerCase).toSet
-      (st.schemaString.flatMap(parseSchema).map(s =>
-        StructType(s.filterNot(f => pc.contains(f.name.toLowerCase)))),
-        st.partitionColumns)
-    }
+    rawState(location, 0).map(st => (dataSchemaOf(st), st.partitionColumns))
 
   /** Live data files of the selected version (latest − offset). */
   def dataFilesDetailed(location: String, versionOffset: Int = 0): Seq[DeltaDataFile] =
@@ -964,7 +960,17 @@ final class DeltaLogResolver(spark: SparkSession) {
     */
   def filesAndDeletionVectors(location: String,
       versionOffset: Int = 0): (Seq[DeltaDataFile], Map[String, String]) = {
-    val st = rawState(location, versionOffset).getOrElse(return (Nil, Map.empty))
+    val (files, dvs, _) = versionAt(location, versionOffset)
+    (files, dvs)
+  }
+
+  /** [[filesAndDeletionVectors]] plus [[dataSchemaAt]], from one log
+    * listing and one replay — everything a reader's snapshot of the
+    * version holds.
+    */
+  def versionAt(location: String, versionOffset: Int = 0)
+      : (Seq[DeltaDataFile], Map[String, String], Option[StructType]) = {
+    val st = rawState(location, versionOffset).getOrElse(return (Nil, Map.empty, None))
     // bounds are typed AND keyed by the PHYSICAL schema: add-action
     // stats carry the parquet column names, and the read path's
     // skipping tier evaluates pushed predicates against the physical
@@ -982,7 +988,7 @@ final class DeltaLogResolver(spark: SparkSession) {
         a.stats.flatMap(numRecordsOf))
     }.sortBy(_.path)
     val dvs = st.adds.collect { case a if a.dv.isDefined => a.path -> a.dv.get }.toMap
-    (files, dvs)
+    (files, dvs, dataSchemaOf(st))
   }
 
   /** `stats.numRecords` of one add action — unparseable/absent is

@@ -1,6 +1,6 @@
 package graft.listing
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 
@@ -42,26 +42,36 @@ final class HudiTimelineResolver(hadoopConf: Configuration) {
 
   private val InstantRe = """(\d+)\.(commit|replacecommit)""".r
 
-  def dataFilesDetailed(location: String, versionOffset: Int = 0): Seq[HudiDataFile] = {
+  def dataFilesDetailed(location: String, versionOffset: Int = 0): Seq[HudiDataFile] =
+    filesAndSchema(location, versionOffset)._1
+
+  /** Live data files AND the table schema as of the selected instant
+    * (the newest recorded schema at or before it, see
+    * [[HudiTimelineWriter.dataSchemaAt]]), from ONE timeline walk.
+    */
+  def filesAndSchema(location: String, versionOffset: Int = 0)
+      : (Seq[HudiDataFile], Option[org.apache.spark.sql.types.StructType]) = {
     require(versionOffset >= 0, s"versionOffset must be >= 0: $versionOffset")
     val root = location.stripSuffix("/")
     val tl = new Path(s"$root/.hoodie")
     val fs = tl.getFileSystem(hadoopConf)
-    if (!fs.exists(tl)) return Nil
+    if (!fs.exists(tl)) return (Nil, None)
     val completed = fs.listStatus(tl).toSeq.flatMap { st =>
       st.getPath.getName match {
         case InstantRe(instant, kind) => Some((instant, kind, st.getPath))
         case _                        => None
       }
     }.sortBy(_._1)
-    if (completed.size <= versionOffset) return Nil
+    if (completed.size <= versionOffset) return (Nil, None)
     val upTo = completed.dropRight(versionOffset)
 
     // fileId -> latest (instant, file); later commits win per group
     val live = scala.collection.mutable.LinkedHashMap.empty[String, HudiDataFile]
+    var extraMetadata = List.empty[JsonNode] // newest first
     upTo.foreach { case (instant, kind, p) =>
       val in = fs.open(p)
       val node = try mapper.readTree(in) finally in.close()
+      Option(node.get("extraMetadata")).foreach(em => extraMetadata ::= em)
       if (kind == "replacecommit")
         Option(node.get("partitionToReplaceFileIds")).foreach { m =>
           m.properties().asScala.foreach(_.getValue.elements().asScala
@@ -82,7 +92,8 @@ final class HudiTimelineResolver(hadoopConf: Configuration) {
         }
       }
     }
-    live.values.toSeq.sortBy(_.path)
+    (live.values.toSeq.sortBy(_.path),
+      extraMetadata.iterator.flatMap(HudiTimelineWriter.schemaOf).nextOption())
   }
 }
 
@@ -525,16 +536,19 @@ object HudiTimelineWriter {
       .iterator.flatMap { st =>
         val in = fs.open(st.getPath)
         val node = try mapper.readTree(in) finally in.close()
-        Option(node.get("extraMetadata")).flatMap { em =>
-          // json form first: DDL loses the column-mapping annotations
-          Option(em.get("graft-schema-json")).map(_.asText())
-            .map(j => org.apache.spark.sql.types.DataType.fromJson(j)
-              .asInstanceOf[org.apache.spark.sql.types.StructType])
-            .orElse(Option(em.get("graft-schema")).map(_.asText())
-              .map(org.apache.spark.sql.types.StructType.fromDDL))
-        }
+        Option(node.get("extraMetadata")).flatMap(schemaOf)
       }.nextOption()
   }
+
+  /** The schema one commit's extraMetadata records, if any. */
+  private[listing] def schemaOf(extraMetadata: JsonNode)
+      : Option[org.apache.spark.sql.types.StructType] =
+    // json form first: DDL loses the column-mapping annotations
+    Option(extraMetadata.get("graft-schema-json")).map(_.asText())
+      .map(j => org.apache.spark.sql.types.DataType.fromJson(j)
+        .asInstanceOf[org.apache.spark.sql.types.StructType])
+      .orElse(Option(extraMetadata.get("graft-schema")).map(_.asText())
+        .map(org.apache.spark.sql.types.StructType.fromDDL))
 
   /** RENAME a column as a METADATA-ONLY instant — zero slices
     * rewritten: the timeline schema (the reader's authority) renames

@@ -101,15 +101,27 @@ final class IcebergSnapshotResolver(hadoopConf: Configuration) {
       /** The delete's sequence number; 0 = unknown (applies unscoped). */
       seq: Long = 0L)
 
-  /** Data files of the selected snapshot — manifests carry
-    * `data_file.file_size_in_bytes` and `data_file.partition`, so the
-    * read path can build `FileStatus`es AND prune identity partitions
-    * without touching the filesystem again. At 100 TB this is the
-    * difference between planning from KB-scale manifests and a
-    * million-object LIST+HEAD storm.
+  /** Everything one metadata version yields in one pass: its live
+    * data files (manifests carry `data_file.file_size_in_bytes` and
+    * `data_file.partition`, so the read path builds `FileStatus`es
+    * AND prunes identity partitions without touching the filesystem
+    * again), its live delete files, and the schema and partition spec
+    * of the same metadata JSON. At 100 TB this is the difference
+    * between planning from KB-scale manifests and a million-object
+    * LIST+HEAD storm.
     */
+  final case class IcebergVersion(files: Seq[IcebergDataFile],
+      deletes: Seq[IcebergDeleteFile],
+      schema: Option[org.apache.spark.sql.types.StructType],
+      specFields: Seq[(String, String, String)])
+
+  /** Metadata passes (list, parse and order the metadata JSONs) made
+    * by this resolver — test instrumentation for the one-pass-per-
+    * version contract. */
+  private[graft] val resolveCount = new java.util.concurrent.atomic.AtomicLong()
+
   def dataFilesDetailed(location: String, versionOffset: Int = 0): Seq[IcebergDataFile] =
-    resolveFiles(location, versionOffset)._1
+    resolve(location, versionOffset).files
 
   /** Table schema at a snapshot, decoded from the metadata JSON's
     * current schema — authoritative under schema evolution (a column
@@ -120,7 +132,10 @@ final class IcebergSnapshotResolver(hadoopConf: Configuration) {
     * falls back to inference, never a truncated schema.
     */
   def dataSchemaAt(location: String, versionOffset: Int = 0)
-      : Option[org.apache.spark.sql.types.StructType] = {
+      : Option[org.apache.spark.sql.types.StructType] =
+    metadataAt(location, versionOffset).flatMap(schemaOf)
+
+  private def schemaOf(meta: JsonNode): Option[org.apache.spark.sql.types.StructType] = {
     import org.apache.spark.sql.types._
     val DecimalRe = """decimal\(\s*(\d+)\s*,\s*(\d+)\s*\)""".r
     def sparkType(t: String): Option[DataType] = t match {
@@ -137,41 +152,43 @@ final class IcebergSnapshotResolver(hadoopConf: Configuration) {
       case DecimalRe(p, s)   => Some(DecimalType(p.toInt, s.toInt))
       case _                 => None // fixed[n], nested, unknown
     }
-    metadataAt(location, versionOffset).flatMap { meta =>
-      val schemaNode = Option(meta.get("schemas")).flatMap { arr =>
-        val elems = arr.elements().asScala.toSeq
-        Option(meta.get("current-schema-id")).map(_.asInt()) match {
-          case Some(id) => elems.find(e => Option(e.get("schema-id")).exists(_.asInt() == id))
-          case None     => elems.headOption
-        }
-      }.orElse(Option(meta.get("schema")))
-      // Mapped mode (a rename/drop happened): every field carries its
-      // physical-name annotation so [[GlueTableEngine]] scans with the
-      // names the files hold and projects physical→logical — the
-      // exact machinery Delta column mapping uses.
-      val mapped = Option(meta.get("column-mapping")).exists(_.asText() == "name")
-      schemaNode.flatMap(s => Option(s.get("fields"))).flatMap { fs =>
-        val fields = fs.elements().asScala.toSeq.map { f =>
-          for {
-            nm <- Option(f.get("name")).map(_.asText())
-            tp <- Option(f.get("type")).filter(_.isTextual).map(_.asText())
-            dt <- sparkType(tp)
-          } yield {
-            val base = StructField(nm,
-              dt, nullable = !Option(f.get("required")).exists(_.asBoolean()))
-            if (!mapped) base
-            else {
-              val phys = Option(f.get("physical")).filter(_.isTextual)
-                .map(_.asText()).getOrElse(nm)
-              base.copy(metadata = new MetadataBuilder()
-                .putString(IcebergSnapshotResolver.PhysNameKey, phys).build())
-            }
+    // Mapped mode (a rename/drop happened): every field carries its
+    // physical-name annotation so [[GlueTableEngine]] scans with the
+    // names the files hold and projects physical→logical — the
+    // exact machinery Delta column mapping uses.
+    val mapped = Option(meta.get("column-mapping")).exists(_.asText() == "name")
+    currentSchemaFields(meta).flatMap { fs =>
+      val fields = fs.map { f =>
+        for {
+          nm <- Option(f.get("name")).map(_.asText())
+          tp <- Option(f.get("type")).filter(_.isTextual).map(_.asText())
+          dt <- sparkType(tp)
+        } yield {
+          val base = StructField(nm,
+            dt, nullable = !Option(f.get("required")).exists(_.asBoolean()))
+          if (!mapped) base
+          else {
+            val phys = Option(f.get("physical")).filter(_.isTextual)
+              .map(_.asText()).getOrElse(nm)
+            base.copy(metadata = new MetadataBuilder()
+              .putString(IcebergSnapshotResolver.PhysNameKey, phys).build())
           }
         }
-        if (fields.exists(_.isEmpty)) None else Some(StructType(fields.flatten))
       }
+      if (fields.exists(_.isEmpty)) None else Some(StructType(fields.flatten))
     }
   }
+
+  /** The field nodes of the metadata JSON's current schema. */
+  private def currentSchemaFields(meta: JsonNode): Option[Seq[JsonNode]] =
+    Option(meta.get("schemas")).flatMap { arr =>
+      val elems = arr.elements().asScala.toSeq
+      Option(meta.get("current-schema-id")).map(_.asInt()) match {
+        case Some(id) => elems.find(e => Option(e.get("schema-id")).exists(_.asInt() == id))
+        case None     => elems.headOption
+      }
+    }.orElse(Option(meta.get("schema")))
+      .flatMap(s => Option(s.get("fields"))).map(_.elements().asScala.toSeq)
 
   /** Data file paths at a named REF's head snapshot — the AUDIT read
     * of write-audit-publish: a branch reader validates the staged
@@ -266,8 +283,12 @@ final class IcebergSnapshotResolver(hadoopConf: Configuration) {
         catch { case _: java.io.IOException => Nil })
     }.distinct
 
-  /** The metadata JSON of the selected version (latest − offset). */
+  /** The metadata JSON of the selected version (latest − offset):
+    * among the metadata-dir JSON files, ordered by
+    * `last-sequence-number` DESC (reference: src/util/iceberg.ts:20-27).
+    */
   private def metadataAt(location: String, versionOffset: Int): Option[JsonNode] = {
+    resolveCount.incrementAndGet()
     val metaDir = new Path(s"${location.stripSuffix("/")}/metadata")
     val fs = metaDir.getFileSystem(hadoopConf)
     if (!fs.exists(metaDir)) return None
@@ -282,131 +303,75 @@ final class IcebergSnapshotResolver(hadoopConf: Configuration) {
     ordered.drop(versionOffset).headOption
   }
 
-  /** BUCKET-transform partition-spec fields of the current spec —
-    * Iceberg's hidden partitioning: `(spec field name, source column
-    * name, bucket count)` per `bucket[N]` field. The engine's query
-    * rewrite prunes the file listing on these (equality/IN conjuncts
-    * on the SOURCE column → [[IcebergBucket.of]] → manifest partition
-    * record match) without the spec field ever appearing as a table
-    * column. Empty for identity-only or unpartitioned tables — the
-    * common case, and free (one metadata JSON already read by every
-    * resolution).
-    */
-  def bucketSpecs(location: String, versionOffset: Int = 0): Seq[(String, String, Int)] = {
-    val BucketRe = """bucket\[(\d+)\]""".r
-    hiddenSpecs(location, versionOffset).flatMap {
-      case (nm, src, BucketRe(d)) => Some((nm, src, d.toInt))
-      case _ => None
-    }
-  }
-
   /** The current partition spec's fields IN SPEC ORDER, identity
     * included: `(spec field name, source column name, transform)`.
     * This is the append path's authority for how new files must land
     * after a partition-spec evolution — the spec, not the catalog,
     * holds the evolved layout (a table partitioned by an identity key
-    * that adopts a hidden transform keeps both dimensions).
+    * that adopts a hidden transform keeps both dimensions). The
+    * non-identity (hidden) fields — `bucket[N]`, `truncate[W]` — are
+    * what the engine's query rewrite prunes the file listing on,
+    * without the spec field ever appearing as a table column.
     */
   def specFields(location: String, versionOffset: Int = 0): Seq[(String, String, String)] =
-    metadataAt(location, versionOffset).toSeq.flatMap { meta =>
-      val nameById: Map[Int, String] =
-        Option(meta.get("schemas")).toSeq.flatMap(_.elements().asScala.toSeq.headOption)
-          .flatMap(s => Option(s.get("fields")).toSeq)
-          .flatMap(_.elements().asScala.toSeq.flatMap { f =>
-            for (id <- Option(f.get("id")); nm <- Option(f.get("name")))
-              yield id.asInt() -> nm.asText()
-          }).toMap
-      Option(meta.get("partition-specs")).toSeq
-        .flatMap(_.elements().asScala.toSeq.headOption)
+    metadataAt(location, versionOffset).toSeq.flatMap(specFieldsOf)
+
+  private def specFieldsOf(meta: JsonNode): Seq[(String, String, String)] = {
+    val nameById: Map[Int, String] =
+      Option(meta.get("schemas")).toSeq.flatMap(_.elements().asScala.toSeq.headOption)
         .flatMap(s => Option(s.get("fields")).toSeq)
         .flatMap(_.elements().asScala.toSeq.flatMap { f =>
-          for {
-            nm <- Option(f.get("name")).map(_.asText())
-            tr <- Option(f.get("transform")).map(_.asText())
-            src <- Option(f.get("source-id")).map(_.asInt()).flatMap(nameById.get)
-              // identity fields name themselves when the source id is
-              // unresolvable (hand-built fixtures use source-id -1)
-              .orElse(if (tr == "identity") Some(nm) else None)
-          } yield (nm, src, tr)
-        })
+          for (id <- Option(f.get("id")); nm <- Option(f.get("name")))
+            yield id.asInt() -> nm.asText()
+        }).toMap
+    Option(meta.get("partition-specs")).toSeq
+      .flatMap(_.elements().asScala.toSeq.headOption)
+      .flatMap(s => Option(s.get("fields")).toSeq)
+      .flatMap(_.elements().asScala.toSeq.flatMap { f =>
+        for {
+          nm <- Option(f.get("name")).map(_.asText())
+          tr <- Option(f.get("transform")).map(_.asText())
+          src <- Option(f.get("source-id")).map(_.asInt()).flatMap(nameById.get)
+            // identity fields name themselves when the source id is
+            // unresolvable (hand-built fixtures use source-id -1)
+            .orElse(if (tr == "identity") Some(nm) else None)
+        } yield (nm, src, tr)
+      })
+  }
+
+  /** One metadata pass over the selected version, then its manifest
+    * walk (reference: src/util/iceberg.ts:11-36).
+    */
+  def resolve(location: String, versionOffset: Int = 0): IcebergVersion =
+    metadataAt(location, versionOffset).fold(IcebergVersion(Nil, Nil, None, Nil)) { meta =>
+      val (files, deletes) = liveFiles(meta)
+      IcebergVersion(files, deletes, schemaOf(meta), specFieldsOf(meta))
     }
 
-  /** ALL non-identity (hidden) partition-spec fields of the current
-    * spec: `(spec field name, source column name, transform string)`.
-    * The engine's writer/append/pruning paths parse the transform
-    * (`bucket[N]`, `truncate[W]`); identity fields are excluded —
-    * they are real table columns handled by the declared-key path.
-    */
-  def hiddenSpecs(location: String, versionOffset: Int = 0): Seq[(String, String, String)] =
-    specFields(location, versionOffset).filter(_._3 != "identity")
-
-  /** Live delete files of the selected snapshot (empty for v1/COW
-    * tables), each carrying its sequence number so the read path can
-    * scope equality deletes per the spec: they apply only to data
-    * files with a strictly smaller data sequence (rows re-appended
-    * AFTER the delete survive it). Position deletes name their
-    * target file explicitly, so they need no scoping. seq 0 =
-    * unknown (simplified fixtures) keeps the unscoped read-latest
-    * behavior.
-    */
-  def deleteFilesDetailed(location: String, versionOffset: Int = 0): Seq[IcebergDeleteFile] =
-    resolveFiles(location, versionOffset)._2
-
-  private def resolveFiles(location: String, versionOffset: Int)
-      : (Seq[IcebergDataFile], Seq[IcebergDeleteFile]) = {
-    val loc = location.stripSuffix("/")
-    val metaDir = new Path(s"$loc/metadata")
-    val fs = metaDir.getFileSystem(hadoopConf)
-    if (!fs.exists(metaDir)) return (Nil, Nil)
-
-    // 1. metadata JSONs ordered by last-sequence-number DESC
-    //    (reference: src/util/iceberg.ts:20-27).
-    val jsons = fs.listStatus(metaDir).toSeq
-      .filter(s => s.getPath.getName.endsWith(".json"))
-      .map { s =>
-        val in = fs.open(s.getPath)
-        try mapper.readTree(in) -> s.getPath.toString finally in.close()
-      }
-    if (jsons.isEmpty) return (Nil, Nil)
-    val ordered = jsons.sortBy { case (node, _) =>
-      -Option(node.get("last-sequence-number")).map(_.asLong()).getOrElse(0L)
-    }
-    if (versionOffset >= ordered.size) return (Nil, Nil)
-    val (meta, _) = ordered(versionOffset)
-
+  private def liveFiles(meta: JsonNode): (Seq[IcebergDataFile], Seq[IcebergDeleteFile]) = {
     // field-id → (name, primitive type) from the current schema — the
     // key space of the manifests' lower_bounds/upper_bounds maps.
     // Nested/complex types have non-textual type nodes and are skipped
     // (Iceberg only tracks bounds for primitives anyway).
-    val fieldById: Map[Int, (String, String)] = {
-      val schemaNode = Option(meta.get("schemas")).flatMap { arr =>
-        val elems = arr.elements().asScala.toSeq
-        Option(meta.get("current-schema-id")).map(_.asInt()) match {
-          case Some(id) => elems.find(e => Option(e.get("schema-id")).exists(_.asInt() == id))
-          case None => elems.headOption
-        }
-      }.orElse(Option(meta.get("schema")))
-      schemaNode.flatMap(s => Option(s.get("fields"))).map { fs =>
-        fs.elements().asScala.flatMap { f =>
-          for {
-            id <- Option(f.get("id")).map(_.asInt())
-            nm <- Option(f.get("name")).map(_.asText())
-            tp <- Option(f.get("type")).filter(_.isTextual).map(_.asText())
-            // PHYSICAL name when mapped (rename/drop happened): bounds
-            // and equality columns must bind to what the files hold —
-            // the scan schema — not the current logical name
-          } yield id -> (Option(f.get("physical")).filter(_.isTextual)
-            .map(_.asText()).getOrElse(nm), tp)
-        }.toMap
-      }.getOrElse(Map.empty)
-    }
+    val fieldById: Map[Int, (String, String)] =
+      currentSchemaFields(meta).getOrElse(Nil).flatMap { f =>
+        for {
+          id <- Option(f.get("id")).map(_.asInt())
+          nm <- Option(f.get("name")).map(_.asText())
+          tp <- Option(f.get("type")).filter(_.isTextual).map(_.asText())
+          // PHYSICAL name when mapped (rename/drop happened): bounds
+          // and equality columns must bind to what the files hold —
+          // the scan schema — not the current logical name
+        } yield id -> (Option(f.get("physical")).filter(_.isTextual)
+          .map(_.asText()).getOrElse(nm), tp)
+      }.toMap
 
-    // 2. the CURRENT snapshot: refs.main when refs exist (a staged
-    //    branch snapshot may have published last in the array and
-    //    must stay invisible to main readers until its fast-forward
-    //    publish — write-audit-publish), array-last otherwise
-    //    (reference: src/util/iceberg.ts:28-29 — last element; the
-    //    reference has no refs support).
+    // the CURRENT snapshot: refs.main when refs exist (a staged
+    // branch snapshot may have published last in the array and must
+    // stay invisible to main readers until its fast-forward publish —
+    // write-audit-publish), array-last otherwise (reference:
+    // src/util/iceberg.ts:28-29 — last element; the reference has no
+    // refs support).
     val allSnaps = Option(meta.get("snapshots")).toSeq
       .flatMap(_.elements().asScala.toSeq)
     val mainId = Option(meta.get("refs")).flatMap(r => Option(r.get("main")))
@@ -420,7 +385,7 @@ final class IcebergSnapshotResolver(hadoopConf: Configuration) {
     manifestList match {
       case None => (Nil, Nil)
       case Some(ml) =>
-        // 3. manifest-list avro → (manifest_path, sequence number)
+        // manifest-list avro → (manifest_path, sequence number)
         //    rows (reference: src/util/iceberg.ts:30-31). The
         //    sequence number scopes equality deletes (they apply
         //    only to data files with a STRICTLY smaller one): real
@@ -443,7 +408,7 @@ final class IcebergSnapshotResolver(hadoopConf: Configuration) {
           })
           (p, mseq)
         })
-        // 4. each manifest avro → data_file.{file_path, file_size_in_bytes}
+        // each manifest avro → data_file.{file_path, file_size_in_bytes}
         //    rows (reference: src/util/iceberg.ts:32-33). NOTE:
         //    GenericRecord.get(String) THROWS on a field the writer
         //    schema lacks, so probe the schema first.

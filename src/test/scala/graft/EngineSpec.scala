@@ -3,7 +3,7 @@ package graft
 import graft.catalog.FixtureCatalog
 import graft.engine.GlueTableEngine
 import graft.fixtures.TestFixtures
-import graft.model.{ColumnDef, GlueTable}
+import graft.model.{CacheConfig, ColumnDef, GlueTable}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -821,18 +821,27 @@ class EngineSpec extends AnyFunSuite {
     val sql = """SELECT l.l_returnflag, count(*) AS n
                 |FROM glue.default.lineitem_part l
                 |JOIN glue.orders_flat o ON l.l_orderkey = o.o_orderkey
+                |WHERE o.o_orderstatus = 'F'
                 |GROUP BY l.l_returnflag""".stripMargin
     val rewritten = engine.rewrittenSql(sql)
     assert(rewritten ==
       """SELECT l.l_returnflag, count(*) AS n
         |FROM GLUE__default_lineitem_part l
         |JOIN GLUE__default_orders_flat o ON l.l_orderkey = o.o_orderkey
+        |WHERE o.o_orderstatus = 'F'
         |GROUP BY l.l_returnflag""".stripMargin)
     // executable: setupFor registers the views, the rewritten text runs
     engine.setupFor(sql)
     val viaText = spark.sql(rewritten).collect().map(r => (r.getString(0), r.getLong(1))).toSet
     val viaPlan = engine.query(sql).collect().map(r => (r.getString(0), r.getLong(1))).toSet
     assert(viaText == viaPlan)
+    // glue x glue through the plan equals the join of direct reads
+    val li = spark.read.parquet(s"${TestSpark.sfDir}/lineitem.parquet")
+    val o = spark.read.parquet(s"${TestSpark.sfDir}/orders.parquet")
+    val direct = li.join(o.filter(col("o_orderstatus") === "F"), col("l_orderkey") === col("o_orderkey"))
+      .groupBy("l_returnflag").count()
+      .collect().map(r => (r.getString(0), r.getLong(1))).toSet
+    assert(viaPlan.nonEmpty && viaPlan == direct)
     // the one-call combined artifact (reference convertGlueTableQuery)
     val converted = engine.convertGlueTableQuery(sql)
     assert(converted.sql == rewritten)
@@ -879,5 +888,82 @@ class EngineSpec extends AnyFunSuite {
     val rewritten = Seq("s3://bucket/prefix/a.parquet").map(
       _.replaceFirst("^s3://", cfg.proxyAddress.get))
     assert(rewritten == Seq("http://proxy:8080/bucket/prefix/a.parquet"))
+  }
+
+  // -------- the two caches: metadata per table, snapshot per table version
+
+  test("a repeated tableMetadata does not refetch; invalidateTable refetches once") {
+    val cat = new FixtureCatalog().register(
+      GlueTable("d", "o", Some(TestFixtures.flatOrders(spark, TestSpark.sfDir))))
+    val eng = new GlueTableEngine(spark, cat)
+    eng.tableMetadata("d", "o")
+    val f0 = cat.fetchCount.get()
+    eng.tableMetadata("d", "o"); eng.tableMetadata("d", "o")
+    assert(cat.fetchCount.get() == f0)
+    eng.invalidateTable("d", "o")
+    eng.tableMetadata("d", "o"); eng.tableMetadata("d", "o")
+    assert(cat.fetchCount.get() == f0 + 1)
+  }
+
+  test("clearCache drops every cached product: metadata, listing, and derived reads") {
+    import spark.implicits._
+    val loc = s"${new java.io.File("target").getAbsolutePath}/clear_cache_${System.nanoTime()}"
+    (0 until 10).toDF("x").coalesce(1).write.parquet(loc)
+    val cat = new FixtureCatalog().register(GlueTable("d", "t", Some(loc)))
+    val eng = new GlueTableEngine(spark, cat)
+    assert(eng.tableDF("d", "t").count() == 10 && eng.countRows("d", "t") == 10)
+    val f0 = cat.fetchCount.get()
+    // a file added behind the engine's back stays invisible until the caches drop
+    (10 until 15).toDF("x").coalesce(1).write.mode("append").parquet(loc)
+    assert(eng.files("d", "t").size == 1 && eng.tableDF("d", "t").count() == 10)
+    eng.clearCache()
+    assert(eng.files("d", "t").size == 2)
+    assert(cat.fetchCount.get() == f0 + 1)
+    assert(eng.tableDF("d", "t").count() == 15 && eng.countRows("d", "t") == 15)
+  }
+
+  test("clearCache drops deletion vectors: another writer's MOR delete reads after it") {
+    import spark.implicits._
+    val cat = new FixtureCatalog()
+    val writer = new GlueTableEngine(spark, cat)
+    val reader = new GlueTableEngine(spark, cat)
+    writer.writeDeltaTable((0L until 50L).toDF("x").coalesce(1), "d", "dv",
+      s"${new java.io.File("target").getAbsolutePath}/clear_dv_${System.nanoTime()}")
+    assert(reader.tableDF("d", "dv").count() == 50)
+    writer.deleteDeltaWhereMor("d", "dv", col("x") >= 40)
+    reader.clearCache()
+    assert(reader.tableDF("d", "dv").count() == 40)
+  }
+
+  test("vacuum keeps another writer's live deletion-vector sidecar") {
+    import spark.implicits._
+    val cat = new FixtureCatalog()
+    val writer = new GlueTableEngine(spark, cat)
+    val reader = new GlueTableEngine(spark, cat)
+    writer.writeDeltaTable((0L until 50L).toDF("x").coalesce(1), "d", "vac",
+      s"${new java.io.File("target").getAbsolutePath}/vacuum_dv_${System.nanoTime()}")
+    assert(reader.tableDF("d", "vac").count() == 50)
+    writer.deleteDeltaWhereMor("d", "vac", col("x") >= 40)
+    val deleted = reader.vacuumDeltaTable("d", "vac")
+    assert(deleted.isEmpty, s"vacuum deleted live files: $deleted")
+    assert(writer.tableDF("d", "vac").count() == 40)
+  }
+
+  test("an evicted listing never pairs with derived state of an older version") {
+    import spark.implicits._
+    val base = s"${new java.io.File("target").getAbsolutePath}/evict_${System.nanoTime()}"
+    val cat = new FixtureCatalog()
+    val writer = new GlueTableEngine(spark, cat)
+    val reader = new GlueTableEngine(spark, cat, CacheConfig(maxEntries = 2))
+    writer.writeDeltaTable((0L until 50L).toDF("x").coalesce(1), "d", "lake", s"$base/lake")
+    Seq("a", "b").foreach(t =>
+      writer.writeTable((0L until 5L).toDF("x").coalesce(1), "d", t, s"$base/$t"))
+    assert(reader.tableDF("d", "lake").count() == 50)
+    // two other tables' listings push the Delta table out of the 2-entry cache
+    Seq("a", "b").foreach(t => assert(reader.files("d", t).size == 1))
+    writer.appendDeltaTable((50L until 60L).toDF("x").coalesce(1), "d", "lake")
+    val listed = reader.files("d", "lake").size
+    val read = reader.tableDF("d", "lake").count()
+    assert(listed == 2 && read == 60, s"listed $listed files, read $read rows")
   }
 }

@@ -969,4 +969,37 @@ class IcebergWriterSpec extends AnyFunSuite {
       if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
     assert(msgs(e).exists(_.contains("partition attach miss")), s"got $e")
   }
+
+  test("one metadata resolve per table version: a cold plan resolves once, a warm plan never") {
+    val sp = Shim.classic(spark)
+    import sp.implicits._
+    val cat = new FixtureCatalog()
+    val writer = new GlueTableEngine(spark, cat)
+    writer.writeIcebergTableBucketed((0L until 100L).map(k => (k, s"r$k")).toDF("k", "v"),
+      "d", "ires", s"${new java.io.File("target").getAbsolutePath}/ice_resolves_${System.nanoTime()}", "k", 4)
+    (1 to 5).foreach(i => // six metadata versions
+      writer.appendIcebergTable(Seq((100L + i, s"r${100 + i}")).toDF("k", "v"), "d", "ires"))
+    val sql = "SELECT count(*) AS n FROM glue.d.ires WHERE k IN (40, 41, 42)"
+    // a fresh reader plans twice: cold, then warm
+    def coldWarmResolves(): (Long, Long, GlueTableEngine) = {
+      val eng = new GlueTableEngine(spark, cat)
+      def resolves(): Long = {
+        val r0 = eng.iceberg.resolveCount.get()
+        eng.query(sql)
+        eng.iceberg.resolveCount.get() - r0
+      }
+      val cold = resolves()
+      (cold, resolves(), eng)
+    }
+    val (cold, warm, reader) = coldWarmResolves()
+    assert((cold, warm) == (1L, 0L), s"(cold, warm) plan resolves = ($cold, $warm)")
+    assert(reader.query(sql).head().getLong(0) == 3L)
+    // delete files (position + equality) ride in the same snapshot
+    writer.deleteIcebergWhere("d", "ires", col("k") === 41L)
+    writer.deleteIcebergMatching("d", "ires", Seq(40L).toDF("k"), Seq("k"))
+    val (cold2, warm2, reader2) = coldWarmResolves()
+    assert((cold2, warm2) == (1L, 0L),
+      s"with delete files: (cold, warm) plan resolves = ($cold2, $warm2)")
+    assert(reader2.query(sql).head().getLong(0) == 1L)
+  }
 }
