@@ -2,6 +2,7 @@ package graft
 
 import graft.fixtures.TestFixtures
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Benchmark main (driver contract): runs every SparkEntry query on
   * SPARK_GRAFT_SF_DIR, prints ONE JSON line with per-query seconds.
@@ -287,8 +288,10 @@ object Bench {
     // TTL window by design — steady-state timings are the comparable
     // number. The reference works the same way: listings and metadata
     // are cached, queries run against warm caches.
-    benchQueries.toSeq.sortBy(_._1).foreach { case (_, fn) =>
-      try fn(spark, sfDir).count() catch { case _: Throwable => }
+    benchQueries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+      try fn(spark, sfDir).count() catch {
+        case NonFatal(e) => System.err.println(s"warm pass: $name failed: $e")
+      }
     }
 
     val timed = benchQueries.toSeq.sortBy(_._1).map { case (name, fn) =>
@@ -415,8 +418,9 @@ object Bench {
     // carries full names (the leading token is unique by
     // construction; a collision falls back to full names here).
     val shortKeys = results.map { case (k, _) => k -> k.takeWhile(_ != '_') }
+    val prefixKeysUnique = shortKeys.map(_._2).distinct.size == shortKeys.size
     val miniKeys =
-      if (shortKeys.map(_._2).distinct.size == shortKeys.size) shortKeys.toMap
+      if (prefixKeysUnique) shortKeys.toMap
       else shortKeys.map { case (k, _) => k -> k }.toMap
     val mini = results.map { case (k, v) => s"${miniKeys(k)}:" + f"$v%.2f" }
       .mkString(";")
@@ -441,8 +445,7 @@ object Bench {
       gz.write(miniFull.getBytes("UTF-8")); gz.close()
       java.util.Base64.getEncoder.encodeToString(bos.toByteArray)
     }
-    val keyMode =
-      if (shortKeys.map(_._2).distinct.size == shortKeys.size) "prefix" else "full"
+    val keyMode = if (prefixKeysUnique) "prefix" else "full"
     println(s"""{"metric":"queries_gz","n":${results.size},"codec":"b64.gzip","keys":"$keyMode","v":"$gzB64"}""")
     java.nio.file.Files.write(
       java.nio.file.Paths.get("target/bench_summary.json"),

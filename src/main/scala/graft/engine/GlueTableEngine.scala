@@ -8,7 +8,7 @@ import graft.prune.Extractors
 import org.apache.hadoop.fs.{FileStatus, Path => HadoopPath}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedRelation}
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, SubqueryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, SubqueryAlias}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.{PreListedFileIndex, Shim}
@@ -35,14 +35,20 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
   * Scale notes (100 TB design):
   *  - Metadata and listings are driver-side and cached (LRU+TTL,
   *    single-flight) — O(#files) strings, never data.
-  *  - Hive-layout tables are read with `basePath` so Spark's own
-  *    `PartitioningAwareFileIndex` + `PruneFileSourcePartitions`
-  *    prune partitions per-relation — sound under OR/CTE/subquery
-  *    predicates, fixing the reference's OR-to-AND over-pruning bug
-  *    (reference: src/sql-transformer.ts:244-247 joined with AND at
-  *    src/glue-table-cache.ts:329-331).
-  *  - Projection tables additionally prune the listing DataFrame with
-  *    partition-key conjuncts found above each relation.
+  *  - Local listings walk directories with plain `listStatus`
+  *    (no located statuses); object stores answer one recursive
+  *    paged LIST ([[graft.listing.HadoopFileLister]]).
+  *  - Every layout is read through one [[PreListedFileIndex]] whose
+  *    partition columns carry the listed values (Hive `key=value`,
+  *    projection patterns, lake metadata). It is the query path's one
+  *    partition prune: `FileSourceStrategy` pushes each relation's
+  *    partition conjuncts into it, resolved and typed — sound under
+  *    OR/CTE/subquery predicates, fixing the reference's OR-to-AND
+  *    over-pruning bug (reference: src/sql-transformer.ts:244-247
+  *    joined with AND at src/glue-table-cache.ts:329-331). The
+  *    optimizer narrows the index to the kept partitions, so join
+  *    planning sees the selection's size. Planning a warm query runs
+  *    no Spark action.
   *  - Data movement is all executor-side vectorized parquet scan with
   *    Catalyst filter pushdown.
   */
@@ -736,7 +742,7 @@ final class GlueTableEngine(
             .withColumn("__lfp", canonPathCol(col("_metadata").getField("file_path")))
             .withColumn("__lpos", col("_metadata").getField("row_index"))
           def livePos(v: TableSnapshot): DataFrame =
-            applyIcebergDeletes(raw, v.deletes, v.dataSeq)
+            applyIcebergDeletes(raw, col("__lfp"), v.deletes, v.dataSeq)
               .select(col("__lfp").as("__fp"), col("__lpos").as("__pos"))
           val pFrom = livePos(from)
           val pTo = livePos(to)
@@ -913,12 +919,12 @@ final class GlueTableEngine(
     val fmt = classification(meta)
     if (rows.isEmpty)
       return spark.range(0).select(lit(null).cast("string").as("null"))
-    // Reads of a pruned selection go through the optional HTTP cache
-    // proxy, like the reference's files-variable scan (reference:
-    // src/glue-table-cache.ts:54-65, 235-239); full-table reads don't.
-    val rewrite: String => String =
-      if (proxied) p => config.proxyAddress.fold(p)(proxy => p.replaceFirst("^s3://", proxy))
-      else identity
+    // Query-path reads go through the optional HTTP cache proxy, like
+    // the reference's files-variable scan (reference:
+    // src/glue-table-cache.ts:54-65, 235-239); tableDF reads don't.
+    val rewrite: String => String = if (proxied) proxyRewrite else identity
+    // The scan's file path as the delete and deletion-vector keys see it.
+    val scanPath = scanPathCol(col("_metadata").getField("file_path"), proxied)
     val nFixed = 3 // path, size, modTime
     val converter = CatalystTypeConverters.createToCatalystConverter(pSchema)
     val partitions = rows
@@ -985,7 +991,7 @@ final class GlueTableEngine(
     // are a subset of its replacement's, and a rewritten file has a
     // new physical path its old rows can never match).
     val merged =
-      if (snap.deletes.nonEmpty) applyIcebergDeletes(base, snap.deletes, snap.dataSeq)
+      if (snap.deletes.nonEmpty) applyIcebergDeletes(base, scanPath, snap.deletes, snap.dataSeq)
       else if (snap.dvs.isEmpty) base
       else {
         val del = snap.dvs.groupBy(_._2).toSeq.sortBy(_._1).map { case (dvPath, m) =>
@@ -999,7 +1005,7 @@ final class GlueTableEngine(
             .filter(col("__del_fp").isin(files: _*))
         }.reduce(_.unionAll(_))
         base
-          .withColumn("__fp", canonPathCol(col("_metadata").getField("file_path")))
+          .withColumn("__fp", scanPath)
           .withColumn("__pos", col("_metadata").getField("row_index"))
           .join(broadcast(del),
             col("__fp") === col("__del_fp") && col("__pos") === col("__del_pos"), "left_anti")
@@ -1059,7 +1065,30 @@ final class GlueTableEngine(
       .otherwise(stripped)
   }
 
-  private def applyIcebergDeletes(df: DataFrame,
+  /** The optional HTTP cache proxy's rewrite of an `s3://` path. */
+  private def proxyRewrite(p: String): String =
+    config.proxyAddress.fold(p)(proxy => p.replaceFirst("^s3://", proxy))
+
+  /** Canonical form of a scan's `_metadata.file_path`, comparable with
+    * the listing's paths: the keys of deletion vectors, position
+    * deletes and data sequence numbers. A proxied read's files carry
+    * the proxy prefix where the listing has `s3://`, so the prefix is
+    * mapped back first — otherwise every path-keyed anti-join of a
+    * proxied merge-on-read scan matches nothing and deleted rows
+    * come back. PathCanonSpec pins the agreement.
+    */
+  private[graft] def scanPathCol(filePath: Column, proxied: Boolean): Column = {
+    val unproxied = config.proxyAddress.filter(_ => proxied).fold(filePath) { _ =>
+      // the prefix as the scan reports it (a Hadoop Path's URI form)
+      val prefix = new HadoopPath(proxyRewrite("s3://b")).toUri.toString.stripSuffix("b")
+      when(filePath.startsWith(prefix),
+        concat(lit("s3://"), filePath.substr(prefix.length + 1, Int.MaxValue)))
+        .otherwise(filePath)
+    }
+    canonPathCol(unproxied)
+  }
+
+  private def applyIcebergDeletes(df: DataFrame, scanPath: Column,
       deletes: Seq[IcebergSnapshotResolver#IcebergDeleteFile],
       dataSeqByPath: Map[String, Long]): DataFrame = {
     var out = df
@@ -1068,7 +1097,7 @@ final class GlueTableEngine(
       val del = spark.read.parquet(pos.map(_.path): _*)
         .select(canonPathCol(col("file_path")).as("__del_fp"), col("pos").as("__del_pos"))
       out = out
-        .withColumn("__fp", canonPathCol(col("_metadata").getField("file_path")))
+        .withColumn("__fp", scanPath)
         .withColumn("__pos", col("_metadata").getField("row_index"))
         .join(broadcast(del),
           col("__fp") === col("__del_fp") && col("__pos") === col("__del_pos"), "left_anti")
@@ -1092,7 +1121,7 @@ final class GlueTableEngine(
         val seqDf = dataSeqByPath.toSeq.toDF("__seq_fp_raw", "__dseq")
           .select(canonPathCol(col("__seq_fp_raw")).as("__seq_fp"), col("__dseq"))
         out = out
-          .withColumn("__fp2", canonPathCol(col("_metadata").getField("file_path")))
+          .withColumn("__fp2", scanPath)
           .join(broadcast(seqDf), col("__fp2") === col("__seq_fp"), "left")
           .drop("__fp2", "__seq_fp")
       }
@@ -1115,39 +1144,6 @@ final class GlueTableEngine(
     out
   }
 
-  /** Pruned read: filter the listing on partition predicates first,
-    * then read only surviving files. With [[readTable]]'s native
-    * partition pruning this listing-level step is a (still sound)
-    * double-prune; it remains the impl of the reference's
-    * files-variable read surface.
-    */
-  def prunedTableDF(database: String, table: String, predicates: Seq[Column],
-      extraKeep: Option[Set[String]] = None): DataFrame = {
-    val meta = tableMetadata(database, table)
-    if (predicates.isEmpty && extraKeep.isEmpty)
-      return readTable(database, table, 0, keep = None, proxied = false)
-    val all = files(database, table)
-    val predKept =
-      if (predicates.isEmpty) all.map(_.path).toSet
-      else predicates.foldLeft(listingDF(database, table))(_.filter(_))
-        .select("path").collect().map(_.getString(0)).toSet
-    // hidden-transform pruning (Iceberg bucket specs) intersects the
-    // declared-key selection: both prunings are sound independently
-    val kept = extraKeep.fold(predKept)(_ intersect predKept)
-    if (kept.isEmpty && all.nonEmpty) {
-      meta.tableType match {
-        // A Hive listing can prune to empty spuriously (URI-escaped
-        // partition values differ from the user's literal); fall back
-        // to the full file set — Spark's own partition filters, which
-        // unescape properly, still prune at planning, so a genuinely
-        // empty selection stays cheap. (Hive tables never carry
-        // hidden transform specs, so extraKeep is None here.)
-        case TableType.Hive => readTable(database, table, 0, None, proxied = false)
-        case _              => readTable(database, table, 0, None, proxied = false).limit(0)
-      }
-    } else readTable(database, table, 0, Some(kept), proxied = true)
-  }
-
   // ---------------------------------------------------------------- SQL path
 
   private def glueRef(parts: Seq[String]): Option[GlueRefId] = GlueRefId.parse(parts)
@@ -1168,10 +1164,10 @@ final class GlueTableEngine(
 
   /** Run a SQL query containing `glue.db.tbl` references — the
     * flagship entry point (≈ reference `convertGlueTableQuery` +
-    * caller execution, src/glue-table-cache.ts:242-251). Partition
-    * predicates are harvested per-relation from `Filter` nodes
-    * directly above each scan; Hive tables additionally get Spark's
-    * native partition pruning via the basePath read.
+    * caller execution, src/glue-table-cache.ts:242-251). Each glue
+    * relation becomes a read of its whole cached listing; the
+    * query's partition predicates prune it per-relation inside the
+    * [[PreListedFileIndex]] at planning.
     */
   def query(sql: String): DataFrame = {
     val plan = Shim.parsePlan(spark, sql)
@@ -1209,8 +1205,9 @@ final class GlueTableEngine(
     * inspect or ship the rewritten SQL use this together with
     * [[setupFor]] (which registers those views):
     * `spark.sql(engine.rewrittenSql(q))` is then equivalent to
-    * `engine.query(q)` minus listing-level pruning (the views are
-    * unpruned by design, like the reference's).
+    * `engine.query(q)` minus the proxy rewrite and Iceberg
+    * hidden-transform pruning (partition predicates on a view prune
+    * inside the same [[PreListedFileIndex]]).
     *
     * Refs are DISCOVERED by the parser ([[glueTableRefs]]) — only the
     * textual substitution is regex-based, handling optional backtick
@@ -1273,63 +1270,24 @@ final class GlueTableEngine(
     varName
   }
 
-  /** Rewrite each glue relation into its (pruned) parquet-read plan,
+  /** Rewrite each glue relation into its [[PreListedFileIndex]] read,
     * keeping every other node untouched. Also the workhorse of the
     * injected [[graft.resolve.GlueResolutionRule]], so plain
-    * `spark.sql` gets the same projection/listing pruning as
-    * [[query]] — not just Hive-layout basePath pruning.
+    * `spark.sql` gets the same partition pruning as [[query]].
     */
   private[graft] def rewriteWithPruning(plan: LogicalPlan): LogicalPlan = {
-    def partitionConjuncts(cond: Expression, keys: Set[String],
-        allowedQualifiers: Set[String]): Seq[Column] = {
-      import org.apache.spark.sql.catalyst.{expressions => ce}
-      def split(e: Expression): Seq[Expression] = e match {
-        case ce.And(l, r) => split(l) ++ split(r)
-        case other => Seq(other)
-      }
-      // Structural whitelist: only plain comparison shapes over this
-      // relation's partition attributes and literals may prune. This
-      // rejects (a) correlated/outer-qualified attributes that merely
-      // share a column name with a partition key, and (b) unresolved
-      // functions (rand() etc. report deterministic=true before
-      // resolution, so a deterministic check alone is ineffective).
-      def allowedNode(e: Expression): Boolean = e match {
-        case _: Literal | _: UnresolvedAttribute => true
-        case _: ce.And | _: ce.Or | _: ce.Not => true
-        case _: ce.EqualTo | _: ce.EqualNullSafe | _: ce.GreaterThan |
-             _: ce.GreaterThanOrEqual | _: ce.LessThan | _: ce.LessThanOrEqual |
-             _: ce.In | _: ce.IsNull | _: ce.IsNotNull | _: ce.Cast |
-             _: ce.StartsWith | _: ce.EndsWith | _: ce.Contains => true
-        case _ => false
-      }
-      def attrOk(a: UnresolvedAttribute): Boolean =
-        keys.contains(a.nameParts.last.toLowerCase) &&
-          (a.nameParts.length == 1 ||
-            allowedQualifiers.contains(a.nameParts.init.map(_.toLowerCase).mkString(".")))
-      split(cond).flatMap { c =>
-        val attrs = c.collect { case a: UnresolvedAttribute => a }
-        val onlyPartitionCols = attrs.nonEmpty &&
-          attrs.forall(attrOk) &&
-          c.find(e => !allowedNode(e)).isEmpty
-        if (!onlyPartitionCols) None
-        else {
-          // Strip qualifiers (t.year → year) so the predicate binds to
-          // the listing DataFrame's columns, then round-trip via SQL
-          // text — simple, and only ever applied to small conjuncts.
-          val stripped = c.transform {
-            case a: UnresolvedAttribute => UnresolvedAttribute(Seq(a.nameParts.last))
-          }
-          try Some(expr(stripped.sql)) catch { case _: Exception => None }
-        }
-      }
-    }
-
-    // Replace relations bottom-up; at Filter nodes, retry the rewrite
-    // of a directly-underlying glue relation with pruning predicates.
-    def relationPlan(ref: GlueRefId, preds: Seq[Column],
-        hiddenKeep: Option[Set[String]] = None): LogicalPlan = {
-      val df = prunedTableDF(ref.database, ref.table, preds, hiddenKeep)
-      Shim.analyzedPlan(df)
+    // Every glue relation reads its whole listing, through the proxy
+    // when one is set (the reference's files-variable scan). The
+    // Filter kept above it is the one partition prune:
+    // FileSourceStrategy pushes its partition-only conjuncts, resolved
+    // and typed, into PreListedFileIndex.listFiles. Only Iceberg
+    // hidden-transform specs, which the index has no columns for,
+    // narrow the files here; a selection that keeps nothing reads an
+    // empty relation.
+    def relationPlan(ref: GlueRefId, hiddenKeep: Option[Set[String]] = None): LogicalPlan = {
+      val read = readTable(ref.database, ref.table, 0, keep = hiddenKeep.filter(_.nonEmpty),
+        proxied = true)
+      Shim.analyzedPlan(if (hiddenKeep.exists(_.isEmpty)) read.limit(0) else read)
     }
 
     // An unaliased relation keeps its name qualifiers after rewrite:
@@ -1340,8 +1298,8 @@ final class GlueTableEngine(
       SubqueryAlias(Seq("glue", ref.database, ref.table), plan)
 
     // Top-down so the Filter case sees the still-unresolved relation
-    // below it and can attach pruning predicates before the bare
-    // relation case would rewrite it unpruned.
+    // below it and can derive the hidden-spec selection before the
+    // bare relation case would rewrite it without one.
     // CTE definitions live OUTSIDE UnresolvedWith.children, so they
     // must be recursed explicitly — this is where the reference's
     // top-level-WHERE-only pruning silently skipped CTE bodies
@@ -1361,8 +1319,6 @@ final class GlueTableEngine(
         relationBelow(child) match {
           case Some(u) if glueRef(u.multipartIdentifier).isDefined =>
             val ref = glueRef(u.multipartIdentifier).get
-            val keys = tableMetadata(ref.database, ref.table)
-              .table.partitionKeys.map(_.name.toLowerCase).toSet
             // an aliased relation must be referenced via the alias;
             // unaliased may use table or db.table qualifiers
             val quals: Set[String] = child match {
@@ -1371,8 +1327,7 @@ final class GlueTableEngine(
                 s"${ref.database}.${ref.table}".toLowerCase,
                 s"glue.${ref.database}.${ref.table}".toLowerCase)
             }
-            val preds = if (keys.isEmpty) Nil else partitionConjuncts(cond, keys, quals)
-            val newRel = relationPlan(ref, preds, icebergHiddenKeep(ref, cond, quals))
+            val newRel = relationPlan(ref, icebergHiddenKeep(ref, cond, quals))
             val newChild = child match {
               case SubqueryAlias(id, _) => SubqueryAlias(id, newRel)
               case _ => qualified(ref, newRel)
@@ -1382,7 +1337,7 @@ final class GlueTableEngine(
         }
       case u: UnresolvedRelation if glueRef(u.multipartIdentifier).isDefined =>
         val ref = glueRef(u.multipartIdentifier).get
-        qualified(ref, relationPlan(ref, Nil))
+        qualified(ref, relationPlan(ref))
     }
     rewrite(plan)
   }

@@ -2,7 +2,7 @@ package graft.listing
 
 import graft.model.S3FileInfo
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 
 import scala.collection.mutable.ArrayBuffer
 
@@ -16,7 +16,8 @@ import scala.collection.mutable.ArrayBuffer
   * `key=([^/]+)` (reference: src/util/s3.ts:15-25).
   *
   * Uses the Hadoop FileSystem API so the same code serves file://
-  * locally and s3a:// on a cluster. Listing happens once per TTL
+  * locally (a `listStatus` directory walk) and s3a:// on a cluster
+  * (one recursive `listFiles`). Listing happens once per TTL
   * window and is cached (see [[graft.cache.TtlCache]]) — at 100 TB
   * scale the listing for a large table is still only O(file count)
   * driver-side metadata, same strategy Spark's own
@@ -35,9 +36,7 @@ final class HadoopFileLister(hadoopConf: Configuration) extends FileLister {
     val fs = root.getFileSystem(hadoopConf)
     if (!fs.exists(root)) return Nil
     val out = ArrayBuffer.empty[(String, Long, Long)]
-    val it = fs.listFiles(root, true)
-    while (it.hasNext) {
-      val status = it.next()
+    def visit(status: FileStatus): Unit = {
       val p = status.getPath
       val name = p.getName
       // Skip S3 folder markers (reference: src/util/s3.ts:51-53) and —
@@ -50,6 +49,25 @@ final class HadoopFileLister(hadoopConf: Configuration) extends FileLister {
       val skip = name.endsWith("_$folder$") || name.startsWith("_") ||
         name.startsWith(".") || status.getLen == 0
       if (!skip) out += ((p.toString, status.getLen, status.getModificationTime))
+    }
+    if (fs.getScheme == "file") {
+      // Local filesystem: walk with plain listStatus. listFiles wraps
+      // each file in a LocatedFileStatus, whose constructor reads
+      // permission, owner and group — without Hadoop native IO each
+      // read forks `ls`, which costs far more than the listing itself.
+      // Spark's HadoopFSUtils lists non-HDFS filesystems the same way.
+      // Like listFiles, the walk enters every directory, hidden ones
+      // too.
+      def walk(dir: Path): Unit =
+        fs.listStatus(dir).foreach(st => if (st.isFile) visit(st) else walk(st.getPath))
+      walk(root)
+    } else {
+      // Object stores answer the recursive listFiles with one flat
+      // paged LIST (ListObjectsV2 over the prefix; S3A since
+      // HADOOP-13208); a per-directory walk would issue one LIST per
+      // partition.
+      val it = fs.listFiles(root, true)
+      while (it.hasNext) visit(it.next())
     }
     val sorted = out.toSeq.sortBy(_._1) // deterministic order
     sorted.map { case (p, len, mod) =>

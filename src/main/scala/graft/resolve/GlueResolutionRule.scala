@@ -34,11 +34,10 @@ class GlueResolutionRule(session: SparkSession) extends Rule[LogicalPlan] {
     case None => plan
     case Some(eng) =>
       // Delegate whole-plan rewriting to the engine so this path gets
-      // the SAME pruning as engine.query: partition conjuncts above a
-      // glue relation prune the file listing before the read — which
-      // is the only file-level pruning GLUE_PROJECTED layouts
-      // (non-`key=value` dirs) can get; Hive layouts additionally keep
-      // Catalyst's native PruneFileSourcePartitions via basePath. The
+      // the SAME pruning as engine.query: every layout, projected
+      // (non-`key=value` dirs) included, reads through a
+      // PreListedFileIndex whose partition columns the query's
+      // partition conjuncts prune at planning. The
       // glue-ref scan below keeps the common no-glue-tables query from
       // paying a plan traversal in every analyzer fixed-point pass.
       var hasGlueRef = false

@@ -2,7 +2,10 @@ package org.apache.spark.sql.graft
 
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Expression, Predicate, SubqueryExpression}
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, AttributeSet, BoundReference, Expression, Predicate, SubqueryExpression}
+import org.apache.spark.sql.catalyst.planning.PhysicalOperation
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{FileFormat, FileIndex, HadoopFsRelation, LogicalRelation, PartitionDirectory}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
@@ -52,8 +55,23 @@ final class PreListedFileIndex(
     skipByStats(pruneByPartition(partitionFilters), dataFilters)
   }
 
-  private def pruneByPartition(partitionFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-    if (partitionSchema.isEmpty) return dirs
+  private def pruneByPartition(partitionFilters: Seq[Expression]): Seq[PartitionDirectory] =
+    partitionPredicate(partitionFilters).fold(dirs)(keep => dirs.filter(d => keep(d.values)))
+
+  /** This index narrowed to the partitions `partitionFilters` keep, or
+    * `this` when they keep every partition. [[PruneListedPartitions]]
+    * plans with it, so `sizeInBytes` and `inputFiles` describe the
+    * selection rather than the whole table.
+    */
+  def filterPartitions(partitionFilters: Seq[Expression]): PreListedFileIndex =
+    partitionPredicate(partitionFilters).fold(this) { keep =>
+      val kept = partitions.filter(p => keep(p._1))
+      if (kept.length == partitions.length) this
+      else new PreListedFileIndex(partitionSchema, kept, roots, statsByPath)
+    }
+
+  private def partitionPredicate(partitionFilters: Seq[Expression]): Option[InternalRow => Boolean] = {
+    if (partitionSchema.isEmpty) return None
     val resolver = SQLConf.get.resolver
     // Bind by name against the partition schema. A filter that can't
     // be bound here (subquery-bearing, non-deterministic, or
@@ -63,7 +81,7 @@ final class PreListedFileIndex(
       f.deterministic && !SubqueryExpression.hasSubquery(f) &&
         f.references.forall(a => partitionSchema.exists(sf => resolver(sf.name, a.name)))
     }
-    if (bindable.isEmpty) return dirs
+    if (bindable.isEmpty) return None
     val bound = bindable.reduce(And).transform {
       case a: AttributeReference =>
         val idx = partitionSchema.indexWhere(sf => resolver(sf.name, a.name))
@@ -71,7 +89,7 @@ final class PreListedFileIndex(
     }
     val predicate = Predicate.createInterpreted(bound)
     predicate.initialize(0)
-    dirs.filter(d => predicate.eval(d.values))
+    Some(predicate.eval)
   }
 
   /** File-level data skipping: drop a file when some pushed data
@@ -139,6 +157,7 @@ object PreListedFileIndex {
       partitions: Seq[(InternalRow, Seq[FileStatus])],
       roots: Seq[Path],
       statsByPath: Map[String, Map[String, graft.listing.ColRange]] = Map.empty): DataFrame = {
+    Shim.addOptimizerRule(spark, PruneListedPartitions)
     val index = new PreListedFileIndex(partitionSchema, partitions, roots, statsByPath)
     val relation = HadoopFsRelation(
       location = index,
@@ -148,5 +167,37 @@ object PreListedFileIndex {
       fileFormat = format,
       options = options)(Shim.classic(spark))
     Shim.ofRows(spark, LogicalRelation(relation, isStreaming = false))
+  }
+}
+
+/** Optimizer rule: narrow each [[PreListedFileIndex]] relation to the
+  * partitions its filters keep — what Spark's
+  * `PruneFileSourcePartitions` does, which only handles catalog
+  * tables. The scan would prune the same way when it lists its
+  * files; doing it before physical planning makes the relation's
+  * `sizeInBytes` the selection's, so a partition slice of a large
+  * table can still be a join's broadcast side (and keep dynamic
+  * partition pruning on the other side), and `inputFiles` names the
+  * files the scan reads. It evaluates the filters over the cached
+  * listing: no Spark action. [[PreListedFileIndex.dataFrame]] adds it
+  * to the session that plans the relation.
+  */
+object PruneListedPartitions extends Rule[LogicalPlan] {
+  override def apply(plan: LogicalPlan): LogicalPlan = plan transformDown {
+    case op @ PhysicalOperation(_, filters, lr: LogicalRelation) if filters.nonEmpty =>
+      lr.relation match {
+        case fs @ HadoopFsRelation(index: PreListedFileIndex, _, _, _, _, _) =>
+          val resolver = SQLConf.get.resolver
+          val partitionCols = AttributeSet(lr.output.filter(a =>
+            index.partitionSchema.exists(f => resolver(f.name, a.name))))
+          val pruned = index.filterPartitions(filters.filter(f =>
+            f.references.nonEmpty && f.references.subsetOf(partitionCols)))
+          if (pruned eq index) op
+          else {
+            val prunedRelation = lr.copy(relation = fs.copy(location = pruned)(fs.sparkSession))
+            op transformUp { case l if l eq lr => prunedRelation }
+          }
+        case _ => op
+      }
   }
 }

@@ -16,6 +16,16 @@ object Shim {
   def classic(spark: SparkSession): org.apache.spark.sql.classic.SparkSession =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
 
+  /** Add `rule` to the session's extra optimizer rules, once. */
+  def addOptimizerRule(spark: SparkSession,
+      rule: org.apache.spark.sql.catalyst.rules.Rule[LogicalPlan]): Unit = {
+    val experimental = classic(spark).experimental
+    experimental.synchronized {
+      if (!experimental.extraOptimizations.contains(rule))
+        experimental.extraOptimizations = experimental.extraOptimizations :+ rule
+    }
+  }
+
   /** Parse SQL text into an unresolved logical plan. */
   def parsePlan(spark: SparkSession, sql: String): LogicalPlan =
     classic(spark).sessionState.sqlParser.parsePlan(sql)

@@ -881,13 +881,112 @@ class EngineSpec extends AnyFunSuite {
 
   test("proxy address rewrites s3 paths (reference src/glue-table-cache.ts:54-65)") {
     val cat = new FixtureCatalog().register(
-      GlueTable("d", "t", Some("s3://bucket/prefix/")))
-    // engine with a fake lister via a catalog pointing at local files is
-    // complex; assert on the path-rewrite contract directly instead.
-    val cfg = graft.model.CacheConfig(proxyAddress = Some("http://proxy:8080/"))
-    val rewritten = Seq("s3://bucket/prefix/a.parquet").map(
-      _.replaceFirst("^s3://", cfg.proxyAddress.get))
-    assert(rewritten == Seq("http://proxy:8080/bucket/prefix/a.parquet"))
+      GlueTable("d", "t", Some("s3://bucket/prefix/"),
+        partitionKeys = Seq(ColumnDef("k")), columns = Seq(ColumnDef("x", "bigint"))))
+    // Planning only: no s3 filesystem exists here, so touching any
+    // listed file would fail the query.
+    val lister = new graft.listing.FileLister {
+      override def list(location: String, keys: Seq[String]): Seq[graft.model.S3FileInfo] =
+        Seq("a", "b").map(v => graft.model.S3FileInfo(s"s3://bucket/prefix/k=$v/part-0.parquet",
+          Map("k" -> v), size = 100L, modTime = 1L, bounds = Map.empty, rowCount = None))
+    }
+    val eng = new GlueTableEngine(spark, cat,
+      CacheConfig(proxyAddress = Some("http://proxy:8080/"), footerStatsMaxFiles = 0),
+      listerOverride = Some(lister))
+    // every query read goes through the proxy, filtered or not
+    for ((where, n) <- Seq("" -> 2, " WHERE k = 'a'" -> 1)) {
+      val files = eng.query(s"SELECT sum(x) FROM glue.d.t$where").inputFiles
+      assert(files.length == n && files.forall(_.startsWith("http://proxy:8080/bucket/prefix/")),
+        s"query '$where': ${files.mkString(", ")}")
+    }
+  }
+
+  test("a partition slice plans with the slice's statistics, so it can be a broadcast side") {
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    import org.apache.spark.sql.execution.datasources.LogicalRelation
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    val all = engine.files("default", "lineitem_part")
+    val slice = all.filter(_.partitionValues.get("l_returnflag").contains("A"))
+    val sliceBytes = slice.map(_.size).sum
+    assert(slice.nonEmpty && 2 * sliceBytes < all.map(_.size).sum)
+    // planning narrows the relation itself: its size and input files
+    // are the slice's, not the whole listing's
+    val one = engine.query(
+      "SELECT count(*) AS n FROM glue.default.lineitem_part WHERE l_returnflag = 'A'")
+    val rels = one.queryExecution.optimizedPlan.collect { case r: LogicalRelation => r }
+    assert(rels.map(_.stats.sizeInBytes) == Seq(BigInt(sliceBytes)))
+    assert(one.inputFiles.toSeq.sorted ==
+      slice.map(f => new org.apache.hadoop.fs.Path(f.path).toString).sorted)
+    // joined with the whole table, the slice is the far smaller side
+    // and broadcasts under a threshold the whole table exceeds
+    val sql =
+      """SELECT count(*) AS n FROM glue.default.lineitem_part a
+        |JOIN glue.default.lineitem_part b
+        |  ON a.l_orderkey = b.l_orderkey AND a.l_linenumber = b.l_linenumber
+        |WHERE a.l_returnflag = 'A'""".stripMargin
+    val Seq(join) = engine.query(sql).queryExecution.optimizedPlan.collect { case j: Join => j }
+    val sides = Seq(join.left, join.right).map(_.stats.sizeInBytes).sorted
+    assert(2 * sides(0) < sides(1), s"join side sizes $sides")
+    val keys = Seq("spark.sql.adaptive.enabled", "spark.sql.autoBroadcastJoinThreshold")
+    val saved = keys.map(k => k -> spark.conf.get(k))
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", ((sides(0) + sides(1)) / 2).toString)
+    try {
+      val df = engine.query(sql)
+      val plan = df.queryExecution.executedPlan
+      assert(plan.collect { case b: BroadcastHashJoinExec => b }.nonEmpty, plan.toString)
+      val li = spark.read.parquet(s"${TestSpark.sfDir}/lineitem.parquet")
+      val want = li.filter(col("l_returnflag") === "A").as("a")
+        .join(li.as("b"), Seq("l_orderkey", "l_linenumber")).count()
+      assert(df.collect().head.getLong(0) == want)
+    } finally saved.foreach { case (k, v) => spark.conf.set(k, v) }
+  }
+
+  test("warm planning runs no Spark action, and the scan still prunes to the listing's files") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    // QueryExecutionListener events that `body` fires. The listener
+    // queue is asynchronous; a marker action after `body` drains it,
+    // since its event is delivered after every earlier one.
+    def actionsDuring(body: => Unit): Int = {
+      val seen = new java.util.concurrent.LinkedBlockingQueue[QueryExecution]()
+      val listener = new QueryExecutionListener {
+        override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = seen.add(qe)
+        override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = seen.add(qe)
+      }
+      spark.listenerManager.register(listener)
+      try {
+        body
+        val marker = spark.range(1)
+        marker.collect()
+        Iterator.continually(seen.poll(60, java.util.concurrent.TimeUnit.SECONDS))
+          .takeWhile { qe =>
+            assert(qe != null, "the marker action's event never arrived")
+            qe ne marker.queryExecution
+          }.size
+      } finally spark.listenerManager.unregister(listener)
+    }
+    val cases = Seq(
+      ("lineitem_part", "l_returnflag", "A"), // Hive
+      ("docs_by_lang", "lang", "fr"),         // enum projection
+      ("iceberg_events", "event_type", "click"), // Iceberg identity spec
+      ("delta_events", "event_type", "click"))   // Delta partitioned
+    for ((tbl, key, v) <- cases) {
+      val sql = s"SELECT count(*) AS n FROM glue.default.$tbl WHERE $key = '$v'"
+      engine.query(sql).queryExecution.executedPlan // warm the caches
+      val actions = actionsDuring(engine.query(sql).queryExecution.executedPlan)
+      assert(actions == 0, s"$tbl: warm planning ran $actions Spark action(s)")
+      val kept = engine.prunedFiles("default", tbl, Seq(col(key) === v))
+      assert(kept.nonEmpty && kept.size < engine.files("default", tbl).size, tbl)
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
+      try {
+        val df = engine.query(sql)
+        df.collect()
+        val scanned = df.queryExecution.executedPlan.collect { case s: FileSourceScanExec => s }
+          .head.metrics("numFiles").value
+        assert(scanned == kept.size, s"$tbl: scan read $scanned files, listing keeps ${kept.size}")
+      } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    }
   }
 
   // -------- the two caches: metadata per table, snapshot per table version

@@ -1,5 +1,6 @@
 package graft
 
+import graft.catalog.FixtureCatalog
 import graft.fixtures.TestFixtures
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -70,6 +71,38 @@ class PathCanonSpec extends AnyFunSuite {
     assert(engine.canonPath("/t/k=a+b/f.parquet") == "/t/k=a+b/f.parquet")
     // a stray '%' that is not a valid escape falls back, both sides
     assert(columnForm("/t/100%off/f.parquet") == engine.canonPath("/t/100%off/f.parquet"))
+  }
+
+  test("a proxied scan's file path canonicalizes to its listing path's key") {
+    // With a proxy the scan reads `http://proxy:8080/bucket/...` where
+    // the listing, the deletion-vector lists and the delete files
+    // name `s3://bucket/...`; the scan side must land on the same key,
+    // or merge-on-read anti-joins match nothing and deleted rows
+    // come back.
+    val sp = org.apache.spark.sql.graft.Shim.classic(spark)
+    import sp.implicits._
+    val proxy = "http://proxy:8080/"
+    val proxiedEngine = new graft.engine.GlueTableEngine(spark, new FixtureCatalog(),
+      graft.model.CacheConfig(proxyAddress = Some(proxy)))
+    def scanForm(eng: graft.engine.GlueTableEngine, filePath: String, proxied: Boolean): String =
+      Seq(filePath).toDF("p").select(eng.scanPathCol(col("p"), proxied)).head().getString(0)
+    val raws = Seq(
+      "s3://bucket/t/k=1/f.parquet",
+      "s3://bucket/t/o_orderpriority=4-NOT SPECIFIED/f.parquet", // %20 in the scan's URI
+      "s3://bucket/t/k=a+b/f.parquet")
+    raws.foreach { raw =>
+      // `_metadata.file_path` of the proxied file, as Spark reports it
+      val scanned = org.apache.spark.paths.SparkPath
+        .fromPath(new org.apache.hadoop.fs.Path(raw.replaceFirst("^s3://", proxy))).toString
+      assert(scanned.startsWith(proxy))
+      val key = engine.canonPath(raw) // deletion-vector list form
+      assert(columnForm(raw) == key)  // delete-file and sequence key form
+      assert(scanForm(proxiedEngine, scanned, proxied = true) == key, s"$raw read as $scanned")
+      // unproxied reads, and engines without a proxy, are unchanged
+      val plain = org.apache.spark.paths.SparkPath.fromPath(new org.apache.hadoop.fs.Path(raw)).toString
+      assert(scanForm(proxiedEngine, plain, proxied = false) == key)
+      assert(scanForm(engine, plain, proxied = true) == key)
+    }
   }
 
   test("stored sidecar paths round-trip: canonPathCol(storedPathCol(p)) == p (ADVICE r15)") {
