@@ -1,40 +1,54 @@
 #!/usr/bin/env python3
-"""Self-test for trend_gate's normalization + adjudication rules.
+"""Self-test for trend_gate's readers and failure rules.
 
 Synthetic artifact pairs, one assertion per rule:
     python3 tools/test_trend_gate.py        # prints PASS/FAIL per case
 
-Covers (r15): the CPU witness downgrade (ext_busy), the io-probe
-downgrade (self-relative median), --strict-env restoring the failure,
-the >=20% io-leniency threshold for the st family, and the floor using
-the same normalization as the ratio.
-Covers (r16, ADVICE r15 medium + verdict ask #5): adjudicated flags
-exit 2 (inconclusive) unless --accept-env, adjudicated queries stay in
-the shared-set total (a total red only through them is inconclusive,
-not a pass), the compact queries_mini tail line round-trips with
-short-key expansion, and degraded_start artifacts print a warning.
+Covers: a plain regression fails, the floor uses the box-speed-
+normalized time, a real total regression fails, a flag fails whatever
+external load the run carried, a query that fails (-1) in the new run
+fails the gate and stays out of the total, the bench's one compact
+line and the older queries_gz line read back from a driver tail with
+short-key expansion, and the committed r17 driver artifacts read
+every query.
 """
+import base64
+import gzip
 import json
 import os
 import subprocess
 import sys
 import tempfile
 
-GATE = os.path.join(os.path.dirname(__file__), "trend_gate.py")
+HERE = os.path.dirname(os.path.abspath(__file__))
+GATE = os.path.join(HERE, "trend_gate.py")
 
 BASE = {"metric": "total", "value": 10.0, "unit": "sec",
-        "calib_ms": 6400, "calib_end_ms": 6400,
-        "calib_io_ms": 400, "calib_io_end_ms": 400}
+        "calib_ms": 6400, "calib_end_ms": 6400}
 
 
-def run(old, new, *extra):
+def gate(po, pn):
+    r = subprocess.run([sys.executable, GATE, po, pn],
+                       capture_output=True, text=True)
+    return r.returncode, r.stdout
+
+
+def run(old, new):
+    """Both sides plain artifacts over BASE."""
     with tempfile.TemporaryDirectory() as d:
         po, pn = os.path.join(d, "o.json"), os.path.join(d, "n.json")
         json.dump({**BASE, **old}, open(po, "w"))
         json.dump({**BASE, **new}, open(pn, "w"))
-        r = subprocess.run([sys.executable, GATE, po, pn, *extra],
-                           capture_output=True, text=True)
-        return r.returncode, r.stdout
+        return gate(po, pn)
+
+
+def run_tail(old, tail):
+    """Old side plain, new side a driver-shaped {"tail": ...} artifact."""
+    with tempfile.TemporaryDirectory() as d:
+        po, pn = os.path.join(d, "o.json"), os.path.join(d, "n.json")
+        json.dump({**BASE, **old}, open(po, "w"))
+        json.dump({"tail": tail}, open(pn, "w"))
+        return gate(po, pn)
 
 
 def case(name, want_exit, got, out):
@@ -48,68 +62,11 @@ def case(name, want_exit, got, out):
 def main():
     results = []
 
-    # 1. plain regression with no witness -> fail
+    # 1. plain regression -> fail
     rc, out = run({"queries": {"q1": 2.0}}, {"queries": {"q1": 4.0}})
     results.append(case("plain 2x regression fails", 1, rc, out))
 
-    # 2. CPU witness: flagged query ran under ext_busy 0.15 (old 0.01)
-    #    -> ENV-ADJUDICATED. The adjudication is INCONCLUSIVE evidence
-    #    (ADVICE r15 medium): exit 2, not a pass — --accept-env
-    #    restores the permissive exit 0.
-    rc, out = run(
-        {"queries": {"q1": 2.0}, "env": {"q1": [0.2, 0.01]}},
-        {"queries": {"q1": 4.0}, "env": {"q1": [4.0, 0.15]}})
-    results.append(case("ext_busy witness adjudicates -> inconclusive", 2, rc, out))
-    assert "ENV-ADJUDICATED" in out, out
-    rc, out = run(
-        {"queries": {"q1": 2.0}, "env": {"q1": [0.2, 0.01]}},
-        {"queries": {"q1": 4.0}, "env": {"q1": [4.0, 0.15]}},
-        "--accept-env")
-    results.append(case("--accept-env accepts the adjudication", 0, rc, out))
-
-    # 3. --strict-env disables the downgrade
-    rc, out = run(
-        {"queries": {"q1": 2.0}, "env": {"q1": [0.2, 0.01]}},
-        {"queries": {"q1": 4.0}, "env": {"q1": [4.0, 0.15]}},
-        "--strict-env")
-    results.append(case("--strict-env restores the failure", 1, rc, out))
-
-    # 4. quiet new run (ext_busy 0.02) -> witness must NOT fire
-    rc, out = run(
-        {"queries": {"q1": 2.0}, "env": {"q1": [0.2, 0.01]}},
-        {"queries": {"q1": 4.0}, "env": {"q1": [0.5, 0.02]}})
-    results.append(case("quiet-run flag still fails", 1, rc, out))
-
-    # 5. io witness: probe 180 ms vs run median ~10 ms -> adjudicates
-    rc, out = run(
-        {"queries": {"q1": 2.0}, "env": {"q1": [0.2, 0.01, 9]}},
-        {"queries": {"q1": 4.0, "q2": 1.0, "q3": 1.0},
-         "env": {"q1": [0.3, 0.02, 180], "q2": [0.2, 0.0, 9],
-                 "q3": [0.2, 0.0, 11]}})
-    results.append(case("io-probe witness adjudicates -> inconclusive", 2, rc, out))
-    assert "io_probe" in out, out
-
-    # 6. io probe elevated but under 3x median -> still fails
-    rc, out = run(
-        {"queries": {"q1": 2.0}, "env": {"q1": [0.2, 0.01, 9]}},
-        {"queries": {"q1": 4.0, "q2": 1.0, "q3": 1.0},
-         "env": {"q1": [0.3, 0.02, 20], "q2": [0.2, 0.0, 9],
-                 "q3": [0.2, 0.0, 11]}})
-    results.append(case("sub-3x io probe does not excuse", 1, rc, out))
-
-    # 7. st-family io leniency: 12% slower probe -> NO leniency
-    rc, out = run(
-        {"queries": {"st1": 4.0}},
-        {"queries": {"st1": 7.6}, "calib_io_ms": 450, "calib_io_end_ms": 450})
-    results.append(case("12% io drift grants no st leniency", 1, rc, out))
-
-    # 8. st-family io leniency: 2x slower probe -> normalized, passes
-    rc, out = run(
-        {"queries": {"st1": 4.0}},
-        {"queries": {"st1": 7.6}, "calib_io_ms": 800, "calib_io_end_ms": 800})
-    results.append(case("2x io drift normalizes the st family", 0, rc, out))
-
-    # 9. floor uses the normalized time: raw 1.2 s that normalizes to
+    # 2. floor uses the normalized time: raw 1.2 s that normalizes to
     #    0.8 s on a slow box sits under the 1.0 s floor -> ignored (a
     #    stable 20 s query keeps the shared-set total in bounds; only
     #    the per-query check is under test)
@@ -119,78 +76,58 @@ def main():
          "calib_ms": 9600, "calib_end_ms": 9600})
     results.append(case("floor applies post-normalization", 0, rc, out))
 
-    # 10. adjudicated queries STAY in the shared-set total: the total
-    #     exceeds the gate only through the adjudicated query -> exit 2
-    #     (inconclusive), never a silent pass via double-exclusion
+    # 3. a real total regression fails: big itself doubles
     rc, out = run(
-        {"queries": {"q1": 2.0, "big": 5.0}, "env": {"q1": [0.2, 0.01]}},
-        {"queries": {"q1": 9.0, "big": 5.0}, "env": {"q1": [4.0, 0.2]}})
-    results.append(case("total red only via adjudicated query -> inconclusive", 2, rc, out))
-    assert "only" in out and "env-adjudicated" in out, out
-
-    # 11. same pair under --strict-env: the per-query flag fails hard
-    rc, out = run(
-        {"queries": {"q1": 2.0, "big": 5.0}, "env": {"q1": [0.2, 0.01]}},
-        {"queries": {"q1": 9.0, "big": 5.0}, "env": {"q1": [4.0, 0.2]}},
-        "--strict-env")
-    results.append(case("--strict-env fails the same pair hard", 1, rc, out))
-
-    # 12. a REAL total regression is NOT excused by an unrelated
-    #     adjudicated flag: big itself doubles -> exit 1
-    rc, out = run(
-        {"queries": {"q1": 2.0, "big": 5.0}, "env": {"q1": [0.2, 0.01]}},
-        {"queries": {"q1": 9.0, "big": 10.0}, "env": {"q1": [4.0, 0.2], "big": [0.2, 0.0]}})
+        {"queries": {"q1": 2.0, "big": 5.0}},
+        {"queries": {"q1": 9.0, "big": 10.0}})
     results.append(case("real total regression still fails", 1, rc, out))
 
-    # 13. compact queries_mini tail line: a driver-shaped artifact
-    #     whose tail holds ONLY the short line + mini line yields full
-    #     coverage, short keys expanding against the other side's full
-    #     names (r15 verdict ask #5)
-    with tempfile.TemporaryDirectory() as d:
-        po, pn = os.path.join(d, "o.json"), os.path.join(d, "n.json")
-        json.dump({**BASE, "queries": {"q1_scan_agg": 2.0, "st7_stream_join": 9.0}},
-                  open(po, "w"))
-        short_line = json.dumps({**BASE, "n_queries": 2, "failed": 0,
-                                 "queries_file": "/nonexistent"})
-        mini_line = json.dumps({"metric": "queries_mini", "n": 2,
-                                "v": "q1:2.10;st7:9.20"})
-        json.dump({"tail": "...log noise...\n" + mini_line + "\n" + short_line},
-                  open(pn, "w"))
-        r = subprocess.run([sys.executable, GATE, po, pn],
-                           capture_output=True, text=True)
-    results.append(case("queries_mini tail-only artifact compares clean", 0, r.returncode, r.stdout))
-    assert "2 queries" in r.stdout and "reassembled" not in r.stdout, r.stdout
-
-    # 13b. gzipped queries_gz tail line (r17, r16 verdict ask #1): a
-    #      driver-shaped artifact whose tail holds a HEAD-TRUNCATED
-    #      mini line but an intact queries_gz + short line yields full
-    #      coverage at 3-decimal precision; the truncated mini is
-    #      ignored
-    with tempfile.TemporaryDirectory() as d:
-        import base64 as _b64
-        import gzip as _gzip
-        po, pn = os.path.join(d, "o.json"), os.path.join(d, "n.json")
-        json.dump({**BASE, "queries": {"q1_scan_agg": 2.0, "st7_stream_join": 9.0}},
-                  open(po, "w"))
-        short_line = json.dumps({**BASE, "n_queries": 2, "failed": 0,
-                                 "queries_file": "/nonexistent"})
-        payload = _b64.b64encode(_gzip.compress(b"q1:2.100;st7:9.200")).decode()
-        gz_line = json.dumps({"metric": "queries_gz", "n": 2,
-                              "codec": "b64.gzip", "keys": "prefix", "v": payload})
-        truncated_mini = ':2.10;st7:9.20"}'  # head eaten by tail capture
-        json.dump({"tail": truncated_mini + "\n" + gz_line + "\n" + short_line},
-                  open(pn, "w"))
-        r = subprocess.run([sys.executable, GATE, po, pn],
-                           capture_output=True, text=True)
-    results.append(case("queries_gz tail-only artifact compares clean", 0, r.returncode, r.stdout))
-    assert "2 queries" in r.stdout and "reassembled" not in r.stdout, r.stdout
-
-    # 14. degraded_start artifacts announce themselves
+    # 4. a flag from a run whose per-query witness shows elevated
+    #    external load (ext_busy 0.15) fails like any other flag
     rc, out = run(
-        {"queries": {"q1": 2.0}},
-        {"queries": {"q1": 2.1}, "degraded_start": "io"})
-    results.append(case("degraded_start warning prints", 0, rc, out))
-    assert "degraded_start" in out, out
+        {"queries": {"q1": 2.0}, "env": {"q1": [0.2, 0.01]}},
+        {"queries": {"q1": 4.0}, "env": {"q1": [4.0, 0.15]}})
+    results.append(case("ext_busy-elevated flag fails", 1, rc, out))
+
+    # 5. a query that fails (-1) in the new run fails the gate, and its
+    #    -1 stays out of both sides of the shared-set total
+    rc, out = run(
+        {"queries": {"q1_a": 5.0, "q2_b": 20.0}, "value": 25.0},
+        {"queries": {"q1_a": -1.0, "q2_b": 20.0}, "value": -1})
+    results.append(case("newly failing query fails", 1, rc, out))
+    assert "q1_a: failed in the new run" in out and "20.0s -> 20.0s" in out, out
+
+    # 6. the bench's one compact line, alone in the tail behind sbt's
+    #    [info] prefix: integer centiseconds under short keys expand
+    #    against the other side's full names
+    line = json.dumps({**BASE, "value": 11.3, "n_queries": 2, "failed": 0,
+                       "sf": "/data/sf0.1", "keys": "prefix", "cs": "q1:210,st7:920"},
+                      separators=(",", ":"))
+    rc, out = run_tail({"queries": {"q1_scan_agg": 2.0, "st7_stream_join": 9.0}},
+                       "...log noise...\n[info] " + line + "\n[success] Total time: 9 s\n")
+    results.append(case("compact line tail-only artifact compares clean", 0, rc, out))
+    assert "2 queries" in out and "short keys" not in out, out
+
+    # 7. queries_gz tail line (r16-r17 artifacts): a tail holding a
+    #    head-truncated plain line but an intact queries_gz + headline
+    #    line yields full coverage at 3-decimal precision
+    payload = base64.b64encode(gzip.compress(b"q1:2.100;st7:9.200")).decode()
+    gz_line = json.dumps({"metric": "queries_gz", "n": 2,
+                          "codec": "b64.gzip", "keys": "prefix", "v": payload})
+    short_line = json.dumps({**BASE, "n_queries": 2, "failed": 0})
+    rc, out = run_tail({"queries": {"q1_scan_agg": 2.0, "st7_stream_join": 9.0}},
+                       ':2.10;st7:9.20"}\n' + gz_line + "\n" + short_line)
+    results.append(case("queries_gz tail-only artifact compares clean", 0, rc, out))
+    assert "2 queries" in out and "short keys" not in out, out
+
+    # 8. the committed r17 pair: both driver tails carry only the
+    #    queries_gz line; every query is read on each side, and the
+    #    13 slowed queries of the 32-core run fail the gate
+    rc, out = gate(os.path.join(HERE, "..", "BENCH_r17_c8.json"),
+                   os.path.join(HERE, "..", "BENCH_r17.json"))
+    results.append(case("r17 driver artifacts read whole", 1, rc, out))
+    assert out.count("(198 queries)") == 2, out
+    assert out.split("TREND GATE FAILED:")[1].count("x)") == 13, out
 
     if not all(results):
         sys.exit(1)

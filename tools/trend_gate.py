@@ -6,18 +6,34 @@ Usage:
     python3 tools/trend_gate.py                  # two newest bench_history/sf1_*.json
 
 Compares the per-query seconds of two `graft.Bench` JSON artifacts
-(same shape as BENCH_sf1.json) and FAILS (exit 1) when any query
-shared by both runs slowed by more than --ratio, or when the total
-did. Queries faster than --floor seconds in the NEW run are ignored —
-sub-second timings are scheduling noise, and a 0.2s -> 0.4s "2x
-regression" would page on nothing. Superlinear regressions in the
+and FAILS (exit 1) when any query shared by both runs slowed by more
+than --ratio, when the total did, or when any query failed (-1) in the
+NEW run. Queries faster than --floor seconds in the NEW run are
+ignored — sub-second timings are scheduling noise, and a 0.2s -> 0.4s
+"2x regression" would page on nothing. Superlinear regressions in the
 pair-join queries (d7 first) are exactly what this catches; a human
 reading raw JSON will not.
+
+An artifact is read in one of three shapes:
+  - plain: a JSON object with a full-named "queries" map (the bench's
+    target/bench_summary.json, bench_history/*.json);
+  - driver-shaped {"tail": ...} holding Bench's one stdout line
+    {"metric":"total",...,"keys":"prefix","cs":"d7:233,q1:48,..."}
+    (integer centiseconds under each query's short key);
+  - driver-shaped {"tail": ...} holding a {"metric":"queries_gz"} line
+    (base64 gzip of "key:sec;key:sec;...") plus the headline
+    {"metric":"total"} line, the format of the r16-r17 artifacts.
+Short keys (a query name's leading token) are expanded against the
+other artifact's full names.
 """
 import argparse
+import base64
+import binascii
 import glob
+import gzip
 import json
 import os
+import re
 import sys
 
 # Justified regressions: query -> (max allowed ratio, recorded reason).
@@ -30,187 +46,60 @@ ALLOW = {
     "t5_length_quantiles": (2.5, "two-level rewrite, no global window (r7)"),
 }
 
+
+def parse_cs(cs):
+    """'d7:233,q1:48' -> {key: seconds}; a failed query (-1) stays -1."""
+    qs = {}
+    for kv in filter(None, cs.split(",")):
+        k, _, v = kv.rpartition(":")
+        qs[k] = -1.0 if int(v) < 0 else int(v) / 100
+    return qs
+
+
+def decode_gz(path, line):
+    """The queries_gz payload: base64 -> gzip -> 'key:sec;key:sec;...'."""
+    try:
+        raw = gzip.decompress(base64.b64decode(line["v"])).decode("utf-8")
+        qs = {k: float(v) for k, _, v in
+              (kv.rpartition(":") for kv in filter(None, raw.split(";")))}
+    except (binascii.Error, ValueError, OSError, EOFError, KeyError) as e:
+        print(f"note: {path}: queries_gz line does not decode: {e!r}")
+        return None
+    if line.get("n") is not None and len(qs) != line["n"]:
+        print(f"note: {path}: queries_gz line holds {len(qs)} of {line['n']} queries")
+        return None
+    return qs
+
+
 def load(path):
     with open(path) as f:
         d = json.load(f)
-    if "queries" not in d and "tail" in d:
-        # driver-shaped artifact (BENCH_r{N}.json): the bench JSON line
-        # is embedded in the captured process tail
-        import re
-        # prefer a complete line that carries per-query timings; the
-        # short pointer line graft.Bench now prints LAST also matches
-        # {"metric"...} but has no "queries" key
-        cands = []
-        for m in re.findall(r'\{"metric".*\}', d["tail"]):
-            try:
-                cands.append(json.loads(m))
-            except json.JSONDecodeError:
-                pass  # head-truncated long line: other placements cover it
-        full = next((c for c in cands if c.get("metric") == "total"
-                     and "queries" in c), None)
-        # chunked re-emission (r12+): short {"metric":"queries_chunk"}
-        # lines near the end of stdout survive tail capture whole where
-        # the one long summary line loses its head; headline numbers
-        # come from the short pointer line
-        chunks = [c for c in cands if c.get("metric") == "queries_chunk"]
-        short = next((c for c in reversed(cands)
-                      if c.get("metric") == "total" and "queries" not in c), None)
-        qs = {}
-        for c in chunks:
-            qs.update(c.get("queries", {}))
-        # per-query load-witness chunks (r15+): reassembled the same
-        # way. ADVICE r15 low: track completeness like query chunks —
-        # a head-truncated artifact yields a PARTIAL env map, and the
-        # io witness's self-relative median over the surviving subset
-        # would mis-fire/mis-suppress; the per-query ext_busy entries
-        # that did survive stay accurate, so the map itself is kept
-        # with an explicit env_complete verdict.
-        env = {}
-        env_chunks = [c for c in cands if c.get("metric") == "env_chunk"]
-        for c in env_chunks:
-            env.update(c.get("env", {}))
-        env_nparts = env_chunks[0].get("parts") if env_chunks else None
-        env_complete = env_nparts is not None and \
-            len({c.get("part") for c in env_chunks}) == env_nparts
-        # compact whole-suite line (r16, r15 verdict ask #5): short
-        # unique-prefix keys + centisecond values, sized to survive
-        # the ~2-3 KB tail window whole — full coverage at reduced
-        # precision, preferred over a PARTIAL chunk set
-        mini = next((c for c in reversed(cands)
-                     if c.get("metric") == "queries_mini"), None)
-        qs_mini = {}
-        mini_full_keys = False
-        if mini:
-            for kv in mini.get("v", "").split(";"):
-                if ":" in kv:
-                    k, _, v = kv.rpartition(":")
-                    try:
-                        qs_mini[k] = float(v)
-                    except ValueError:
-                        pass
-            if mini.get("n") is not None and len(qs_mini) != mini["n"]:
-                qs_mini = {}  # the mini line itself was truncated
-        # gzipped whole-suite payload (r17, r16 verdict ask #1): the
-        # plain mini line is ~2.3 KB and the driver tail keeps ~2.0 KB,
-        # so its head was truncated in r16. queries_gz carries the same
-        # short-key map gzipped+base64'd to ~1.0 KB (3-decimal values),
-        # printed right before the closing short line so the pair fits
-        # the tail window whole. Preferred over the plain mini when
-        # both parse: same coverage, higher precision.
-        gz_line = next((c for c in reversed(cands)
-                        if c.get("metric") == "queries_gz"), None)
-        if gz_line:
-            try:
-                import base64 as _b64
-                import gzip as _gzip
-                raw = _gzip.decompress(
-                    _b64.b64decode(gz_line["v"])).decode("utf-8")
-                qs_gz = {}
-                for kv in raw.split(";"):
-                    if ":" in kv:
-                        k, _, v = kv.rpartition(":")
-                        qs_gz[k] = float(v)
-                if gz_line.get("n") is None or len(qs_gz) == gz_line["n"]:
-                    qs_mini = qs_gz
-                    mini_full_keys = gz_line.get("keys") == "full"
-            except Exception:
-                pass  # truncated/corrupt payload: other layers cover it
-        nparts = chunks[0].get("parts") if chunks else None
-        complete = nparts is not None and \
-            len({c.get("part") for c in chunks}) == nparts
-        # persisted-summary lookup: the pointer file Bench writes
-        # (repo-relative; overwritten by every local run) or an
-        # archived driver_*.json copy, accepted only when its headline
-        # total matches this run's short line exactly
-        filed = None
-        if short is not None:
-            root = os.path.join(os.path.dirname(__file__), "..")
-            qf = short.get("queries_file", "target/bench_summary.json")
-            cand_paths = [qf, os.path.join(root, qf)] + sorted(
-                glob.glob(os.path.join(root, "bench_history", "driver_*.json")))
-            for p2 in cand_paths:
-                if not os.path.exists(p2):
-                    continue
-                with open(p2) as f2:
-                    c2 = json.load(f2)
-                if abs(c2.get("value", -2) - short.get("value", -3)) < 1e-6 \
-                        and "queries" in c2:
-                    filed, filed_path = c2, p2
-                    break
-        # preference: intact full line > complete chunk set >
-        # value-matched persisted summary > compact mini line (full
-        # coverage, centisecond precision, short keys) > partial
-        # chunks (degraded)
-        if full is not None:
-            d = full
-            d["env_complete"] = True
-            if env and "env" not in d:
-                d["env"] = env
-                d["env_complete"] = env_complete
-        elif complete and short is not None:
-            d = dict(short)
-            d["queries"] = qs
-            if env:
-                d["env"] = env
-                d["env_complete"] = env_complete
-        elif filed is not None:
-            print(f"note: {path}: per-query timings read from the "
-                  f"value-matched persisted summary {filed_path}")
-            d = filed
-            d["env_complete"] = True
-        elif qs_mini and short is not None:
-            d = dict(short)
-            d["queries"] = qs_mini
-            if not mini_full_keys:
-                d["short_keys"] = True
-            if env:
-                d["env"] = env
-                d["env_complete"] = env_complete
-        elif chunks and short is not None:
-            print(f"note: {path}: reassembled "
-                  f"{len({c.get('part') for c in chunks})}/{nparts} query "
-                  f"chunks (head-truncated tail); {len(qs)} timings recovered")
-            d = dict(short)
-            d["queries"] = qs
-            if env:
-                d["env"] = env
-                d["env_complete"] = env_complete
-        if "queries" not in d:
-            # The tail capture keeps the LAST N bytes, so the summary
-            # line can be head-truncated (round 8's artifact): the line
-            # still ends with ...,"failed":K,"sf":"..."} but its start
-            # is gone. Salvage every surviving "name":float pair — the
-            # shared-set comparison degrades gracefully to the queries
-            # both artifacts still carry. (graft.Bench now also writes
-            # target/bench_summary.json so future artifacts never need
-            # this path.)
-            line = next((l for l in d["tail"].splitlines() if '"failed":' in l), None)
-            if line is not None:
-                pairs = re.findall(r'"([A-Za-z0-9_]+)":(-?\d+(?:\.\d+)?)', line)
-                qs = {k: float(v) for k, v in pairs
-                      if k not in ("value", "failed", "load1", "canary_ms",
-                                   "canary_all_ms", "canary_end_ms", "calib_ms",
-                                   "calib_end_ms", "calib_io_ms", "calib_io_end_ms",
-                                   "part", "parts", "n_queries")}
-                mv = re.search(r'"value":(-?\d+(?:\.\d+)?)', line)
-                if qs:
-                    print(f"note: {path}: summary line head-truncated; "
-                          f"salvaged {len(qs)} per-query timings from the tail")
-                    d = {"value": float(mv.group(1)) if mv else sum(qs.values()),
-                         "queries": qs}
-                elif cands:
-                    # only the short pointer line survived: read the
-                    # per-query file it names (same-box runs)
-                    qf = cands[-1].get("queries_file")
-                    if qf and os.path.exists(qf):
-                        with open(qf) as f2:
-                            d = json.load(f2)
-    if "queries" not in d:
-        sys.exit(f"{path}: not a bench artifact (no 'queries' key)")
-    # a plain (non-driver-shaped) artifact carries its env map whole
-    if "env" in d:
-        d.setdefault("env_complete", True)
-    return d
+    if "queries" in d:
+        return d
+    if "tail" not in d:
+        sys.exit(f"{path}: not a bench artifact (no 'queries' or 'tail' key)")
+    # driver-shaped artifact (BENCH_r{N}.json): the last ~2 KB of the
+    # process output, in which a long line may have lost its head
+    cands = []
+    for m in re.findall(r'\{"metric".*\}', d["tail"]):
+        try:
+            cands.append(json.loads(m))
+        except json.JSONDecodeError:
+            pass  # head-truncated line
+    totals = [c for c in cands if c.get("metric") == "total"]
+    line = next((c for c in reversed(totals) if "cs" in c), None)
+    if line is not None:
+        qs = parse_cs(line["cs"])
+        if len(qs) != line.get("n_queries", len(qs)):
+            sys.exit(f"{path}: the cs map holds {len(qs)} of "
+                     f"{line['n_queries']} queries (two share a short key?)")
+        return dict(line, queries=qs)
+    gz = next((c for c in reversed(cands) if c.get("metric") == "queries_gz"), None)
+    qs = decode_gz(path, gz) if gz is not None and totals else None
+    if qs is None:
+        sys.exit(f"{path}: no complete per-query line in the tail")
+    return dict(totals[-1], queries=qs, keys=gz.get("keys", "prefix"))
+
 
 def main():
     ap = argparse.ArgumentParser()
@@ -230,16 +119,6 @@ def main():
                          "0.57/1.01/1.03s and s20_mmr_rerank 0.83/1.42s across runs "
                          "of IDENTICAL code); a genuine regression on any query "
                          "worth paging about clears this easily")
-    ap.add_argument("--strict-env", action="store_true",
-                    help="disable the per-query load-witness adjudication: "
-                         "flags fail even when the new run's env witness shows "
-                         "the query ran under measurably higher external load")
-    ap.add_argument("--accept-env", action="store_true",
-                    help="treat env-adjudicated flags as passing (exit 0). "
-                         "Default (ADVICE r15 medium): adjudicated flags are "
-                         "INCONCLUSIVE — the gate exits 2 to demand a "
-                         "quiet-window rerun rather than calling the "
-                         "comparison green on ambient-load evidence alone")
     args = ap.parse_args()
 
     if args.old and args.new:
@@ -264,237 +143,83 @@ def main():
             hits = by_prefix.get(k, [])
             out[hits[0] if len(hits) == 1 else k] = v
         short_side["queries"] = out
-        short_side.pop("short_keys", None)
-    if old.get("short_keys") and not new.get("short_keys"):
+    o_short, n_short = old.get("keys") == "prefix", new.get("keys") == "prefix"
+    if o_short and not n_short:
         expand_short(old, new)
-    elif new.get("short_keys") and not old.get("short_keys"):
+    elif n_short and not o_short:
         expand_short(new, old)
-    elif old.get("short_keys") and new.get("short_keys"):
+    elif o_short and n_short:
         print("note: both artifacts carry compact short-keyed timings; "
               "comparing on short keys")
-    for tag, art in (("old", old), ("new", new)):
-        if art.get("degraded_start"):
-            print(f"WARNING: {tag} artifact is stamped degraded_start="
-                  f"{art['degraded_start']!r} — it began on a measurably "
-                  f"unhealthy box; treat its absolute numbers accordingly")
     print(f"old: {old_path} total={old['value']}s ({len(old['queries'])} queries)")
     print(f"new: {new_path} total={new['value']}s ({len(new['queries'])} queries)")
 
-    # Box-speed normalization: when BOTH artifacts carry the bench's
-    # single-thread canary (canary_ms), scale the new run's times by
-    # old_canary/new_canary before comparing. The guest cannot see
-    # host frequency state (identical code+queries measured 67.6s /
-    # 75.2s / 95.3s across one day at idle-100%/steal-0), so without
-    # this a host clock swing reads as a code regression — the rounds
-    # 8/9 failure mode that needed prose adjudication. The raw times
-    # are still printed; only the COMPARISON is normalized.
-    # Prefer the ALL-CORE canary: hosts keep single-core turbo while
-    # the all-core clock drops under co-tenant load (measured: suite
-    # +13% while the single-thread canary moved +2%), and the suite
-    # runs on every core.
-    # Prefer the SUSTAINED calibration (calib_ms, r13+): the burst
-    # canaries are provably inverted on sustained turbo drift — the
-    # r12 official pair failed its gate while the slow box's burst
-    # canaries read FASTER (bench_history/sf01_r12e_oldbin_subset.json)
-    # because short bursts ride the boost window the 10-minute suite
-    # never sees. calib_ms holds all cores for ~6-8 s of fixed work
-    # plus a DRAM-bound phase, so it measures the SETTLED box speed
-    # the suite actually runs at. Start/end pair -> mean, correcting
-    # by the box's average state across the run.
-    def box_speed(art):
-        if art.get("calib_ms"):
-            vals = [art["calib_ms"]] + \
-                ([art["calib_end_ms"]] if art.get("calib_end_ms") else [])
-            return "calib_ms", sum(vals) / len(vals)
-        for k in ("canary_all_ms", "canary_ms"):
-            if art.get(k):
-                return k, art[k]
-        return None, None
+    # Box-speed normalization: scale the new run's times by old/new box
+    # speed before comparing. The guest cannot see host frequency state
+    # (identical code+queries measured 67.6s / 75.2s / 95.3s across one
+    # day at idle-100%/steal-0), so without this a host clock swing
+    # reads as a code regression. The raw times are still printed; only
+    # the COMPARISON is normalized.
+    # The signal is the SUSTAINED calibration (calib_ms, r13+): it holds
+    # all cores for ~6-8 s of fixed work plus a DRAM-bound phase, so it
+    # measures the SETTLED box speed the suite actually runs at (burst
+    # probes ride the boost window and read inverted on sustained turbo
+    # drift, r12). Start/end pair -> mean, correcting by the box's
+    # average state across the run. Pre-r13 artifacts carry only the
+    # burst canaries (all-core preferred: hosts keep single-core turbo
+    # while the all-core clock drops under co-tenant load); a mixed
+    # pair falls back to the strongest signal BOTH carry.
+    signals = ("calib_ms", "canary_all_ms", "canary_ms")
+    def box_speed(art, key):
+        if key == "calib_ms" and art.get("calib_end_ms"):
+            return (art["calib_ms"] + art["calib_end_ms"]) / 2
+        return art[key]
+    o_key = next((k for k in signals if old.get(k)), None)
+    n_key = next((k for k in signals if new.get(k)), None)
+    key = o_key if o_key == n_key else next(
+        (k for k in signals[1:] if old.get(k) and new.get(k)), None)
     scale = 1.0
-    (ok_key, o_speed), (nk_key, n_speed) = box_speed(old), box_speed(new)
-    key = ok_key if ok_key == nk_key else (
-        # mixed generations (old pre-r13 artifact): fall back to the
-        # strongest signal BOTH carry
-        next((k for k in ("canary_all_ms", "canary_ms")
-              if old.get(k) and new.get(k)), None))
-    if key == "calib_ms":
-        scale = o_speed / n_speed
-    elif key:
-        scale = old[key] / new[key]
     if key:
-        if abs(1 - scale) > 0.03:
-            print(f"{key}: old={o_speed if key=='calib_ms' else old[key]:.0f}ms "
-                  f"new={n_speed if key=='calib_ms' else new[key]:.0f}ms "
+        o_speed, n_speed = box_speed(old, key), box_speed(new, key)
+        if abs(1 - o_speed / n_speed) > 0.03:
+            scale = o_speed / n_speed
+            print(f"{key}: old={o_speed:.0f}ms new={n_speed:.0f}ms "
                   f"-> comparing at x{scale:.3f} box-speed normalization")
-        else:
-            scale = 1.0
 
-    # I/O-sensitive normalization for the STREAMING family (r13 ask
-    # #1c): micro-batch queries are dominated by many small synced
-    # writes (offset-log fsyncs, state-store commits) that the CPU+
-    # DRAM calibration provably cannot see — the r13 official pair
-    # carried near-identical calib_ms on boxes whose st family
-    # differed 2.5x. When BOTH artifacts carry calib_io_ms (the fixed
-    # 400-fsync probe), st-prefixed queries are compared under
-    # whichever of the CPU and I/O normalizations is MORE FAVORABLE
-    # to the new run: a slow-disk box is thereby adjudicated by its
-    # own measured disk, while a real code regression (same box, io
-    # ratio ~1) still fails. Non-st queries never use the io scale.
-    def io_speed(art):
-        if art.get("calib_io_ms"):
-            vals = [art["calib_io_ms"]] + \
-                ([art["calib_io_end_ms"]] if art.get("calib_io_end_ms") else [])
-            return sum(vals) / len(vals)
-        return None
-    io_scale = None
-    o_io, n_io = io_speed(old), io_speed(new)
-    if o_io and n_io:
-        io_scale = o_io / n_io
-        # Leniency threshold (ADVICE r14 low): the old rule granted the
-        # io scale whenever it was ANY amount more favorable, so ~10%
-        # calibration noise could excuse a genuine st regression. Real
-        # disk sags measured 2.8x-8x on the fsync probe; require the
-        # new box to read at least 20% slower on io before the st
-        # family may normalize by it.
-        if io_scale <= 0.83:
-            print(f"calib_io_ms: old={o_io:.0f}ms new={n_io:.0f}ms "
-                  f"-> st-family may normalize at x{io_scale:.3f} (io)")
-        else:
-            io_scale = None
-
-    # Per-query environment witness (r14 verdict ask #2). Artifacts
-    # carry env[q] = [load1_at_boundary, ext_busy_fraction] where
-    # ext_busy is the fraction of TOTAL box CPU consumed by OTHER
-    # processes during that query ((/proc/stat busy delta minus the
-    # bench JVM's own /proc/self/stat delta) / total delta). The r14
-    # official run inflated CPU-bound pair-miners 2.6-4.1x while both
-    # START/END point probes read the boxes near-equal — mid-suite
-    # ~5-minute host load waves are invisible to point probes but land
-    # exactly in the per-query cumulative busy fraction. A flag whose
-    # query ran under measurably higher external load in the NEW run
-    # is downgraded to ENV-ADJUDICATED (printed, not failed): the
-    # inflation has a named, measured cause. Superlinear contention
-    # effects (cache/bandwidth) make a quantitative correction model
-    # unreliable, so this is an adjudication, not a normalization —
-    # and it only fires when the new run's witness is itself elevated
-    # (ext_busy >= 0.08, i.e. ~2.5 cores of a 32-core box), so flags
-    # from quiet runs always still fail.
-    o_env = old.get("env") or {}
-    n_env = new.get("env") or {}
-    # the DISK leg of the witness (r15, env[q][2] = 24-fsync probe ms
-    # run right after the query): ext_busy sees CPU waves but not disk
-    # sags, and a sag that starts mid-suite can leave the artifact's
-    # calib_io MEAN reading healthy (live r15 case: st12 flagged 1.53x
-    # while the end probe read 2.1x the start and an isolated rerun
-    # measured the sag at ~10x). The io witness is SELF-RELATIVE: a
-    # query whose probe reads >= 3x the run's own median (and >= 15 ms
-    # absolute) ran into a sag, whatever the cross-artifact means say.
-    # the io median is SELF-RELATIVE to the whole run, so it is only
-    # trustworthy when the env map is COMPLETE (ADVICE r15 low: a
-    # head-truncated artifact's surviving subset would bias it);
-    # per-query ext_busy entries stay accurate even from a partial map
-    n_io_med = None
-    if new.get("env_complete", False):
-        io_vals = sorted(e[2] for e in n_env.values() if len(e) > 2 and e[2] >= 0)
-        if io_vals:
-            n_io_med = io_vals[len(io_vals) // 2]
-    def env_suspect(q):
-        ne = n_env.get(q)
-        if not ne:
-            return None
-        n_busy = ne[1]
-        oe = o_env.get(q)
-        o_busy = oe[1] if oe and oe[1] >= 0 else 0.0
-        if n_busy >= 0 and n_busy >= 0.08 and n_busy - o_busy >= 0.05:
-            return f"ext_busy {o_busy:.2f}->{n_busy:.2f} load1 " + \
-                (f"{oe[0]:.1f}" if oe else "?") + f"->{ne[0]:.1f}"
-        if len(ne) > 2 and n_io_med and ne[2] >= max(3 * n_io_med, 15):
-            return f"io_probe {ne[2]:.0f}ms vs run median {n_io_med:.0f}ms"
-        return None
-
-    # st-family: the more favorable of CPU and I/O normalization
-    # (see the calib_io block above); everything else: CPU only
-    def q_scale_of(q):
-        if q.startswith("st") and io_scale is not None:
-            return min(scale, io_scale)
-        return scale
-
-    failures = []
-    env_adjudicated = []
+    # a query that fails in the new run fails the gate, whatever it
+    # did before; the -1 stays out of the comparisons below
+    failures = [f"{q}: failed in the new run (-1)"
+                for q, n in sorted(new["queries"].items()) if n < 0]
+    if new.get("value", 0) < 0 and not failures:
+        failures.append("new total is -1: a query failed")
     shared = sorted(set(old["queries"]) & set(new["queries"]))
     for q in shared:
-        q_scale = q_scale_of(q)
-        scale_tag = " [io-norm]" if q_scale != scale else ""
         o, n = old["queries"][q], new["queries"][q]
-        # floor uses the same per-query normalization as the ratio, so
-        # a query sits on the same side of the floor regardless of box
-        # speed (ADVICE r14: the floor previously used the CPU scale
-        # while the ratio used the io-normalized one — a query could
-        # flip sides of the floor inconsistently)
-        if n * q_scale < args.floor or o <= 0:
+        if n < 0 or o <= 0 or n * scale < args.floor:
             continue
-        r = n * q_scale / o
+        r = n * scale / o
         limit, reason = ALLOW.get(q, (args.ratio, None))
-        slowed = n * q_scale - o  # absolute normalized slowdown
+        slowed = n * scale - o  # absolute normalized slowdown
         regressed = r > limit and slowed >= args.abs_floor
-        witness = env_suspect(q) if regressed else None
-        if witness and not args.strict_env:
-            env_adjudicated.append(q)
-            flag = f"ENV-ADJUDICATED ({witness})"
-            regressed = False
-        else:
-            # a SURVIVING flag still prints its witness values inline:
-            # the reader sees at once whether the query ran quiet (a
-            # real suspect) or under sub-threshold load / the
-            # host-clock-sag signature (high load1 with ext_busy ~0
-            # and healthy io — our own threads piling up on a slowed
-            # clock, which no guest-visible counter can attribute)
-            ne = n_env.get(q)
-            ctx = (f" [env load1={ne[0]:.1f} ext_busy={ne[1]:.2f}" +
-                   (f" io={ne[2]:.0f}ms" if len(ne) > 2 else "") + "]") \
-                if regressed and ne else ""
-            flag = (f"REGRESSED{ctx}" if regressed else (
-                f"within abs-floor ({slowed:+.2f}s)" if r > limit else (
-                    f"allowed <= {limit}x: {reason}" if reason and r > args.ratio else "")))
+        flag = "REGRESSED" if regressed else (
+            f"within abs-floor ({slowed:+.2f}s)" if r > limit else (
+                f"allowed <= {limit}x: {reason}" if reason and r > args.ratio else ""))
         if regressed:
-            failures.append(f"{q}: {o:.2f}s -> {n:.2f}s ({r:.2f}x){scale_tag}")
+            failures.append(f"{q}: {o:.2f}s -> {n:.2f}s ({r:.2f}x)")
         if r > args.ratio or r < 1 / args.ratio:
-            print(f"  {q:>24s}  {o:8.2f}s -> {n:8.2f}s  {r:5.2f}x  {flag}{scale_tag}")
+            print(f"  {q:>24s}  {o:8.2f}s -> {n:8.2f}s  {r:5.2f}x  {flag}")
 
     # totals over the SHARED set only, so suite growth is not a
-    # "regression"; per-query normalization applies to the comparison,
-    # raw seconds are printed. ADVICE r15 medium: env-adjudicated
-    # queries STAY in the total on both sides — excusing them twice
-    # (per-query AND total) let a real regression coinciding with
-    # ambient load escape both checks. When the total exceeds the gate
-    # ONLY with the adjudicated queries included, that is the same
-    # inconclusive-evidence situation as the flags themselves: the run
-    # needs a quiet rerun, not a red or a green verdict.
-    inconclusive = []
-    o_tot = sum(old["queries"][q] for q in shared)
-    n_tot = sum(new["queries"][q] for q in shared)
-    n_tot_norm = sum(new["queries"][q] * q_scale_of(q) for q in shared)
-    if env_adjudicated:
-        print(f"note: {len(env_adjudicated)} flag(s) env-adjudicated by the "
-              f"per-query load witness: {env_adjudicated}")
+    # "regression", and without queries that failed (-1) on either side;
+    # the comparison is normalized, raw seconds are printed
+    counted = [q for q in shared if old["queries"][q] >= 0 and new["queries"][q] >= 0]
+    o_tot = sum(old["queries"][q] for q in counted)
+    n_tot = sum(new["queries"][q] for q in counted)
     if o_tot > 0:
-        r_tot = n_tot_norm / o_tot
+        r_tot = n_tot * scale / o_tot
         print(f"shared-set total: {o_tot:.1f}s -> {n_tot:.1f}s ({r_tot:.2f}x normalized)")
         if r_tot > args.total_ratio:
-            excl = [q for q in shared if q not in env_adjudicated]
-            o_excl = sum(old["queries"][q] for q in excl)
-            # an empty (or zero-weight) remainder after exclusion means
-            # the WHOLE excess rides on adjudicated queries — that is
-            # the inconclusive case, not a conclusive failure
-            r_excl = (sum(new["queries"][q] * q_scale_of(q) for q in excl) / o_excl
-                      if o_excl > 0 else 0.0)
-            if env_adjudicated and r_excl <= args.total_ratio and not args.strict_env:
-                inconclusive.append(
-                    f"shared-set total {r_tot:.2f}x exceeds {args.total_ratio}x only "
-                    f"with the env-adjudicated queries included ({r_excl:.2f}x without)")
-            else:
-                failures.append(
-                    f"shared-set total: {o_tot:.1f}s -> {n_tot:.1f}s ({r_tot:.2f}x)")
+            failures.append(f"shared-set total: {o_tot:.1f}s -> {n_tot:.1f}s ({r_tot:.2f}x)")
 
     dropped = set(old["queries"]) - set(new["queries"])
     if dropped:
@@ -505,23 +230,8 @@ def main():
         for f in failures:
             print(f"  {f}")
         sys.exit(1)
-    # ADVICE r15 medium: an adjudicated flag is a measured ambiguity,
-    # not a pass — exit 2 (distinct from failure) so a closing-run
-    # consumer reruns in a quiet window instead of recording green.
-    # --accept-env restores the r15 behavior for exploratory compares.
-    if (env_adjudicated or inconclusive) and not args.accept_env:
-        print("\nTREND GATE INCONCLUSIVE (exit 2) — environment-adjudicated "
-              "evidence; rerun in a quiet window or pass --accept-env:")
-        for q in env_adjudicated:
-            print(f"  adjudicated: {q}")
-        for m in inconclusive:
-            print(f"  {m}")
-        sys.exit(2)
-    if env_adjudicated or inconclusive:
-        print("trend gate OK (--accept-env: "
-              f"{len(env_adjudicated)} adjudicated flag(s) accepted)")
-        sys.exit(0)
     print("trend gate OK")
+
 
 if __name__ == "__main__":
     main()
