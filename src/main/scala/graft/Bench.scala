@@ -88,6 +88,26 @@ object Bench {
       s""""sf":"$sf","calib_ms":$calibMs,"calib_end_ms":$calibEndMs}"""
   }
 
+  /** The sweep between timed queries: drops every cached plan and
+    * every persisted or checkpointed RDD the previous query (or the
+    * warm pass) left behind. Pinned storage memory squeezes execution
+    * memory for whoever runs next — observed as multi-x erratic swings
+    * in the pair-op family at sf1, not as a clean per-query cost — and a
+    * cached-plan entry left registered would let the timed pass reuse
+    * the warm pass's cache state.
+    * INVARIANT this sweep relies on: every query rebuilds its frames
+    * from scratch, so nothing retained across query boundaries is
+    * localCheckpointed. A localCheckpointed RDD has TRUNCATED lineage —
+    * unpersisting one makes it unrecomputable (missing-block errors on
+    * next use). If cross-query caching is ever introduced, skip RDDs
+    * whose lineage was truncated (rdd.getCheckpointFile /
+    * isLocallyCheckpointed) here.
+    */
+  def releaseCached(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -186,20 +206,7 @@ object Bench {
       // billed to) whichever query runs next — observed q10 at 30s in
       // the sf1 suite vs 0.6s in isolation. The GC runs between
       // timings, so no query's own work is hidden.
-      // Drop cached/localCheckpoint blocks the previous query left in
-      // the block manager (CC label rounds, signature frames): pinned
-      // storage memory squeezes execution memory for whoever runs
-      // next — observed as multi-x erratic swings in the pair-op
-      // family at sf1, not as a clean per-query cost.
-      // INVARIANT this sweep relies on: every query rebuilds its
-      // frames from scratch, so nothing retained across query
-      // boundaries is localCheckpointed. A localCheckpointed RDD has
-      // TRUNCATED lineage — unpersisting one makes it unrecomputable
-      // (missing-block errors on next use). If cross-query caching is
-      // ever introduced, skip RDDs whose lineage was truncated
-      // (rdd.getCheckpointFile / isLocallyCheckpointed) here.
-      val sc = org.apache.spark.sql.graft.Shim.classic(spark).sparkContext
-      sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+      releaseCached(spark)
       System.gc()
       val t0 = System.nanoTime()
       val ok = try { fn(spark, sfDir).count(); true }

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.functions.CrossHash._
 import graft.functions.VectorFunctions
+import graft.operators.Rounds.Round
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -1189,8 +1190,8 @@ object Dedup {
     * graph diameter, and near-duplicate components are near-cliques
     * (diameter 1–3 in practice), so real dedup graphs converge in a
     * handful of the CHEAPEST possible rounds (one shuffle join + one
-    * min-aggregation each; `localCheckpoint` truncates lineage so
-    * round N never replays rounds 1..N-1). A graph still moving
+    * min-aggregation each, on the [[Rounds]] loop, whose checkpoints
+    * keep round N from replaying rounds 1..N-1). A graph still moving
     * after [[MinLabelRounds]] rounds is diameter-pathological (long
     * chains), and phase 2 switches to the alternating
     * large-star/small-star contraction of Kiveris et al. ("Connected
@@ -1207,57 +1208,56 @@ object Dedup {
     * endpoint, and the UNION-distinct semantics of recursive CTEs
     * guarantee termination.
     */
-  def connectedComponents(pairs: DataFrame, maxRounds: Int = 64): DataFrame = {
-    // both orientations from ONE pass over the pair pipeline: the
-    // union-of-two-selects form evaluated the (expensive) upstream
-    // pair-mining subtree TWICE inside this checkpoint — nothing
-    // upstream is cached, and exchange reuse does not bridge the two
-    // union branches once the projections differ (measured r16, sf0.1:
-    // d8 ≈ 2×pairs + cc; pairs 4.7 s, cc 1.3 s). explode(array(...))
-    // emits (a,b) and (b,a) per input row in the same narrow stage
-    // (guide §2.4: remove shuffles/passes outright).
-    val und = pairs.select(explode(array(
-        struct(col("a").as("src"), col("b").as("dst")),
-        struct(col("b").as("src"), col("a").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .localCheckpoint()
-    var labels = und.select(col("src").as("node")).distinct()
-      .withColumn("lbl", col("node"))
-      .localCheckpoint()
+  def connectedComponents(pairs: DataFrame, maxRounds: Int = 64): DataFrame = Rounds.scope { rs =>
+    // every round reads the edge list: fill it now, which also cuts
+    // its lineage, so no round's job carries the pair-mining stages
+    val und = rs.checkpoint(undirected(pairs))
+    rs.count(und)
+    val labels = rs.checkpoint(und.select(col("src").as("node")).distinct()
+      .withColumn("lbl", col("node")))
     // labels only ever decrease, so sum(lbl) is strictly monotone
     // until the fixpoint: an unchanged sum IS convergence, checked
     // with one aggregate instead of a join against the prior round.
-    // Decimal(38) sum: ids may be arbitrary 64-bit values (content
-    // hashes), where a LongType sum could wrap and collide. The
-    // empty-graph sum is null -> ZERO, so a pair-free corpus
-    // converges immediately instead of NPE-ing.
-    def labelSum(df: DataFrame): java.math.BigDecimal =
-      Option(df.agg(sum(col("lbl").cast("decimal(38,0)"))).collect().head.getDecimal(0))
-        .getOrElse(java.math.BigDecimal.ZERO)
-    var prevSum = labelSum(labels)
-    var converged = false
-    var rounds = 0
-    val diameterBudget = math.min(MinLabelRounds, maxRounds)
-    while (!converged && rounds < diameterBudget) {
-      val viaNeighbours = und
-        .join(labels.select(col("node").as("dst"), col("lbl")), "dst")
-        .select(col("src").as("node"), col("lbl"))
-      val next = labels.union(viaNeighbours)
-        .groupBy("node").agg(min("lbl").as("lbl"))
-        .localCheckpoint()
-      val nextSum = labelSum(next)
-      converged = nextSum.compareTo(prevSum) == 0
-      prevSum = nextSum
-      labels = next
-      rounds += 1
-    }
-    if (converged)
-      labels.select(col("node").as("doc_id"), col("lbl").as("cluster_id"))
+    val run = rs.loop(Round(labels, labelSum(labels)), math.min(MinLabelRounds, maxRounds))(
+      (h, _) => componentStep(und, h.head.frame))(labelSum)(
+      (prev, latest) => latest.value.compareTo(prev.value) == 0)
+    if (run.converged)
+      rs.keep(run.last.frame).select(col("node").as("doc_id"), col("lbl").as("cluster_id"))
     else
       // diameter exceeds the cheap-phase budget: contract instead of
       // failing — O(log² n) rounds on any graph shape
-      alternatingComponents(pairs, maxRounds - rounds)
+      alternatingComponents(pairs, maxRounds - (run.history.size - 1))
   }
+
+  /** Both orientations `(src, dst)` of every pair, from ONE pass over
+    * the pair pipeline: the union-of-two-selects form evaluated the
+    * (expensive) upstream pair-mining subtree TWICE — nothing upstream
+    * is cached, and exchange reuse does not bridge the two union
+    * branches once the projections differ (measured r16, sf0.1: d8 ≈
+    * 2×pairs + cc; pairs 4.7 s, cc 1.3 s). explode(array(...)) emits
+    * (a,b) and (b,a) per input row in the same narrow stage.
+    */
+  private[graft] def undirected(pairs: DataFrame): DataFrame =
+    pairs.select(explode(array(
+        struct(col("a").as("src"), col("b").as("dst")),
+        struct(col("b").as("src"), col("a").as("dst")))).as("e"))
+      .select(col("e.src").as("src"), col("e.dst").as("dst"))
+
+  /** One min-label round of [[connectedComponents]]: every node takes
+    * the minimum of its own and its neighbours' labels. */
+  private[graft] def componentStep(und: DataFrame, labels: DataFrame): DataFrame =
+    labels.union(und.join(labels.select(col("node").as("dst"), col("lbl")), "dst")
+        .select(col("src").as("node"), col("lbl")))
+      .groupBy("node").agg(min("lbl").as("lbl"))
+
+  /** The convergence sum of a label table. Decimal(38) sum: ids may be
+    * arbitrary 64-bit values (content hashes), where a LongType sum
+    * could wrap and collide. The empty-graph sum is null -> ZERO, so a
+    * pair-free corpus converges at once instead of NPE-ing.
+    */
+  private def labelSum(labels: DataFrame): java.math.BigDecimal =
+    Option(labels.agg(sum(col("lbl").cast("decimal(38,0)"))).collect().head.getDecimal(0))
+      .getOrElse(java.math.BigDecimal.ZERO)
 
   /** Rounds of plain min-label propagation [[connectedComponents]]
     * attempts before switching to the contraction algorithm — deep
@@ -1278,86 +1278,94 @@ object Dedup {
     *
     * Scale shape: each round is two groupBy-min aggregations and two
     * joins over the CURRENT edge set, which only shrinks (toward one
-    * edge per non-root node); `localCheckpoint` truncates lineage
-    * per round. Convergence is detected by a decimal-sum signature
+    * edge per non-root node); each round is a [[Rounds]] checkpoint,
+    * so no round replays the ones before it. Convergence is detected by a decimal-sum signature
     * (count, Σu, Σv — exact, no float loss) and then CONFIRMED with
     * an exact set-difference before declaring the fixpoint, so a
     * signature collision can never end the loop early with wrong
     * clusters; the budget exhausting raises rather than returning
     * partial labels.
     */
-  private[graft] def alternatingComponents(pairs: DataFrame, maxRounds: Int = 64): DataFrame = {
-    val nodes = pairs.select(col("a").as("node"))
-      .union(pairs.select(col("b").as("node"))).distinct()
-      .localCheckpoint()
-    // canonical orientation u > v; self loops contribute nothing
-    var edges = pairs
-      .select(greatest(col("a"), col("b")).as("u"), least(col("a"), col("b")).as("v"))
-      .filter(col("u") =!= col("v")).distinct()
-      .localCheckpoint()
-
-    // large-star: from BOTH orientations of each edge, every
-    // neighbour v > u relinks to m(u) = min(N(u) ∪ {u}); edges where
-    // v < u re-emerge from v's own group, so no adjacency is lost
-    def largeStar(e: DataFrame): DataFrame = {
-      val nbrs = e.select(col("u"), col("v"))
-        .union(e.select(col("v").as("u"), col("u").as("v")))
-      val m = nbrs.groupBy("u").agg(min("v").as("mv"))
-        .select(col("u"), least(col("u"), col("mv")).as("m"))
-      nbrs.join(m, "u").filter(col("v") > col("u"))
-        .select(col("v").as("u"), col("m").as("v"))
-        .filter(col("u") =!= col("v")).distinct()
-    }
-    // small-star: per larger endpoint u (all its neighbours are < u
-    // under the canonical orientation), link u and every non-minimum
-    // neighbour to m = min(N(u))
-    def smallStar(e: DataFrame): DataFrame = {
-      val m = e.groupBy("u").agg(min("v").as("m"))
-      val viaV = e.join(m, "u").filter(col("v") =!= col("m"))
-        .select(col("v").as("u"), col("m").as("v"))
-      val viaU = m.select(col("u"), col("m").as("v"))
-      viaV.union(viaU).filter(col("u") =!= col("v")).distinct()
-    }
-    def sig(e: DataFrame): (Long, java.math.BigDecimal, java.math.BigDecimal) = {
-      val r = e.agg(count(lit(1)),
-        sum(col("u").cast("decimal(38,0)")), sum(col("v").cast("decimal(38,0)"))).head()
-      (r.getLong(0),
-        Option(r.getDecimal(1)).getOrElse(java.math.BigDecimal.ZERO),
-        Option(r.getDecimal(2)).getOrElse(java.math.BigDecimal.ZERO))
-    }
-    var prevSig = sig(edges)
-    var converged = edges.isEmpty // a pair-free input is already done
-    var rounds = 0
-    while (!converged && rounds < maxRounds) {
-      val next = smallStar(largeStar(edges)).localCheckpoint()
-      val nextSig = sig(next)
+  private[graft] def alternatingComponents(pairs: DataFrame, maxRounds: Int = 64): DataFrame =
+    Rounds.scope { rs =>
+      val nodes = rs.checkpoint(pairs.select(col("a").as("node"))
+        .union(pairs.select(col("b").as("node"))).distinct())
+      val edges = rs.checkpoint(canonicalEdges(pairs))
+      val seed = Round(edges, edgeSignature(edges))
+      val empty = seed.value._1 == 0L // a pair-free input is already done
       // signature equality is the cheap gate; the exact set diff (two
       // distinct sets of equal size, one-way subset ⇒ equal) is the
       // proof — convergence is never declared off a sum collision
-      converged = nextSig == prevSig && next.exceptAll(edges).isEmpty
-      prevSig = nextSig
-      edges = next
-      rounds += 1
+      val run = rs.loop(seed, if (empty) 0 else maxRounds)((h, _) => starStep(h.head.frame))(
+        edgeSignature)((prev, latest) =>
+        latest.value == prev.value && latest.frame.exceptAll(prev.frame).isEmpty)
+      if (!empty && !run.converged) throw new IllegalStateException(
+        s"alternatingComponents did not converge within $maxRounds rounds — " +
+          "raise maxRounds (returning partial labels would silently split clusters)")
+      val stars = run.last.frame
+      // the fixpoint must be STAR-shaped (one edge per non-root, roots
+      // never on the u side) — a one-off structural check that makes
+      // any early-stop bug loud instead of silently mislabeling
+      if (!empty) {
+        val multiEdge = stars.groupBy("u").agg(count(lit(1)).as("c"))
+          .filter(col("c") > 1).isEmpty
+        val rootsAreLeaves = stars.select("u")
+          .intersect(stars.select(col("v").as("u"))).isEmpty
+        if (!multiEdge || !rootsAreLeaves) throw new IllegalStateException(
+          "alternatingComponents converged to a non-star edge set — internal invariant violated")
+      }
+      // fixpoint = stars rooted at component minima: every non-root
+      // node holds exactly (node, min); roots label themselves. The
+      // labels are filled here so the returned frame reads one
+      // checkpoint, not the node and edge tables.
+      val labels = rs.checkpoint(nodes
+        .join(stars.select(col("u").as("node"), col("v").as("lbl")), Seq("node"), "left")
+        .select(col("node").as("doc_id"), coalesce(col("lbl"), col("node")).as("cluster_id")))
+      rs.count(labels)
+      rs.keep(labels)
     }
-    if (!converged) throw new IllegalStateException(
-      s"alternatingComponents did not converge within $maxRounds rounds — " +
-        "raise maxRounds (returning partial labels would silently split clusters)")
-    // the fixpoint must be STAR-shaped (one edge per non-root, roots
-    // never on the u side) — a one-off structural check that makes
-    // any early-stop bug loud instead of silently mislabeling
-    if (!edges.isEmpty) {
-      val multiEdge = edges.groupBy("u").agg(count(lit(1)).as("c"))
-        .filter(col("c") > 1).isEmpty
-      val rootsAreLeaves = edges.select("u")
-        .intersect(edges.select(col("v").as("u"))).isEmpty
-      if (!multiEdge || !rootsAreLeaves) throw new IllegalStateException(
-        "alternatingComponents converged to a non-star edge set — internal invariant violated")
-    }
-    // fixpoint = stars rooted at component minima: every non-root
-    // node holds exactly (node, min); roots label themselves
-    nodes.join(edges.select(col("u").as("node"), col("v").as("lbl")), Seq("node"), "left")
-      .select(col("node").as("doc_id"),
-        coalesce(col("lbl"), col("node")).as("cluster_id"))
+
+  /** The distinct pairs in canonical orientation u > v; self loops
+    * contribute nothing. */
+  private[graft] def canonicalEdges(pairs: DataFrame): DataFrame =
+    pairs.select(greatest(col("a"), col("b")).as("u"), least(col("a"), col("b")).as("v"))
+      .filter(col("u") =!= col("v")).distinct()
+
+  /** One [[alternatingComponents]] round: large-star, then small-star. */
+  private[graft] def starStep(edges: DataFrame): DataFrame = smallStar(largeStar(edges))
+
+  /** Large-star: from BOTH orientations of each edge, every neighbour
+    * v > u relinks to m(u) = min(N(u) ∪ {u}); edges where v < u
+    * re-emerge from v's own group, so no adjacency is lost. */
+  private def largeStar(e: DataFrame): DataFrame = {
+    val nbrs = e.select(col("u"), col("v"))
+      .union(e.select(col("v").as("u"), col("u").as("v")))
+    val m = nbrs.groupBy("u").agg(min("v").as("mv"))
+      .select(col("u"), least(col("u"), col("mv")).as("m"))
+    nbrs.join(m, "u").filter(col("v") > col("u"))
+      .select(col("v").as("u"), col("m").as("v"))
+      .filter(col("u") =!= col("v")).distinct()
+  }
+
+  /** Small-star: per larger endpoint u (all its neighbours are < u
+    * under the canonical orientation), link u and every non-minimum
+    * neighbour to m = min(N(u)). */
+  private def smallStar(e: DataFrame): DataFrame = {
+    val m = e.groupBy("u").agg(min("v").as("m"))
+    val viaV = e.join(m, "u").filter(col("v") =!= col("m"))
+      .select(col("v").as("u"), col("m").as("v"))
+    val viaU = m.select(col("u"), col("m").as("v"))
+    viaV.union(viaU).filter(col("u") =!= col("v")).distinct()
+  }
+
+  /** Convergence signature of an edge set: (count, Σu, Σv), exact
+    * decimal sums. */
+  private def edgeSignature(e: DataFrame): (Long, java.math.BigDecimal, java.math.BigDecimal) = {
+    val r = e.agg(count(lit(1)),
+      sum(col("u").cast("decimal(38,0)")), sum(col("v").cast("decimal(38,0)"))).head()
+    (r.getLong(0),
+      Option(r.getDecimal(1)).getOrElse(java.math.BigDecimal.ZERO),
+      Option(r.getDecimal(2)).getOrElse(java.math.BigDecimal.ZERO))
   }
 
   /** Duplicate clusters over the near-duplicate pair graph at exact

@@ -1,8 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import graft.operators.Rounds.{Round, collected}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Behavioral analytics over the event stream — the product-side
   * queries an events table exists for: ordered conversion funnels
@@ -80,17 +82,55 @@ object EventAnalytics {
        |FROM x WHERE week_offset <= $maxOffset
        |GROUP BY cohort, week_offset ORDER BY cohort, week_offset""".stripMargin
 
+  /** The distinct `(u, k)` pairs of the view events whose props carry
+    * a numeric `k`, cached in `rs`: the base of every view-graph
+    * operator below. `None` when there are none; each operator then
+    * returns its oracle's shape for an empty graph. Rows without a
+    * numeric `k` are dropped, not mapped to a shared NULL item node: a
+    * NULL node would receive rank, and Spark and DuckDB order NULLs
+    * differently in a final top-k.
+    */
+  private[graft] def viewPairs(events: DataFrame, rs: Rounds): Option[DataFrame] = {
+    val k = get_json_object(col("props"), "$.k").cast("long")
+    val pairs = rs.cache(events.filter(col("event_type") === "view" && k.isNotNull)
+      .select(col("user_id").as("u"), k.as("k")).distinct())
+    if (rs.count(pairs) == 0L) None else Some(pairs)
+  }
+
+  /** The symmetric view graph over [[viewPairs]]: every pair as the
+    * edges user `u` -> item `-(k+1)` and back (items live in the
+    * negative id space, so the two namespaces never collide), with
+    * `weight` as column `w` when one is given.
+    */
+  private[graft] def viewEdges(pairs: DataFrame, weight: Option[Column]): DataFrame = {
+    val w = weight.map(_.as("w")).toSeq
+    val b = pairs.select(Seq(col("u"), (-(col("k") + lit(1L))).as("it")) ++ w: _*)
+    val wc = w.map(_ => col("w"))
+    b.select(Seq(col("u").as("src"), col("it").as("dst")) ++ wc: _*)
+      .union(b.select(Seq(col("it").as("src"), col("u").as("dst")) ++ wc: _*))
+  }
+
+  /** The smallest positive node of `edges`, the source of [[bfsHops]]
+    * and [[shortestPaths]]; `None` when no node id is positive (the
+    * oracles then return zero rows). */
+  private def sourceNode(edges: DataFrame): Option[Long] = {
+    val r = edges.filter(col("src") > 0).agg(min(col("src"))).head()
+    if (r.isNullAt(0)) None else Some(r.getLong(0))
+  }
+
+  /** An empty result with the columns of `ddl`. */
+  private def noRows(events: DataFrame, ddl: String): DataFrame =
+    Rounds.local(events.sparkSession, StructType.fromDDL(ddl), Nil)
+
   /** Fixed-point unit for [[pageRank]]: ranks are BIGINTs in units of
     * 1e-12, so every operation is integer arithmetic.
     */
   private val PrUnit = 1000000000000L
 
-  /** PageRank over the bipartite view graph (users <-> viewed items,
-    * items taken from the event props' `k` and mapped to the negative
-    * id space so the two node namespaces can never collide) — the
-    * attention-centrality ranking an event pipeline feeds back into
-    * curation and recommendation. Damping 0.85, `iters` fixed power
-    * iterations, top 20 nodes by rank.
+  /** PageRank over the bipartite view graph (users <-> viewed items)
+    * — the attention-centrality ranking an event pipeline feeds back
+    * into curation and recommendation. Damping 0.85, `iters` fixed
+    * power iterations, top 20 nodes by rank.
     *
     * EXACT fixed-point arithmetic: ranks are BIGINT multiples of
     * 1e-12; each neighbor contribution is `rank div deg` (integer
@@ -100,72 +140,35 @@ object EventAnalytics {
     * 0.85 as exact rationals. The oracle replays the identical
     * integer ops, so the compare is bit-exact with no float epsilon.
     *
-    * Scale shape: each iteration is ONE edge-rank equi-join plus one
-    * dst-keyed aggregate (map-side combined) — the GraphX/Pregel plan
-    * re-expressed relationally; edges and degrees are computed once
-    * and persisted, ranks are materialized per round so the plan
-    * never grows with iteration count. At 100 TB the join shuffles
-    * edges on src, partial-sums contributions before the dst
-    * shuffle, and AQE handles hub skew; nothing is ever collected to
-    * the driver but the final top-k.
+    * Scale shape: each round ([[pageRankStep]]) is ONE edge-rank
+    * equi-join plus one dst-keyed aggregate (map-side combined) — the
+    * GraphX/Pregel plan re-expressed relationally. Degrees are joined
+    * onto the cached adjacency once, outside the loop. The graph is
+    * symmetric by construction, so every node has in-degree >= 1 and
+    * the dst aggregate covers the whole node set without a
+    * `nodes LEFT JOIN contrib`. Nothing is collected to the driver but
+    * the final top-k.
     */
-  def pageRank(events: DataFrame, iters: Int = 5): DataFrame = {
-    // rows whose props carry no numeric `k` are dropped, not mapped to
-    // a shared NULL item node: a NULL node would receive rank, and
-    // Spark and DuckDB order NULLs differently in the final top-k, so
-    // one malformed row could break the bit-exact compare
-    val ev = events.filter(col("event_type") === "view")
-      .filter(get_json_object(col("props"), "$.k").cast("long").isNotNull)
-      .select(col("user_id").as("u"),
-        (-(get_json_object(col("props"), "$.k").cast("long") + lit(1L))).as("it"))
-      .distinct()
-    val edges = ev.select(col("u").as("src"), col("it").as("dst"))
-      .union(ev.select(col("it").as("src"), col("u").as("dst")))
-    // r16 optimization (guide §2.4/§3): the degree join moves OUT of
-    // the loop — each edge carries its source's out-degree in the
-    // persisted adjacency, so a round is ONE edge⋈ranks equi-join
-    // plus the dst-keyed sum instead of two joins. The adjacency is
-    // persisted PARTITIONED BY src (its setup join's exchange), and
-    // ranks arrive partitioned by node from the previous round's
-    // aggregate, so the per-round join adds no exchange of the edge
-    // set at any scale. The per-round `nodes LEFT JOIN contrib` is gone outright:
-    // the graph is symmetric by construction (every edge is emitted
-    // in both directions), so every node has in-degree >= 1 and the
-    // dst-aggregate already covers the full node set — the left join
-    // (an SMJ + two sorts per round in the measured plan) and its
-    // coalesce(s, 0) were dead weight. deg is one row per distinct
-    // src, which equals the node set, so nodes/ranks0 derive from deg
-    // with no extra distinct.
-    val deg = edges.groupBy("src").agg(count(lit(1)).as("deg")).persist()
-    val nCount = deg.count()
-    val r0 = PrUnit / nCount
-    val adj = edges.join(deg, "src").persist()
-    var ranks = deg.select(col("src").as("node"), lit(r0).as("rank")).persist()
-    try {
-      (1 to iters).foreach { _ =>
-        val next = adj
-          .join(ranks.withColumnRenamed("node", "src"), "src")
-          .select(col("dst").as("node"), expr("rank div deg").as("c"))
-          .groupBy("node")
-          .agg(expr(s"(3L * ${r0}L + 17L * sum(c)) div 20L").as("rank"))
-          .persist()
-        next.count() // materialize before dropping the parent round
-        ranks.unpersist()
-        ranks = next
-      }
-      // the top-k is the only driver-side materialization (20 rows);
-      // rebuilt as a local DataFrame so the returned plan doesn't
-      // re-run the iterations after the caches below are dropped
-      val top = ranks.orderBy(desc("rank"), col("node")).limit(20)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-      val sp = org.apache.spark.sql.graft.Shim.classic(events.sparkSession)
-      import sp.implicits._
-      top.toDF("node", "rank")
-    } finally {
-      ranks.unpersist(); adj.unpersist(); deg.unpersist()
-      ()
+  def pageRank(events: DataFrame, iters: Int = 5): DataFrame = Rounds.scope { rs =>
+    viewPairs(events, rs).fold(noRows(events, "node BIGINT, rank BIGINT")) { pairs =>
+      val edges = viewEdges(pairs, None)
+      // one row per distinct src, which is the node set
+      val deg = rs.cache(edges.groupBy("src").agg(count(lit(1)).as("deg")))
+      val r0 = PrUnit / rs.count(deg)
+      val adj = rs.cache(edges.join(deg, "src"))
+      val seed = rs.checkpoint(deg.select(col("src").as("node"), lit(r0).as("rank")))
+      val run = rs.loop(Round(seed, 0L), iters)((h, _) => pageRankStep(adj, h.head.frame, r0))(
+        rs.count)((_, _) => false)
+      collected(run.last.frame.orderBy(desc("rank"), col("node")).limit(20))
     }
   }
+
+  /** One [[pageRank]] round: `(node, rank)` from the previous round's. */
+  private[graft] def pageRankStep(adj: DataFrame, ranks: DataFrame, r0: Long): DataFrame =
+    adj.join(ranks.withColumnRenamed("node", "src"), "src")
+      .select(col("dst").as("node"), expr("rank div deg").as("c"))
+      .groupBy("node")
+      .agg(expr(s"(3L * ${r0}L + 17L * sum(c)) div 20L").as("rank"))
 
   /** BFS hop counts from the smallest user node over the same
     * bipartite view graph [[pageRank]] walks — single-source shortest
@@ -175,72 +178,41 @@ object EventAnalytics {
     * hops 0..`maxHops` (unreached nodes are absent; all-integer, so
     * the compare is exact).
     *
-    * Scale shape: per round ONE frontier-edges equi-join + a min
-    * aggregate, both keyed — the Pregel BFS re-expressed relationally;
-    * the distance table is materialized per round and the frontier
-    * (newly-settled nodes only) is what joins edges, so a round's
-    * cost tracks the frontier size, not the graph. The output is a
-    * maxHops-row aggregate; nothing bigger reaches the driver.
+    * Scale shape: per round ([[bfsStep]]) ONE frontier-edges
+    * equi-join, a distinct and an anti-join against the settled set,
+    * all keyed — the Pregel BFS re-expressed relationally. Only the
+    * frontier (newly-settled nodes) joins the edges, so a round's cost
+    * tracks the frontier, not the graph, and the loop exits once a
+    * round settles nothing: every later frontier would join an empty
+    * one. The output is a maxHops-row aggregate; nothing bigger
+    * reaches the driver.
     */
-  def bfsHops(events: DataFrame, maxHops: Int = 4): DataFrame = {
-    val ev = events.filter(col("event_type") === "view")
-      .filter(get_json_object(col("props"), "$.k").cast("long").isNotNull)
-      .select(col("user_id").as("u"),
-        (-(get_json_object(col("props"), "$.k").cast("long") + lit(1L))).as("it"))
-      .distinct()
-    val edges = ev.select(col("u").as("src"), col("it").as("dst"))
-      .union(ev.select(col("it").as("src"), col("u").as("dst")))
-      .persist()
-    try {
-      // empty edge set (no qualifying view rows): the oracle returns
-      // zero rows — return the empty histogram rather than NPE on the
-      // null min cell (same guard shortestPaths got, ADVICE r13 low)
-      val minRow = edges.filter(col("src") > 0)
-        .agg(min(col("src")).as("s")).collect()(0)
-      if (minRow.isNullAt(0)) {
-        val sp0 = org.apache.spark.sql.graft.Shim.classic(edges.sparkSession)
-        import sp0.implicits._
-        return Seq.empty[(Int, Long)].toDF("hop", "n_nodes")
-      }
-      val source = minRow.getLong(0)
-      // the settled set is the UNION of the persisted per-hop
-      // frontiers — no re-materialized cumulative table, ONE action
-      // per round (the frontier count), and the anti-join reads only
-      // cached leaves, so the plan stays flat across rounds
-      val f0 = edges.sparkSession.range(1)
-        .select(lit(source).as("node"), lit(0).cast("int").as("hop"))
-        .persist()
-      f0.count()
-      var frontiers: List[DataFrame] = List(f0)
-      try {
-        // r16: EARLY EXIT on an empty frontier — once a round settles
-        // nothing, every later frontier is provably empty (it joins
-        // the empty frontier), so the remaining rounds' jobs are pure
-        // overhead; the emitted histogram is identical (guide §1.2:
-        // don't compute things you throw away). The count below was
-        // already the round's materialization — the exit is free.
-        var h = 1
-        var exhausted = false
-        while (h <= maxHops && !exhausted) {
-          val settled = frontiers.map(_.select(col("node"))).reduce(_.union(_))
-          val next = frontiers.head.withColumnRenamed("node", "src")
-            .join(edges, "src")
-            .select(col("dst").as("node")).distinct()
-            .join(settled, Seq("node"), "left_anti")
-            .select(col("node"), lit(h).cast("int").as("hop"))
-            .persist()
-          exhausted = next.count() == 0L // the round's single materialization
-          frontiers = next :: frontiers
-          h += 1
-        }
-        val rows = frontiers.reduce(_.union(_))
-          .groupBy("hop").agg(count(lit(1)).as("n_nodes")).orderBy("hop")
-          .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
-        val sp = org.apache.spark.sql.graft.Shim.classic(events.sparkSession)
-        import sp.implicits._
-        rows.toDF("hop", "n_nodes")
-      } finally { frontiers.foreach(_.unpersist()); () }
-    } finally { edges.unpersist(); () }
+  def bfsHops(events: DataFrame, maxHops: Int = 4): DataFrame = Rounds.scope { rs =>
+    val graph = for {
+      pairs <- viewPairs(events, rs)
+      edges = viewEdges(pairs, None)
+      source <- sourceNode(edges)
+    } yield (edges, source)
+    graph.fold(noRows(events, "hop INT, n_nodes BIGINT")) { case (edges, source) =>
+      val seed = rs.checkpoint(events.sparkSession.range(1)
+        .select(lit(source).as("node"), lit(0).as("hop")))
+      val run = rs.loop(Round(seed, 1L), maxHops)((h, hop) => bfsStep(edges, h.map(_.frame), hop))(
+        rs.count)((_, latest) => latest.value == 0L)
+      collected(run.history.map(_.frame).reduce(_.union(_))
+        .groupBy("hop").agg(count(lit(1)).as("n_nodes")).orderBy("hop"))
+    }
+  }
+
+  /** One [[bfsHops]] round: the nodes first reached at `hop`, from the
+    * earlier frontiers (newest first); the settled set is their union,
+    * so no cumulative table is re-materialized. */
+  private[graft] def bfsStep(edges: DataFrame, frontiers: List[DataFrame], hop: Int): DataFrame = {
+    val settled = frontiers.map(_.select(col("node"))).reduce(_.union(_))
+    frontiers.head.withColumnRenamed("node", "src")
+      .join(edges, "src")
+      .select(col("dst").as("node")).distinct()
+      .join(settled, Seq("node"), "left_anti")
+      .select(col("node"), lit(hop).as("hop"))
   }
 
   /** DuckDB oracle for [[bfsHops]] — the frontier expansion unrolled
@@ -334,38 +306,35 @@ object EventAnalytics {
     * equi-joins, no broadcast of anything unbounded, one scalar row
     * to the driver.
     */
-  def triangleStats(events: DataFrame): DataFrame = {
+  def triangleStats(events: DataFrame): DataFrame = Rounds.scope { rs =>
     val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
     val ev = events.filter(col("event_type") === "view")
       .filter(get_json_object(col("props"), "$.k").cast("long").isNotNull)
       .select(col("user_id"), col("ts"), col("event_id"),
         get_json_object(col("props"), "$.k").cast("long").as("it"))
-    // r16: edges/deg/oriented each feed SEVERAL consumers below
-    // (edges: deg's two union branches + oriented; deg: two orient
-    // joins + the wedge total; oriented: e1, e2, and the closing
-    // join) — unpersisted, the measured plan re-ran the scan→window→
-    // distinct subtree 17 times (17 parquet scans, 0 ReusedExchange:
-    // differing projections defeat exchange reuse). Lazy persists
-    // make each tier compute once (guide §5); the bench's
-    // between-query sweep drops the blocks.
-    val edges = ev.withColumn("nx", lead(col("it"), 1).over(w))
+    // edges/deg/oriented each feed SEVERAL consumers below (edges:
+    // deg's two union branches + oriented; deg: two orient joins + the
+    // wedge total; oriented: e1, e2, and the closing join) — uncached,
+    // the measured plan re-ran the scan→window→distinct subtree 17
+    // times (differing projections defeat exchange reuse). Lazy caches
+    // make each tier compute once; the scope drops them after the
+    // one-row result is collected.
+    val edges = rs.cache(ev.withColumn("nx", lead(col("it"), 1).over(w))
       .filter(col("nx").isNotNull && col("nx") =!= col("it"))
       .select(least(col("it"), col("nx")).as("x"),
         greatest(col("it"), col("nx")).as("y"))
-      .distinct().persist()
-    val deg = edges.select(col("x").as("n")).union(edges.select(col("y").as("n")))
-      .groupBy("n").agg(count(lit(1)).as("d"))
-      .persist()
+      .distinct())
+    val deg = rs.cache(edges.select(col("x").as("n")).union(edges.select(col("y").as("n")))
+      .groupBy("n").agg(count(lit(1)).as("d")))
     // orient x→y iff (d(x), x) < (d(y), y); x<y already, so ties keep x
     val flip = col("dy") < col("dx")
-    val oriented = edges
+    val oriented = rs.cache(edges
       .join(deg.select(col("n").as("x"), col("d").as("dx")), "x")
       .join(deg.select(col("n").as("y"), col("d").as("dy")), "y")
       .select(
         when(flip, col("y")).otherwise(col("x")).as("src"),
         when(flip, col("x")).otherwise(col("y")).as("dst"),
-        when(flip, col("dx")).otherwise(col("dy")).as("dd"))
-      .persist()
+        when(flip, col("dx")).otherwise(col("dy")).as("dd")))
     val e1 = oriented.select(col("src"), col("dst").as("u"), col("dd").as("du"))
     val e2 = oriented.select(col("src"), col("dst").as("v"), col("dd").as("dv"))
     val wedges = e1.join(e2, Seq("src"))
@@ -377,7 +346,7 @@ object EventAnalytics {
       .agg(count(lit(1)).as("n_triangles"))
     val wedgeTotal = deg.agg(
       sum(expr("d * (d - 1L) div 2L")).as("n_wedges"))
-    tri.crossJoin(wedgeTotal)
+    collected(tri.crossJoin(wedgeTotal))
   }
 
   /** DuckDB oracle for [[triangleStats]] — the same degree-oriented
@@ -476,71 +445,45 @@ object EventAnalytics {
     * exactly. Output: top 10 items by authority and top 10 users by
     * hub score, tagged by `kind`.
     *
-    * Scale shape: per round TWO edge-score equi-joins + keyed sums
-    * (map-side combined); each raw score table's 1-ROW L1 total is
-    * read driver-side (metadata-scale, the same per-round scalar the
-    * BFS frontier count reads) so the normalizer enters the next
-    * plan as a literal, and each round's scores are
-    * `localCheckpoint`ed — the round's plan is a LEAF over the
-    * materialized partitions, like the connected-components loop.
-    * Plan truncation here is load-bearing, not hygiene: a persist
-    * chain keeps every prior round's AQE tree nested inside the
-    * cached plan, and AQE renders a full explain string on every
-    * plan update (`onUpdatePlan`), so un-truncated rounds spend
-    * MINUTES formatting plan strings for a 6-row graph (measured;
-    * main thread pinned in `generateTreeString`). Only the final 20
-    * rows reach the driver beyond the per-round scalars.
+    * Scale shape: a round of the recursion is two half-rounds
+    * ([[hitsStep]]), each ONE edge-score equi-join + a keyed sum
+    * (map-side combined). Each raw score table's 1-ROW L1 total is the
+    * half-round's action, read driver-side, so the normalizer enters
+    * the next plan as a literal over the checkpointed raw scores. Plan
+    * truncation here is load-bearing, not hygiene: a persist chain
+    * keeps every prior round's AQE tree nested inside the cached plan,
+    * and AQE renders a full explain string on every plan update
+    * (`onUpdatePlan`), so un-truncated rounds spend MINUTES formatting
+    * plan strings for a 6-row graph (measured; main thread pinned in
+    * `generateTreeString`). Only the final 20 rows reach the driver
+    * beyond the per-round scalars.
     */
-  def hits(events: DataFrame, iters: Int = 5): DataFrame = {
-    val ev = events.filter(col("event_type") === "view")
-      .filter(get_json_object(col("props"), "$.k").cast("long").isNotNull)
-      .select(col("user_id").as("u"),
-        get_json_object(col("props"), "$.k").cast("long").as("it"))
-      .distinct().persist()
-    val users = ev.select("u").distinct()
-    try {
-      var hubs = users.select(col("u"), lit(HitsUnit).as("h"))
-        .localCheckpoint(true)
-      var auths: DataFrame = null
-      (1 to iters).foreach { _ =>
-        // r16: only the RAW propagation result is checkpointed — the
-        // normalized scores are a constant-factor projection OVER that
-        // checkpointed leaf (the 1-row L1 total is read before the
-        // projection is built, so the scalar enters as a literal), and
-        // a Project-over-LogicalRDD plan is as flat as a second
-        // checkpoint while skipping its full materialization pass.
-        // This halves the loop's checkpoint count (4 → 2 per round)
-        // without growing any round's plan (the truncation rationale
-        // in the scaladoc still holds: every join input is a leaf or a
-        // one-projection-deep leaf).
-        // LAZY checkpoints (r16): the L1-total aggregate right below
-        // is each raw table's first action, so it both materializes
-        // the checkpoint and reads the sum in ONE job — the eager form
-        // paid a separate materialization job per checkpoint (4 jobs/
-        // round → 2). Each aggregate's input plan is still flat: the
-        // join reads the persisted ev and a one-projection-deep leaf
-        // (the previous half-round's already-materialized checkpoint).
-        val aRaw = ev.join(hubs, "u").groupBy("it").agg(sum("h").as("raw"))
-          .localCheckpoint(false)
-        val sa = aRaw.agg(sum("raw")).head().getLong(0)
-        auths = aRaw
-          .select(col("it"), expr(s"(raw * ${HitsUnit}L) div ${sa}L").as("a"))
-        val hRaw = ev.join(auths, "it").groupBy("u").agg(sum("a").as("raw"))
-          .localCheckpoint(false)
-        val sh = hRaw.agg(sum("raw")).head().getLong(0)
-        hubs = hRaw
-          .select(col("u"), expr(s"(raw * ${HitsUnit}L) div ${sh}L").as("h"))
-      }
-      val topA = auths.orderBy(desc("a"), col("it")).limit(10)
-        .collect().map(r => ("auth", r.getLong(0), r.getLong(1))).toSeq
-      val topH = hubs.orderBy(desc("h"), col("u")).limit(10)
-        .collect().map(r => ("hub", r.getLong(0), r.getLong(1))).toSeq
-      val sp = org.apache.spark.sql.graft.Shim.classic(events.sparkSession)
-      import sp.implicits._
-      (topA ++ topH).toDF("kind", "node", "score")
-        .orderBy("kind", "node")
-    } finally { ev.unpersist(); () }
+  def hits(events: DataFrame, iters: Int = 5): DataFrame = Rounds.scope { rs =>
+    viewPairs(events, rs).fold(noRows(events, "kind STRING, node BIGINT, score BIGINT")) { pairs =>
+      // the positive-id bipartite form: item ids stay the raw `k`
+      val ev = pairs.select(col("u"), col("k").as("it"))
+      // every user starts at one unit of hub score: raw 1 of a total 1
+      val seed = rs.checkpoint(ev.select("u").distinct().select(col("u"), lit(1L).as("raw")))
+      // odd half-rounds spread hub scores to items, even ones back
+      val run = rs.loop(Round(seed, 1L), 2 * iters) { (h, r) =>
+        if (r % 2 == 1) hitsStep(ev, h.head, "u", "it") else hitsStep(ev, h.head, "it", "u")
+      }(_.agg(sum("raw")).head().getLong(0))((_, _) => false)
+      val Seq(hubs, auths) = run.history.take(2)
+      def top(kind: String, r: Round[Long], key: String) = hitsScores(r, key)
+        .select(lit(kind).as("kind"), col(key).as("node"), col("s").as("score"))
+        .orderBy(desc("score"), col("node")).limit(10)
+      collected(top("auth", auths, "it").union(top("hub", hubs, "u"))).orderBy("kind", "node")
+    }
   }
+
+  /** A raw HITS score table, L1-normalized to `Unit` by its total. */
+  private def hitsScores(raw: Round[Long], key: String): DataFrame =
+    raw.frame.select(col(key), expr(s"(raw * ${HitsUnit}L) div ${raw.value}L").as("s"))
+
+  /** One [[hits]] half-round: raw `to`-side scores, the sum of the
+    * normalized `from`-side scores of each node's neighbors. */
+  private[graft] def hitsStep(ev: DataFrame, prev: Round[Long], from: String, to: String): DataFrame =
+    ev.join(hitsScores(prev, from), from).groupBy(to).agg(sum("s").as("raw"))
 
   /** DuckDB oracle for [[hits]] — the mutual recursion unrolled to
     * `iters` CTE stages over the same integer fixed-point ops. Every
@@ -627,44 +570,35 @@ object EventAnalytics {
     * cluster-structure signal a dedup or domain-mixing pipeline reads
     * next to connected components.
     *
-    * Scale shape: per round ONE edge-label equi-join plus two keyed,
-    * map-side-combined aggregates — count per (node, label), then the
-    * packed-integer argmax per node ([[LpBase]]). Labels are
-    * re-materialized per round (localCheckpoint) so the plan never
-    * grows with iteration count; only the final 20-row top-k reaches
-    * the driver. At 100 TB the join shuffles edges on src and AQE
-    * handles hub skew, same as the PageRank rounds.
+    * Scale shape: per round ([[labelPropStep]]) ONE edge-label
+    * equi-join plus two keyed, map-side-combined aggregates — count
+    * per (node, label), then the packed-integer argmax per node
+    * ([[LpBase]]). Only the final 20-row top-k reaches the driver. At
+    * 100 TB the join shuffles edges on src and AQE handles hub skew,
+    * same as the PageRank rounds.
     */
-  def labelProp(events: DataFrame, iters: Int = 3): DataFrame = {
-    val ev = events.filter(col("event_type") === "view")
-      .filter(get_json_object(col("props"), "$.k").cast("long").isNotNull)
-      .select(col("user_id").as("u"),
-        (-(get_json_object(col("props"), "$.k").cast("long") + lit(1L))).as("it"))
-      .distinct()
-    val edges = ev.select(col("u").as("src"), col("it").as("dst"))
-      .union(ev.select(col("it").as("src"), col("u").as("dst")))
-      .persist()
-    try {
-      var labels = edges.select(col("src").as("node")).distinct()
-        .select(col("node"), col("node").as("lbl"))
-        .localCheckpoint(true)
-      (1 to iters).foreach { _ =>
-        labels = edges.join(labels.withColumnRenamed("node", "src"), "src")
-          .groupBy(col("dst").as("node"), col("lbl"))
-          .agg(count(lit(1)).as("cnt"))
-          .groupBy("node")
-          .agg(max(col("cnt") * lit(LpBase) + (lit(LpHalf) - col("lbl"))).as("s"))
-          .select(col("node"), (lit(LpHalf) - col("s") % lit(LpBase)).as("lbl"))
-          .localCheckpoint(true)
-      }
-      val top = labels.groupBy("lbl").agg(count(lit(1)).as("n_nodes"))
-        .orderBy(desc("n_nodes"), col("lbl")).limit(20)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-      val sp = org.apache.spark.sql.graft.Shim.classic(events.sparkSession)
-      import sp.implicits._
-      top.toDF("community", "n_nodes")
-    } finally { edges.unpersist(); () }
+  def labelProp(events: DataFrame, iters: Int = 3): DataFrame = Rounds.scope { rs =>
+    viewPairs(events, rs).fold(noRows(events, "community BIGINT, n_nodes BIGINT")) { pairs =>
+      val edges = viewEdges(pairs, None)
+      val seed = rs.checkpoint(edges.select(col("src").as("node")).distinct()
+        .select(col("node"), col("node").as("lbl")))
+      val run = rs.loop(Round(seed, 0L), iters)((h, _) => labelPropStep(edges, h.head.frame))(
+        rs.count)((_, _) => false)
+      collected(run.last.frame.groupBy(col("lbl").as("community"))
+        .agg(count(lit(1)).as("n_nodes"))
+        .orderBy(desc("n_nodes"), col("community")).limit(20))
+    }
   }
+
+  /** One [[labelProp]] round: each node adopts its neighbors' most
+    * frequent label, ties to the smallest. */
+  private[graft] def labelPropStep(edges: DataFrame, labels: DataFrame): DataFrame =
+    edges.join(labels.withColumnRenamed("node", "src"), "src")
+      .groupBy(col("dst").as("node"), col("lbl"))
+      .agg(count(lit(1)).as("cnt"))
+      .groupBy("node")
+      .agg(max(col("cnt") * lit(LpBase) + (lit(LpHalf) - col("lbl"))).as("s"))
+      .select(col("node"), (lit(LpHalf) - col("s") % lit(LpBase)).as("lbl"))
 
   /** DuckDB oracle for [[labelProp]] — the propagation unrolled to
     * `iters` CTE stages over the same packed-integer argmax (`%` on
@@ -707,54 +641,36 @@ object EventAnalytics {
     * FIXED `rounds` budget; at fixpoint the tail rows repeat, which
     * the hash also certifies.
     *
-    * Scale shape: per round two alive-set equi-joins plus one
-    * map-side-combined degree aggregate over the induced subgraph —
-    * Pregel peeling re-expressed relationally; the alive set is
-    * re-materialized per round (localCheckpoint) so the plan never
-    * grows, and the per-round count the loop collects IS the
-    * output row.
+    * Scale shape: per round ([[kCoreStep]]) two alive-set equi-joins
+    * plus one map-side-combined degree aggregate over the induced
+    * subgraph — Pregel peeling re-expressed relationally; the round's
+    * row count IS the output row. Alive sets only shrink, so two equal
+    * consecutive counts prove the fixpoint (and an empty set is
+    * terminal): the loop stops there and the remaining trace rows
+    * repeat the last count without running their rounds.
     */
-  def kCoreTrace(events: DataFrame, k: Int = 11, rounds: Int = 10): DataFrame = {
-    val ev = events.filter(col("event_type") === "view")
-      .filter(get_json_object(col("props"), "$.k").cast("long").isNotNull)
-      .select(col("user_id").as("u"),
-        (-(get_json_object(col("props"), "$.k").cast("long") + lit(1L))).as("it"))
-      .distinct()
-    val edges = ev.select(col("u").as("src"), col("it").as("dst"))
-      .union(ev.select(col("it").as("src"), col("u").as("dst")))
-      .persist()
-    try {
-      var alive = edges.select(col("src").as("node")).distinct()
-        .localCheckpoint(true)
-      // r16: FIXPOINT FILL — alive sets only shrink (each round keeps
-      // a subset of the previous survivors), so two consecutive equal
-      // counts prove set equality, and every later round returns the
-      // identical set; the remaining trace rows are that same count,
-      // emitted without running the round's two joins + aggregate +
-      // checkpoint (guide §1.2). An empty set is likewise terminal.
-      var lastCount = -1L
-      var stable = false
-      val trace = (1 to rounds).map { r =>
-        if (!stable) {
-          alive = edges
-            .join(alive.withColumnRenamed("node", "src"), "src")
-            .join(alive.withColumnRenamed("node", "dst"), "dst")
-            .groupBy(col("src").as("node"))
-            .agg(count(lit(1)).as("deg"))
-            .filter(col("deg") >= k)
-            .select("node")
-            .localCheckpoint(true)
-          val c = alive.count()
-          stable = c == lastCount || c == 0L
-          lastCount = c
-        }
-        (r, lastCount)
-      }
-      val sp = org.apache.spark.sql.graft.Shim.classic(events.sparkSession)
-      import sp.implicits._
-      trace.toDF("round", "n_alive").orderBy("round")
-    } finally { edges.unpersist(); () }
+  def kCoreTrace(events: DataFrame, k: Int = 11, rounds: Int = 10): DataFrame = Rounds.scope { rs =>
+    val counts = viewPairs(events, rs).fold(Seq(0L)) { pairs =>
+      val edges = viewEdges(pairs, None)
+      val seed = rs.checkpoint(edges.select(col("src").as("node")).distinct())
+      rs.loop(Round(seed, -1L), rounds)((h, _) => kCoreStep(edges, h.head.frame, k))(rs.count)(
+        (prev, latest) => latest.value == prev.value || latest.value == 0L)
+        .history.reverse.tail.map(_.value)
+    }
+    Rounds.local(events.sparkSession, StructType.fromDDL("round INT, n_alive BIGINT"),
+      (1 to rounds).map(r => Row(r, counts(math.min(r, counts.size) - 1))))
   }
+
+  /** One [[kCoreTrace]] round: the nodes with at least `k` neighbors
+    * among the previous round's survivors. */
+  private[graft] def kCoreStep(edges: DataFrame, alive: DataFrame, k: Int): DataFrame =
+    edges
+      .join(alive.withColumnRenamed("node", "src"), "src")
+      .join(alive.withColumnRenamed("node", "dst"), "dst")
+      .groupBy(col("src").as("node"))
+      .agg(count(lit(1)).as("deg"))
+      .filter(col("deg") >= k)
+      .select("node")
 
   /** DuckDB oracle for [[kCoreTrace]] — the peel unrolled to `rounds`
     * MATERIALIZED stages (each references its predecessor twice, so
@@ -790,202 +706,50 @@ object EventAnalytics {
     * (`(u + k) % 5 + 1`), so both engines derive identical weights
     * with no float arithmetic anywhere on the comparison path.
     *
-    * DELTA relaxation: only nodes whose tentative distance IMPROVED
-    * in round h−1 join the edges in round h, so a round's cost tracks
-    * the improving frontier (a vanishing fraction of the settled set
-    * once distances stabilize), never the whole graph. The distance
-    * table is re-persisted per round, keeping every round's plan flat
-    * — the same iteration discipline as [[pageRank]]/[[bfsHops]].
-    * Only the ≤ (maxHops·maxW+1)-row distance histogram reaches the
-    * driver.
+    * DELTA relaxation ([[shortestPathStep]]): only nodes whose
+    * tentative distance IMPROVED in round h−1 join the edges in round
+    * h, so a round's cost tracks the improving frontier (a vanishing
+    * fraction of the settled set once distances stabilize), never the
+    * whole graph. The round's action counts the improved nodes; the
+    * loop exits when none improved, since every later round would
+    * join an empty frontier. Only the ≤ (maxHops·maxW+1)-row distance
+    * histogram reaches the driver.
     */
-  def shortestPaths(events: DataFrame, maxHops: Int = 4): DataFrame = {
-    val ev = events.filter(col("event_type") === "view")
-      .filter(get_json_object(col("props"), "$.k").cast("long").isNotNull)
-      .select(col("user_id").as("u"),
-        get_json_object(col("props"), "$.k").cast("long").as("k"))
-      .distinct()
-    val base = ev.select(col("u"), (-(col("k") + lit(1L))).as("it"),
-      ((col("u") + col("k")) % 5 + lit(1L)).as("w"))
-    val edges = base.select(col("u").as("src"), col("it").as("dst"), col("w"))
-      .union(base.select(col("it").as("src"), col("u").as("dst"), col("w")))
-      .persist()
-    try {
-      // empty edge set (no qualifying view rows): the oracle returns
-      // zero rows — return the empty histogram rather than NPE on the
-      // null min cell (ADVICE r13 low)
-      val minRow = edges.filter(col("src") > 0)
-        .agg(min(col("src")).as("s")).collect()(0)
-      if (minRow.isNullAt(0)) {
-        val sp0 = org.apache.spark.sql.graft.Shim.classic(edges.sparkSession)
-        import sp0.implicits._
-        return Seq.empty[(Long, Long, Long, Long)]
-          .toDF("d", "n_nodes", "min_node", "max_node")
-      }
-      val source = minRow.getLong(0)
-      val sess = edges.sparkSession
-      var dist = sess.range(1)
-        .select(lit(source).as("node"), lit(0L).as("d")).persist()
-      dist.count()
-      var frontier: DataFrame = dist
-      val persisted = scala.collection.mutable.ListBuffer[DataFrame](dist)
-      try {
-        // r16: EARLY EXIT when no distance improved — the next round's
-        // candidate set joins an empty frontier, so every later merged
-        // table equals dist exactly; skipping those rounds skips their
-        // join+persist jobs and changes nothing in the histogram. The
-        // improvement count rides the round's one materializing action
-        // (count + conditional count in a single aggregate) instead of
-        // a second job.
-        var h = 1
-        var settled = false
-        while (h <= maxHops && !settled) {
-          val cand = frontier
-            .select(col("node").as("src"), col("d").as("df"))
-            .join(edges, "src")
-            .select(col("dst").as("node"), (col("df") + col("w")).as("dc0"))
-            .groupBy("node").agg(min("dc0").as("dc"))
-          val merged = dist.join(cand, Seq("node"), "full_outer")
-            .select(col("node"),
-              least(coalesce(col("d"), lit(Long.MaxValue)),
-                coalesce(col("dc"), lit(Long.MaxValue))).as("nd"),
-              (col("d").isNull || (col("dc").isNotNull && col("dc") < col("d"))).as("imp"))
-            .persist()
-          // the round's single materialization: total + improved count
-          val r = merged.agg(count(lit(1)),
-            count(when(col("imp"), lit(1)))).head()
-          settled = r.getLong(1) == 0L
-          persisted += merged
-          frontier = merged.filter(col("imp")).select(col("node"), col("nd").as("d"))
-          dist = merged.select(col("node"), col("nd").as("d"))
-          h += 1
-        }
-        val rows = dist.groupBy("d")
+  def shortestPaths(events: DataFrame, maxHops: Int = 4): DataFrame = Rounds.scope { rs =>
+    val graph = for {
+      pairs <- viewPairs(events, rs)
+      edges = viewEdges(pairs, Some((col("u") + col("k")) % 5 + lit(1L)))
+      source <- sourceNode(edges)
+    } yield (edges, source)
+    graph.fold(noRows(events, "d BIGINT, n_nodes BIGINT, min_node BIGINT, max_node BIGINT")) {
+      case (edges, source) =>
+        val seed = rs.checkpoint(events.sparkSession.range(1)
+          .select(lit(source).as("node"), lit(0L).as("nd"), lit(true).as("imp")))
+        val run = rs.loop(Round(seed, 1L), maxHops)((h, _) => shortestPathStep(edges, h.head.frame))(
+          _.agg(count(when(col("imp"), lit(1)))).head().getLong(0))(
+          (_, latest) => latest.value == 0L)
+        collected(run.last.frame.groupBy(col("nd").as("d"))
           .agg(count(lit(1)).as("n_nodes"),
             min("node").as("min_node"), max("node").as("max_node"))
-          .orderBy("d")
-          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
-        val sp = org.apache.spark.sql.graft.Shim.classic(sess)
-        import sp.implicits._
-        rows.toDF("d", "n_nodes", "min_node", "max_node")
-      } finally { persisted.foreach(_.unpersist()); () }
-    } finally { edges.unpersist(); () }
+          .orderBy("d"))
+    }
   }
 
-  /** Build ONE round's DataFrame for each iterative graph operator,
-    * exactly as the operator's loop constructs it, and hand it to
-    * `sink(name, frame, note)` — the r16 plan-evidence hook
-    * (plans/r16/<op>_round_{before,after}.txt). Each frame below is a
-    * copy of the corresponding loop body at the current commit; any
-    * optimization to a loop updates its frame here in the same commit
-    * so the dumped plan always matches the shipped code. Dev/probe
-    * use only — never called from a query path.
-    */
-  private[graft] def dumpRoundPlans(events: DataFrame,
-      sink: (String, DataFrame, String) => Unit): Unit = {
-    val ev = events.filter(col("event_type") === "view")
-      .filter(get_json_object(col("props"), "$.k").cast("long").isNotNull)
-      .select(col("user_id").as("u"),
-        (-(get_json_object(col("props"), "$.k").cast("long") + lit(1L))).as("it"))
-      .distinct()
-    val edges = ev.select(col("u").as("src"), col("it").as("dst"))
-      .union(ev.select(col("it").as("src"), col("u").as("dst")))
-      .persist()
-    try {
-      // ---- q47 pageRank: round = adj(deg-attached)⋈ranks → dst-keyed rank agg
-      val deg = edges.groupBy("src").agg(count(lit(1)).as("deg")).persist()
-      val nCount = deg.count()
-      val r0 = PrUnit / nCount
-      val adj = edges.join(deg, "src").persist()
-      val ranks = deg.select(col("src").as("node"), lit(r0).as("rank")).persist()
-      try {
-        val next = adj
-          .join(ranks.withColumnRenamed("node", "src"), "src")
-          .select(col("dst").as("node"), expr("rank div deg").as("c"))
-          .groupBy("node")
-          .agg(expr(s"(3L * ${r0}L + 17L * sum(c)) div 20L").as("rank"))
-        sink("q47_pagerank_round", next, "one power-iteration round")
-      } finally { ranks.unpersist(); adj.unpersist(); deg.unpersist(); () }
-
-      // ---- q48 bfsHops: round = frontier⋈edges → distinct → anti settled
-      val f0 = edges.sparkSession.range(1)
-        .select(lit(1L).as("node"), lit(0).cast("int").as("hop")).persist()
-      f0.count()
-      try {
-        val settled = f0.select(col("node"))
-        val next = f0.withColumnRenamed("node", "src")
-          .join(edges, "src")
-          .select(col("dst").as("node")).distinct()
-          .join(settled, Seq("node"), "left_anti")
-          .select(col("node"), lit(1).cast("int").as("hop"))
-        sink("q48_bfs_round", next, "one frontier-expansion round")
-      } finally { f0.unpersist(); () }
-
-      // ---- q53 labelProp: round = edges⋈labels → (node,lbl) count → packed argmax
-      val labels0 = edges.select(col("src").as("node")).distinct()
-        .select(col("node"), col("node").as("lbl")).localCheckpoint(true)
-      val lpNext = edges.join(labels0.withColumnRenamed("node", "src"), "src")
-        .groupBy(col("dst").as("node"), col("lbl"))
-        .agg(count(lit(1)).as("cnt"))
-        .groupBy("node")
-        .agg(max(col("cnt") * lit(LpBase) + (lit(LpHalf) - col("lbl"))).as("s"))
-        .select(col("node"), (lit(LpHalf) - col("s") % lit(LpBase)).as("lbl"))
-      sink("q53_labelprop_round", lpNext, "one synchronous propagation round")
-
-      // ---- q54 kCore: round = edges⋈alive(src)⋈alive(dst) → deg filter
-      val alive0 = edges.select(col("src").as("node")).distinct().localCheckpoint(true)
-      val kcNext = edges
-        .join(alive0.withColumnRenamed("node", "src"), "src")
-        .join(alive0.withColumnRenamed("node", "dst"), "dst")
-        .groupBy(col("src").as("node"))
-        .agg(count(lit(1)).as("deg"))
-        .filter(col("deg") >= 11)
-        .select("node")
-      sink("q54_kcore_round", kcNext, "one peel round")
-    } finally { edges.unpersist(); () }
-
-    // ---- q51 HITS (positive item ids): round = ev⋈hubs → it-sum
-    val evH = events.filter(col("event_type") === "view")
-      .filter(get_json_object(col("props"), "$.k").cast("long").isNotNull)
-      .select(col("user_id").as("u"),
-        get_json_object(col("props"), "$.k").cast("long").as("it"))
-      .distinct().persist()
-    try {
-      val hubs = evH.select("u").distinct()
-        .select(col("u"), lit(HitsUnit).as("h")).localCheckpoint(true)
-      val aRaw = evH.join(hubs, "u").groupBy("it").agg(sum("h").as("raw"))
-      sink("q51_hits_round", aRaw, "one authority-propagation half-round")
-    } finally { evH.unpersist(); () }
-
-    // ---- q55 shortestPaths: round = frontier⋈edges → min-relax → full-outer merge
-    val evS = events.filter(col("event_type") === "view")
-      .filter(get_json_object(col("props"), "$.k").cast("long").isNotNull)
-      .select(col("user_id").as("u"),
-        get_json_object(col("props"), "$.k").cast("long").as("k"))
-      .distinct()
-    val baseS = evS.select(col("u"), (-(col("k") + lit(1L))).as("it"),
-      ((col("u") + col("k")) % 5 + lit(1L)).as("w"))
-    val edgesS = baseS.select(col("u").as("src"), col("it").as("dst"), col("w"))
-      .union(baseS.select(col("it").as("src"), col("u").as("dst"), col("w")))
-      .persist()
-    try {
-      val dist0 = edgesS.sparkSession.range(1)
-        .select(lit(1L).as("node"), lit(0L).as("d")).persist()
-      dist0.count()
-      try {
-        val cand = dist0
-          .select(col("node").as("src"), col("d").as("df"))
-          .join(edgesS, "src")
-          .select(col("dst").as("node"), (col("df") + col("w")).as("dc0"))
-          .groupBy("node").agg(min("dc0").as("dc"))
-        val merged = dist0.join(cand, Seq("node"), "full_outer")
-          .select(col("node"),
-            least(coalesce(col("d"), lit(Long.MaxValue)),
-              coalesce(col("dc"), lit(Long.MaxValue))).as("nd"),
-            (col("d").isNull || (col("dc").isNotNull && col("dc") < col("d"))).as("imp"))
-        sink("q55_sssp_round", merged, "one delta-relaxation round")
-      } finally { dist0.unpersist(); () }
-    } finally { edgesS.unpersist(); () }
+  /** One [[shortestPaths]] round: `(node, nd, imp)` — every node's
+    * tentative distance after relaxing the edges out of the nodes that
+    * improved (`imp`) in the previous round. */
+  private[graft] def shortestPathStep(edges: DataFrame, prev: DataFrame): DataFrame = {
+    val cand = prev.filter(col("imp"))
+      .select(col("node").as("src"), col("nd").as("df"))
+      .join(edges, "src")
+      .select(col("dst").as("node"), (col("df") + col("w")).as("dc0"))
+      .groupBy("node").agg(min("dc0").as("dc"))
+    prev.select(col("node"), col("nd").as("d"))
+      .join(cand, Seq("node"), "full_outer")
+      .select(col("node"),
+        least(coalesce(col("d"), lit(Long.MaxValue)),
+          coalesce(col("dc"), lit(Long.MaxValue))).as("nd"),
+        (col("d").isNull || (col("dc").isNotNull && col("dc") < col("d"))).as("imp"))
   }
 
   /** DuckDB oracle for [[shortestPaths]] — Bellman-Ford unrolled to

@@ -56,4 +56,8 @@ object Shim {
   def expressionConverted(c: org.apache.spark.sql.Column)
       : org.apache.spark.sql.catalyst.expressions.Expression =
     org.apache.spark.sql.classic.ColumnNodeToExpressionConverter.apply(c.node)
+
+  /** Entries in the session's cached-plan registry (`CacheManager`). */
+  def cachedPlans(spark: SparkSession): Int =
+    classic(spark).sharedState.cacheManager.numCachedEntries
 }

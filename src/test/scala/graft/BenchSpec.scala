@@ -61,4 +61,15 @@ class BenchSpec extends AnyFunSuite {
       .!(ProcessLogger(l => out.append(l).append('\n'), l => out.append(l).append('\n')))
     assert(rc == 0, out.toString)
   }
+
+  test("the between-query sweep empties the cached-plan registry and the persisted RDDs") {
+    val spark = TestSpark.spark
+    val cached = spark.range(10).toDF("x").persist()
+    cached.count()
+    spark.range(5).toDF("y").localCheckpoint()
+    assert(org.apache.spark.sql.graft.Shim.cachedPlans(spark) > 0)
+    Bench.releaseCached(spark)
+    assert(org.apache.spark.sql.graft.Shim.cachedPlans(spark) == 0)
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+  }
 }

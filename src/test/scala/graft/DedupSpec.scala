@@ -350,6 +350,45 @@ class DedupSpec extends AnyFunSuite {
       10L -> 10L, 11L -> 10L, 12L -> 10L, 20L -> 20L, 21L -> 20L))
   }
 
+  test("connected components keep only the frame their result reads") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val hand = Seq((1L, 2L), (2L, 3L), (10L, 11L), (10L, 12L), (20L, 21L)).toDF("a", "b")
+    // a 12-node path exceeds the min-label budget and falls through to
+    // the contraction phase
+    val path = (0L until 12L).sliding(2).map(s => (s.head, s.last)).toSeq.toDF("a", "b")
+    Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "min-label" -> (() => Dedup.connectedComponents(hand)),
+      "contraction" -> (() => Dedup.alternatingComponents(hand)),
+      "min-label then contraction" -> (() => Dedup.connectedComponents(path))
+    ).foreach { case (name, cc) =>
+      val rdds = sc.getPersistentRDDs.keySet
+      val entries = org.apache.spark.sql.graft.Shim.cachedPlans(spark)
+      val labels = cc()
+      val left = sc.getPersistentRDDs.keySet -- rdds
+      assert(left.size <= 1, s"$name left persisted RDDs $left")
+      assert(org.apache.spark.sql.graft.Shim.cachedPlans(spark) == entries, s"$name left cached plans")
+      // the one frame it keeps is the one its result reads
+      val got = labels.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+      if (name == "min-label then contraction") assert(got.size == 12 && got.values.toSet == Set(0L))
+      else assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L,
+        12L -> 10L, 20L -> 20L, 21L -> 20L), name)
+    }
+  }
+
+  test("each component round, built by its shipped step, keeps its exchange count") {
+    import spark.implicits._
+    val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("a", "b")
+    graft.operators.Rounds.scope { rs =>
+      val und = rs.checkpoint(Dedup.undirected(pairs))
+      val labels = rs.checkpoint(und.select(col("src").as("node")).distinct()
+        .withColumn("lbl", col("node")))
+      assert(TestSpark.initialShuffles(Dedup.componentStep(und, labels)) == 1)
+      val edges = rs.checkpoint(Dedup.canonicalEdges(pairs))
+      assert(TestSpark.initialShuffles(Dedup.starStep(edges)) == 7)
+    }
+  }
+
   test("duplicate clusters equal union-find over brute-force pairs") {
     val expected = unionFind(brutePairs(0.8))
     val got = Dedup.duplicateClusters(docs, 0.8)

@@ -1,6 +1,7 @@
 package graft
 
-import graft.operators.EventAnalytics
+import graft.operators.{EventAnalytics, Rounds}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -259,16 +260,145 @@ class EventAnalyticsSpec extends AnyFunSuite {
   }
 
   test("bfsHops and shortestPaths return empty frames on view-less events") {
-    // no 'view' rows -> empty edge set; the min-source collect sees a
-    // null cell and must NOT NPE (verdict r14 ask #5) — the DuckDB
-    // oracles return zero rows on the same input
+    // no 'view' rows with a numeric k -> empty view graph; the DuckDB
+    // oracles return zero rows on the same input (k-core: every
+    // round's count is 0), so no operator may divide by the zero node
+    // count (pageRank), read a NULL total (hits) or NPE on the null
+    // min-source cell (bfsHops, shortestPaths)
     val ev = Seq((1L, "click", ts(2), """{"k":1}"""),
-        (2L, "purchase", ts(3), """{"k":2}"""))
+        (2L, "purchase", ts(3), """{"k":2}"""),
+        (3L, "view", ts(4), """{"j":3}"""))
       .toDF("user_id", "event_type", "ts", "props")
     val hops = EventAnalytics.bfsHops(ev)
     assert(hops.columns.toSeq == Seq("hop", "n_nodes"))
     assert(hops.count() == 0)
     val sp = EventAnalytics.shortestPaths(ev)
+    assert(sp.columns.toSeq == Seq("d", "n_nodes", "min_node", "max_node"))
     assert(sp.count() == 0)
+    val pr = EventAnalytics.pageRank(ev)
+    assert(pr.columns.toSeq == Seq("node", "rank") && pr.count() == 0)
+    val h = EventAnalytics.hits(ev)
+    assert(h.columns.toSeq == Seq("kind", "node", "score") && h.count() == 0)
+    val lp = EventAnalytics.labelProp(ev)
+    assert(lp.columns.toSeq == Seq("community", "n_nodes") && lp.count() == 0)
+    val kc = EventAnalytics.kCoreTrace(ev, k = 2, rounds = 3).collect()
+      .map(r => (r.getInt(0), r.getLong(1))).toSeq
+    assert(kc == Seq((1, 0L), (2, 0L), (3, 0L)))
+  }
+
+  /** Views as `(user, k)` rows, the input of the view-graph operators. */
+  private def views(uk: (Long, Long)*) =
+    uk.map { case (u, k) => (u, "view", ts(1), s"""{"k": $k}""") }
+      .toDF("user_id", "event_type", "ts", "props")
+
+  /** The symmetric view graph of `uk` as (src, dst, weight) in plain
+    * Scala: user u <-> item -(k+1), weight (u + k) % 5 + 1. */
+  private def refEdges(uk: Seq[(Long, Long)]) = uk.distinct.flatMap { case (u, k) =>
+    val w = (u + k) % 5 + 1
+    Seq((u, -(k + 1), w), (-(k + 1), u, w))
+  }
+
+  test("bfsHops matches a pure-Scala BFS, including a frontier that empties early") {
+    def reference(uk: Seq[(Long, Long)], maxHops: Int): Seq[(Int, Long)] = {
+      val edges = refEdges(uk)
+      val source = edges.map(_._1).filter(_ > 0).min
+      var hop = Map(source -> 0)
+      var frontier = Set(source)
+      (1 to maxHops).foreach { h =>
+        frontier = edges.collect { case (s, d, _) if frontier(s) && !hop.contains(d) => d }.toSet
+        hop ++= frontier.map(_ -> h)
+      }
+      hop.values.groupBy(identity).map { case (h, ns) => (h, ns.size.toLong) }.toSeq.sorted
+    }
+    def got(uk: Seq[(Long, Long)], maxHops: Int) =
+      EventAnalytics.bfsHops(views(uk: _*), maxHops).collect()
+        .map(r => (r.getInt(0), r.getLong(1))).toSeq
+    // users 1, 2 share item 7; user 3 and item 2 sit apart: the
+    // frontier from user 1 is empty after hop 2, before maxHops = 4
+    val island = Seq((1L, 7L), (2L, 7L), (3L, 2L))
+    assert(got(island, 4) == reference(island, 4))
+    assert(got(island, 4) == Seq((0, 1L), (1, 1L), (2, 1L)))
+    // a chain 1 - i7 - 2 - i8 - 3 - i9 - 4 is cut at maxHops
+    val chain = Seq((1L, 7L), (2L, 7L), (2L, 8L), (3L, 8L), (3L, 9L), (4L, 9L))
+    assert(got(chain, 3) == reference(chain, 3))
+    assert(got(chain, 3).map(_._1) == Seq(0, 1, 2, 3))
+  }
+
+  test("shortestPaths matches a pure-Scala bounded Bellman-Ford, incl. a cheaper longer path") {
+    def reference(uk: Seq[(Long, Long)], maxHops: Int): Seq[(Long, Long, Long, Long)] = {
+      val edges = refEdges(uk)
+      var dist = Map(edges.map(_._1).filter(_ > 0).min -> 0L)
+      (1 to maxHops).foreach { _ =>
+        val ext = for ((s, t, w) <- edges; ds <- dist.get(s)) yield t -> (ds + w)
+        dist = (dist.toSeq ++ ext).groupBy(_._1).map { case (n, ds) => n -> ds.map(_._2).min }
+      }
+      dist.toSeq.groupBy(_._2).map { case (d, ns) =>
+        (d, ns.size.toLong, ns.map(_._1).min, ns.map(_._1).max)
+      }.toSeq.sortBy(_._1)
+    }
+    def got(uk: Seq[(Long, Long)], maxHops: Int) =
+      EventAnalytics.shortestPaths(views(uk: _*), maxHops).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
+    // user 1 reaches user 2 directly through item 2 (weights 4 + 5 = 9,
+    // two hops) or through item 4, user 3 and item 8 (1 + 3 + 2 + 1 =
+    // 7, four hops): the cheaper path lowers an already-reached node
+    // in round 4, which only delta relaxation of improved nodes finds
+    val g = Seq((1L, 2L), (2L, 2L), (1L, 4L), (3L, 4L), (3L, 8L), (2L, 8L))
+    def distOf2(rows: Seq[(Long, Long, Long, Long)]) =
+      rows.filter(r => r._3 <= 2L && r._4 >= 2L).map(_._1)
+    assert(got(g, 3) == reference(g, 3))
+    assert(distOf2(got(g, 3)).contains(9L))
+    assert(got(g, 4) == reference(g, 4))
+    assert(distOf2(got(g, 4)).contains(7L))
+    // a budget far past convergence: the loop exits early, same table
+    assert(got(g, 12) == reference(g, 12))
+  }
+
+  test("the view-graph operators and triangleStats leave no cached state behind") {
+    val sc = spark.sparkContext
+    val ev = views((1L, 7L), (2L, 7L), (3L, 7L), (4L, 7L), (1L, 2L), (2L, 2L))
+      .withColumn("event_id", lit(0L))
+    val ops = Seq[(String, () => DataFrame)](
+      "pageRank" -> (() => EventAnalytics.pageRank(ev)),
+      "bfsHops" -> (() => EventAnalytics.bfsHops(ev)),
+      "hits" -> (() => EventAnalytics.hits(ev)),
+      "labelProp" -> (() => EventAnalytics.labelProp(ev)),
+      "kCoreTrace" -> (() => EventAnalytics.kCoreTrace(ev, k = 2)),
+      "shortestPaths" -> (() => EventAnalytics.shortestPaths(ev)),
+      "triangleStats" -> (() => EventAnalytics.triangleStats(ev)))
+    ops.foreach { case (name, op) =>
+      val rdds = sc.getPersistentRDDs.keySet
+      val entries = org.apache.spark.sql.graft.Shim.cachedPlans(spark)
+      assert(op().collect().nonEmpty, name)
+      val left = sc.getPersistentRDDs.keySet -- rdds
+      assert(left.isEmpty, s"$name left persisted RDDs $left")
+      assert(org.apache.spark.sql.graft.Shim.cachedPlans(spark) == entries, s"$name left cached plans")
+    }
+  }
+
+  test("each view-graph round, built by its shipped step, keeps its exchange count") {
+    import EventAnalytics._
+    val ev = views((1L, 7L), (2L, 7L), (3L, 7L), (4L, 7L), (1L, 2L))
+    def nodes(edges: DataFrame) = edges.select(col("src").as("node")).distinct()
+    Rounds.scope { rs =>
+      val pairs = viewPairs(ev, rs).get
+      val edges = viewEdges(pairs, None)
+      val deg = rs.cache(edges.groupBy("src").agg(count(lit(1)).as("deg")))
+      val adj = rs.cache(edges.join(deg, "src"))
+      val ranks = rs.checkpoint(deg.select(col("src").as("node"), lit(100L).as("rank")))
+      assert(TestSpark.initialShuffles(pageRankStep(adj, ranks, 100L)) == 1)
+      val f0 = rs.checkpoint(spark.range(1).select(lit(1L).as("node"), lit(0).as("hop")))
+      assert(TestSpark.initialShuffles(bfsStep(edges, List(f0), 1)) == 1)
+      val hev = pairs.select(col("u"), col("k").as("it"))
+      val hubs = rs.checkpoint(hev.select("u").distinct().select(col("u"), lit(1L).as("raw")))
+      assert(TestSpark.initialShuffles(hitsStep(hev, Rounds.Round(hubs, 1L), "u", "it")) == 1)
+      val labels = rs.checkpoint(nodes(edges).select(col("node"), col("node").as("lbl")))
+      assert(TestSpark.initialShuffles(labelPropStep(edges, labels)) == 2)
+      assert(TestSpark.initialShuffles(kCoreStep(edges, rs.checkpoint(nodes(edges)), 11)) == 1)
+      val wEdges = viewEdges(pairs, Some((col("u") + col("k")) % 5 + lit(1L)))
+      val d0 = rs.checkpoint(spark.range(1)
+        .select(lit(1L).as("node"), lit(0L).as("nd"), lit(true).as("imp")))
+      assert(TestSpark.initialShuffles(shortestPathStep(wEdges, d0)) == 2)
+    }
   }
 }

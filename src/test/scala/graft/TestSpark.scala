@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 
 /** One shared local session for every suite (forked test JVM). */
 object TestSpark {
@@ -16,4 +18,11 @@ object TestSpark {
     s
   }
   val sfDir = "/root/testdata/sf0.001"
+
+  /** Shuffle exchanges in `df`'s initial AQE plan, not counting those
+    * inside cached relations (their plans run once, when filled). */
+  def initialShuffles(df: DataFrame): Int = df.queryExecution.executedPlan match {
+    case a: AdaptiveSparkPlanExec => a.initialPlan.collect { case s: ShuffleExchangeExec => s }.size
+    case p => p.collect { case s: ShuffleExchangeExec => s }.size
+  }
 }
