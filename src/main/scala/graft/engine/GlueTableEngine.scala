@@ -2,17 +2,18 @@ package graft.engine
 
 import graft.cache.{Retry, TtlCache}
 import graft.catalog.CatalogProvider
-import graft.listing.{FileLister, HadoopFileLister, IcebergSnapshotResolver}
+import graft.listing.{ColRange, FileLister, FooterStats, HadoopFileLister, IcebergSnapshotResolver}
 import graft.model._
 import graft.prune.Extractors
 import org.apache.hadoop.fs.{FileStatus, Path => HadoopPath}
-import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedRelation}
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, SubqueryAlias}
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, BindReferences, Expression, GenericInternalRow}
+import org.apache.spark.sql.catalyst.optimizer.ReplaceExpressions
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, LogicalPlan, SubqueryAlias}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.{PreListedFileIndex, Shim}
-import org.apache.spark.sql.types.{BooleanType, DataType, IntegerType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{BooleanType, DataType, IntegerType, MapType, StringType, StructField, StructType}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 
 /** The engine facade — Spark-native re-expression of the reference's
@@ -48,7 +49,12 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
   *    joined with AND at src/glue-table-cache.ts:329-331). The
   *    optimizer narrows the index to the kept partitions, so join
   *    planning sees the selection's size. Planning a warm query runs
-  *    no Spark action.
+  *    no Spark action, and a cold snapshot's typed partition values
+  *    are evaluated on the driver, without one.
+  *  - File-skipping stats are fetched on demand: only a query with
+  *    data filters asks, and only for the files its partition prune
+  *    kept. Lake metadata already carries them; parquet/ORC footers
+  *    are read once per file and snapshot.
   *  - Data movement is all executor-side vectorized parquet scan with
   *    Catalyst filter pushdown.
   */
@@ -161,10 +167,11 @@ final class GlueTableEngine(
     * everything the SAME metadata pass yields — Iceberg delete files,
     * schema and partition spec from the one metadata JSON; Delta
     * deletion vectors and schema from the one log replay; the Hudi
-    * schema from the timeline walk. The typed listing and the
-    * skipping stats are derived lazily, once per snapshot. One cache
-    * entry holds all of it, so a listing never pairs with derived
-    * state of another version.
+    * schema from the timeline walk. The typed partitions are derived
+    * lazily, once per snapshot; skipping stats are looked up per file,
+    * only for the files a query with data filters still reads after
+    * its partition prune. One cache entry holds all of it, so a
+    * listing never pairs with derived state of another version.
     */
   private final class TableSnapshot(meta: CachedTableMetadata,
       val files: Seq[S3FileInfo],
@@ -180,50 +187,57 @@ final class GlueTableEngine(
       /** Delta deletion vectors: data-file path -> DV sidecar. */
       val dvs: Map[String, String] = Map.empty) {
 
-    /** The listing as collected local rows `(path, size, modTime,
-      * key1…keyN)`, partition values typed per [[partitionType]] — the
-      * driver-side seed of the [[PreListedFileIndex]]. Values are
-      * computed by the SAME extractor columns as [[listingDF]]
-      * (shared [[attachKeyColumns]]), so pruning and reading can never
-      * disagree on a partition value. One local job over O(#files)
-      * rows, driver-side metadata only.
+    /** The schema of [[partitions]]' values. */
+    val partitionSchema: StructType = partitionSchemaOf(meta)
+
+    /** The listing grouped by partition value, typed per
+      * [[partitionType]], in a deterministic order — the driver-side
+      * seed of the [[PreListedFileIndex]]. Each file's values are
+      * [[keyColumns]], the SAME expressions [[listingDF]] selects,
+      * evaluated here on the driver ([[partitionValuesOf]]), so pruning
+      * and reading can never disagree on a partition value. No Spark
+      * job and no DataFrame: one analysed projection, then O(#files)
+      * interpreted evaluations.
       */
-    lazy val typed: (StructType, Seq[Row]) = {
-      val pSchema = partitionSchemaOf(meta)
-      val sp = Shim.classic(spark)
-      import sp.implicits._
-      val base = files.map(f => (f.path, f.size, f.modTime, f.partitionValues))
-        .toList.toDF("path", "size", "modTime", "pv")
-      val typedDf = meta.table.partitionKeys.foldLeft(attachKeyColumns(meta, base)) {
-        (df, k) => df.withColumn(k.name, col(k.name).cast(pSchema(k.name).dataType))
-      }
-      (pSchema, typedDf.drop("pv").collect().toSeq)
+    lazy val partitions: Seq[(InternalRow, Seq[S3FileInfo])] = {
+      val toScala = CatalystTypeConverters.createToScalaConverter(partitionSchema)
+      files.groupBy(partitionValuesOf(meta)).toSeq.sortBy(p => toScala(p._1).toString)
     }
 
-    /** Per-file column ranges for data skipping (see [[readTable]]),
-      * preferred source first —
+    /** Per-file column ranges for data skipping, in the order of
+      * `paths` (Hadoop path strings of listed files; an empty map
+      * means "cannot skip"). Preferred source first —
       *  1. Iceberg manifests' lower/upper_bounds and Delta add-action
       *     stats: already decoded into the listing (S3FileInfo.bounds)
       *     — zero extra I/O and no cap — this is the 10M-file path;
-      *  2. parquet/ORC footers, read once per snapshot on the driver
-      *     (parallel KB-scale GETs: serial footer GETs over S3 would
-      *     stall first-query planning by minutes at the cap) and
-      *     capped by footerStatsMaxFiles.
-      * Beyond the cap / for other formats / bound-less manifests the
-      * map stays empty and skipping degrades to a no-op.
+      *  2. parquet/ORC footers of the asked files only, read on the
+      *     driver in parallel (KB-scale GETs: serial footer GETs over
+      *     S3 would stall planning) and memoized per file for the life
+      *     of the snapshot. Tables with more than footerStatsMaxFiles
+      *     files read none.
+      * For other formats and bound-less manifests every map is empty
+      * and skipping degrades to a no-op.
       */
-    lazy val stats: Map[String, Map[String, graft.listing.ColRange]] = {
-      val fmt = classification(meta)
-      val fromListing = files.filter(_.bounds.nonEmpty).map(f => f.path -> f.bounds).toMap
-      if (fromListing.nonEmpty) fromListing
-      else if ((fmt == "parquet" || fmt == "orc") &&
-          files.size <= config.footerStatsMaxFiles && config.footerStatsMaxFiles > 0) {
-        val read: String => Map[String, graft.listing.ColRange] =
-          if (fmt == "orc") graft.listing.FooterStats.readOrc(hadoopConf, _)
-          else graft.listing.FooterStats.read(hadoopConf, _)
-        onDriverPool(files.map(_.path))(p => p -> read(p)).toMap
-      } else Map.empty
-    }
+    def stats(paths: Seq[String]): Seq[Map[String, ColRange]] =
+      if (listingBounds.nonEmpty) paths.map(listingBounds.getOrElse(_, Map.empty))
+      else footerReader.fold(paths.map(_ => Map.empty[String, ColRange])) { read =>
+        onDriverPool(paths.distinct.filterNot(footers.contains))(p => footers.putIfAbsent(p, read(p)))
+        paths.map(footers)
+      }
+
+    private lazy val listingBounds: Map[String, Map[String, ColRange]] =
+      files.iterator.filter(_.bounds.nonEmpty)
+        .map(f => new HadoopPath(f.path).toString -> f.bounds).toMap
+
+    private lazy val footerReader: Option[String => Map[String, ColRange]] =
+      classification(meta) match {
+        case fmt @ ("parquet" | "orc")
+            if config.footerStatsMaxFiles > 0 && files.size <= config.footerStatsMaxFiles =>
+          Some(if (fmt == "orc") FooterStats.readOrc(hadoopConf, _) else FooterStats.read(hadoopConf, _))
+        case _ => None
+      }
+
+    private val footers = scala.collection.concurrent.TrieMap.empty[String, Map[String, ColRange]]
   }
 
   private def snapshot(database: String, table: String, versionOffset: Int): TableSnapshot = {
@@ -290,17 +304,18 @@ final class GlueTableEngine(
 
   /** Run `f` over `xs` on a bounded driver-side thread pool — for
     * KB-scale per-file metadata GETs (footers), which are
-    * latency-bound over object stores.
+    * latency-bound over object stores. One element runs inline.
     */
-  private def onDriverPool[A, B](xs: Seq[A])(f: A => B): Seq[B] = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(16, math.max(1, xs.size)))
-    try {
-      import scala.jdk.CollectionConverters._
-      val tasks = xs.map(x => new java.util.concurrent.Callable[B] { override def call() = f(x) })
-      pool.invokeAll(tasks.asJava).asScala.map(_.get()).toSeq
-    } finally pool.shutdown()
-  }
+  private def onDriverPool[A, B](xs: Seq[A])(f: A => B): Seq[B] =
+    if (xs.lengthCompare(1) <= 0) xs.map(f)
+    else {
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(16, xs.size))
+      try {
+        import scala.jdk.CollectionConverters._
+        val tasks = xs.map(x => new java.util.concurrent.Callable[B] { override def call() = f(x) })
+        pool.invokeAll(tasks.asJava).asScala.map(_.get()).toSeq
+      } finally pool.shutdown()
+    }
 
   /** The listing DataFrame: `path` + one extracted partition-value
     * column per key — the in-engine analog of the reference's
@@ -312,28 +327,28 @@ final class GlueTableEngine(
     */
   def listingDF(database: String, table: String): DataFrame = {
     val meta = tableMetadata(database, table)
-    val fs = files(database, table)
     val sp = Shim.classic(spark)
     import sp.implicits._
-    val base = fs.map(f => (f.path, f.partitionValues)).toList.toDF("path", "pv")
-    attachKeyColumns(meta, base).drop("pv")
+    val base = files(database, table).map(f => (f.path, f.partitionValues)).toList.toDF("path", "pv")
+    base.select(col("path") +: keyColumns(meta).zip(meta.table.partitionKeys)
+      .map { case (c, k) => c.as(k.name) }: _*)
   }
 
-  /** Attach one extracted partition-value column per key to a frame
-    * with `path` (+ `pv`, the listing-time catalog values map)
-    * columns. Shared by [[listingDF]] and the read path's
-    * [[TableSnapshot.typed]] so pruning and reading can never disagree on a
-    * partition value.
+  /** One extracted partition-value column per key, in key order, over
+    * a listing with `path` and `pv` (the listing-time catalog values
+    * map) columns. The one definition of a file's partition values:
+    * [[listingDF]] selects it, and [[partitionValuesOf]] evaluates it
+    * for the read path, so pruning and reading can never disagree.
     */
-  private def attachKeyColumns(meta: CachedTableMetadata, base: DataFrame): DataFrame =
-    meta.table.partitionKeys.foldLeft(base) { (df, key) =>
+  private def keyColumns(meta: CachedTableMetadata): Seq[Column] =
+    meta.table.partitionKeys.map { key =>
       val extracted = Extractors.forKey(meta, key.name)(col("path"))
       // Out-of-root Hive partition files have no key=value path
       // segment at all (raw regexp_extract yields ""); only then fall
       // back to the catalog map attached at listing time. Keying on
       // the RAW match keeps __HIVE_DEFAULT_PARTITION__ mapped to null
       // rather than resurrected from the raw listing values.
-      val value = meta.tableType match {
+      meta.tableType match {
         case TableType.Hive =>
           val raw = regexp_extract(col("path"),
             java.util.regex.Pattern.quote(key.name) + "=([^/]+)", 1)
@@ -346,8 +361,30 @@ final class GlueTableEngine(
           coalesce(element_at(col("pv"), key.name), extracted)
         case _ => extracted
       }
-      df.withColumn(key.name, value)
     }
+
+  /** A file's typed partition values: [[keyColumns]], cast to
+    * [[partitionSchemaOf]], evaluated on the driver. The columns are
+    * analysed once, as a projection over an empty relation of the
+    * listing's shape; each file is then one interpreted evaluation of
+    * the bound expressions — no Spark job, no per-file analysis.
+    */
+  private def partitionValuesOf(meta: CachedTableMetadata): S3FileInfo => InternalRow = {
+    val pSchema = partitionSchemaOf(meta)
+    if (pSchema.isEmpty) return _ => InternalRow.empty
+    val input = Seq(
+      AttributeReference("path", StringType)(),
+      AttributeReference("pv", MapType(StringType, StringType))())
+    val typed = keyColumns(meta).zip(pSchema.fields).map { case (c, f) => c.cast(f.dataType) }
+    val project = Shim.analyzedPlan(Shim.ofRows(spark, LocalRelation(input)).select(typed: _*))
+    val exprs = ReplaceExpressions(project).expressions.map(BindReferences.bindReference(_, input))
+    val toInput = CatalystTypeConverters.createToCatalystConverter(StructType(
+      input.map(a => StructField(a.name, a.dataType))))
+    f => {
+      val in = toInput(Row(f.path, f.partitionValues)).asInstanceOf[InternalRow]
+      new GenericInternalRow(exprs.map(_.eval(in)).toArray)
+    }
+  }
 
   /** Pruned path list (≈ the reference's `SET VARIABLE db_tbl_files`
     * statement, src/glue-table-cache.ts:323-333), with the optional
@@ -914,10 +951,12 @@ final class GlueTableEngine(
       keep: Option[Set[String]], proxied: Boolean): DataFrame = {
     val meta = tableMetadata(database, table)
     val snap = snapshot(database, table, versionOffset)
-    val (pSchema, allRows) = snap.typed
-    val rows = keep.fold(allRows)(k => allRows.filter(r => k(r.getString(0))))
+    val pSchema = snap.partitionSchema
+    val kept = keep.fold(snap.partitions)(k => snap.partitions.flatMap { case (values, fs) =>
+      Some(fs.filter(f => k(f.path))).filter(_.nonEmpty).map(values -> _)
+    })
     val fmt = classification(meta)
-    if (rows.isEmpty)
+    if (kept.isEmpty)
       return spark.range(0).select(lit(null).cast("string").as("null"))
     // Query-path reads go through the optional HTTP cache proxy, like
     // the reference's files-variable scan (reference:
@@ -925,18 +964,13 @@ final class GlueTableEngine(
     val rewrite: String => String = if (proxied) proxyRewrite else identity
     // The scan's file path as the delete and deletion-vector keys see it.
     val scanPath = scanPathCol(col("_metadata").getField("file_path"), proxied)
-    val nFixed = 3 // path, size, modTime
-    val converter = CatalystTypeConverters.createToCatalystConverter(pSchema)
-    val partitions = rows
-      .groupBy(r => Row.fromSeq((nFixed until nFixed + pSchema.length).map(r.get)))
-      .toSeq.sortBy(_._1.toString) // deterministic partition order
-      .map { case (kv, rs) =>
-        val ir = converter(kv).asInstanceOf[org.apache.spark.sql.catalyst.InternalRow]
-        val statuses = rs.map(r => new FileStatus(r.getLong(1), false, 1,
-          128L * 1024 * 1024, r.getLong(2), new HadoopPath(rewrite(r.getString(0)))))
-        (ir, statuses)
-      }
-    val dataSchema = dataSchemaOf(meta, fmt, rows.head.getString(0), snap.formatSchema)
+    val partitions = kept.map { case (values, fs) =>
+      values -> fs.map(f => new FileStatus(f.size, false, 1,
+        128L * 1024 * 1024, f.modTime, new HadoopPath(rewrite(f.path))))
+    }
+    // the first kept file in listing order infers an undeclared schema
+    val firstPath = snap.files.iterator.map(_.path).find(p => keep.forall(_(p))).get
+    val dataSchema = dataSchemaOf(meta, fmt, firstPath, snap.formatSchema)
     // COLUMN MAPPING (Delta name mode / Iceberg field-id renames): a
     // renamed table's files carry the original PHYSICAL column names;
     // the log/metadata schema carries the logical ones plus the
@@ -955,13 +989,12 @@ final class GlueTableEngine(
       if (colMapping.isEmpty) dataSchema
       else StructType(dataSchema.fields.map(f =>
         f.copy(name = colMapping.getOrElse(f.name, f.name))))
-    // File-level data skipping (Delta/Iceberg-style): the snapshot's
-    // per-file column ranges, keyed by Hadoop Path canonical form:
-    // listFiles looks ranges up via FileStatus.getPath.toString, which
-    // normalizes the raw listing string (duplicate slashes in S3 keys,
-    // trailing slashes). A key/lookup mismatch is safe but silently
-    // turns skipping off for that file.
-    val statsByPath = snap.stats.map { case (p, st) => new HadoopPath(rewrite(p)).toString -> st }
+    // File-level data skipping (Delta/Iceberg-style): the index asks
+    // the snapshot for the ranges of the files it still reads, by the
+    // files' Hadoop path strings. Stats are keyed, and footers read,
+    // by the listing's path, so a proxied scan's paths map back first.
+    val stats: PreListedFileIndex.Stats =
+      if (proxied) paths => snap.stats(paths.map(unproxied)) else snap.stats
     val options: Map[String, String] = fmt match {
       // With a declared schema Spark binds CSV columns BY POSITION
       // and ignores header names; enforceSchema=false makes every
@@ -976,7 +1009,7 @@ final class GlueTableEngine(
       case _     => Map.empty
     }
     val base = PreListedFileIndex.dataFrame(spark, PreListedFileIndex.formatFor(fmt), options,
-      scanSchema, pSchema, partitions, Seq(new HadoopPath(location(meta))), statsByPath)
+      scanSchema, pSchema, partitions, Seq(new HadoopPath(location(meta))), stats)
     // Iceberg v2 merge-on-read: subtract live DELETE files. Position
     // deletes anti-join on (_metadata.file_path, _metadata.row_index)
     // — Spark's generated parquet metadata columns, so the base scan
@@ -1078,14 +1111,24 @@ final class GlueTableEngine(
     * come back. PathCanonSpec pins the agreement.
     */
   private[graft] def scanPathCol(filePath: Column, proxied: Boolean): Column = {
-    val unproxied = config.proxyAddress.filter(_ => proxied).fold(filePath) { _ =>
-      // the prefix as the scan reports it (a Hadoop Path's URI form)
-      val prefix = new HadoopPath(proxyRewrite("s3://b")).toUri.toString.stripSuffix("b")
+    val unproxiedCol = proxyScanPrefix.filter(_ => proxied).fold(filePath) { prefix =>
       when(filePath.startsWith(prefix),
         concat(lit("s3://"), filePath.substr(prefix.length + 1, Int.MaxValue)))
         .otherwise(filePath)
     }
-    canonPathCol(unproxied)
+    canonPathCol(unproxiedCol)
+  }
+
+  /** The proxy prefix as a scan reports it (a Hadoop Path's URI form),
+    * standing where the listing has `s3://`.
+    */
+  private lazy val proxyScanPrefix: Option[String] = config.proxyAddress.map(_ =>
+    new HadoopPath(proxyRewrite("s3://b")).toUri.toString.stripSuffix("b"))
+
+  /** A proxied scan's file path mapped back to its listing path. */
+  private def unproxied(p: String): String = proxyScanPrefix match {
+    case Some(prefix) if p.startsWith(prefix) => "s3://" + p.substring(prefix.length)
+    case _ => p
   }
 
   private def applyIcebergDeletes(df: DataFrame, scanPath: Column,

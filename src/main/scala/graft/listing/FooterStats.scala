@@ -53,18 +53,26 @@ object FooterStats {
     * simply omitted — absence always means "cannot skip", never
     * wrong results. Unreadable footers yield an empty map.
     */
-  def read(conf: Configuration, path: String): Map[String, ColRange] =
+  def read(conf: Configuration, path: String): Map[String, ColRange] = {
+    statsReads.incrementAndGet()
     Try {
       val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(path), conf))
       try collect(reader.getFooter.getBlocks.asScala.toSeq)
       finally reader.close()
     }.getOrElse(Map.empty)
+  }
 
   /** Test observability: footer opens made by [[rowCount]] since JVM
     * start — lets a spec PROVE a metadata count answered from the
     * table format's own log/manifest counts with zero footer I/O.
     */
   val rowCountReads = new java.util.concurrent.atomic.AtomicLong()
+
+  /** Test observability: footer opens made by [[read]] and [[readOrc]]
+    * since JVM start — lets a spec prove which files' skipping stats a
+    * query read.
+    */
+  val statsReads = new java.util.concurrent.atomic.AtomicLong()
 
   /** Exact row count of one parquet file from its footer alone —
     * KB-scale metadata I/O, no data pages touched, no Spark job.
@@ -201,7 +209,8 @@ object FooterStats {
     * the Catalyst literals Spark pushes; types whose stats don't map
     * cleanly (dates, timestamps, decimals, booleans) are omitted.
     */
-  def readOrc(conf: Configuration, path: String): Map[String, ColRange] =
+  def readOrc(conf: Configuration, path: String): Map[String, ColRange] = {
+    statsReads.incrementAndGet()
     Try {
       import org.apache.orc.{OrcFile, TypeDescription}
       val reader = OrcFile.createReader(new Path(path), OrcFile.readerOptions(conf))
@@ -223,6 +232,7 @@ object FooterStats {
         }
       } finally reader.close()
     }.getOrElse(Map.empty)
+  }
 
   private def orcRange(tpe: org.apache.orc.TypeDescription,
       s: org.apache.orc.ColumnStatistics): Option[ColRange] = {

@@ -91,7 +91,7 @@ object EventAnalytics {
     * differently in a final top-k.
     */
   private[graft] def viewPairs(events: DataFrame, rs: Rounds): Option[DataFrame] = {
-    val k = get_json_object(col("props"), "$.k").cast("long")
+    val k = get_json_object(col("props"), "$.k").try_cast("long")
     val pairs = rs.cache(events.filter(col("event_type") === "view" && k.isNotNull)
       .select(col("user_id").as("u"), k.as("k")).distinct())
     if (rs.count(pairs) == 0L) None else Some(pairs)
@@ -222,9 +222,9 @@ object EventAnalytics {
     val base =
       s"""WITH ev AS (
          |  SELECT DISTINCT user_id AS u,
-         |    -(CAST(json_extract_string(props, '$$.k') AS BIGINT) + 1) AS it
+         |    -(TRY_CAST(json_extract_string(props, '$$.k') AS BIGINT) + 1) AS it
          |  FROM events WHERE event_type = 'view'
-         |    AND CAST(json_extract_string(props, '$$.k') AS BIGINT) IS NOT NULL),
+         |    AND TRY_CAST(json_extract_string(props, '$$.k') AS BIGINT) IS NOT NULL),
          |e AS (SELECT u AS src, it AS dst FROM ev
          |      UNION ALL SELECT it AS src, u AS dst FROM ev),
          |d0 AS (SELECT MIN(src) AS node, 0 AS hop FROM e WHERE src > 0
@@ -309,9 +309,9 @@ object EventAnalytics {
   def triangleStats(events: DataFrame): DataFrame = Rounds.scope { rs =>
     val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
     val ev = events.filter(col("event_type") === "view")
-      .filter(get_json_object(col("props"), "$.k").cast("long").isNotNull)
+      .filter(get_json_object(col("props"), "$.k").try_cast("long").isNotNull)
       .select(col("user_id"), col("ts"), col("event_id"),
-        get_json_object(col("props"), "$.k").cast("long").as("it"))
+        get_json_object(col("props"), "$.k").try_cast("long").as("it"))
     // edges/deg/oriented each feed SEVERAL consumers below (edges:
     // deg's two union branches + oriented; deg: two orient joins + the
     // wedge total; oriented: e1, e2, and the closing join) — uncached,
@@ -355,9 +355,9 @@ object EventAnalytics {
   def sqlTriangleStats: String =
     """WITH ev AS (
       |  SELECT user_id, ts, event_id,
-      |    CAST(json_extract_string(props, '$.k') AS BIGINT) AS it
+      |    TRY_CAST(json_extract_string(props, '$.k') AS BIGINT) AS it
       |  FROM events WHERE event_type = 'view'
-      |    AND CAST(json_extract_string(props, '$.k') AS BIGINT) IS NOT NULL),
+      |    AND TRY_CAST(json_extract_string(props, '$.k') AS BIGINT) IS NOT NULL),
       |nx AS (SELECT it AS a,
       |         LEAD(it) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS b
       |       FROM ev),
@@ -496,9 +496,9 @@ object EventAnalytics {
     val base =
       s"""WITH ev AS MATERIALIZED (
          |  SELECT DISTINCT user_id AS u,
-         |    CAST(json_extract_string(props, '$$.k') AS BIGINT) AS it
+         |    TRY_CAST(json_extract_string(props, '$$.k') AS BIGINT) AS it
          |  FROM events WHERE event_type = 'view'
-         |    AND CAST(json_extract_string(props, '$$.k') AS BIGINT) IS NOT NULL),
+         |    AND TRY_CAST(json_extract_string(props, '$$.k') AS BIGINT) IS NOT NULL),
          |h0 AS MATERIALIZED (SELECT DISTINCT u, $HitsUnit AS h FROM ev)""".stripMargin
     val stages = (1 to iters).map { i =>
       val ph = s"h${i - 1}"
@@ -528,9 +528,9 @@ object EventAnalytics {
     val base =
       s"""WITH ev AS (
          |  SELECT DISTINCT user_id AS u,
-         |    -(CAST(json_extract_string(props, '$$.k') AS BIGINT) + 1) AS it
+         |    -(TRY_CAST(json_extract_string(props, '$$.k') AS BIGINT) + 1) AS it
          |  FROM events WHERE event_type = 'view'
-         |    AND CAST(json_extract_string(props, '$$.k') AS BIGINT) IS NOT NULL),
+         |    AND TRY_CAST(json_extract_string(props, '$$.k') AS BIGINT) IS NOT NULL),
          |e AS (SELECT u AS src, it AS dst FROM ev
          |      UNION ALL SELECT it AS src, u AS dst FROM ev),
          |n AS (SELECT DISTINCT src AS node FROM e),
@@ -610,9 +610,9 @@ object EventAnalytics {
     val base =
       s"""WITH ev AS (
          |  SELECT DISTINCT user_id AS u,
-         |    -(CAST(json_extract_string(props, '$$.k') AS BIGINT) + 1) AS it
+         |    -(TRY_CAST(json_extract_string(props, '$$.k') AS BIGINT) + 1) AS it
          |  FROM events WHERE event_type = 'view'
-         |    AND CAST(json_extract_string(props, '$$.k') AS BIGINT) IS NOT NULL),
+         |    AND TRY_CAST(json_extract_string(props, '$$.k') AS BIGINT) IS NOT NULL),
          |e AS MATERIALIZED (SELECT u AS src, it AS dst FROM ev
          |      UNION ALL SELECT it AS src, u AS dst FROM ev),
          |l0 AS MATERIALIZED (SELECT DISTINCT src AS node, src AS lbl FROM e)""".stripMargin
@@ -680,9 +680,9 @@ object EventAnalytics {
     val base =
       s"""WITH ev AS MATERIALIZED (
          |  SELECT DISTINCT user_id AS u,
-         |    -(CAST(json_extract_string(props, '$$.k') AS BIGINT) + 1) AS it
+         |    -(TRY_CAST(json_extract_string(props, '$$.k') AS BIGINT) + 1) AS it
          |  FROM events WHERE event_type = 'view'
-         |    AND CAST(json_extract_string(props, '$$.k') AS BIGINT) IS NOT NULL),
+         |    AND TRY_CAST(json_extract_string(props, '$$.k') AS BIGINT) IS NOT NULL),
          |e AS MATERIALIZED (SELECT u AS src, it AS dst FROM ev
          |      UNION ALL SELECT it AS src, u AS dst FROM ev),
          |a0 AS MATERIALIZED (SELECT DISTINCT src AS node FROM e)""".stripMargin
@@ -762,14 +762,14 @@ object EventAnalytics {
     val base =
       s"""WITH ev AS (
          |  SELECT DISTINCT user_id AS u,
-         |    CAST(json_extract_string(props, '$$.k') AS BIGINT) AS k
+         |    TRY_CAST(json_extract_string(props, '$$.k') AS BIGINT) AS k
          |  FROM events WHERE event_type = 'view'
-         |    AND CAST(json_extract_string(props, '$$.k') AS BIGINT) IS NOT NULL),
+         |    AND TRY_CAST(json_extract_string(props, '$$.k') AS BIGINT) IS NOT NULL),
          |b AS (SELECT u, -(k + 1) AS it, (u + k) % 5 + 1 AS w FROM ev),
          |e AS MATERIALIZED (SELECT u AS src, it AS dst, w FROM b
          |      UNION ALL SELECT it AS src, u AS dst, w FROM b),
-         |d0 AS (SELECT (SELECT MIN(src) FROM e WHERE src > 0) AS node,
-         |       CAST(0 AS BIGINT) AS d)""".stripMargin
+         |d0 AS (SELECT MIN(src) AS node, CAST(0 AS BIGINT) AS d FROM e WHERE src > 0
+         |      HAVING MIN(src) IS NOT NULL)""".stripMargin
     val stages = (1 to maxHops).map { h =>
       val prev = s"d${h - 1}"
       s"""d$h AS MATERIALIZED (

@@ -41,7 +41,7 @@ final class PreListedFileIndex(
     override val partitionSchema: StructType,
     partitions: Seq[(InternalRow, Seq[FileStatus])],
     roots: Seq[Path],
-    statsByPath: Map[String, Map[String, graft.listing.ColRange]] = Map.empty)
+    stats: PreListedFileIndex.Stats = PreListedFileIndex.NoStats)
   extends FileIndex {
 
   private val dirs: Seq[PartitionDirectory] =
@@ -67,7 +67,7 @@ final class PreListedFileIndex(
     partitionPredicate(partitionFilters).fold(this) { keep =>
       val kept = partitions.filter(p => keep(p._1))
       if (kept.length == partitions.length) this
-      else new PreListedFileIndex(partitionSchema, kept, roots, statsByPath)
+      else new PreListedFileIndex(partitionSchema, kept, roots, stats)
     }
 
   private def partitionPredicate(partitionFilters: Seq[Expression]): Option[InternalRow => Boolean] = {
@@ -94,23 +94,23 @@ final class PreListedFileIndex(
 
   /** File-level data skipping: drop a file when some pushed data
     * filter is provably false on its column ranges (footer/manifest
-    * min-max — the Delta/Iceberg data-skipping design). A file with
-    * no stats, or a filter shape the prover doesn't know, is always
-    * kept; the filter still runs in the scan above.
+    * min-max — the Delta/Iceberg data-skipping design). Ranges are
+    * asked for only when a usable data filter exists, and only for the
+    * files the partition prune kept. A file with no stats, or a filter
+    * shape the prover doesn't know, is always kept; the filter still
+    * runs in the scan above.
     */
   private def skipByStats(selected: Seq[PartitionDirectory],
       dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-    if (statsByPath.isEmpty || dataFilters.isEmpty) return selected
-    val resolver = SQLConf.get.resolver
     val usable = dataFilters.filter(f => f.deterministic && !SubqueryExpression.hasSubquery(f))
-    if (usable.isEmpty) return selected
+    if (usable.isEmpty || selected.isEmpty) return selected
+    val paths = selected.flatMap(_.files.map(_.getPath.toString))
+    val ranges = paths.zip(stats(paths)).toMap
+    val resolver = SQLConf.get.resolver
     selected.map { d =>
       val kept = d.files.filter { f =>
-        statsByPath.get(f.getPath.toString) match {
-          case Some(stats) if stats.nonEmpty =>
-            !usable.exists(e => graft.listing.StatsPruning.proveFalse(e, stats, resolver))
-          case _ => true
-        }
+        val st = ranges(f.getPath.toString)
+        st.isEmpty || !usable.exists(e => graft.listing.StatsPruning.proveFalse(e, st, resolver))
       }
       if (kept.length == d.files.length) d else PartitionDirectory(d.values, kept)
     }
@@ -132,6 +132,13 @@ final class PreListedFileIndex(
 }
 
 object PreListedFileIndex {
+
+  /** Column ranges of the given files (Hadoop path strings), in their
+    * order; an empty map means "cannot skip this file".
+    */
+  type Stats = Seq[String] => Seq[Map[String, graft.listing.ColRange]]
+
+  val NoStats: Stats = _.map(_ => Map.empty)
 
   /** `FileFormat` for a Glue `classification` table parameter. */
   def formatFor(classification: String): FileFormat = classification match {
@@ -156,9 +163,9 @@ object PreListedFileIndex {
       partitionSchema: StructType,
       partitions: Seq[(InternalRow, Seq[FileStatus])],
       roots: Seq[Path],
-      statsByPath: Map[String, Map[String, graft.listing.ColRange]] = Map.empty): DataFrame = {
+      stats: Stats = NoStats): DataFrame = {
     Shim.addOptimizerRule(spark, PruneListedPartitions)
-    val index = new PreListedFileIndex(partitionSchema, partitions, roots, statsByPath)
+    val index = new PreListedFileIndex(partitionSchema, partitions, roots, stats)
     val relation = HadoopFsRelation(
       location = index,
       partitionSchema = partitionSchema,

@@ -4,7 +4,12 @@ import graft.catalog.FixtureCatalog
 import graft.engine.GlueTableEngine
 import graft.fixtures.TestFixtures
 import graft.model.{CacheConfig, ColumnDef, GlueTable}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PreListedFileIndex
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Engine end-to-end layer — the Spark analog of the reference's
@@ -1064,5 +1069,127 @@ class EngineSpec extends AnyFunSuite {
     val listed = reader.files("d", "lake").size
     val read = reader.tableDF("d", "lake").count()
     assert(listed == 2 && read == 60, s"listed $listed files, read $read rows")
+  }
+
+  // -------- the cold read path: typed partitions and skipping stats
+
+  /** Every file `tableDF` plans over, with its typed partition values
+    * as the index holds them, against the same files' `listingDF`
+    * values cast to the index's partition schema.
+    */
+  private def readVsListing(eng: GlueTableEngine, db: String, tbl: String)
+      : (Set[(String, Row)], Set[(String, Row)]) = {
+    val index = eng.tableDF(db, tbl).queryExecution.analyzed.collectFirst {
+      case lr: LogicalRelation if lr.relation.isInstanceOf[HadoopFsRelation] =>
+        lr.relation.asInstanceOf[HadoopFsRelation].location.asInstanceOf[PreListedFileIndex]
+    }.get
+    val pSchema = index.partitionSchema
+    val toScala = CatalystTypeConverters.createToScalaConverter(pSchema)
+    val read = index.listFiles(Nil, Nil).flatMap { d =>
+      d.files.map(f => f.getPath.toString -> toScala(d.values).asInstanceOf[Row])
+    }.toSet
+    val listed = eng.listingDF(db, tbl)
+      .select(col("path") +: pSchema.fields.toSeq.map(f => col(f.name).cast(f.dataType)): _*)
+      .collect().map(r => new Path(r.getString(0)).toString -> Row.fromSeq(r.toSeq.tail)).toSet
+    (read, listed)
+  }
+
+  test("the typed listing the read path plans over matches listingDF on every layout") {
+    import spark.implicits._
+    val base = s"${new java.io.File("target").getAbsolutePath}/typed_listing_${System.nanoTime()}"
+    // Hive: an escaped '=', a literal '%' (dir k=50%25), a null
+    // (__HIVE_DEFAULT_PARTITION__), a typed int key, and a partition
+    // whose catalog location lies outside the table root
+    Seq(("a=b", 1, 1L), ("50%", 2, 2L), (null: String, 3, 3L), ("plain", 4, 4L))
+      .toDF("k", "n", "v").write.partitionBy("k", "n").parquet(s"$base/hive")
+    Seq(10L).toDF("v").write.parquet(s"$base/ext")
+    val cat = new FixtureCatalog()
+    cat.register(GlueTable("d", "hive", Some(s"$base/hive"),
+        partitionKeys = Seq(ColumnDef("k"), ColumnDef("n", "int"))),
+      parts = Seq(graft.model.PartitionInfo(Seq("ext", "7"), Some(s"$base/ext"))))
+    val eng = new GlueTableEngine(spark, cat)
+    eng.writeHudiTable(Seq((1L, "a"), (2L, "b")).toDF("x", "part").coalesce(1),
+      "d", "hudi", s"$base/hudi", partitionBy = Seq("part"))
+    val (hiveRead, hiveListed) = readVsListing(eng, "d", "hive")
+    assert(hiveRead == hiveListed)
+    assert(hiveRead.map(_._2) == Set(Row("a=b", 1), Row("50%", 2), Row(null, 3),
+      Row("plain", 4), Row("ext", 7)))
+    val (hudiRead, hudiListed) = readVsListing(eng, "d", "hudi")
+    assert(hudiRead == hudiListed && hudiRead.map(_._2) == Set(Row("a"), Row("b")))
+    val fixtures = Seq(
+      "lineitem_part",    // Hive, two keys
+      "events_by_day",    // date projection
+      "events_by_month",  // integer projection
+      "docs_by_lang",     // enum projection
+      "iceberg_events",   // Iceberg identity spec
+      "iceberg_orders_m", // Iceberg, date-typed key
+      "delta_events")     // Delta partitionValues
+    for (tbl <- fixtures) {
+      val (read, listed) = readVsListing(engine, "default", tbl)
+      assert(read.size == engine.files("default", tbl).size, tbl)
+      assert(read == listed, tbl)
+      assert(read.exists(!_._2.anyNull), s"$tbl: no partition values")
+    }
+  }
+
+  test("footer reads follow the query: only a data filter's partition, once per snapshot") {
+    import spark.implicits._
+    val loc = s"${new java.io.File("target").getAbsolutePath}/footer_reads_${System.nanoTime()}"
+    // three files per partition, with disjoint id ranges
+    (0L until 300L).map(i => (i, Seq("a", "b", "c")((i % 3).toInt))).toDF("id", "k")
+      .repartitionByRange(3, col("id")).write.partitionBy("k").parquet(loc)
+    val cat = new FixtureCatalog().register(
+      GlueTable("d", "t", Some(loc), partitionKeys = Seq(ColumnDef("k"))))
+    val eng = new GlueTableEngine(spark, cat)
+    val bFiles = eng.files("d", "t").count(_.path.contains("/k=b/"))
+    assert(bFiles == 3)
+    // footer reads made while `sql` runs; its count must be `want`
+    def footerReads(sql: String, want: Long): Long = {
+      val before = graft.listing.FooterStats.statsReads.get()
+      assert(eng.query(sql).collect().head.getLong(0) == want)
+      graft.listing.FooterStats.statsReads.get() - before
+    }
+    assert(footerReads("SELECT count(*) FROM glue.d.t WHERE k = 'a'", 100L) == 0,
+      "a partition-only read needs no stats")
+    val filtered = "SELECT count(*) FROM glue.d.t WHERE k = 'b' AND id >= 290"
+    assert(footerReads(filtered, 3L) == bFiles,
+      "a data filter reads the kept partition's footers only")
+    assert(footerReads(filtered, 3L) == 0, "footers are read once per snapshot")
+    eng.invalidateTable("d", "t")
+    assert(footerReads(filtered, 3L) == bFiles, "a new snapshot reads them again")
+  }
+
+  test("one cold table planned from four threads at once gets one file selection") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    val loc = s"${new java.io.File("target").getAbsolutePath}/cold_threads_${System.nanoTime()}"
+    (0L until 300L).map(i => (i, Seq("a", "b", "c")((i % 3).toInt))).toDF("id", "k")
+      .repartitionByRange(3, col("id")).write.partitionBy("k").parquet(loc)
+    val cat = new FixtureCatalog().register(
+      GlueTable("d", "t", Some(loc), partitionKeys = Seq(ColumnDef("k"))))
+    val eng = new GlueTableEngine(spark, cat)
+    val sql = "SELECT id FROM glue.d.t WHERE k = 'b' AND id >= 290"
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    val selections = try {
+      val runs = (1 to 4).map(_ => pool.submit(new java.util.concurrent.Callable[Set[String]] {
+        override def call(): Set[String] = {
+          start.await()
+          val scan = eng.query(sql).queryExecution.sparkPlan
+            .collectFirst { case s: FileSourceScanExec => s }.get
+          scan.relation.location.listFiles(scan.partitionFilters, scan.dataFilters)
+            .flatMap(_.files.map(_.getPath.toString)).toSet
+        }
+      }))
+      start.countDown()
+      runs.map(_.get(120, java.util.concurrent.TimeUnit.SECONDS))
+    } finally pool.shutdown()
+    // the files whose footer range reaches id 290, read directly
+    val want = eng.files("d", "t").map(_.path).filter(p => p.contains("/k=b/") &&
+      graft.listing.FooterStats.read(spark.sparkContext.hadoopConfiguration, p)("id")
+        .max.asInstanceOf[Long] >= 290L).map(p => new Path(p).toString).toSet
+    assert(want.nonEmpty && want.size < 3)
+    assert(selections.forall(_ == want), s"selections: $selections, want $want")
+    assert(eng.query(sql).collect().map(_.getLong(0)).sorted.toSeq == Seq(292L, 295L, 298L))
   }
 }

@@ -264,10 +264,12 @@ class EventAnalyticsSpec extends AnyFunSuite {
     // oracles return zero rows on the same input (k-core: every
     // round's count is 0), so no operator may divide by the zero node
     // count (pageRank), read a NULL total (hits) or NPE on the null
-    // min-source cell (bfsHops, shortestPaths)
+    // min-source cell (bfsHops, shortestPaths). A non-numeric k is
+    // dropped like a missing one, not a cast error.
     val ev = Seq((1L, "click", ts(2), """{"k":1}"""),
         (2L, "purchase", ts(3), """{"k":2}"""),
-        (3L, "view", ts(4), """{"j":3}"""))
+        (3L, "view", ts(4), """{"j":3}"""),
+        (4L, "view", ts(5), """{"k":"x"}"""))
       .toDF("user_id", "event_type", "ts", "props")
     val hops = EventAnalytics.bfsHops(ev)
     assert(hops.columns.toSeq == Seq("hop", "n_nodes"))
@@ -284,6 +286,8 @@ class EventAnalyticsSpec extends AnyFunSuite {
     val kc = EventAnalytics.kCoreTrace(ev, k = 2, rounds = 3).collect()
       .map(r => (r.getInt(0), r.getLong(1))).toSeq
     assert(kc == Seq((1, 0L), (2, 0L), (3, 0L)))
+    val tri = EventAnalytics.triangleStats(ev.withColumn("event_id", col("user_id"))).collect()
+    assert(tri.length == 1 && tri.head.getLong(0) == 0L)
   }
 
   /** Views as `(user, k)` rows, the input of the view-graph operators. */

@@ -1,5 +1,6 @@
 package graft
 
+import graft.listing.ColRange
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
@@ -60,6 +61,28 @@ class PreListedFileIndexSpec extends AnyFunSuite {
   test("sizeInBytes is the real on-disk total (broadcast statistics)") {
     // default fileCompressionFactor is 1.0 → exact byte sum
     assert(index.sizeInBytes == 150L)
+  }
+
+  test("stats are asked for only with a data filter, and only for the pruned files") {
+    val asked = scala.collection.mutable.ArrayBuffer.empty[Seq[String]]
+    val x = AttributeReference("x", IntegerType)()
+    val withStats = new PreListedFileIndex(schema,
+      Seq(part("a", 1, 10L, 20L), part("a", 2, 30L), part("b", 1, 40L)),
+      Seq(new Path("/data")),
+      paths => {
+        asked += paths
+        // only /data/k=a/m=1/f0.parquet has a range: x in [0, 10]
+        paths.map(p => if (p.endsWith("k=a/m=1/f0.parquet"))
+          Map("x" -> ColRange(0, 10, allNulls = false)) else Map.empty[String, ColRange])
+      })
+    val byK = Seq(EqualTo(kAttr, Literal("a")))
+    assert(withStats.listFiles(byK, Nil).flatMap(_.files).size == 3)
+    assert(asked.isEmpty, "no data filter, no stats")
+    val kept = withStats.listFiles(byK, Seq(GreaterThan(x, Literal(500))))
+      .flatMap(_.files.map(_.getPath.toString))
+    assert(asked.map(_.toSet) == Seq(Set("/data/k=a/m=1/f0.parquet",
+      "/data/k=a/m=1/f1.parquet", "/data/k=a/m=2/f0.parquet")))
+    assert(kept.toSet == Set("/data/k=a/m=1/f1.parquet", "/data/k=a/m=2/f0.parquet"))
   }
 
   test("file statuses preserve listing-time size and mtime (no re-stat)") {
