@@ -119,13 +119,16 @@ final class TtlCache[V <: AnyRef](maxEntries: Int, ttlMs: Long, errorTtlMs: Long
   def invalidate(key: String): Unit = underlying.invalidate(key)
   def invalidateAll(): Unit = underlying.invalidateAll()
 
-  /** Drop every key containing `substr` — the reference's listing
-    * invalidation rule (reference: src/glue-table-cache.ts:206-215).
+  /** Drop every key starting with `prefix`. The reference drops every
+    * key CONTAINING the table name (reference:
+    * src/glue-table-cache.ts:206-215), which also drops the entries of
+    * every table whose name contains it; a prefix names one table's
+    * keys exactly.
     */
-  def invalidateMatching(substr: String): Unit = {
+  def invalidateMatching(prefix: String): Unit = {
     val it = underlying.asMap().keySet().iterator()
     val toDrop = scala.collection.mutable.ArrayBuffer.empty[String]
-    while (it.hasNext) { val k = it.next(); if (k.contains(substr)) toDrop += k }
+    while (it.hasNext) { val k = it.next(); if (k.startsWith(prefix)) toDrop += k }
     toDrop.foreach(underlying.invalidate)
   }
 

@@ -25,7 +25,8 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
   * engine rewrites the *logical plan*: each `UnresolvedRelation` over
   * the `glue` catalog becomes the plan of a (partition-pruned) parquet
   * read, and Spark executes it. No SQL re-serialization, no variables
-  * — the idiomatic equivalents are documented per method.
+  * — the idiomatic equivalents are documented per method. The
+  * write half, which the reference lacks, is the mixed-in [[TableWriters]].
   *
   * Two caches, mirroring the reference's two (reference:
   * src/glue-table-cache.ts:75-84): catalog metadata per table, and
@@ -60,15 +61,15 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
   */
 final class GlueTableEngine(
     val spark: SparkSession,
-    catalog: CatalogProvider,
+    private[engine] val catalog: CatalogProvider,
     config: CacheConfig = CacheConfig(),
-    listerOverride: Option[FileLister] = None) {
+    listerOverride: Option[FileLister] = None) extends TableWriters {
 
-  private def hadoopConf = Shim.classic(spark).sparkContext.hadoopConfiguration
+  private[engine] def hadoopConf = Shim.classic(spark).sparkContext.hadoopConfiguration
   private val lister: FileLister = listerOverride.getOrElse(new HadoopFileLister(hadoopConf))
   private[graft] lazy val iceberg = new IcebergSnapshotResolver(hadoopConf)
-  private lazy val delta = new graft.listing.DeltaLogResolver(spark)
-  private lazy val hudi = new graft.listing.HudiTimelineResolver(hadoopConf)
+  private[engine] lazy val delta = new graft.listing.DeltaLogResolver(spark)
+  private[engine] lazy val hudi = new graft.listing.HudiTimelineResolver(hadoopConf)
 
   // Two caches, mirroring the reference (src/glue-table-cache.ts:75-84).
   private val metaCache = new TtlCache[CachedTableMetadata](
@@ -110,9 +111,18 @@ final class GlueTableEngine(
       meta
     }
 
-  private def location(meta: CachedTableMetadata): String =
+  private[engine] def location(meta: CachedTableMetadata): String =
     meta.table.location.getOrElse(throw new IllegalStateException(
       s"No storage location found for ${meta.table.database}.${meta.table.name}"))
+
+  /** The table's metadata, checked to be a `format` table. */
+  private[engine] def metadataOf(database: String, table: String,
+      format: TableType): CachedTableMetadata = {
+    val meta = tableMetadata(database, table)
+    require(meta.tableType == format, s"$database.$table is ${meta.tableType}, not " +
+      s"${if (format == TableType.Iceberg) "an" else "a"} $format table")
+    meta
+  }
 
   private def normalizeDir(l: String): String = if (l.endsWith("/")) l else l + "/"
 
@@ -569,9 +579,7 @@ final class GlueTableEngine(
       toOffset: Int = 0): DataFrame = {
     require(fromOffset > toOffset && toOffset >= 0,
       s"need fromOffset > toOffset >= 0, got $fromOffset -> $toOffset")
-    val meta = tableMetadata(database, table)
-    require(meta.tableType == TableType.Delta,
-      s"$database.$table is ${meta.tableType}, not a Delta table")
+    val meta = metadataOf(database, table, TableType.Delta)
     val from = snapshot(database, table, fromOffset)
     val to = snapshot(database, table, toOffset)
     val fromFiles = from.files.map(_.path).toSet
@@ -651,9 +659,7 @@ final class GlueTableEngine(
       toOffset: Int = 0): DataFrame = {
     require(fromOffset > toOffset && toOffset >= 0,
       s"need fromOffset > toOffset >= 0, got $fromOffset -> $toOffset")
-    val meta = tableMetadata(database, table)
-    require(meta.tableType == TableType.Iceberg,
-      s"$database.$table is ${meta.tableType}, not an Iceberg table")
+    val meta = metadataOf(database, table, TableType.Iceberg)
     val from = snapshot(database, table, fromOffset)
     val to = snapshot(database, table, toOffset)
     val fromFiles = from.files.map(_.path).toSet
@@ -817,9 +823,7 @@ final class GlueTableEngine(
       toOffset: Int = 0): DataFrame = {
     require(fromOffset > toOffset && toOffset >= 0,
       s"need fromOffset > toOffset >= 0, got $fromOffset -> $toOffset")
-    val meta = tableMetadata(database, table)
-    require(meta.tableType == TableType.Hudi,
-      s"$database.$table is ${meta.tableType}, not a Hudi table")
+    val meta = metadataOf(database, table, TableType.Hudi)
     val fromFiles = files(database, table, fromOffset).map(_.path).toSet
     val toFiles = files(database, table, toOffset).map(_.path).toSet
     val ct = "_change_type"
@@ -947,7 +951,7 @@ final class GlueTableEngine(
     * deliberate extension — same listing machinery, different
     * `FileFormat` leaf.
     */
-  private def readTable(database: String, table: String, versionOffset: Int,
+  private[engine] def readTable(database: String, table: String, versionOffset: Int,
       keep: Option[Set[String]], proxied: Boolean): DataFrame = {
     val meta = tableMetadata(database, table)
     val snap = snapshot(database, table, versionOffset)
@@ -1385,248 +1389,6 @@ final class GlueTableEngine(
     rewrite(plan)
   }
 
-  /** Sink: write a DataFrame as a new glue table (Hive layout when
-    * partition columns are given, flat parquet otherwise) and register
-    * it in the catalog so it is immediately queryable as
-    * `glue.<db>.<tbl>`. The reference is read-only; this is the write
-    * half a pipeline engine needs. Partitioned writes produce the
-    * same `key=value` layout the Hive read path prunes.
-    */
-  def writeTable(df: DataFrame, database: String, table: String, location: String,
-      partitionBy: Seq[String] = Nil): GlueTable = {
-    val writer = df.write.mode("overwrite")
-    (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
-      .parquet(location)
-    val t = GlueTable(database, table, Some(location),
-      partitionKeys = partitionBy.map(ColumnDef(_)))
-    catalog match {
-      case f: graft.catalog.FixtureCatalog => f.register(t)
-      case _ => // external catalogs register out of band
-    }
-    invalidateTable(database, table)
-    t
-  }
-
-  /** Write `df` as a NEW Delta table (commit 0: metaData + adds with
-    * footer-derived stats) at `location` and register it — the
-    * engine's transactional write path. Readers get time travel,
-    * incremental reads, metadata counts, and log-stats file skipping
-    * for free through the normal Delta read paths; a crash before
-    * the commit JSON's atomic rename leaves only invisible garbage
-    * files, never a half-visible table.
-    */
-  def writeDeltaTable(df: DataFrame, database: String, table: String,
-      location: String, partitionBy: Seq[String] = Nil): GlueTable = {
-    val root = new HadoopPath(location)
-    val fs = root.getFileSystem(hadoopConf)
-    if (fs.exists(root)) fs.delete(root, true) // overwrite semantics
-    graft.listing.DeltaLogWriter.commit(spark, location, df, partitionBy)
-    val t = GlueTable(database, table, Some(location),
-      partitionKeys = partitionBy.map(ColumnDef(_)),
-      parameters = Map("table_type" -> "DELTA"))
-    catalog match {
-      case f: graft.catalog.FixtureCatalog => f.register(t)
-      case _ => // external catalogs register out of band
-    }
-    invalidateTable(database, table)
-    t
-  }
-
-  /** SHALLOW-CLONE a registered Delta table: a new table at
-    * `location` whose v0 references the source's live files by
-    * absolute path — zero data copied, O(live files) metadata at any
-    * table size — then registers and reads independently (appends to
-    * the clone never touch the source). Retention caveat as in real
-    * Delta CLONE: vacuuming the source can strand borrowed files.
-    */
-  def cloneDeltaTable(database: String, table: String,
-      targetTable: String, location: String): GlueTable = {
-    val meta = tableMetadata(database, table)
-    require(meta.tableType == TableType.Delta,
-      s"$database.$table is ${meta.tableType}, not a Delta table")
-    graft.listing.DeltaLogWriter.shallowClone(spark, this.location(meta), location)
-    val t = GlueTable(database, targetTable, Some(location),
-      partitionKeys = meta.table.partitionKeys,
-      parameters = Map("table_type" -> "DELTA"))
-    catalog match {
-      case f: graft.catalog.FixtureCatalog => f.register(t)
-      case _ => // external catalogs register out of band
-    }
-    invalidateTable(database, targetTable)
-    t
-  }
-
-  /** Append a batch to a registered Delta table as its next commit
-    * version. Returns the committed version.
-    */
-  def appendDeltaTable(df: DataFrame, database: String, table: String): Long = {
-    val meta = tableMetadata(database, table)
-    require(meta.tableType == TableType.Delta,
-      s"$database.$table is ${meta.tableType}, not a Delta table")
-    val v = graft.listing.DeltaLogWriter.commit(
-      spark, location(meta), df, meta.table.partitionKeys.map(_.name))
-    invalidateTable(database, table)
-    v
-  }
-
-  /** RESTORE a registered Delta table to an earlier version as a new
-    * commit (`RESTORE TABLE ... TO VERSION AS OF` semantics —
-    * [[graft.listing.DeltaLogWriter.restore]]): after this, the
-    * latest read equals the time-travel read at `versionOffset` (as
-    * counted BEFORE the restore), history stays intact, and nothing
-    * is deleted from storage until VACUUM. Pure metadata. Returns
-    * the new version.
-    */
-  def restoreDeltaTable(database: String, table: String, versionOffset: Int): Long = {
-    val meta = tableMetadata(database, table)
-    require(meta.tableType == TableType.Delta,
-      s"$database.$table is ${meta.tableType}, not a Delta table")
-    val v = graft.listing.DeltaLogWriter.restore(spark, location(meta), versionOffset)
-    invalidateTable(database, table)
-    v
-  }
-
-  /** Write `df` as a NEW Iceberg v2 table (snapshot 1, Avro
-    * manifests with real footer-derived bounds) at `location` and
-    * register it — the Iceberg counterpart of [[writeDeltaTable]].
-    * Readers get time travel, incremental reads, and manifest-bounds
-    * file skipping through the normal Iceberg paths.
-    */
-  def writeIcebergTable(df: DataFrame, database: String, table: String,
-      location: String, partitionBy: Seq[String] = Nil): GlueTable = {
-    val root = new HadoopPath(location)
-    val fs = root.getFileSystem(hadoopConf)
-    if (fs.exists(root)) fs.delete(root, true) // overwrite semantics
-    graft.listing.IcebergWriter.commit(spark, location, df, partitionBy)
-    val t = GlueTable(database, table, Some(location),
-      partitionKeys = partitionBy.map(ColumnDef(_)),
-      parameters = Map("table_type" -> "ICEBERG"))
-    catalog match {
-      case f: graft.catalog.FixtureCatalog => f.register(t)
-      case _ => // external catalogs register out of band
-    }
-    invalidateTable(database, table)
-    t
-  }
-
-  /** Write-time bucket column for a [[graft.listing.IcebergBucket]]
-    * transform: computed once per batch as a narrow projection; reads
-    * never evaluate it.
-    */
-  private def bucketColumnFor(df: DataFrame, src: String, n: Int): Column = {
-    import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
-    df.schema(src).dataType match {
-      case LongType => udf((v: java.lang.Long) =>
-        if (v == null) null
-        else Integer.valueOf(graft.listing.IcebergBucket.of(v, n))).apply(col(src))
-      case IntegerType => udf((v: java.lang.Integer) =>
-        if (v == null) null
-        else Integer.valueOf(graft.listing.IcebergBucket.of(v, n))).apply(col(src))
-      case StringType => udf((v: String) =>
-        if (v == null) null
-        else Integer.valueOf(graft.listing.IcebergBucket.of(v, n))).apply(col(src))
-      case other => throw new IllegalArgumentException(
-        s"bucket transform supports long/int/string source columns, $src is $other")
-    }
-  }
-
-  /** Write-time value column for any supported hidden transform. */
-  private def transformColumnFor(df: DataFrame, src: String, transform: String): Column = {
-    import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
-    val BucketRe = """bucket\[(\d+)\]""".r
-    val TruncRe = """truncate\[(\d+)\]""".r
-    transform match {
-      case BucketRe(n) => bucketColumnFor(df, src, n.toInt)
-      case TruncRe(w0) =>
-        val w = w0.toInt
-        df.schema(src).dataType match {
-          case LongType => udf((v: java.lang.Long) =>
-            if (v == null) null
-            else java.lang.Long.valueOf(graft.listing.IcebergTruncate.ofLong(v, w))).apply(col(src))
-          case IntegerType => udf((v: java.lang.Integer) =>
-            if (v == null) null
-            else Integer.valueOf(graft.listing.IcebergTruncate.ofLong(v.longValue(), w).toInt)).apply(col(src))
-          case StringType => udf((v: String) =>
-            if (v == null) null
-            else graft.listing.IcebergTruncate.ofString(v, w)).apply(col(src))
-          case other => throw new IllegalArgumentException(
-            s"truncate transform supports long/int/string source columns, $src is $other")
-        }
-      case other => throw new IllegalArgumentException(s"unsupported hidden transform: $other")
-    }
-  }
-
-  /** Write an Iceberg table with HIDDEN partitioning — the spec's
-    * bucket transform (`bucket[N]` over `bucketCol`): rows land in
-    * per-bucket files, the manifest partition record carries the
-    * bucket int under `<col>_bucket`, and the partition spec declares
-    * `{"transform": "bucket[N]", "source-id": <col>}` — but the
-    * bucket NEVER appears as a table column (that is what "hidden"
-    * means; readers see the raw schema). The payoff at 100 TB: an
-    * equality/IN probe on the source column scans 1/N of the table
-    * with no user-visible partition column to mis-join on —
-    * [[query]] translates such conjuncts through [[IcebergBucket]]
-    * and prunes the file listing before planning.
-    */
-  def writeIcebergTableBucketed(df: DataFrame, database: String, table: String,
-      location: String, bucketCol: String, nBuckets: Int): GlueTable = {
-    require(nBuckets > 0, s"nBuckets must be positive: $nBuckets")
-    val field = s"${bucketCol}_bucket"
-    val bCol = bucketColumnFor(df, bucketCol, nBuckets)
-    val root = new HadoopPath(location)
-    val fs = root.getFileSystem(hadoopConf)
-    if (fs.exists(root)) fs.delete(root, true) // overwrite semantics
-    // cluster by bucket before writing: one shuffle buys one file per
-    // bucket per task instead of (input partitions x buckets) small
-    // files — the small-files problem is the first thing bucketing is
-    // supposed to solve at scale
-    graft.listing.IcebergWriter.commit(spark, location,
-      df.withColumn(field, bCol).repartition(col(field)),
-      partitionBy = Seq(field),
-      transforms = Map(field -> (s"bucket[$nBuckets]", bucketCol)))
-    val t = GlueTable(database, table, Some(location),
-      partitionKeys = Nil, // hidden: the spec field is not a column
-      parameters = Map("table_type" -> "ICEBERG"))
-    catalog match {
-      case f: graft.catalog.FixtureCatalog => f.register(t)
-      case _ => // external catalogs register out of band
-    }
-    invalidateTable(database, table)
-    t
-  }
-
-  /** [[writeIcebergTableBucketed]]'s ORDER-PRESERVING sibling: hidden
-    * `truncate[W]` partitioning over an int/long/string column. Rows
-    * land in W-wide windows (`v - (((v % W) + W) % W)`; string
-    * prefixes of length W), never as a table column — and because
-    * integer truncate preserves order, [[query]] prunes RANGE
-    * predicates on the source column (BETWEEN scans only the
-    * overlapping windows), which bucket hashing cannot do.
-    */
-  def writeIcebergTableTruncated(df: DataFrame, database: String, table: String,
-      location: String, truncCol: String, width: Int): GlueTable = {
-    require(width > 0, s"width must be positive: $width")
-    val field = s"${truncCol}_trunc"
-    val transform = s"truncate[$width]"
-    val bCol = transformColumnFor(df, truncCol, transform)
-    val root = new HadoopPath(location)
-    val fs = root.getFileSystem(hadoopConf)
-    if (fs.exists(root)) fs.delete(root, true) // overwrite semantics
-    graft.listing.IcebergWriter.commit(spark, location,
-      df.withColumn(field, bCol).repartition(col(field)),
-      partitionBy = Seq(field),
-      transforms = Map(field -> (transform, truncCol)))
-    val t = GlueTable(database, table, Some(location),
-      partitionKeys = Nil, // hidden: the spec field is not a column
-      parameters = Map("table_type" -> "ICEBERG"))
-    catalog match {
-      case f: graft.catalog.FixtureCatalog => f.register(t)
-      case _ => // external catalogs register out of band
-    }
-    invalidateTable(database, table)
-    t
-  }
-
   /** Hidden-partition pruning for Iceberg transform specs. Plain
     * equality / IN conjuncts on a hidden-spec SOURCE column translate
     * through the transform ([[graft.listing.IcebergBucket]] /
@@ -1776,1044 +1538,6 @@ final class GlueTableEngine(
     Some(keep)
   }
 
-  /** Append a batch to a registered Iceberg table as its next
-    * snapshot. Returns the new sequence number.
-    *
-    * `evolve = true` permits ADDITIVE schema evolution: a batch whose
-    * schema extends the table's as a strict prefix appends new
-    * trailing columns (positional field ids stay stable), the evolved
-    * schema publishes with the commit, and pre-evolution files read
-    * the new columns back as nulls — the Iceberg twin of g40's Delta
-    * evolution contract. Non-additive shapes still fail loudly.
-    */
-  def appendIcebergTable(df: DataFrame, database: String, table: String,
-      evolve: Boolean = false): Long = {
-    val meta = tableMetadata(database, table)
-    require(meta.tableType == TableType.Iceberg,
-      s"$database.$table is ${meta.tableType}, not an Iceberg table")
-    // The partition SPEC is metadata, not catalog state — it, not the
-    // catalog, is the append layout's authority (the writer's
-    // spec-stability check refuses a mismatched append).
-    // ALL spec fields in spec order are the layout (not just hidden
-    // ones): an identity-partitioned table that adopted a hidden
-    // transform via spec evolution keeps BOTH dimensions — identity
-    // values come straight from the batch columns, hidden transform
-    // columns are recomputed per batch. Falling back to the catalog
-    // keys covers tables whose metadata predates spec records.
-    val sfields = iceberg.specFields(location(meta))
-    val (batch, partBy, transforms) =
-      if (sfields.isEmpty) (df, meta.table.partitionKeys.map(_.name),
-        Map.empty[String, (String, String)])
-      else {
-        val hidden = sfields.filter(_._3 != "identity")
-        val withCols = hidden.foldLeft(df) { case (acc, (field, src, tr)) =>
-          acc.withColumn(field, transformColumnFor(acc, src, tr))
-        }.repartition(sfields.map(h => col(h._1)): _*)
-        (withCols, sfields.map(_._1),
-          hidden.map { case (f, src, tr) => f -> (tr, src) }.toMap)
-      }
-    val v = graft.listing.IcebergWriter.commit(
-      spark, location(meta), batch, partBy,
-      allowAdditive = evolve, transforms = transforms)
-    invalidateTable(database, table)
-    v
-  }
-
-  /** RENAME a Delta column — metadata-only, zero files rewritten
-    * however large the table ([[graft.listing.DeltaLogWriter
-    * .renameColumn]]: Delta column mapping, name mode). Reads resolve
-    * the logical name through the physicalName annotation; later
-    * appends arrive with logical names and are written back under the
-    * fixed physical ones. Returns the new version.
-    */
-  def renameDeltaColumn(database: String, table: String,
-      oldName: String, newName: String): Long = {
-    val meta = tableMetadata(database, table)
-    require(meta.tableType == TableType.Delta,
-      s"$database.$table is ${meta.tableType}, not a Delta table")
-    val v = graft.listing.DeltaLogWriter.renameColumn(spark, location(meta), oldName, newName)
-    invalidateTable(database, table)
-    v
-  }
-
-  /** DROP a Delta column — metadata-only, zero files rewritten
-    * ([[graft.listing.DeltaLogWriter.dropColumn]]): readers stop
-    * projecting it, history still travels to the pre-drop schema, and
-    * a later re-add binds to a FRESH physical name so pre-drop bytes
-    * never resurrect. Returns the new version.
-    */
-  def dropDeltaColumn(database: String, table: String, name: String): Long = {
-    val meta = tableMetadata(database, table)
-    require(meta.tableType == TableType.Delta,
-      s"$database.$table is ${meta.tableType}, not a Delta table")
-    val v = graft.listing.DeltaLogWriter.dropColumn(spark, location(meta), name)
-    invalidateTable(database, table)
-    v
-  }
-
-  /** RENAME an Iceberg column — metadata-only, zero files rewritten
-    * ([[graft.listing.IcebergWriter.renameColumn]]: field ids are the
-    * identity, names are display). Reads resolve the new logical name
-    * through the field's physical-name mapping; later appends arrive
-    * with logical names and are written back under the fixed physical
-    * ones. Returns the new sequence number.
-    */
-  def renameIcebergColumn(database: String, table: String,
-      oldName: String, newName: String): Long = {
-    val meta = tableMetadata(database, table)
-    require(meta.tableType == TableType.Iceberg,
-      s"$database.$table is ${meta.tableType}, not an Iceberg table")
-    val v = graft.listing.IcebergWriter.renameColumn(spark, location(meta), oldName, newName)
-    invalidateTable(database, table)
-    v
-  }
-
-  /** DROP an Iceberg column — metadata-only, zero files rewritten
-    * ([[graft.listing.IcebergWriter.dropColumn]]): readers stop
-    * projecting it, history still time-travels to the pre-drop
-    * metadata, and a later re-add binds to a FRESH field id and
-    * physical name so pre-drop bytes never resurrect. Returns the new
-    * sequence number.
-    */
-  def dropIcebergColumn(database: String, table: String, name: String): Long = {
-    val meta = tableMetadata(database, table)
-    require(meta.tableType == TableType.Iceberg,
-      s"$database.$table is ${meta.tableType}, not an Iceberg table")
-    val v = graft.listing.IcebergWriter.dropColumn(spark, location(meta), name)
-    invalidateTable(database, table)
-    v
-  }
-
-  /** APPEND a batch to an Iceberg table on a named BRANCH — the
-    * staging half of write-audit-publish: the snapshot publishes into
-    * the snapshots array and moves only the branch ref, so every main
-    * reader (engine queries, time travel, changelog) is oblivious to
-    * it until [[publishIcebergBranch]] fast-forwards main. Returns
-    * the staged sequence number.
-    */
-  def appendIcebergBranch(df: DataFrame, database: String, table: String,
-      branch: String): Long = {
-    val meta = tableMetadata(database, table)
-    require(meta.tableType == TableType.Iceberg,
-      s"$database.$table is ${meta.tableType}, not an Iceberg table")
-    require(branch != "main", "main is not a stageable branch — use appendIcebergTable")
-    val v = graft.listing.IcebergWriter.commit(
-      spark, location(meta), df, Nil, branch = Some(branch))
-    invalidateTable(database, table)
-    v
-  }
-
-  /** The AUDIT read of write-audit-publish: the branch head's rows,
-    * read outside the main table surface (plain-table branches;
-    * column-mapped or MOR tables stage on main-only paths).
-    */
-  def icebergBranchDF(database: String, table: String, branch: String): DataFrame = {
-    val meta = tableMetadata(database, table)
-    require(meta.tableType == TableType.Iceberg,
-      s"$database.$table is ${meta.tableType}, not an Iceberg table")
-    val paths = iceberg.dataFilesForRef(location(meta), branch)
-    if (paths.isEmpty) spark.range(0).select(lit(null).cast("string").as("null"))
-    else spark.read.parquet(paths: _*)
-  }
-
-  /** TAG the current main snapshot — an immutable named ref: later
-    * writes move main past it while the tag keeps naming the exact
-    * snapshot ([[graft.listing.IcebergWriter.tagSnapshot]]). Read it
-    * back with [[icebergTagDF]]. Returns the tagged snapshot id.
-    */
-  def tagIcebergSnapshot(database: String, table: String, tag: String): Long = {
-    val meta = tableMetadata(database, table)
-    require(meta.tableType == TableType.Iceberg,
-      s"$database.$table is ${meta.tableType}, not an Iceberg table")
-    val v = graft.listing.IcebergWriter.tagSnapshot(spark, location(meta), tag)
-    invalidateTable(database, table)
-    v
-  }
-
-  /** DROP a named ref (tag or staged branch) — metadata-only
-    * ([[graft.listing.IcebergWriter.dropRef]]). Also the documented
-    * RECOVERY path when snapshot expiry fails on a dangling ref
-    * (a ref pointing at a snapshot the current metadata no longer
-    * lists): expiry keeps failing loudly rather than silently
-    * under-protecting, and the operator repairs the table by
-    * dropping the dangling ref, then re-runs expiry.
-    */
-  def dropIcebergRef(database: String, table: String, ref: String): Long = {
-    val meta = tableMetadata(database, table)
-    require(meta.tableType == TableType.Iceberg,
-      s"$database.$table is ${meta.tableType}, not an Iceberg table")
-    val v = graft.listing.IcebergWriter.dropRef(spark, location(meta), ref)
-    invalidateTable(database, table)
-    v
-  }
-
-  /** Read a TAGGED snapshot — the frozen state the tag names,
-    * however far main has moved since. Same resolution as the
-    * branch-audit read.
-    */
-  def icebergTagDF(database: String, table: String, tag: String): DataFrame =
-    icebergBranchDF(database, table, tag)
-
-  /** PUBLISH a staged branch: metadata-only fast-forward of main onto
-    * the branch head ([[graft.listing.IcebergWriter.publishBranch]]) —
-    * the audited snapshots become visible to every main reader
-    * atomically, with zero data movement. Returns the new sequence
-    * number.
-    */
-  def publishIcebergBranch(database: String, table: String, branch: String): Long = {
-    val meta = tableMetadata(database, table)
-    require(meta.tableType == TableType.Iceberg,
-      s"$database.$table is ${meta.tableType}, not an Iceberg table")
-    val v = graft.listing.IcebergWriter.publishBranch(spark, location(meta), branch)
-    invalidateTable(database, table)
-    v
-  }
-
-  /** RENAME a Hudi column — metadata-only, zero slices rewritten
-    * ([[graft.listing.HudiTimelineWriter.renameColumn]]): the
-    * timeline schema renames the field, its physical-name annotation
-    * keeps binding to what the slices hold, appends arrive logical
-    * and land physical. Partition columns are rejected (their names
-    * are baked into the Hive-style layout). Returns the published
-    * instant.
-    */
-  def renameHudiColumn(database: String, table: String,
-      oldName: String, newName: String): String = {
-    val meta = tableMetadata(database, table)
-    require(meta.tableType == TableType.Hudi,
-      s"$database.$table is ${meta.tableType}, not a Hudi table")
-    require(!meta.table.partitionKeys.exists(_.name.equalsIgnoreCase(oldName)),
-      s"cannot rename $oldName: it is a partition column of $database.$table")
-    val v = graft.listing.HudiTimelineWriter.renameColumn(spark, location(meta), oldName, newName)
-    invalidateTable(database, table)
-    v
-  }
-
-  /** DROP a Hudi column — metadata-only, zero slices rewritten
-    * ([[graft.listing.HudiTimelineWriter.dropColumn]]): readers stop
-    * projecting it, history still travels, and a later re-add binds
-    * to a FRESH physical column so pre-drop bytes never resurrect.
-    * Returns the published instant.
-    */
-  def dropHudiColumn(database: String, table: String, name: String): String = {
-    val meta = tableMetadata(database, table)
-    require(meta.tableType == TableType.Hudi,
-      s"$database.$table is ${meta.tableType}, not a Hudi table")
-    require(!meta.table.partitionKeys.exists(_.name.equalsIgnoreCase(name)),
-      s"cannot drop $name: it is a partition column of $database.$table")
-    val v = graft.listing.HudiTimelineWriter.dropColumn(spark, location(meta), name)
-    invalidateTable(database, table)
-    v
-  }
-
-  /** EVOLVE an Iceberg table's partition spec — metadata-only, zero
-    * files rewritten ([[graft.listing.IcebergWriter.updateSpec]]):
-    * pre-evolution files keep their layout and are always read (they
-    * carry no value for the new spec field, and pruning keeps
-    * unknown-value files — sound by construction); batches appended
-    * AFTER the evolution land partitioned under the new spec, and
-    * conjuncts on the source column prune them through the transform.
-    * The payoff at 100 TB: a table can adopt (or retire, or re-width)
-    * hidden partitioning as its query pattern emerges, without a
-    * single rewrite — Iceberg's signature layout feature. Supported
-    * transforms: `bucket[N]`, `truncate[W]` on a long/int/string
-    * source column. Returns the new sequence number.
-    */
-  def evolveIcebergPartitionSpec(database: String, table: String,
-      sourceCol: String, transform: String): Long = {
-    val meta = tableMetadata(database, table)
-    require(meta.tableType == TableType.Iceberg,
-      s"$database.$table is ${meta.tableType}, not an Iceberg table")
-    val BucketRe = """bucket\[(\d+)\]""".r
-    val TruncRe = """truncate\[(\d+)\]""".r
-    // the PARAMETER is part of the field name: a re-evolution (e.g.
-    // truncate[100] -> truncate[50]) must never reinterpret values
-    // written under the retired spec as windows of the new width —
-    // a distinct name makes old files read as value-unknown (kept,
-    // sound) instead of mis-pruned
-    val field = transform match {
-      case BucketRe(n) => s"${sourceCol}_bucket_$n"
-      case TruncRe(w)  => s"${sourceCol}_trunc_$w"
-      case other => throw new IllegalArgumentException(
-        s"unsupported hidden transform for spec evolution: $other")
-    }
-    val v = graft.listing.IcebergWriter.updateSpec(spark, location(meta),
-      Seq((field, transform, sourceCol)))
-    invalidateTable(database, table)
-    v
-  }
-
-  /** MERGE-ON-READ DELETE for an Iceberg table: write the matching
-    * rows' positions as a POSITION DELETE FILE and publish it as a
-    * new snapshot — NO data file is rewritten, deletion cost is
-    * proportional to the matched rows alone (the opposite trade from
-    * [[deleteDeltaWhere]]'s copy-on-write; readers pay the anti-join
-    * until a compaction folds the deletes in). Uses the engine's own
-    * `_metadata`-driven read to find (file, row_index) pairs, so any
-    * predicate works. Returns the new sequence number.
-    */
-  def deleteIcebergWhere(database: String, table: String, predicate: Column): Long = {
-    val meta = tableMetadata(database, table)
-    require(meta.tableType == TableType.Iceberg,
-      s"$database.$table is ${meta.tableType}, not an Iceberg table")
-    val loc = location(meta)
-    val matches = tableDF(database, table)
-      .filter(coalesce(predicate, lit(false)))
-      .select(
-        // canonPathCol, not a bare scheme strip: _metadata.file_path
-        // is URI-ENCODED (a partition value with a space reads as
-        // %20), while listing paths decode — an encoding-blind strip
-        // here silently skipped every row in such a partition (found
-        // by g68's space-holding o_orderpriority partition)
-        canonPathCol(col("_metadata").getField("file_path")).as("file_path"),
-        col("_metadata").getField("row_index").as("pos"))
-    val delDir = s"${loc.stripSuffix("/")}/deletes_${System.nanoTime()}"
-    // storedPathCol: readers re-canonicalize stored paths, so persist
-    // the fixed-point form (a literal '%' in a partition value would
-    // otherwise decode twice and silently skip its rows)
-    matches.select(storedPathCol(col("file_path")).as("file_path"), col("pos"))
-      .coalesce(1).write.mode("overwrite").parquet(delDir)
-    val fs = new HadoopPath(delDir).getFileSystem(hadoopConf)
-    val delFile = fs.listStatus(new HadoopPath(delDir)).toSeq
-      .map(_.getPath).find(_.getName.endsWith(".parquet")).get
-    val v = graft.listing.IcebergWriter.commitDeletes(
-      spark, loc, Seq((delFile.toString, 1, Nil)))
-    invalidateTable(database, table)
-    v
-  }
-
-  /** MERGE-ON-READ equality delete for an Iceberg table: publish the
-    * key batch as an EQUALITY DELETE FILE over `keyCols` — every
-    * live row matching any key row is deleted at read time, no data
-    * rewrite, cost proportional to the key batch. Returns the new
-    * sequence number.
-    */
-  def deleteIcebergMatching(database: String, table: String,
-      keys: DataFrame, keyCols: Seq[String]): Long = {
-    require(keyCols.nonEmpty, "equality delete needs at least one key column")
-    val meta = tableMetadata(database, table)
-    require(meta.tableType == TableType.Iceberg,
-      s"$database.$table is ${meta.tableType}, not an Iceberg table")
-    val loc = location(meta)
-    val delDir = s"${loc.stripSuffix("/")}/deletes_${System.nanoTime()}"
-    keys.select(keyCols.map(col): _*).distinct()
-      .coalesce(1).write.mode("overwrite").parquet(delDir)
-    val fs = new HadoopPath(delDir).getFileSystem(hadoopConf)
-    val delFile = fs.listStatus(new HadoopPath(delDir)).toSeq
-      .map(_.getPath).find(_.getName.endsWith(".parquet")).get
-    val v = graft.listing.IcebergWriter.commitDeletes(
-      spark, loc, Seq((delFile.toString, 2, keyCols)))
-    invalidateTable(database, table)
-    v
-  }
-
-  /** ONE-SNAPSHOT Iceberg MERGE (upsert) by `key` — the same upsert
-    * contract as [[mergeDelta]] and [[upsertHudi]], in Iceberg's
-    * native merge-on-read shape
-    * ([[graft.listing.IcebergWriter.commitMerge]]): the source
-    * batch's data files and an equality delete over its keys publish
-    * at the SAME sequence number, so prior matches die and the new
-    * rows land atomically (strict sequence scoping keeps the delete
-    * off the batch's own files — a reader can never see the delete
-    * without the insert). No data rewrite; readers pay the anti-join
-    * until compaction folds the deletes in. Returns the new
-    * sequence number.
-    */
-  def mergeIceberg(database: String, table: String, source: DataFrame, key: String): Long = {
-    val meta = tableMetadata(database, table)
-    require(meta.tableType == TableType.Iceberg,
-      s"$database.$table is ${meta.tableType}, not an Iceberg table")
-    require(source.columns.contains(key), s"merge key $key not in the source batch")
-    val v = graft.listing.IcebergWriter.commitMerge(
-      spark, location(meta), source, Seq(key))
-    invalidateTable(database, table)
-    v
-  }
-
-  /** OPTIMIZE-style compaction for a Delta table: rewrite the live
-    * file set into `ceil(liveBytes / targetFileBytes)` files as ONE
-    * commit — remove actions retire every previous live file, adds
-    * publish the compacted replacements with fresh footer-derived
-    * stats. Readers flip atomically; earlier versions still
-    * time-travel to the old layout (nothing is physically deleted —
-    * vacuuming is a separate lifecycle, as in Delta itself). Returns
-    * the committed version.
-    */
-  def optimizeDeltaTable(database: String, table: String,
-      targetFileBytes: Long = 128L * 1024 * 1024,
-      zorderBy: Seq[String] = Nil, bits: Int = 16): Long = {
-    require(targetFileBytes > 0, "targetFileBytes must be positive")
-    val meta = tableMetadata(database, table)
-    require(meta.tableType == TableType.Delta,
-      s"$database.$table is ${meta.tableType}, not a Delta table")
-    val live = files(database, table)
-    val nFiles = math.max(1, math.ceil(
-      live.map(_.size).sum.toDouble / targetFileBytes).toInt)
-    val keys = meta.table.partitionKeys.map(_.name)
-    val df = tableDF(database, table)
-    // Delta OPTIMIZE ZORDER BY parity: range-partition + sort by the
-    // Morton interleave so each output file holds a tight range in
-    // EVERY clustered dimension, and the freshly written add-stats
-    // make the log's file skipping selective on all of them.
-    val compacted =
-      if (zorderBy.isEmpty) df.repartition(nFiles)
-      else {
-        zorderBy.foreach { c =>
-          val f = df.schema.find(_.name == c).getOrElse(throw new IllegalArgumentException(
-            s"zorderBy column $c not found in $database.$table"))
-          require(f.dataType.isInstanceOf[org.apache.spark.sql.types.NumericType],
-            s"zorderBy column $c must be numeric, got ${f.dataType.simpleString}")
-        }
-        val stats = df.agg(
-          zorderBy.flatMap(c => Seq(min(col(c)).cast("double"), max(col(c)).cast("double"))).head,
-          zorderBy.flatMap(c => Seq(min(col(c)).cast("double"), max(col(c)).cast("double"))).tail: _*)
-          .head()
-        val norm = zorderBy.zipWithIndex.map { case (c, i) =>
-          if (stats.isNullAt(2 * i) || stats.isNullAt(2 * i + 1)) lit(0L)
-          else graft.functions.ZOrder.normalize(
-            col(c), stats.getDouble(2 * i), stats.getDouble(2 * i + 1), bits)
-        }
-        df.withColumn("__z", graft.functions.ZOrder.zvalue(norm, bits))
-          .repartitionByRange(nFiles, col("__z"))
-          .sortWithinPartitions("__z")
-          .drop("__z")
-      }
-    val v = graft.listing.DeltaLogWriter.commitWith(
-      spark, location(meta), compacted, keys, removePaths = live.map(_.path))
-    invalidateTable(database, table)
-    v
-  }
-
-  /** Row-level DELETE WHERE for a Delta table, as surgical
-    * copy-on-write: files whose log stats PROVE no row can match
-    * (the same one-sided [[graft.listing.StatsPruning]] prover the
-    * read path skips with) are left untouched — same physical file,
-    * no rewrite; only files that may contain matching rows are read,
-    * filtered to the survivors (`WHERE p` deletes rows where p is
-    * TRUE; false and NULL rows stay, per SQL DELETE semantics), and
-    * rewritten in ONE commit (removes for the affected files + adds
-    * for their replacements). At 100 TB a delete touching one day of
-    * data rewrites that day's files, not the table. Returns the
-    * committed version.
-    */
-  def deleteDeltaWhere(database: String, table: String, predicate: Column): Long = {
-    val meta = tableMetadata(database, table)
-    require(meta.tableType == TableType.Delta,
-      s"$database.$table is ${meta.tableType}, not a Delta table")
-    val df = tableDF(database, table)
-    // a RESOLVED predicate expression to feed the stats prover
-    val cond = df.filter(predicate).queryExecution.optimizedPlan.collectFirst {
-      case Filter(c, _) => c
-    }.getOrElse(org.apache.spark.sql.catalyst.expressions.Literal.TrueLiteral)
-    val resolver: graft.listing.StatsPruning.Resolver = (a, b) => a.equalsIgnoreCase(b)
-    val live = files(database, table)
-    val (untouched, affected) = live.partition(f =>
-      f.bounds.nonEmpty && graft.listing.StatsPruning.proveFalse(cond, f.bounds, resolver))
-    if (affected.isEmpty) // every file provably unaffected: no commit at all
-      return delta.latestVersion(location(meta)).getOrElse(0L)
-    val keys = meta.table.partitionKeys.map(_.name)
-    val survivors = readTable(database, table, 0,
-      keep = Some(affected.map(_.path).toSet), proxied = false)
-      .filter(!coalesce(predicate, lit(false)))
-    val v = graft.listing.DeltaLogWriter.commitWith(
-      spark, location(meta), survivors, keys, removePaths = affected.map(_.path))
-    invalidateTable(database, table)
-    v
-  }
-
-  /** MERGE-ON-READ DELETE for a Delta table — the deletion-vector
-    * path: write the matching rows' `(file_path, pos)` positions as a
-    * DV sidecar and RE-ADD each affected file with the descriptor in
-    * ONE commit ([[graft.listing.DeltaLogWriter
-    * .commitDeletionVectors]]). NO data file is rewritten; deletion
-    * cost is proportional to the matched rows alone — the opposite
-    * trade from [[deleteDeltaWhere]]'s copy-on-write (readers pay a
-    * broadcast anti-join until a rewrite retires the DV), mirroring
-    * [[deleteIcebergWhere]] so Delta holds BOTH delete shapes, as
-    * real Delta does. Positions MERGE with any existing DV on the
-    * same file: the re-add REPLACES the descriptor, so the new
-    * sidecar carries the union of old and new positions. Returns the
-    * committed version (or the current one when nothing matches).
-    */
-  def deleteDeltaWhereMor(database: String, table: String, predicate: Column): Long = {
-    val meta = tableMetadata(database, table)
-    require(meta.tableType == TableType.Delta,
-      s"$database.$table is ${meta.tableType}, not a Delta table")
-    val loc = location(meta)
-    // tableDF already subtracts existing DVs, so `matches` holds only
-    // still-live rows; row_index is the file-physical position either
-    // way, which is exactly what the sidecar records
-    val matches = tableDF(database, table)
-      .filter(coalesce(predicate, lit(false)))
-      .select(
-        // canonPathCol, not a bare scheme strip: _metadata.file_path
-        // is URI-ENCODED (a partition value with a space reads as
-        // %20), while listing paths decode — an encoding-blind strip
-        // here silently skipped every row in such a partition (found
-        // by g68's space-holding o_orderpriority partition)
-        canonPathCol(col("_metadata").getField("file_path")).as("file_path"),
-        col("_metadata").getField("row_index").as("pos"))
-    val affectedCanon = matches.select("file_path").distinct()
-      .collect().map(_.getString(0)).toSet
-    if (affectedCanon.isEmpty)
-      return delta.latestVersion(loc).getOrElse(0L)
-    val affected = files(database, table).map(_.path)
-      .filter(p => affectedCanon.contains(canonPath(p)))
-    // carry forward existing positions of the re-DV'd files
-    val existing = delta.deletionVectors(loc)
-    val carried = affected.flatMap(p => existing.get(p).map(dv => (p, dv)))
-      .groupBy(_._2)
-    val dvRows = carried.toSeq.sortBy(_._1).foldLeft(matches) {
-      case (acc, (oldDv, pairs)) =>
-        val fps = pairs.map { case (p, _) => canonPath(p) }
-        acc.unionAll(spark.read.parquet(oldDv)
-          .select(canonPathCol(col("file_path")).as("file_path"), col("pos"))
-          .filter(col("file_path").isin(fps: _*)))
-    }
-    val dvDir = s"${loc.stripSuffix("/")}/dv_${System.nanoTime()}"
-    // storedPathCol: same fixed-point rule as deleteIcebergWhere —
-    // the sidecar is re-canonicalized on every read
-    dvRows.distinct()
-      .select(storedPathCol(col("file_path")).as("file_path"), col("pos"))
-      .coalesce(1).write.mode("overwrite").parquet(dvDir)
-    val fs = new HadoopPath(dvDir).getFileSystem(hadoopConf)
-    val dvFile = fs.listStatus(new HadoopPath(dvDir)).toSeq
-      .map(_.getPath).find(_.getName.endsWith(".parquet")).get
-    val v = graft.listing.DeltaLogWriter.commitDeletionVectors(
-      spark, loc, affected.map(_ -> dvFile.toString).toMap)
-    invalidateTable(database, table)
-    v
-  }
-
-  /** Row-level UPDATE ... SET for a Delta table — the same
-    * stats-surgical copy-on-write as [[deleteDeltaWhere]]: provably
-    * unaffected files keep their physical file; affected files are
-    * rewritten with each SET column replaced where the predicate is
-    * TRUE (false/NULL rows keep their values). One commit, fresh
-    * stats on the rewritten files. Returns the committed version.
-    */
-  def updateDeltaWhere(database: String, table: String, predicate: Column,
-      set: Map[String, Column]): Long = {
-    require(set.nonEmpty, "UPDATE needs at least one SET column")
-    val meta = tableMetadata(database, table)
-    require(meta.tableType == TableType.Delta,
-      s"$database.$table is ${meta.tableType}, not a Delta table")
-    val df = tableDF(database, table)
-    set.keys.foreach { c =>
-      require(df.columns.contains(c), s"SET column $c not in $database.$table")
-    }
-    val cond = df.filter(predicate).queryExecution.optimizedPlan.collectFirst {
-      case Filter(c, _) => c
-    }.getOrElse(org.apache.spark.sql.catalyst.expressions.Literal.TrueLiteral)
-    val resolver: graft.listing.StatsPruning.Resolver = (a, b) => a.equalsIgnoreCase(b)
-    val live = files(database, table)
-    val (_, affected) = live.partition(f =>
-      f.bounds.nonEmpty && graft.listing.StatsPruning.proveFalse(cond, f.bounds, resolver))
-    if (affected.isEmpty)
-      return delta.latestVersion(location(meta)).getOrElse(0L)
-    val keys = meta.table.partitionKeys.map(_.name)
-    val hit = coalesce(predicate, lit(false))
-    val base = readTable(database, table, 0,
-      keep = Some(affected.map(_.path).toSet), proxied = false)
-    val updated = set.foldLeft(base) { case (d, (c, v)) =>
-      d.withColumn(c, when(hit, v).otherwise(col(c)))
-    }
-    val v = graft.listing.DeltaLogWriter.commitWith(
-      spark, location(meta), updated, keys, removePaths = affected.map(_.path))
-    invalidateTable(database, table)
-    v
-  }
-
-  /** MERGE (upsert) a source batch into a Delta table by `key`:
-    * target rows whose key appears in the source are REPLACED by the
-    * source row, source rows with no target match are INSERTED — one
-    * commit. Surgical like [[deleteDeltaWhere]]: only target files
-    * whose key bounds intersect the source's key span rewrite (a file
-    * provably outside it cannot hold a matching key); the rewrite
-    * anti-joins the affected rows against the source keys and unions
-    * the full source. Source keys are expected unique per batch (the
-    * standard upsert contract — duplicate source keys all land).
-    * Returns the committed version.
-    */
-  def mergeDelta(database: String, table: String, source: DataFrame, key: String): Long = {
-    val meta = tableMetadata(database, table)
-    require(meta.tableType == TableType.Delta,
-      s"$database.$table is ${meta.tableType}, not a Delta table")
-    require(source.columns.contains(key), s"merge key $key not in the source batch")
-    val span = source.agg(min(col(key)), max(col(key))).head()
-    if (span.isNullAt(0)) // empty source: nothing to do
-      return delta.latestVersion(location(meta)).getOrElse(0L)
-    val df = tableDF(database, table)
-    val cond = df.filter(col(key).between(lit(span.get(0)), lit(span.get(1))))
-      .queryExecution.optimizedPlan.collectFirst { case Filter(c, _) => c }
-      .getOrElse(org.apache.spark.sql.catalyst.expressions.Literal.TrueLiteral)
-    val resolver: graft.listing.StatsPruning.Resolver = (a, b) => a.equalsIgnoreCase(b)
-    val (_, affected) = files(database, table).partition(f =>
-      f.bounds.nonEmpty && graft.listing.StatsPruning.proveFalse(cond, f.bounds, resolver))
-    val keys = meta.table.partitionKeys.map(_.name)
-    val kept =
-      if (affected.isEmpty) source // pure insert
-      else readTable(database, table, 0,
-        keep = Some(affected.map(_.path).toSet), proxied = false)
-        .join(source.select(col(key)).distinct(), Seq(key), "left_anti")
-        .unionByName(source)
-    val v = graft.listing.DeltaLogWriter.commitWith(
-      spark, location(meta), kept, keys, removePaths = affected.map(_.path))
-    invalidateTable(database, table)
-    v
-  }
-
-  /** Write `df` as a NEW Hudi copy-on-write table at `location` and
-    * register it — the Hudi member of the write trio
-    * ([[writeDeltaTable]], [[writeIcebergTable]]). Partitioned
-    * writes use Hive-style `k=v` dirs, so the engine's partition
-    * extractors prune them like any other layout.
-    */
-  def writeHudiTable(df: DataFrame, database: String, table: String,
-      location: String, partitionBy: Seq[String] = Nil): GlueTable = {
-    val root = new HadoopPath(location)
-    val fs = root.getFileSystem(hadoopConf)
-    if (fs.exists(root)) fs.delete(root, true) // overwrite semantics
-    graft.listing.HudiTimelineWriter.commit(spark, location, df, partitionBy)
-    val t = GlueTable(database, table, Some(location),
-      partitionKeys = partitionBy.map(ColumnDef(_)),
-      parameters = Map("table_type" -> "HUDI"))
-    catalog match {
-      case f: graft.catalog.FixtureCatalog => f.register(t)
-      case _ => // external catalogs register out of band
-    }
-    invalidateTable(database, table)
-    t
-  }
-
-  /** Append a batch to a registered Hudi table as its next completed
-    * instant (new file groups — a pure insert). Returns the instant.
-    *
-    * `evolve = true` permits ADDITIVE schema evolution, mirroring the
-    * Delta (g40) and Iceberg (g44) contracts: a batch whose schema
-    * extends the table's recorded schema as a strict prefix appends
-    * new trailing columns (the commit records the evolved schema in
-    * its extraMetadata; older slices read the new columns as nulls
-    * via the timeline-schema extension). Non-additive shapes fail
-    * loudly; tables without a recorded schema (pre-r12) skip the
-    * check for compatibility.
-    */
-  def appendHudiTable(df: DataFrame, database: String, table: String,
-      evolve: Boolean = false): String = {
-    val meta = tableMetadata(database, table)
-    require(meta.tableType == TableType.Hudi,
-      s"$database.$table is ${meta.tableType}, not a Hudi table")
-    graft.listing.HudiTimelineWriter.dataSchemaAt(spark, location(meta)).foreach { cur =>
-      val declared = cur.fields.map(f => (f.name, f.dataType)).toSeq
-      val mine = df.schema.fields.map(f => (f.name, f.dataType)).toSeq
-      val additive = evolve && mine.size > declared.size &&
-        mine.take(declared.size) == declared
-      if (declared != mine && !additive)
-        throw new IllegalArgumentException(
-          s"append schema mismatch for Hudi table at ${location(meta)}: table declares " +
-            s"${declared.map { case (a, b) => s"$a:${b.simpleString}" }.mkString("[", ", ", "]")}, batch has " +
-            s"${mine.map { case (a, b) => s"$a:${b.simpleString}" }.mkString("[", ", ", "]")}" +
-            (if (!evolve && mine.size > declared.size && mine.take(declared.size) == declared)
-               " (additive; pass evolve = true to extend the schema)" else ""))
-    }
-    val v = graft.listing.HudiTimelineWriter.commit(
-      spark, location(meta), df, meta.table.partitionKeys.map(_.name))
-    invalidateTable(database, table)
-    v
-  }
-
-  /** ROLLBACK a registered Hudi table to an earlier instant as a new
-    * replacecommit ([[graft.listing.HudiTimelineWriter.rollback]]):
-    * after this, the latest read equals the time-travel read at
-    * `versionOffset` (counted BEFORE the rollback); the timeline
-    * stays append-only so every prior state still travels, and
-    * [[cleanHudiTable]] reclaims orphaned slices later. Pure
-    * metadata. Returns the published instant.
-    */
-  def rollbackHudiTable(database: String, table: String, versionOffset: Int): String = {
-    val meta = tableMetadata(database, table)
-    require(meta.tableType == TableType.Hudi,
-      s"$database.$table is ${meta.tableType}, not a Hudi table")
-    val v = graft.listing.HudiTimelineWriter.rollback(spark, location(meta), versionOffset)
-    invalidateTable(database, table)
-    v
-  }
-
-  /** COPY-ON-WRITE upsert by `key`: file groups whose FOOTER key
-    * range intersects the source span are retired via a
-    * replacecommit and rewritten (existing rows minus updated keys,
-    * plus the source batch) in the same instant; every other group
-    * keeps its physical file untouched. This is the same
-    * stats-surgical shape as [[mergeDelta]] — Hudi commit stats
-    * carry no column bounds, so the prover reads the parquet footers
-    * of the live slices (driver-side KB GETs, the price real Hudi
-    * pays to its bloom index). Pure inserts (no intersecting group)
-    * append as a new file group without retiring anything.
-    */
-  def upsertHudi(database: String, table: String, source: DataFrame, key: String): String = {
-    val meta = tableMetadata(database, table)
-    require(meta.tableType == TableType.Hudi,
-      s"$database.$table is ${meta.tableType}, not a Hudi table")
-    require(source.columns.contains(key), s"upsert key $key not in the source batch")
-    val span = source.agg(min(col(key)), max(col(key))).head()
-    val live = new graft.listing.HudiTimelineResolver(hadoopConf)
-      .dataFilesDetailed(location(meta))
-    if (span.isNullAt(0) || live.isEmpty)
-      return appendHudiTable(source, database, table)
-    val df = tableDF(database, table)
-    val cond = df.filter(col(key).between(lit(span.get(0)), lit(span.get(1))))
-      .queryExecution.optimizedPlan.collectFirst { case Filter(c, _) => c }
-      .getOrElse(org.apache.spark.sql.catalyst.expressions.Literal.TrueLiteral)
-    val resolver: graft.listing.StatsPruning.Resolver = (a, b) => a.equalsIgnoreCase(b)
-    val affected = live.filterNot { f =>
-      val bounds = graft.listing.FooterStats.read(hadoopConf, f.path)
-      bounds.nonEmpty && graft.listing.StatsPruning.proveFalse(cond, bounds, resolver)
-    }
-    val keys = meta.table.partitionKeys.map(_.name)
-    val instant =
-      if (affected.isEmpty)
-        graft.listing.HudiTimelineWriter.commit(spark, location(meta), source, keys)
-      else {
-        val kept = readTable(database, table, 0,
-          keep = Some(affected.map(_.path).toSet), proxied = false)
-          .join(source.select(col(key)).distinct(), Seq(key), "left_anti")
-          .unionByName(source)
-        val retired = affected.groupBy(_.partitionPath)
-          .map { case (p, fsz) => p -> fsz.map(_.fileId) }
-        graft.listing.HudiTimelineWriter.commit(spark, location(meta), kept, keys,
-          replaceFileIds = retired)
-      }
-    invalidateTable(database, table)
-    instant
-  }
-
-  /** Row-level DELETE WHERE for a Hudi table — the copy-on-write
-    * replacecommit shape of [[upsertHudi]] minus the insert: file
-    * groups whose parquet footers PROVE no row can match keep their
-    * physical file untouched; matching groups are rewritten to their
-    * surviving rows (`WHERE p` deletes rows where p is TRUE; false
-    * and NULL rows stay, per SQL DELETE semantics) and retired via
-    * the same replacecommit. Completes the row-level-delete row of
-    * the format matrix (Delta CoW g48-style, Iceberg MOR, now Hudi
-    * CoW). Returns the committed instant, or "" when every group is
-    * provably unaffected (no commit at all).
-    */
-  def deleteHudiWhere(database: String, table: String, predicate: Column): String = {
-    val meta = tableMetadata(database, table)
-    require(meta.tableType == TableType.Hudi,
-      s"$database.$table is ${meta.tableType}, not a Hudi table")
-    val live = new graft.listing.HudiTimelineResolver(hadoopConf)
-      .dataFilesDetailed(location(meta))
-    if (live.isEmpty) return ""
-    val df = tableDF(database, table)
-    val cond = df.filter(predicate).queryExecution.optimizedPlan.collectFirst {
-      case Filter(c, _) => c
-    }.getOrElse(org.apache.spark.sql.catalyst.expressions.Literal.TrueLiteral)
-    val resolver: graft.listing.StatsPruning.Resolver = (a, b) => a.equalsIgnoreCase(b)
-    val affected = live.filterNot { f =>
-      val bounds = graft.listing.FooterStats.read(hadoopConf, f.path)
-      bounds.nonEmpty && graft.listing.StatsPruning.proveFalse(cond, bounds, resolver)
-    }
-    if (affected.isEmpty) return ""
-    val keys = meta.table.partitionKeys.map(_.name)
-    val kept = readTable(database, table, 0,
-      keep = Some(affected.map(_.path).toSet), proxied = false)
-      .filter(!coalesce(predicate, lit(false)))
-    val retired = affected.groupBy(_.partitionPath)
-      .map { case (p, fsz) => p -> fsz.map(_.fileId) }
-    val instant = graft.listing.HudiTimelineWriter.commit(
-      spark, location(meta), kept, keys, replaceFileIds = retired)
-    invalidateTable(database, table)
-    instant
-  }
-
-  /** ROLLBACK a registered Iceberg table to an earlier snapshot as a
-    * new snapshot ([[graft.listing.IcebergWriter.rollback]]): after
-    * this, the latest read equals the time-travel read at
-    * `snapshotOffset` (counted BEFORE the rollback); history stays
-    * intact and expire reclaims orphans later. Pure metadata.
-    * Returns the new sequence number.
-    */
-  def rollbackIcebergTable(database: String, table: String, snapshotOffset: Int): Long = {
-    val meta = tableMetadata(database, table)
-    require(meta.tableType == TableType.Iceberg,
-      s"$database.$table is ${meta.tableType}, not an Iceberg table")
-    val v = graft.listing.IcebergWriter.rollback(spark, location(meta), snapshotOffset)
-    invalidateTable(database, table)
-    v
-  }
-
-  /** Iceberg small-file compaction (the OPTIMIZE analog): rewrite
-    * the live row set — with any merge-on-read deletes APPLIED — as
-    * `ceil(bytes/target)` files in one REWRITE snapshot whose
-    * manifest list references only the new manifest. Retired data
-    * and delete files stop being referenced (physical reclamation is
-    * [[expireIcebergSnapshots]]); earlier snapshots still
-    * time-travel. Returns the new sequence number.
-    */
-  def compactIcebergTable(database: String, table: String,
-      targetFileBytes: Long = 128L * 1024 * 1024): Long = {
-    require(targetFileBytes > 0, "targetFileBytes must be positive")
-    val meta = tableMetadata(database, table)
-    require(meta.tableType == TableType.Iceberg,
-      s"$database.$table is ${meta.tableType}, not an Iceberg table")
-    val live = files(database, table)
-    val nFiles = math.max(1, math.ceil(
-      live.map(_.size).sum.toDouble / targetFileBytes).toInt)
-    // tableDF subtracts live MOR deletes, so compaction folds them in
-    val v = graft.listing.IcebergWriter.commit(spark, location(meta),
-      tableDF(database, table).repartition(nFiles),
-      meta.table.partitionKeys.map(_.name), rewriteAll = true)
-    invalidateTable(database, table)
-    v
-  }
-
-  /** Iceberg SNAPSHOT EXPIRY: drop metadata versions older than the
-    * last `retainVersions`, then physically delete every file —
-    * data parquet, delete parquet, manifest/manifest-list Avro,
-    * metadata JSON — referenced by none of the retained versions.
-    * The lifecycle mirror of [[vacuumDeltaTable]]/[[cleanHudiTable]]
-    * : rewritten-away and MOR-deleted files finally leave disk here,
-    * never on the write path. Returns the deleted paths.
-    */
-  def expireIcebergSnapshots(database: String, table: String,
-      retainVersions: Int = 2): Seq[String] = {
-    require(retainVersions >= 1, "must retain at least the current version")
-    val meta = tableMetadata(database, table)
-    require(meta.tableType == TableType.Iceberg,
-      s"$database.$table is ${meta.tableType}, not an Iceberg table")
-    val root = location(meta).stripSuffix("/")
-    val fs = new HadoopPath(root).getFileSystem(hadoopConf)
-    val metaDir = new HadoopPath(s"$root/metadata")
-    if (!fs.exists(metaDir)) return Nil
-
-    // every path any retained version can reach — PLUS every path any
-    // named ref (staged WAP branch, tag) can reach: the version walk
-    // resolves refs.main only, so a staged branch's data files are
-    // invisible to it, and deleting them would make a later
-    // publishBranch fast-forward main onto snapshots whose parquet is
-    // gone (ADVICE r13 high). Ref manifests were always kept (the
-    // manifestFiles walk spans every snapshot of a retained version);
-    // this closes the data-file half.
-    val keepData = ((0 until retainVersions).flatMap { off =>
-      val v = iceberg.resolve(root, off)
-      (v.files.map(_.path) ++ v.deletes.map(_.path)).map(canonPath)
-    } ++ iceberg.refReachableFiles(root).map(canonPath)).toSet
-    val keepMeta = (0 until retainVersions)
-      .flatMap(off => iceberg.manifestFiles(root, off).map(canonPath)).toSet
-
-    // metadata JSONs beyond the retention horizon
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val jsons = fs.listStatus(metaDir).toSeq
-      .filter(_.getPath.getName.endsWith(".json"))
-      .map { st =>
-        val in = fs.open(st.getPath)
-        val n = try om.readTree(in) finally in.close()
-        (Option(n.get("last-sequence-number")).map(_.asLong()).getOrElse(0L), st.getPath)
-      }.sortBy(-_._1)
-    val expiredJsons = jsons.drop(retainVersions).map(_._2)
-
-    val staleAvro = fs.listStatus(metaDir).toSeq
-      .filter(_.getPath.getName.endsWith(".avro"))
-      .map(_.getPath).filterNot(p => keepMeta.contains(canonPath(p.toString)))
-    def walk(p: HadoopPath): Seq[HadoopPath] =
-      fs.listStatus(p).toSeq.flatMap { st =>
-        if (st.getPath.getName == "metadata") Nil
-        else if (st.isDirectory) walk(st.getPath)
-        else if (st.getPath.getName.endsWith(".parquet")) Seq(st.getPath)
-        else Nil
-      }
-    val staleData = walk(new HadoopPath(root))
-      .filterNot(p => keepData.contains(canonPath(p.toString)))
-
-    val doomed = expiredJsons ++ staleAvro ++ staleData
-    doomed.foreach(p => fs.delete(p, false))
-    invalidateTable(database, table)
-    doomed.map(_.toString)
-  }
-
-  /** Hudi small-file compaction (the OPTIMIZE analog — Hudi calls it
-    * clustering): rewrite the whole live set as `ceil(bytes/target)`
-    * file groups in ONE replacecommit retiring every current group.
-    * Earlier instants still time-travel to the old layout; nothing
-    * is physically deleted ([[cleanHudiTable]] is the deletion
-    * half). Returns the instant.
-    */
-  def compactHudiTable(database: String, table: String,
-      targetFileBytes: Long = 128L * 1024 * 1024): String = {
-    require(targetFileBytes > 0, "targetFileBytes must be positive")
-    val meta = tableMetadata(database, table)
-    require(meta.tableType == TableType.Hudi,
-      s"$database.$table is ${meta.tableType}, not a Hudi table")
-    val live = new graft.listing.HudiTimelineResolver(hadoopConf)
-      .dataFilesDetailed(location(meta))
-    val nFiles = math.max(1, math.ceil(
-      live.map(_.size).sum.toDouble / targetFileBytes).toInt)
-    val retired = live.groupBy(_.partitionPath)
-      .map { case (p, fsz) => p -> fsz.map(_.fileId) }
-    val instant = graft.listing.HudiTimelineWriter.commit(spark, location(meta),
-      tableDF(database, table).repartition(nFiles),
-      meta.table.partitionKeys.map(_.name), replaceFileIds = retired)
-    invalidateTable(database, table)
-    instant
-  }
-
-  /** Hudi CLEANING: physically delete file slices referenced by none
-    * of the last `retainInstants` timeline states (stale upsert
-    * versions, groups retired by replacecommits) — the VACUUM
-    * analog, same retention contract as [[vacuumDeltaTable]].
-    * Returns the deleted paths.
-    */
-  def cleanHudiTable(database: String, table: String, retainInstants: Int = 2): Seq[String] = {
-    require(retainInstants >= 1, "must retain at least the current instant")
-    val meta = tableMetadata(database, table)
-    require(meta.tableType == TableType.Hudi,
-      s"$database.$table is ${meta.tableType}, not a Hudi table")
-    val root = location(meta).stripSuffix("/")
-    val fs = new HadoopPath(root).getFileSystem(hadoopConf)
-    val hudiRes = new graft.listing.HudiTimelineResolver(hadoopConf)
-    val referenced = (0 until retainInstants)
-      .flatMap(off => hudiRes.dataFilesDetailed(root, off).map(f => canonPath(f.path))).toSet
-    def walk(p: HadoopPath): Seq[HadoopPath] =
-      fs.listStatus(p).toSeq.flatMap { st =>
-        val name = st.getPath.getName
-        if (name == ".hoodie") Nil
-        else if (st.isDirectory) walk(st.getPath)
-        else if (name.endsWith(".parquet")) Seq(st.getPath)
-        else Nil
-      }
-    val doomed = walk(new HadoopPath(root))
-      .filterNot(p => referenced.contains(canonPath(p.toString)))
-    doomed.foreach(p => fs.delete(p, false))
-    invalidateTable(database, table)
-    doomed.map(_.toString)
-  }
-
-  /** Physically delete data files no longer referenced by the last
-    * `retainVersions` versions — the VACUUM half of the Delta
-    * lifecycle ([[optimizeDeltaTable]] retires files logically but
-    * keeps them for time travel). Only files under the table root are
-    * candidates; anything referenced by ANY retained version
-    * survives. Returns the deleted paths.
-    */
-  def vacuumDeltaTable(database: String, table: String, retainVersions: Int = 2): Seq[String] = {
-    require(retainVersions >= 1, "must retain at least the current version")
-    val meta = tableMetadata(database, table)
-    require(meta.tableType == TableType.Delta,
-      s"$database.$table is ${meta.tableType}, not a Delta table")
-    val root = location(meta).stripSuffix("/")
-    val fs = new HadoopPath(root).getFileSystem(hadoopConf)
-    // live deletion-vector sidecars are referenced files too — a
-    // vacuum that reclaimed one would silently RESURRECT its deleted
-    // rows on the next read. Resolved fresh, never from the read
-    // cache: a snapshot cached before another writer's commit would
-    // miss that commit's data files and sidecars.
-    val referenced = (0 until retainVersions).flatMap { off =>
-      val (adds, dvs, _) = delta.versionAt(root, off)
-      (adds.map(_.path) ++ dvs.values).map(canonPath)
-    }.toSet
-    def walk(p: HadoopPath): Seq[HadoopPath] =
-      fs.listStatus(p).toSeq.flatMap { st =>
-        val name = st.getPath.getName
-        if (name == "_delta_log") Nil
-        else if (st.isDirectory) walk(st.getPath)
-        else if (name.endsWith(".parquet")) Seq(st.getPath)
-        else Nil
-      }
-    val doomed = walk(new HadoopPath(root))
-      .filterNot(p => referenced.contains(canonPath(p.toString)))
-    doomed.foreach(p => fs.delete(p, false))
-    doomed.map(_.toString)
-  }
-
-  /** Small-file compaction — the maintenance operation every
-    * long-running ingest pipeline needs (streaming/incremental
-    * writers leave thousands of KB-scale files per partition; at
-    * 100 TB that means listing storms and task-per-tiny-file
-    * overhead). Rewrites `database.table` as `outTable` at
-    * `outLocation` with file count sized from the REAL listed bytes
-    * (the size metadata the listing already carries — no extra
-    * stat pass): `ceil(totalBytes / targetFileBytes)` output files,
-    * hash-distributed by the partition keys so each Hive partition
-    * dir collapses to a bounded file set while the write stays one
-    * shuffle. The reference is read-only; this is the write-side
-    * counterpart of its "list once, plan many" philosophy.
-    *
-    * `clusterBy`: range-partition and sort the rewrite by these
-    * columns instead of hash-distributing — each output file then
-    * covers a narrow value range, which is what makes planner-time
-    * FILE skipping (footer min/max stats, [[graft.listing
-    * .FooterStats]]) selective on later reads. Compact-then-cluster
-    * is the standard layout-maintenance pair (the 1-D case of Delta
-    * `OPTIMIZE ... ZORDER BY`).
-    */
-  def compactTable(database: String, table: String, outTable: String,
-      outLocation: String, targetFileBytes: Long = 128L * 1024 * 1024,
-      clusterBy: Seq[String] = Nil): GlueTable = {
-    require(targetFileBytes > 0, "targetFileBytes must be positive")
-    val meta = tableMetadata(database, table)
-    val totalBytes = files(database, table).map(_.size).sum
-    val nFiles = math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
-    val keys = meta.table.partitionKeys.map(_.name)
-    val df = tableDF(database, table)
-    val repart =
-      if (clusterBy.nonEmpty)
-        df.repartitionByRange(nFiles, clusterBy.map(col): _*)
-          .sortWithinPartitions(clusterBy.map(col): _*)
-      else if (keys.nonEmpty) df.repartition(nFiles, keys.map(col): _*)
-      else df.repartition(nFiles)
-    writeTable(repart, database, outTable, outLocation, partitionBy = keys)
-  }
-
-  /** Compact with a Z-ORDER layout: rows are range-partitioned and
-    * sorted by the Morton interleave of the `zorderBy` columns
-    * ([[graft.functions.ZOrder]]), so every output file holds a tight
-    * value range in EACH clustered dimension and the footer-stats
-    * skipping tier prunes files for predicates on ANY of them —
-    * `compactTable(clusterBy = ...)` serves only its leading column.
-    * The per-column min/max needed for grid normalization is one
-    * tiny aggregate over the (already planned) table scan.
-    */
-  def compactTableZOrder(database: String, table: String, outTable: String,
-      outLocation: String, zorderBy: Seq[String],
-      targetFileBytes: Long = 128L * 1024 * 1024, bits: Int = 16): GlueTable = {
-    require(targetFileBytes > 0, "targetFileBytes must be positive")
-    require(zorderBy.size >= 2, "z-order needs at least two columns")
-    val meta = tableMetadata(database, table)
-    val totalBytes = files(database, table).map(_.size).sum
-    val nFiles = math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
-    val keys = meta.table.partitionKeys.map(_.name)
-    val df = tableDF(database, table)
-    // grid normalization needs a numeric span: validate up front so a
-    // string/complex zorderBy column errors by name, not as a null
-    // cast deep in the stats row
-    zorderBy.foreach { c =>
-      val f = df.schema.find(_.name == c).getOrElse(throw new IllegalArgumentException(
-        s"zorderBy column $c not found in $database.$table (columns: ${df.columns.mkString(", ")})"))
-      require(f.dataType.isInstanceOf[org.apache.spark.sql.types.NumericType],
-        s"zorderBy column $c must be numeric, got ${f.dataType.simpleString}")
-    }
-    val stats = df.agg(
-      zorderBy.flatMap(c => Seq(min(col(c)).cast("double"), max(col(c)).cast("double"))).head,
-      zorderBy.flatMap(c => Seq(min(col(c)).cast("double"), max(col(c)).cast("double"))).tail: _*)
-      .head()
-    val norm = zorderBy.zipWithIndex.map { case (c, i) =>
-      // empty table / all-null column: min/max aggregate to NULL —
-      // treat as a degenerate span (the dimension contributes cell 0,
-      // matching the hi <= lo rule) instead of an opaque NPE
-      if (stats.isNullAt(2 * i) || stats.isNullAt(2 * i + 1))
-        lit(0L)
-      else
-        graft.functions.ZOrder.normalize(col(c), stats.getDouble(2 * i), stats.getDouble(2 * i + 1), bits)
-    }
-    val z = graft.functions.ZOrder.zvalue(norm, bits)
-    val repart = df.withColumn("__z", z)
-      .repartitionByRange(nFiles, col("__z"))
-      .sortWithinPartitions("__z")
-      .drop("__z")
-    writeTable(repart, database, outTable, outLocation, partitionBy = keys)
-  }
-
   /** S3 credential configuration (≈ reference `setCredentials` /
     * `CREATE SECRET`, src/glue-table-cache.ts:98-122): maps onto the
     * Hadoop S3A configuration the executors use for s3a:// locations.
@@ -2842,12 +1566,12 @@ final class GlueTableEngine(
   }
 
   /** ≈ reference `invalidateTable` (src/glue-table-cache.ts:206-215):
-    * drop the metadata key and every snapshot key containing
-    * `<db>.<tbl>`.
+    * the metadata key and, by prefix, the `<db>.<tbl>#v<n>` snapshot keys
+    * (the reference's substring match also hits `<db>.<tbl>_x` tables).
     */
   def invalidateTable(database: String, table: String): Unit = {
     metaCache.invalidate(s"$database.$table")
-    snapshots.invalidateMatching(s"$database.$table")
+    snapshots.invalidateMatching(s"$database.$table#v")
   }
 
   /** ≈ reference `close` (drops caches; the SparkSession is shared

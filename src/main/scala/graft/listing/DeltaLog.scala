@@ -183,12 +183,8 @@ object DeltaLogWriter {
     val logDir = new Path(s"$root/_delta_log")
     val fs = logDir.getFileSystem(conf)
     val version = st.version + 1
-    val tmp = new Path(logDir, f".${version}%020d.json.drop.tmp")
     val dst = new Path(logDir, f"${version}%020d.json")
-    val os = fs.create(tmp, true)
-    try os.write(lines.mkString("", "\n", "\n").getBytes("UTF-8")) finally os.close()
-    if (!fs.rename(tmp, dst)) {
-      fs.delete(tmp, false)
+    if (!Publish(fs, dst, lines.mkString("", "\n", "\n"), () => ())) {
       throw new IllegalStateException(
         s"drop-column commit lost the publish race at $dst — re-resolve and retry")
     }
@@ -241,12 +237,8 @@ object DeltaLogWriter {
     val logDir = new Path(s"$root/_delta_log")
     val fs = logDir.getFileSystem(conf)
     val version = st.version + 1
-    val tmp = new Path(logDir, f".${version}%020d.json.rename.tmp")
     val dst = new Path(logDir, f"${version}%020d.json")
-    val os = fs.create(tmp, true)
-    try os.write(lines.mkString("", "\n", "\n").getBytes("UTF-8")) finally os.close()
-    if (!fs.rename(tmp, dst)) {
-      fs.delete(tmp, false)
+    if (!Publish(fs, dst, lines.mkString("", "\n", "\n"), () => ())) {
       throw new IllegalStateException(
         s"rename commit lost the publish race at $dst — re-resolve and retry")
     }
@@ -455,11 +447,8 @@ object DeltaLogWriter {
     var attempt = 0
     var v = version
     while (true) {
-      val tmp = new Path(logDir, f".${v}%020d.json.$attempt.tmp")
       val dst = new Path(logDir, f"${v}%020d.json")
-      val os = fs.create(tmp, true)
-      try os.write(body.getBytes("UTF-8")) finally os.close()
-      if (fs.rename(tmp, dst)) {
+      if (Publish(fs, dst, body, () => ())) {
         // publish at the expected version advances the cached state;
         // a retried publish (another writer won a version we never
         // replayed) just invalidates it — the next commit re-resolves
@@ -467,7 +456,6 @@ object DeltaLogWriter {
         else stateCache.remove(root)
         return v
       }
-      fs.delete(tmp, false)
       if (!retryable || attempt >= 4)
         throw new IllegalStateException(
           s"commit $v already published at $dst" +
@@ -682,12 +670,8 @@ object DeltaLogWriter {
     val logDir = new Path(s"$root/_delta_log")
     val fs = logDir.getFileSystem(conf)
     val version = cur.version + 1
-    val tmp = new Path(logDir, f".${version}%020d.json.restore.tmp")
     val dst = new Path(logDir, f"${version}%020d.json")
-    val os = fs.create(tmp, true)
-    try os.write(body.getBytes("UTF-8")) finally os.close()
-    if (!fs.rename(tmp, dst)) {
-      fs.delete(tmp, false)
+    if (!Publish(fs, dst, body, () => ())) {
       throw new IllegalStateException(
         s"restore lost the publish race at $dst — re-resolve and retry the restore")
     }
@@ -746,12 +730,8 @@ object DeltaLogWriter {
     val logDir = new Path(s"$root/_delta_log")
     val fs = logDir.getFileSystem(conf)
     val version = cur.version + 1
-    val tmp = new Path(logDir, f".${version}%020d.json.dv.tmp")
     val dst = new Path(logDir, f"${version}%020d.json")
-    val os = fs.create(tmp, true)
-    try os.write(lines.mkString("", "\n", "\n").getBytes("UTF-8")) finally os.close()
-    if (!fs.rename(tmp, dst)) {
-      fs.delete(tmp, false)
+    if (!Publish(fs, dst, lines.mkString("", "\n", "\n"), () => ())) {
       throw new IllegalStateException(
         s"deletion-vector commit lost the publish race at $dst — its read-set " +
           "(the live state the positions were computed against) may be invalid; " +
@@ -806,12 +786,8 @@ object DeltaLogWriter {
       s"clone target $target already holds a Delta log")
     fs.mkdirs(logDir)
     val body = (meta +: adds).mkString("", "\n", "\n")
-    val tmp = new Path(logDir, f".${0L}%020d.json.clone.tmp")
     val out = new Path(logDir, f"${0L}%020d.json")
-    val os = fs.create(tmp, true)
-    try os.write(body.getBytes("UTF-8")) finally os.close()
-    if (!fs.rename(tmp, out)) {
-      fs.delete(tmp, false)
+    if (!Publish(fs, out, body, () => ())) {
       throw new IllegalStateException(
         s"clone lost the publish race at $out — another writer created the table")
     }

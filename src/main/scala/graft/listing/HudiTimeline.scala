@@ -380,13 +380,8 @@ object HudiTimelineWriter {
     var attempt = 0
     var cur = instant
     while (true) {
-      val tmpInstant = new Path(tl, s".$cur.$kind.$token.tmp")
       val dst = new Path(tl, s"$cur.$kind")
-      val os = fs.create(tmpInstant, true)
-      try os.write(body.getBytes("UTF-8")) finally os.close()
-      onBeforePublish()
-      if (fs.rename(tmpInstant, dst)) return Some(cur)
-      fs.delete(tmpInstant, false)
+      if (Publish(fs, dst, body, onBeforePublish)) return Some(cur)
       if (replaceFileIds.nonEmpty || attempt >= 4)
         throw new IllegalStateException(
           s"instant $cur already published at $dst" +
@@ -502,13 +497,8 @@ object HudiTimelineWriter {
     require(digits.length <= width,
       s"instant $digits overflows the timeline's $width-char width at $root")
     val instant = ("0" * (width - digits.length)) + digits
-    val token = java.util.UUID.randomUUID().toString.take(8)
-    val tmpInstant = new Path(tl, s".$instant.replacecommit.$token.tmp")
     val dst = new Path(tl, s"$instant.replacecommit")
-    val os = fs.create(tmpInstant, true)
-    try os.write(body.getBytes("UTF-8")) finally os.close()
-    if (!fs.rename(tmpInstant, dst)) {
-      fs.delete(tmpInstant, false)
+    if (!Publish(fs, dst, body, () => ())) {
       throw new IllegalStateException(
         s"rollback lost the instant race at $dst — re-resolve and retry")
     }
@@ -630,12 +620,8 @@ object HudiTimelineWriter {
     val emJson = em.map { case (k, v) => s"${jstr(k)}: ${jstr(v)}" }
       .mkString("{", ", ", "}")
     val body = s"""{"extraMetadata": $emJson, "partitionToWriteStats": {}}"""
-    val tmpInstant = new Path(tl, s".$instant.commit.schema.tmp")
     val dst = new Path(tl, s"$instant.commit")
-    val os = fs.create(tmpInstant, true)
-    try os.write(body.getBytes("UTF-8")) finally os.close()
-    if (!fs.rename(tmpInstant, dst)) {
-      fs.delete(tmpInstant, false)
+    if (!Publish(fs, dst, body, () => ())) {
       throw new IllegalStateException(
         s"schema $what lost the publish race at $dst — re-resolve and retry")
     }

@@ -4,7 +4,7 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.avro.file.DataFileReader
 import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
@@ -15,9 +15,10 @@ import scala.jdk.CollectionConverters._
   * Port of the reference's pure-metadata pipeline (reference:
   * src/util/iceberg.ts:11-36, executed at
   * src/glue-table-cache.ts:349-414):
-  *   1. among the metadata-dir JSON files, pick the one with the
-  *      max `last-sequence-number`; `versionOffset` versions back =
-  *      time travel (the reference's OFFSET n);
+  *   1. among the metadata-dir JSON files, pick the newest — the
+  *      one with the max `last-sequence-number` ([[newestFirst]]);
+  *      `versionOffset` versions back = time travel (the reference's
+  *      OFFSET n);
   *   2. take `snapshots[last]["manifest-list"]` — an Avro file whose
   *      rows carry `manifest_path`;
   *   3. read each manifest Avro; rows carry
@@ -58,6 +59,36 @@ object IcebergSnapshotResolver {
     */
   private[graft] def isMapped(schema: org.apache.spark.sql.types.StructType): Boolean =
     schema.fields.exists(_.metadata.contains(PhysNameKey))
+
+  private val mapper = new ObjectMapper()
+  private val VersionName = """v(\d+)\.metadata\.json""".r
+
+  /** The metadata JSONs under `metaDir`, newest first, each parsed on
+    * demand — the one head read of every Iceberg reader and writer.
+    * When every JSON is named `v<n>.metadata.json` (this engine's
+    * writer names version `n` so, with `"last-sequence-number": n`),
+    * they order by `n` and only the JSONs asked for are read.
+    * Otherwise (foreign naming, e.g. `00001-<uuid>.metadata.json`)
+    * every JSON is read and they order by `last-sequence-number`
+    * (reference: src/util/iceberg.ts:20-27).
+    */
+  private[graft] def newestFirst(fs: FileSystem, metaDir: Path): Seq[(Path, () => JsonNode)] = {
+    if (!fs.exists(metaDir)) return Nil
+    val jsons = fs.listStatus(metaDir).toSeq.map(_.getPath).filter(_.getName.endsWith(".json"))
+    def read(p: Path): JsonNode = { val in = fs.open(p); try mapper.readTree(in) finally in.close() }
+    val named = jsons.flatMap(p => p.getName match {
+      case VersionName(n) => Some(n.toLong -> p)
+      case _              => None
+    })
+    if (named.size == jsons.size) named.sortBy(-_._1).map { case (_, p) => p -> (() => read(p)) }
+    else jsons.map(p => p -> read(p))
+      .sortBy(-_._2.path("last-sequence-number").asLong(0L))
+      .map { case (p, n) => p -> (() => n) }
+  }
+
+  /** The metadata JSON `offset` versions back from the newest. */
+  private[graft] def metadataAt(fs: FileSystem, metaDir: Path, offset: Int): Option[JsonNode] =
+    newestFirst(fs, metaDir).lift(offset).map(_._2())
 }
 
 final class IcebergSnapshotResolver(hadoopConf: Configuration) {
@@ -283,24 +314,13 @@ final class IcebergSnapshotResolver(hadoopConf: Configuration) {
         catch { case _: java.io.IOException => Nil })
     }.distinct
 
-  /** The metadata JSON of the selected version (latest − offset):
-    * among the metadata-dir JSON files, ordered by
-    * `last-sequence-number` DESC (reference: src/util/iceberg.ts:20-27).
+  /** The metadata JSON of the selected version (latest − offset),
+    * by the one head read ([[IcebergSnapshotResolver.metadataAt]]).
     */
-  private def metadataAt(location: String, versionOffset: Int): Option[JsonNode] = {
+  private[graft] def metadataAt(location: String, versionOffset: Int): Option[JsonNode] = {
     resolveCount.incrementAndGet()
     val metaDir = new Path(s"${location.stripSuffix("/")}/metadata")
-    val fs = metaDir.getFileSystem(hadoopConf)
-    if (!fs.exists(metaDir)) return None
-    val jsons = fs.listStatus(metaDir).toSeq
-      .filter(_.getPath.getName.endsWith(".json"))
-      .map { s =>
-        val in = fs.open(s.getPath)
-        try mapper.readTree(in) finally in.close()
-      }
-    val ordered = jsons.sortBy(n =>
-      -Option(n.get("last-sequence-number")).map(_.asLong()).getOrElse(0L))
-    ordered.drop(versionOffset).headOption
+    IcebergSnapshotResolver.metadataAt(metaDir.getFileSystem(hadoopConf), metaDir, versionOffset)
   }
 
   /** The current partition spec's fields IN SPEC ORDER, identity

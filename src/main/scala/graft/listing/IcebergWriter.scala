@@ -1,10 +1,10 @@
 package graft.listing
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.{JsonNode => Json, ObjectMapper}
 import org.apache.avro.{Schema, SchemaBuilder}
 import org.apache.avro.file.{DataFileReader, DataFileWriter}
 import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -184,8 +184,8 @@ object IcebergWriter {
     */
   private final case class PubCol(id: Int, name: String, phys: String, tp: String)
 
-  private def currentSchemaNode(meta: com.fasterxml.jackson.databind.JsonNode)
-      : Option[com.fasterxml.jackson.databind.JsonNode] = {
+  private def currentSchemaNode(meta: Json)
+      : Option[Json] = {
     val elems = Option(meta.get("schemas")).toSeq
       .flatMap(_.elements().asScala.toSeq)
     Option(meta.get("current-schema-id")).map(_.asInt()) match {
@@ -196,7 +196,7 @@ object IcebergWriter {
     }
   }
 
-  private def pubColsOf(meta: com.fasterxml.jackson.databind.JsonNode): Seq[PubCol] =
+  private def pubColsOf(meta: Json): Seq[PubCol] =
     currentSchemaNode(meta).toSeq
       .flatMap(s => Option(s.get("fields")).toSeq.flatMap(_.elements().asScala.toSeq))
       .flatMap { f =>
@@ -212,7 +212,7 @@ object IcebergWriter {
     * — a later re-add of the same name must bind to a FRESH physical
     * name or the dropped bytes resurrect out of the old files.
     */
-  private def retiredOf(meta: com.fasterxml.jackson.databind.JsonNode): Seq[(String, String)] =
+  private def retiredOf(meta: Json): Seq[(String, String)] =
     Option(meta.get("retired-columns")).toSeq
       .flatMap(_.elements().asScala.toSeq)
       .flatMap { f =>
@@ -222,10 +222,10 @@ object IcebergWriter {
         } yield (nm, ph)
       }
 
-  private def mappedMode(meta: com.fasterxml.jackson.databind.JsonNode): Boolean =
+  private def mappedMode(meta: Json): Boolean =
     Option(meta.get("column-mapping")).exists(_.asText() == "name")
 
-  private def lastColIdOf(meta: com.fasterxml.jackson.databind.JsonNode,
+  private def lastColIdOf(meta: Json,
       pub: Seq[PubCol]): Int =
     math.max(Option(meta.get("last-column-id")).map(_.asInt()).getOrElse(0),
       if (pub.isEmpty) 0 else pub.map(_.id).max)
@@ -259,7 +259,7 @@ object IcebergWriter {
     */
   private final case class Ref(id: Long, base: Option[Long])
 
-  private def refsOf(meta: com.fasterxml.jackson.databind.JsonNode): Map[String, Ref] =
+  private def refsOf(meta: Json): Map[String, Ref] =
     Option(meta.get("refs")).toSeq.flatMap(_.properties().asScala.toSeq.flatMap { e =>
       Option(e.getValue.get("snapshot-id")).map(id => e.getKey ->
         Ref(id.asLong(), Option(e.getValue.get("base")).map(_.asLong())))
@@ -277,11 +277,11 @@ object IcebergWriter {
     * it was (materializing it from array-last if refs didn't exist
     * yet — a branch needs a base to leave undisturbed).
     */
-  private def refsVerbatim(prior: com.fasterxml.jackson.databind.JsonNode): String =
+  private def refsVerbatim(prior: Json): String =
     Option(prior.get("refs"))
       .map(n => s""", "refs": ${mapper.writeValueAsString(n)}""").getOrElse("")
 
-  private def refsAfterCommit(prior: Option[com.fasterxml.jackson.databind.JsonNode],
+  private def refsAfterCommit(prior: Option[Json],
       seq: Long, branch: Option[String]): Map[String, Ref] = {
     val priorRefs = prior.map(refsOf).getOrElse(Map.empty[String, Ref])
     branch match {
@@ -319,6 +319,157 @@ object IcebergWriter {
       case _ => None
     }
   }
+
+
+  /** A batch's written-once artifacts: its data dir and the manifest
+    * entries (with their Avro schema) describing the files in it.
+    */
+  private final case class Written(dataDir: String, entryS: Schema, entries: Seq[GenericRecord])
+
+  private def hadoopConf(spark: SparkSession) =
+    org.apache.spark.sql.graft.Shim.classic(spark).sparkContext.hadoopConfiguration
+
+  /** `(root, metadata dir, its filesystem)` of the table at `location`. */
+  private def metaDirOf(spark: SparkSession, location: String): (String, Path, FileSystem) = {
+    val root = location.stripSuffix("/")
+    val metaDir = new Path(s"$root/metadata")
+    (root, metaDir, metaDir.getFileSystem(hadoopConf(spark)))
+  }
+
+  /** The newest metadata JSON; `what` names the commit that needs one. */
+  private def headOf(fs: FileSystem, metaDir: Path, location: String, what: String): Json =
+    IcebergSnapshotResolver.metadataAt(fs, metaDir, 0).getOrElse(throw new IllegalStateException(
+      s"no Iceberg metadata at $location — $what needs an existing table"))
+
+  /** The sequence number the next commit on top of `prior` publishes. */
+  private def nextSeq(prior: Json): Long = prior.path("last-sequence-number").asLong(0L) + 1L
+
+  private def snapshotsOf(prior: Json): Seq[Json] =
+    Option(prior.get("snapshots")).toSeq.flatMap(_.elements().asScala.toSeq)
+
+  /** The manifests of MAIN's head: with refs present, main's snapshot —
+    * never a staged branch snapshot that happened to publish last.
+    */
+  private def mainManifests(fs: FileSystem, prior: Json): Seq[String] = {
+    val all = snapshotsOf(prior)
+    refsOf(prior).get("main").map(_.id)
+      .flatMap(id => all.find(s => Option(s.get("snapshot-id")).exists(_.asLong() == id)))
+      .orElse(all.lastOption)
+      .flatMap(s => Option(s.get("manifest-list")).map(_.asText())).toSeq
+      .flatMap(ml => readAvro(fs, new Path(ml)).map(_.get("manifest_path").toString))
+  }
+
+  /** `(name, type)` of the first schema's columns — what an exact-schema
+    * batch must match.
+    */
+  private def declaredColumns(prior: Json): Seq[(String, String)] =
+    Option(prior.get("schemas")).flatMap(_.elements().asScala.toSeq.headOption)
+      .flatMap(s => Option(s.get("fields"))).toSeq
+      .flatMap(_.elements().asScala.toSeq.flatMap { f =>
+        for {
+          nm <- Option(f.get("name")).map(_.asText())
+          tp <- Option(f.get("type")).filter(_.isTextual).map(_.asText())
+        } yield (nm, tp)
+      })
+
+  /** A metadata version that carries `prior`'s schemas, evolution state
+    * and partition specs, with the given refs fragment and snapshots.
+    */
+  private def carried(prior: Json, seq: Long, refs: String, snapshots: Seq[String]): String = {
+    val schemasJson = Option(prior.get("schemas")).map(mapper.writeValueAsString)
+      .getOrElse("""[{"schema-id": 0, "fields": []}]""")
+    val specsJson = Option(prior.get("partition-specs"))
+      .map(n => s""",\n"partition-specs": ${mapper.writeValueAsString(n)}""").getOrElse("")
+    s"""{"format-version": 2, "last-sequence-number": $seq${evolutionCarryJson(
+          lastColIdOf(prior, pubColsOf(prior)), retiredOf(prior), mappedMode(prior))}$refs,
+       |"current-schema-id": ${prior.path("current-schema-id").asInt(0)},
+       |"schemas": $schemasJson$specsJson,
+       |"snapshots": [${snapshots.mkString(", ")}]}""".stripMargin
+  }
+
+  /** The manifest entries of the parquet files a batch wrote under
+    * `dir`: size, row count and column bounds from ONE footer read per
+    * file, and the identity partition record parsed from its Hive `k=v`
+    * path. Entry construction can fail after the data is written
+    * (footer read, partition-value conversion): the dir is then
+    * removed rather than left as orphan parquet.
+    */
+  private def manifestOf(spark: SparkSession, fs: FileSystem, dir: String, schema: StructType,
+      partitionBy: Seq[String], pub: Seq[PubCol]): Written = try {
+    val conf = hadoopConf(spark)
+    val partCols = partitionBy.map { c =>
+      val f = schema.find(_.name == c).getOrElse(throw new IllegalArgumentException(
+        s"partition column $c not in the batch schema"))
+      (c, partitionAvro(c, f.dataType))
+    }
+    val partSchemaOpt: Option[Schema] =
+      if (partCols.isEmpty) None
+      else Some {
+        val b = SchemaBuilder.record("r102").fields()
+        partCols.foldLeft(b) { case (acc, (c, (s, _))) =>
+          acc.name(c).`type`(s).withDefault(null)
+        }.endRecord()
+      }
+    val dataFileS = dataFileSchema(partSchemaOpt)
+    val entryS = entrySchema(dataFileS)
+    def walkParquet(p: Path): Seq[org.apache.hadoop.fs.FileStatus] =
+      fs.listStatus(p).toSeq.flatMap { st =>
+        if (st.isDirectory) walkParquet(st.getPath)
+        else if (st.getPath.getName.endsWith(".parquet")) Seq(st)
+        else Nil
+      }
+    val entries = walkParquet(new Path(dir)).sortBy(_.getPath.toString).map { st =>
+      val (stats, nRows) = FooterStats.readWithCount(conf, st.getPath.toString)
+      val d = new GenericData.Record(dataFileS)
+      d.put("file_path", st.getPath.toString) // full URI: authority kept so object-store reads resolve
+      d.put("file_size_in_bytes", st.getLen)
+      d.put("record_count", nRows.getOrElse(-1L))
+      partSchemaOpt.foreach { ps =>
+        // k=v path segments -> typed identity values
+        val segs = st.getPath.getParent.toUri.getPath.split('/')
+          .filter(_.contains('=')).map { seg =>
+            val Array(k, v) = seg.split("=", 2)
+            k -> java.net.URLDecoder.decode(v, "UTF-8")
+          }.toMap
+        val pr = new GenericData.Record(ps)
+        partCols.foreach { case (c, (_, conv)) =>
+          // a null partition value writes the Hive sentinel segment:
+          // store a real null in the manifest partition record, not
+          // the sentinel literal (string) or a conv throw (int/long)
+          segs.get(c).filter(_ != "__HIVE_DEFAULT_PARTITION__")
+            .foreach(v => pr.put(c, conv(v)))
+        }
+        d.put("partition", pr)
+      }
+      val lows = new java.util.ArrayList[GenericRecord]()
+      val highs = new java.util.ArrayList[GenericRecord]()
+      val nulls = new java.util.ArrayList[GenericRecord]()
+      pub.foreach { c =>
+        // footer stats key on what the file holds: the PHYSICAL name
+        stats.get(c.phys).foreach { r =>
+          if (!r.allNulls)
+            for (lo <- boundBytes(c.tp, r.min); hi <- boundBytes(c.tp, r.max)) {
+              def kv(b: Array[Byte]) = {
+                val k = new GenericData.Record(boundKv)
+                k.put("key", c.id); k.put("value", java.nio.ByteBuffer.wrap(b)); k
+              }
+              lows.add(kv(lo)); highs.add(kv(hi))
+            }
+          if (r.noNulls) {
+            val k = new GenericData.Record(countKv)
+            k.put("key", c.id); k.put("value", 0L); nulls.add(k)
+          }
+        }
+      }
+      d.put("lower_bounds", lows); d.put("upper_bounds", highs)
+      d.put("null_value_counts", nulls)
+      d.put("nan_value_counts", new java.util.ArrayList[GenericRecord]())
+      val e = new GenericData.Record(entryS)
+      e.put("data_file", d)
+      e
+    }
+    Written(dir, entryS, entries)
+  } catch { case t: Throwable => fs.delete(new Path(dir), true); throw t }
 
   /** Append `df` as a new snapshot of the Iceberg table at
     * `location` (first commit creates the table). Returns the new
@@ -371,28 +522,13 @@ object IcebergWriter {
       allowAdditive: Boolean = false,
       transforms: Map[String, (String, String)] = Map.empty,
       branch: Option[String] = None): Option[Long] = {
-    val root = location.stripSuffix("/")
-    val metaDir = new Path(s"$root/metadata")
-    val conf = org.apache.spark.sql.graft.Shim.classic(spark)
-      .sparkContext.hadoopConfiguration
-    val fs = metaDir.getFileSystem(conf)
+    val (root, metaDir, fs) = metaDirOf(spark, location)
     fs.mkdirs(metaDir)
     // unique per commit CALL: two writers racing the same sequence
     // number must never share (and overwrite) a data dir, manifest,
     // or manifest list — only the published metadata decides whose
     // files join the table
     val token = java.util.UUID.randomUUID().toString.take(8)
-
-    // previous state: metadata json with the max last-sequence-number
-    def readPrior(): Option[com.fasterxml.jackson.databind.JsonNode] =
-      fs.listStatus(metaDir).toSeq
-        .filter(_.getPath.getName.endsWith(".json"))
-        .map { st =>
-          val in = fs.open(st.getPath)
-          try mapper.readTree(in) finally in.close()
-        }
-        .sortBy(n => Option(n.get("last-sequence-number")).map(-_.asLong()).getOrElse(0L))
-        .headOption
 
     // field ids by schema position (stable across appends with the
     // same schema — the caller's contract, as in Iceberg itself).
@@ -411,16 +547,15 @@ object IcebergWriter {
         icebergType(f.dataType).map(tp => (i + 1, f.name, tp))
       }
 
-    // data files + this batch's manifest are written ONCE, by the
+    // data files + their manifest entries are written ONCE, by the
     // first attempt that passes the replay check; retried publishes
-    // reuse them (only the manifest LIST and metadata json bind to
-    // the re-read prior state)
-    var dataDir: String = null
-    var manifestPath: String = null
+    // reuse them (the manifest, its list and the metadata json bind to
+    // the re-read prior state's sequence number)
+    var written: Option[Written] = None
 
     var attempt = 0
     while (attempt < 5) {
-      val prior = readPrior()
+      val prior = IcebergSnapshotResolver.metadataAt(fs, metaDir, 0)
       // replay check against the SAME read `seq` derives from — the
       // CAS below validates that read, so a mark published by a
       // racing winner is seen here on the retry and never
@@ -432,19 +567,17 @@ object IcebergWriter {
         // a racing writer committed this batch: drop this call's
         // never-published files (readers resolve through metadata
         // and cannot see them; deleting just skips the expiry wait)
-        if (dataDir != null) fs.delete(new Path(dataDir), true)
-        if (manifestPath != null) fs.delete(new Path(manifestPath), false)
+        written.foreach(w => fs.delete(new Path(w.dataDir), true))
         return None
       }
-      val seq = prior.flatMap(n => Option(n.get("last-sequence-number")).map(_.asLong()))
-        .getOrElse(0L) + 1L
+      val seq = prior.fold(1L)(nextSeq)
       val out = commitAttempt(spark, fs, root, metaDir, df, partitionBy,
         rewriteAll, summary, token, prior, seq, idFields,
-        dataDir, manifestPath, onBeforePublish, transforms, allowAdditive, branch)
+        written, onBeforePublish, transforms, allowAdditive, branch)
       out match {
         case Right(published) => return Some(published)
-        case Left((dd, mp)) =>
-          dataDir = dd; manifestPath = mp
+        case Left(w) =>
+          written = Some(w)
           if (rewriteAll)
             throw new IllegalStateException(
               s"snapshot $seq already published at $root — this rewrite's " +
@@ -457,22 +590,19 @@ object IcebergWriter {
   }
 
   /** One publish attempt against one observed prior state. Returns
-    * Right(seq) on success; Left((dataDir, manifestPath)) when the
-    * rename-CAS lost (the written-once artifacts carry to the retry).
+    * Right(seq) on success; Left(written) when the rename-CAS lost
+    * (the written-once data and manifest entries carry to the retry).
     */
-  private def commitAttempt(spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
+  private def commitAttempt(spark: SparkSession, fs: FileSystem,
       root: String, metaDir: Path, df: org.apache.spark.sql.DataFrame,
       partitionBy: Seq[String], rewriteAll: Boolean, summary: Map[String, String],
-      token: String, prior: Option[com.fasterxml.jackson.databind.JsonNode], seq: Long,
+      token: String, prior: Option[Json], seq: Long,
       idFields: Array[(Int, String, String)],
-      dataDir0: String, manifestPath0: String,
+      written0: Option[Written],
       onBeforePublish: () => Unit,
-      transforms: Map[String, (String, String)] = Map.empty,
-      allowAdditive: Boolean, branch: Option[String] = None): Either[(String, String), Long] = {
-    val priorSnapshots: Seq[String] = prior.toSeq.flatMap { n =>
-      Option(n.get("snapshots")).toSeq.flatMap(_.elements().asScala.toSeq
-        .map(mapper.writeValueAsString))
-    }
+      transforms: Map[String, (String, String)],
+      allowAdditive: Boolean, branch: Option[String]): Either[Written, Long] = {
+    val priorSnapshots = prior.toSeq.flatMap(snapshotsOf).map(mapper.writeValueAsString)
     val priorRefs: Map[String, Ref] = prior.map(refsOf).getOrElse(Map.empty[String, Ref])
     // BASE snapshot this commit extends: the targeted ref's head when
     // refs exist (a main append must never absorb an unpublished
@@ -480,8 +610,7 @@ object IcebergWriter {
     // the branch, not on whatever published last); array-last
     // otherwise — the pre-refs behavior.
     val priorManifests: Seq[String] = prior.toSeq.flatMap { n =>
-      val all = Option(n.get("snapshots")).toSeq
-        .flatMap(_.elements().asScala.toSeq)
+      val all = snapshotsOf(n)
       val baseId = priorRefs.get(branch.getOrElse("main")).map(_.id)
         .orElse(if (branch.isDefined) priorRefs.get("main").map(_.id) else None)
       val base = baseId match {
@@ -500,16 +629,7 @@ object IcebergWriter {
     // loudly instead (schema evolution is a metadata operation, not
     // an accidental batch shape)
     prior.foreach { n =>
-      val declared = Option(n.get("schemas")).flatMap { arr =>
-        arr.elements().asScala.toSeq.headOption
-      }.flatMap(s => Option(s.get("fields"))).map { fsn =>
-        fsn.elements().asScala.toSeq.flatMap { f =>
-          for {
-            nm <- Option(f.get("name")).map(_.asText())
-            tp <- Option(f.get("type")).filter(_.isTextual).map(_.asText())
-          } yield (nm, tp)
-        }
-      }.getOrElse(Nil)
+      val declared = declaredColumns(n)
       val mine = idFields.map { case (_, nm, tp) => (nm, tp) }.toSeq
       // ADDITIVE evolution (opt-in): appending columns at the END
       // keeps every existing positional field id stable, so the new
@@ -576,116 +696,24 @@ object IcebergWriter {
     val physDf = df.select(df.schema.fields.map { f =>
       df.col("`" + f.name + "`").as(physByName.getOrElse(f.name, f.name))
     }.toSeq: _*)
-    val partCols = partitionBy.map { c =>
-      val f = df.schema.find(_.name == c).getOrElse(throw new IllegalArgumentException(
-        s"partition column $c not in the batch schema"))
-      (c, partitionAvro(c, f.dataType))
-    }
-    val partSchemaOpt: Option[Schema] =
-      if (partCols.isEmpty) None
-      else Some {
-        val b = SchemaBuilder.record("r102").fields()
-        partCols.foldLeft(b) { case (acc, (c, (s, _))) =>
-          acc.name(c).`type`(s).withDefault(null)
-        }.endRecord()
-      }
-    val dataFileS = dataFileSchema(partSchemaOpt)
-    val entryS = entrySchema(dataFileS)
-
-    val conf = org.apache.spark.sql.graft.Shim.classic(spark)
-      .sparkContext.hadoopConfiguration
-
     // 1. data files (Hive k=v layout under the snapshot dir when
     // partitioned; the identity values ALSO go into each data_file's
     // spec-required partition record, which is what the resolver and
-    // the planner prune on) — written ONCE per commit call; a
-    // lost-CAS retry reuses them (the entries bind only to the data,
-    // never to the prior state)
-    val (dataDir, manifestPath) =
-      if (dataDir0 != null) {
-        // lost-CAS retry: the data + entries carry over, but the
-        // manifest must be re-homed under the NEW seq — its name's
-        // trailing `_s<seq>` is what scopes equality deletes against
-        // it, and the retry publishes at a later sequence number
-        val mp = s"$root/metadata/manifest_${token}_s$seq.avro"
-        if (manifestPath0 != mp) fs.rename(new Path(manifestPath0), new Path(mp))
-        (dataDir0, mp)
-      } else {
-        val dd = s"$root/data_s${seq}_$token"
-        val w0 = physDf.write.mode("overwrite")
-        (if (partitionBy.nonEmpty) w0.partitionBy(partitionBy: _*) else w0)
-          .parquet(dd)
-        def walkParquet(p: Path): Seq[org.apache.hadoop.fs.FileStatus] =
-          fs.listStatus(p).toSeq.flatMap { st =>
-            if (st.isDirectory) walkParquet(st.getPath)
-            else if (st.getPath.getName.endsWith(".parquet")) Seq(st)
-            else Nil
-          }
-        val parts = walkParquet(new Path(dd)).sortBy(_.getPath.toString)
-
-        // 2+3. one manifest for this batch; on a build failure after
-        // the data dir is written (footer read, partition-value
-        // conversion), remove the staged dir — no orphan parquet
-        val entries = try parts.map { st =>
-          // ONE footer open per written file yields bounds AND the row
-          // count the manifest must carry (record_count)
-          val (stats, nRows) = FooterStats.readWithCount(conf, st.getPath.toString)
-      val d = new GenericData.Record(dataFileS)
-      d.put("file_path", st.getPath.toString) // full URI: authority kept so object-store reads resolve
-      d.put("file_size_in_bytes", st.getLen)
-      d.put("record_count", nRows.getOrElse(-1L))
-      partSchemaOpt.foreach { ps =>
-        // k=v path segments -> typed identity values
-        val segs = st.getPath.getParent.toUri.getPath.split('/')
-          .filter(_.contains('=')).map { seg =>
-            val Array(k, v) = seg.split("=", 2)
-            k -> java.net.URLDecoder.decode(v, "UTF-8")
-          }.toMap
-        val pr = new GenericData.Record(ps)
-        partCols.foreach { case (c, (_, conv)) =>
-          // a null partition value writes the Hive sentinel segment:
-          // store a real null in the manifest partition record, not
-          // the sentinel literal (string) or a conv throw (int/long)
-          segs.get(c).filter(_ != "__HIVE_DEFAULT_PARTITION__")
-            .foreach(v => pr.put(c, conv(v)))
-        }
-        d.put("partition", pr)
-      }
-      val lows = new java.util.ArrayList[GenericRecord]()
-      val highs = new java.util.ArrayList[GenericRecord]()
-      val nulls = new java.util.ArrayList[GenericRecord]()
-      pub.foreach { c =>
-        // footer stats key on what the file holds: the PHYSICAL name
-        stats.get(c.phys).foreach { r =>
-          if (!r.allNulls)
-            for (lo <- boundBytes(c.tp, r.min); hi <- boundBytes(c.tp, r.max)) {
-              def kv(b: Array[Byte]) = {
-                val k = new GenericData.Record(boundKv)
-                k.put("key", c.id); k.put("value", java.nio.ByteBuffer.wrap(b)); k
-              }
-              lows.add(kv(lo)); highs.add(kv(hi))
-            }
-          if (r.noNulls) {
-            val k = new GenericData.Record(countKv)
-            k.put("key", c.id); k.put("value", 0L); nulls.add(k)
-          }
-        }
-      }
-      d.put("lower_bounds", lows); d.put("upper_bounds", highs)
-      d.put("null_value_counts", nulls)
-      d.put("nan_value_counts", new java.util.ArrayList[GenericRecord]())
-          val e = new GenericData.Record(entryS)
-          e.put("data_file", d)
-          e
-        } catch { case t: Throwable => fs.delete(new Path(dd), true); throw t }
-        // token BEFORE the _s<seq> suffix: the resolver parses the
-        // manifest's sequence number from the trailing `_s<seq>.avro`
-        // (it scopes equality deletes), and a racing writer must
-        // never overwrite another's manifest
-        val mp = s"$root/metadata/manifest_${token}_s$seq.avro"
-        writeAvro(fs, new Path(mp), entryS, entries)
-        (dd, mp)
-      }
+    // the planner prune on) and their manifest entries — written ONCE
+    // per commit call; a lost-CAS retry reuses them (the entries bind
+    // only to the data, never to the prior state)
+    val written = written0.getOrElse {
+      val dd = s"$root/data_s${seq}_$token"
+      val w0 = physDf.write.mode("overwrite")
+      (if (partitionBy.nonEmpty) w0.partitionBy(partitionBy: _*) else w0).parquet(dd)
+      manifestOf(spark, fs, dd, df.schema, partitionBy, pub)
+    }
+    // 2+3. the batch's manifest, named for THIS attempt: the trailing
+    // `_s<seq>` scopes equality deletes against it (a retry publishes
+    // at a later sequence number), and the token before it keeps a
+    // racing writer from overwriting it
+    val manifestPath = s"$root/metadata/manifest_${token}_s$seq.avro"
+    writeAvro(fs, new Path(manifestPath), written.entryS, written.entries)
     // the manifest LIST binds to the observed prior state, so each
     // attempt writes its own (token-unique: a racing writer must
     // never overwrite the list a published snapshot references)
@@ -734,21 +762,15 @@ object IcebergWriter {
          |"schemas": [{"schema-id": 0, "fields": $schemaJson}],
          |"partition-specs": [{"spec-id": 0, "fields": $specJson}],
          |"snapshots": [${(priorSnapshots :+ snapJson).mkString(", ")}]}""".stripMargin
-    // token-unique tmp: racing writers must not overwrite each
-    // other's staged body either
-    val tmp = new Path(metaDir, s".v$seq.metadata.json.$token.tmp")
     val dst = new Path(metaDir, s"v$seq.metadata.json")
-    val os = fs.create(tmp, true)
-    try os.write(body.getBytes("UTF-8")) finally os.close()
-    onBeforePublish()
-    if (fs.rename(tmp, dst)) Right(seq)
+    if (Publish(fs, dst, body, onBeforePublish)) Right(seq)
     else {
       // lost the CAS: another writer published v$seq first — drop
-      // this attempt's staged body + manifest list and report the
+      // this attempt's manifest + manifest list and report the
       // written-once artifacts back for the retry
-      fs.delete(tmp, false)
+      fs.delete(new Path(manifestPath), false)
       fs.delete(new Path(mlPath), false)
-      Left((dataDir, manifestPath))
+      Left(written)
     }
   }
 
@@ -772,23 +794,10 @@ object IcebergWriter {
     */
   def rollback(spark: SparkSession, location: String, snapshotOffset: Int): Long = {
     require(snapshotOffset > 0, s"rollback needs a positive offset, got $snapshotOffset")
-    val root = location.stripSuffix("/")
-    val metaDir = new Path(s"$root/metadata")
-    val conf = org.apache.spark.sql.graft.Shim.classic(spark)
-      .sparkContext.hadoopConfiguration
-    val fs = metaDir.getFileSystem(conf)
-    val prior = fs.listStatus(metaDir).toSeq
-      .filter(_.getPath.getName.endsWith(".json"))
-      .map { st =>
-        val in = fs.open(st.getPath)
-        try mapper.readTree(in) finally in.close()
-      }
-      .sortBy(n => Option(n.get("last-sequence-number")).map(-_.asLong()).getOrElse(0L))
-      .headOption.getOrElse(
-        throw new IllegalStateException(s"cannot rollback $location: no Iceberg metadata"))
-    val seq = Option(prior.get("last-sequence-number")).map(_.asLong()).getOrElse(0L) + 1L
-    val snaps = Option(prior.get("snapshots")).toSeq
-      .flatMap(_.elements().asScala.toSeq)
+    val (_, metaDir, fs) = metaDirOf(spark, location)
+    val prior = headOf(fs, metaDir, location, "rollback")
+    val seq = nextSeq(prior)
+    val snaps = snapshotsOf(prior)
     require(snapshotOffset < snaps.size,
       s"cannot rollback $location: offset $snapshotOffset outside ${snaps.size} snapshots")
     val target = snaps(snaps.size - 1 - snapshotOffset)
@@ -797,23 +806,11 @@ object IcebergWriter {
     val snapJson =
       s"""{"snapshot-id": $seq, "manifest-list": ${mapper.writeValueAsString(targetMl)}, """ +
         s""""summary": {"operation": "rollback", "rolled-back-to": "$targetId"}}"""
-    val body =
-      s"""{"format-version": 2, "last-sequence-number": $seq${evolutionCarryJson(
-            lastColIdOf(prior, pubColsOf(prior)), retiredOf(prior), mappedMode(prior))}${refsJson(
-            refsAfterCommit(Some(prior), seq, None))},
-         |"current-schema-id": ${Option(prior.get("current-schema-id")).map(_.asInt()).getOrElse(0)},
-         |"schemas": ${mapper.writeValueAsString(prior.get("schemas"))},
-         |"partition-specs": ${mapper.writeValueAsString(prior.get("partition-specs"))},
-         |"snapshots": [${(snaps.map(mapper.writeValueAsString) :+ snapJson).mkString(", ")}]}""".stripMargin
-    val tmp = new Path(metaDir, s".v$seq.metadata.json.tmp")
+    val body = carried(prior, seq, refsJson(refsAfterCommit(Some(prior), seq, None)),
+      snaps.map(mapper.writeValueAsString) :+ snapJson)
     val dst = new Path(metaDir, s"v$seq.metadata.json")
-    val os = fs.create(tmp, true)
-    try os.write(body.getBytes("UTF-8")) finally os.close()
-    if (!fs.rename(tmp, dst)) {
-      fs.delete(tmp, false)
-      throw new IllegalStateException(
-        s"rollback lost the publish race at $dst — re-resolve and retry")
-    }
+    if (!Publish(fs, dst, body, () => ()))
+      throw new IllegalStateException(s"rollback lost the publish race at $dst — re-resolve and retry")
     seq
   }
 
@@ -866,51 +863,20 @@ object IcebergWriter {
     */
   def tagSnapshot(spark: SparkSession, location: String, tag: String): Long = {
     require(tag != "main", "main is not a taggable name")
-    val root = location.stripSuffix("/")
-    val metaDir = new Path(s"$root/metadata")
-    val conf = org.apache.spark.sql.graft.Shim.classic(spark)
-      .sparkContext.hadoopConfiguration
-    val fs = metaDir.getFileSystem(conf)
-    val prior = fs.listStatus(metaDir).toSeq
-      .filter(_.getPath.getName.endsWith(".json"))
-      .map { st =>
-        val in = fs.open(st.getPath)
-        try mapper.readTree(in) finally in.close()
-      }
-      .sortBy(n => Option(n.get("last-sequence-number")).map(-_.asLong()).getOrElse(0L))
-      .headOption.getOrElse(throw new IllegalStateException(
-        s"no Iceberg metadata at $location — tagging needs an existing table"))
+    val (_, metaDir, fs) = metaDirOf(spark, location)
+    val prior = headOf(fs, metaDir, location, "tagging")
     val refs = refsOf(prior)
     require(!refs.contains(tag), s"ref $tag already exists at $location")
     val mainId = refs.get("main").map(_.id).orElse {
-      Option(prior.get("snapshots")).toSeq.flatMap(_.elements().asScala.toSeq)
-        .lastOption.flatMap(s => Option(s.get("snapshot-id")).map(_.asLong()))
+      snapshotsOf(prior).lastOption.flatMap(s => Option(s.get("snapshot-id")).map(_.asLong()))
     }.getOrElse(throw new IllegalStateException(
       s"cannot tag $location: table has no snapshots"))
     val newRefs = refs ++ Map("main" -> Ref(mainId, None), tag -> Ref(mainId, None))
-    val seq = Option(prior.get("last-sequence-number")).map(_.asLong()).getOrElse(0L) + 1L
-    val priorSnapshots = Option(prior.get("snapshots")).toSeq
-      .flatMap(_.elements().asScala.toSeq.map(mapper.writeValueAsString))
-    val schemasJson = Option(prior.get("schemas")).map(mapper.writeValueAsString)
-      .getOrElse("""[{"schema-id": 0, "fields": []}]""")
-    val specsJson = Option(prior.get("partition-specs"))
-      .map(n => s""",
-         |"partition-specs": ${mapper.writeValueAsString(n)}""".stripMargin).getOrElse("")
-    val body =
-      s"""{"format-version": 2, "last-sequence-number": $seq${evolutionCarryJson(
-            lastColIdOf(prior, pubColsOf(prior)), retiredOf(prior), mappedMode(prior))}${refsJson(newRefs)},
-         |"current-schema-id": ${Option(prior.get("current-schema-id")).map(_.asInt()).getOrElse(0)},
-         |"schemas": $schemasJson$specsJson,
-         |"snapshots": [${priorSnapshots.mkString(", ")}]}""".stripMargin
-    val tmp = new Path(metaDir, s".v$seq.metadata.json.tmp")
+    val seq = nextSeq(prior)
+    val body = carried(prior, seq, refsJson(newRefs), snapshotsOf(prior).map(mapper.writeValueAsString))
     val dst = new Path(metaDir, s"v$seq.metadata.json")
-    val os = fs.create(tmp, true)
-    try os.write(body.getBytes("UTF-8")) finally os.close()
-    if (!fs.rename(tmp, dst)) {
-      fs.delete(tmp, false)
-      throw new IllegalStateException(
-        s"tag lost the publish race at $dst — re-resolve and retry")
-    }
+    if (!Publish(fs, dst, body, () => ()))
+      throw new IllegalStateException(s"tag lost the publish race at $dst — re-resolve and retry")
     mainId
   }
 
@@ -927,46 +893,16 @@ object IcebergWriter {
     */
   def dropRef(spark: SparkSession, location: String, name: String): Long = {
     require(name != "main", "main is not a droppable ref")
-    val root = location.stripSuffix("/")
-    val metaDir = new Path(s"$root/metadata")
-    val conf = org.apache.spark.sql.graft.Shim.classic(spark)
-      .sparkContext.hadoopConfiguration
-    val fs = metaDir.getFileSystem(conf)
-    val prior = fs.listStatus(metaDir).toSeq
-      .filter(_.getPath.getName.endsWith(".json"))
-      .map { st =>
-        val in = fs.open(st.getPath)
-        try mapper.readTree(in) finally in.close()
-      }
-      .sortBy(n => Option(n.get("last-sequence-number")).map(-_.asLong()).getOrElse(0L))
-      .headOption.getOrElse(throw new IllegalStateException(
-        s"no Iceberg metadata at $location"))
+    val (_, metaDir, fs) = metaDirOf(spark, location)
+    val prior = headOf(fs, metaDir, location, "dropping a ref")
     val refs = refsOf(prior)
     require(refs.contains(name), s"ref $name does not exist at $location")
     val newRefs = refs - name
-    val seq = Option(prior.get("last-sequence-number")).map(_.asLong()).getOrElse(0L) + 1L
-    val priorSnapshots = Option(prior.get("snapshots")).toSeq
-      .flatMap(_.elements().asScala.toSeq.map(mapper.writeValueAsString))
-    val schemasJson = Option(prior.get("schemas")).map(mapper.writeValueAsString)
-      .getOrElse("""[{"schema-id": 0, "fields": []}]""")
-    val specsJson = Option(prior.get("partition-specs"))
-      .map(n => s""",
-         |"partition-specs": ${mapper.writeValueAsString(n)}""".stripMargin).getOrElse("")
-    val body =
-      s"""{"format-version": 2, "last-sequence-number": $seq${evolutionCarryJson(
-            lastColIdOf(prior, pubColsOf(prior)), retiredOf(prior), mappedMode(prior))}${refsJson(newRefs)},
-         |"current-schema-id": ${Option(prior.get("current-schema-id")).map(_.asInt()).getOrElse(0)},
-         |"schemas": $schemasJson$specsJson,
-         |"snapshots": [${priorSnapshots.mkString(", ")}]}""".stripMargin
-    val tmp = new Path(metaDir, s".v$seq.metadata.json.tmp")
+    val seq = nextSeq(prior)
+    val body = carried(prior, seq, refsJson(newRefs), snapshotsOf(prior).map(mapper.writeValueAsString))
     val dst = new Path(metaDir, s"v$seq.metadata.json")
-    val os = fs.create(tmp, true)
-    try os.write(body.getBytes("UTF-8")) finally os.close()
-    if (!fs.rename(tmp, dst)) {
-      fs.delete(tmp, false)
-      throw new IllegalStateException(
-        s"dropRef lost the publish race at $dst — re-resolve and retry")
-    }
+    if (!Publish(fs, dst, body, () => ()))
+      throw new IllegalStateException(s"dropRef lost the publish race at $dst — re-resolve and retry")
     seq
   }
 
@@ -980,20 +916,8 @@ object IcebergWriter {
     */
   def publishBranch(spark: SparkSession, location: String, branchName: String): Long = {
     require(branchName != "main", "main is not a publishable branch")
-    val root = location.stripSuffix("/")
-    val metaDir = new Path(s"$root/metadata")
-    val conf = org.apache.spark.sql.graft.Shim.classic(spark)
-      .sparkContext.hadoopConfiguration
-    val fs = metaDir.getFileSystem(conf)
-    val prior = fs.listStatus(metaDir).toSeq
-      .filter(_.getPath.getName.endsWith(".json"))
-      .map { st =>
-        val in = fs.open(st.getPath)
-        try mapper.readTree(in) finally in.close()
-      }
-      .sortBy(n => Option(n.get("last-sequence-number")).map(-_.asLong()).getOrElse(0L))
-      .headOption.getOrElse(throw new IllegalStateException(
-        s"no Iceberg metadata at $location — publish needs an existing table"))
+    val (_, metaDir, fs) = metaDirOf(spark, location)
+    val prior = headOf(fs, metaDir, location, "publish")
     val refs = refsOf(prior)
     val head = refs.getOrElse(branchName, throw new IllegalArgumentException(
       s"no branch $branchName at $location (refs: ${refs.keys.mkString(", ")})"))
@@ -1010,29 +934,11 @@ object IcebergWriter {
           s"since $branchName was staged at $location — re-stage on the current main")
     }
     val newRefs = (refs - branchName) + ("main" -> Ref(head.id, None))
-    val seq = Option(prior.get("last-sequence-number")).map(_.asLong()).getOrElse(0L) + 1L
-    val priorSnapshots = Option(prior.get("snapshots")).toSeq
-      .flatMap(_.elements().asScala.toSeq.map(mapper.writeValueAsString))
-    val schemasJson = Option(prior.get("schemas")).map(mapper.writeValueAsString)
-      .getOrElse("""[{"schema-id": 0, "fields": []}]""")
-    val specsJson = Option(prior.get("partition-specs"))
-      .map(n => s""",
-         |"partition-specs": ${mapper.writeValueAsString(n)}""".stripMargin).getOrElse("")
-    val body =
-      s"""{"format-version": 2, "last-sequence-number": $seq${evolutionCarryJson(
-            lastColIdOf(prior, pubColsOf(prior)), retiredOf(prior), mappedMode(prior))}${refsJson(newRefs)},
-         |"current-schema-id": ${Option(prior.get("current-schema-id")).map(_.asInt()).getOrElse(0)},
-         |"schemas": $schemasJson$specsJson,
-         |"snapshots": [${priorSnapshots.mkString(", ")}]}""".stripMargin
-    val tmp = new Path(metaDir, s".v$seq.metadata.json.tmp")
+    val seq = nextSeq(prior)
+    val body = carried(prior, seq, refsJson(newRefs), snapshotsOf(prior).map(mapper.writeValueAsString))
     val dst = new Path(metaDir, s"v$seq.metadata.json")
-    val os = fs.create(tmp, true)
-    try os.write(body.getBytes("UTF-8")) finally os.close()
-    if (!fs.rename(tmp, dst)) {
-      fs.delete(tmp, false)
-      throw new IllegalStateException(
-        s"publish lost the race at $dst — re-resolve and retry")
-    }
+    if (!Publish(fs, dst, body, () => ()))
+      throw new IllegalStateException(s"publish lost the race at $dst — re-resolve and retry")
     seq
   }
 
@@ -1049,20 +955,8 @@ object IcebergWriter {
   def updateSpec(spark: SparkSession, location: String,
       fields: Seq[(String, String, String)]): Long = {
     require(fields.nonEmpty, "updateSpec needs at least one spec field")
-    val root = location.stripSuffix("/")
-    val metaDir = new Path(s"$root/metadata")
-    val conf = org.apache.spark.sql.graft.Shim.classic(spark)
-      .sparkContext.hadoopConfiguration
-    val fs = metaDir.getFileSystem(conf)
-    val prior = fs.listStatus(metaDir).toSeq
-      .filter(_.getPath.getName.endsWith(".json"))
-      .map { st =>
-        val in = fs.open(st.getPath)
-        try mapper.readTree(in) finally in.close()
-      }
-      .sortBy(n => Option(n.get("last-sequence-number")).map(-_.asLong()).getOrElse(0L))
-      .headOption.getOrElse(throw new IllegalStateException(
-        s"no Iceberg metadata at $location — spec evolution needs an existing table"))
+    val (_, metaDir, fs) = metaDirOf(spark, location)
+    val prior = headOf(fs, metaDir, location, "spec evolution")
     val pub = pubColsOf(prior)
     val idByName = pub.map(c => c.name -> c.id).toMap
     // Partition evolution ADDS fields: the prior spec's fields carry
@@ -1095,27 +989,19 @@ object IcebergWriter {
       s"""{"name": ${mapper.writeValueAsString(nm)}, "transform": "$tr", """ +
         s""""source-id": $sid, "field-id": ${1000 + i}}"""
     }.mkString("[", ", ", "]")
-    val seq = Option(prior.get("last-sequence-number")).map(_.asLong()).getOrElse(0L) + 1L
-    val priorSnapshots = Option(prior.get("snapshots")).toSeq
-      .flatMap(_.elements().asScala.toSeq.map(mapper.writeValueAsString))
+    val seq = nextSeq(prior)
     val schemasJson = Option(prior.get("schemas")).map(mapper.writeValueAsString)
       .getOrElse("""[{"schema-id": 0, "fields": []}]""")
     val body =
       s"""{"format-version": 2, "last-sequence-number": $seq${evolutionCarryJson(
             lastColIdOf(prior, pub), retiredOf(prior), mappedMode(prior))}${refsVerbatim(prior)},
-         |"current-schema-id": ${Option(prior.get("current-schema-id")).map(_.asInt()).getOrElse(0)},
+         |"current-schema-id": ${prior.path("current-schema-id").asInt(0)},
          |"schemas": $schemasJson,
          |"partition-specs": [{"spec-id": 0, "fields": $specJson}],
-         |"snapshots": [${priorSnapshots.mkString(", ")}]}""".stripMargin
-    val tmp = new Path(metaDir, s".v$seq.metadata.json.tmp")
+         |"snapshots": [${snapshotsOf(prior).map(mapper.writeValueAsString).mkString(", ")}]}""".stripMargin
     val dst = new Path(metaDir, s"v$seq.metadata.json")
-    val os = fs.create(tmp, true)
-    try os.write(body.getBytes("UTF-8")) finally os.close()
-    if (!fs.rename(tmp, dst)) {
-      fs.delete(tmp, false)
-      throw new IllegalStateException(
-        s"spec evolution lost the publish race at $dst — re-resolve and retry")
-    }
+    if (!Publish(fs, dst, body, () => ()))
+      throw new IllegalStateException(s"spec evolution lost the publish race at $dst — re-resolve and retry")
     seq
   }
 
@@ -1127,20 +1013,8 @@ object IcebergWriter {
     */
   private def evolveSchema(spark: SparkSession, location: String, what: String)(
       f: (Seq[PubCol], Seq[(String, String)]) => (Seq[PubCol], Seq[(String, String)])): Long = {
-    val root = location.stripSuffix("/")
-    val metaDir = new Path(s"$root/metadata")
-    val conf = org.apache.spark.sql.graft.Shim.classic(spark)
-      .sparkContext.hadoopConfiguration
-    val fs = metaDir.getFileSystem(conf)
-    val prior = fs.listStatus(metaDir).toSeq
-      .filter(_.getPath.getName.endsWith(".json"))
-      .map { st =>
-        val in = fs.open(st.getPath)
-        try mapper.readTree(in) finally in.close()
-      }
-      .sortBy(n => Option(n.get("last-sequence-number")).map(-_.asLong()).getOrElse(0L))
-      .headOption.getOrElse(throw new IllegalStateException(
-        s"no Iceberg metadata at $location — schema $what needs an existing table"))
+    val (_, metaDir, fs) = metaDirOf(spark, location)
+    val prior = headOf(fs, metaDir, location, s"schema $what")
     val pub = pubColsOf(prior)
     require(pub.nonEmpty, s"schema $what at $location: table metadata carries no schema")
     // partition and transform-source columns are structural: their
@@ -1159,27 +1033,18 @@ object IcebergWriter {
       require(!protectedIds.contains(id) && !protectedNames.contains(c.name),
         s"cannot $what ${c.name} at $location: it is a partition/transform-source column")
     }
-    val seq = Option(prior.get("last-sequence-number")).map(_.asLong()).getOrElse(0L) + 1L
-    val priorSnapshots = Option(prior.get("snapshots")).toSeq
-      .flatMap(_.elements().asScala.toSeq.map(mapper.writeValueAsString))
+    val seq = nextSeq(prior)
     val specsJson = Option(prior.get("partition-specs"))
-      .map(n => s""",
-         |"partition-specs": ${mapper.writeValueAsString(n)}""".stripMargin).getOrElse("")
+      .map(n => s""",\n"partition-specs": ${mapper.writeValueAsString(n)}""").getOrElse("")
     val body =
       s"""{"format-version": 2, "last-sequence-number": $seq${evolutionCarryJson(
             lastColIdOf(prior, pub), newRetired, mapped = true)}${refsVerbatim(prior)},
          |"current-schema-id": 0,
          |"schemas": [{"schema-id": 0, "fields": ${schemaFieldsJson(newPub)}}]$specsJson,
-         |"snapshots": [${priorSnapshots.mkString(", ")}]}""".stripMargin
-    val tmp = new Path(metaDir, s".v$seq.metadata.json.tmp")
+         |"snapshots": [${snapshotsOf(prior).map(mapper.writeValueAsString).mkString(", ")}]}""".stripMargin
     val dst = new Path(metaDir, s"v$seq.metadata.json")
-    val os = fs.create(tmp, true)
-    try os.write(body.getBytes("UTF-8")) finally os.close()
-    if (!fs.rename(tmp, dst)) {
-      fs.delete(tmp, false)
-      throw new IllegalStateException(
-        s"schema $what lost the publish race at $dst — re-resolve and retry")
-    }
+    if (!Publish(fs, dst, body, () => ()))
+      throw new IllegalStateException(s"schema $what lost the publish race at $dst — re-resolve and retry")
     seq
   }
 
@@ -1202,33 +1067,12 @@ object IcebergWriter {
   def commitDeletes(spark: SparkSession, location: String,
       deleteFiles: Seq[(String, Int, Seq[String])]): Long = {
     require(deleteFiles.nonEmpty, "commitDeletes needs at least one delete file")
-    val root = location.stripSuffix("/")
-    val metaDir = new Path(s"$root/metadata")
-    val conf = org.apache.spark.sql.graft.Shim.classic(spark)
-      .sparkContext.hadoopConfiguration
-    val fs = metaDir.getFileSystem(conf)
-    val prior = fs.listStatus(metaDir).toSeq
-      .filter(_.getPath.getName.endsWith(".json"))
-      .map { st =>
-        val in = fs.open(st.getPath)
-        try mapper.readTree(in) finally in.close()
-      }
-      .sortBy(n => Option(n.get("last-sequence-number")).map(-_.asLong()).getOrElse(0L))
-      .headOption.getOrElse(throw new IllegalStateException(
-        s"no Iceberg metadata at $location — commitDeletes extends an existing table"))
-    val seq = Option(prior.get("last-sequence-number")).map(_.asLong()).getOrElse(0L) + 1L
-    val priorSnapshots = Option(prior.get("snapshots")).toSeq
-      .flatMap(_.elements().asScala.toSeq.map(mapper.writeValueAsString))
-    val priorManifests = {
-      val all = Option(prior.get("snapshots")).toSeq.flatMap(_.elements().asScala.toSeq)
-      // deletes target MAIN: with refs present, extend main's head —
-      // never a staged branch snapshot that happened to publish last
-      val base = refsOf(prior).get("main").map(_.id)
-        .flatMap(id => all.find(s => Option(s.get("snapshot-id")).exists(_.asLong() == id)))
-        .orElse(all.lastOption)
-      base.flatMap(s => Option(s.get("manifest-list")).map(_.asText())).toSeq
-        .flatMap(ml => readAvro(fs, new Path(ml)).map(_.get("manifest_path").toString))
-    }
+    val (root, metaDir, fs) = metaDirOf(spark, location)
+    val prior = headOf(fs, metaDir, location, "commitDeletes")
+    val seq = nextSeq(prior)
+    // token-unique: a racing writer of the same seq must never
+    // overwrite the manifests the winner's snapshot references
+    val token = java.util.UUID.randomUUID().toString.take(8)
     // field ids come from the CURRENT schema (same position rule as commit)
     val idByName: Map[String, Int] = Option(prior.get("schemas")).toSeq.flatMap { arr =>
       arr.elements().asScala.toSeq.flatMap { sch =>
@@ -1252,37 +1096,27 @@ object IcebergWriter {
       e.put("data_file", d)
       e
     }
-    val manifestPath = s"$root/metadata/manifest_del_s$seq.avro"
+    val manifestPath = s"$root/metadata/manifest_del${token}_s$seq.avro"
     writeAvro(fs, new Path(manifestPath), delEntryS, entries)
-    val mlPath = s"$root/metadata/ml_s$seq.avro"
-    writeAvro(fs, new Path(mlPath), mlS, (priorManifests :+ manifestPath).map { mp =>
+    // deletes target MAIN's head
+    val mlPath = s"$root/metadata/ml_s${seq}_$token.avro"
+    writeAvro(fs, new Path(mlPath), mlS, (mainManifests(fs, prior) :+ manifestPath).map { mp =>
       val r = new GenericData.Record(mlS)
       r.put("manifest_path", mp)
       r
     })
     val snapJson = s"""{"snapshot-id": $seq, "manifest-list": ${mapper.writeValueAsString(mlPath)}}"""
-    val schemasJson = Option(prior.get("schemas")).map(mapper.writeValueAsString)
-      .getOrElse("""[{"schema-id": 0, "fields": []}]""")
-    val carry = evolutionCarryJson(
-      lastColIdOf(prior, pubColsOf(prior)), retiredOf(prior), mappedMode(prior)) +
-      refsJson(refsAfterCommit(Some(prior), seq, None))
-    // carry the partition spec: a MOR delete must not strip the
+    // carries the partition spec: a MOR delete must not strip the
     // table's layout metadata (hidden-transform pruning and the
     // append-time spec-stability check both read the CURRENT json)
-    val specsJson = Option(prior.get("partition-specs"))
-      .map(n => s""",
-         |"partition-specs": ${mapper.writeValueAsString(n)}""".stripMargin).getOrElse("")
-    val body =
-      s"""{"format-version": 2, "last-sequence-number": $seq$carry,
-         |"current-schema-id": ${Option(prior.get("current-schema-id")).map(_.asInt()).getOrElse(0)},
-         |"schemas": $schemasJson$specsJson,
-         |"snapshots": [${(priorSnapshots :+ snapJson).mkString(", ")}]}""".stripMargin
-    val tmp = new Path(metaDir, s".v$seq.metadata.json.tmp")
+    val body = carried(prior, seq, refsJson(refsAfterCommit(Some(prior), seq, None)),
+      snapshotsOf(prior).map(mapper.writeValueAsString) :+ snapJson)
     val dst = new Path(metaDir, s"v$seq.metadata.json")
-    val os = fs.create(tmp, true)
-    try os.write(body.getBytes("UTF-8")) finally os.close()
-    if (!fs.rename(tmp, dst))
+    if (!Publish(fs, dst, body, () => ())) {
+      fs.delete(new Path(manifestPath), false)
+      fs.delete(new Path(mlPath), false)
       throw new IllegalStateException(s"snapshot $seq already published at $dst")
+    }
     seq
   }
 
@@ -1303,20 +1137,8 @@ object IcebergWriter {
   def commitMerge(spark: SparkSession, location: String,
       df: org.apache.spark.sql.DataFrame, keyCols: Seq[String]): Long = {
     require(keyCols.nonEmpty, "merge needs at least one key column")
-    val root = location.stripSuffix("/")
-    val metaDir = new Path(s"$root/metadata")
-    val conf = org.apache.spark.sql.graft.Shim.classic(spark)
-      .sparkContext.hadoopConfiguration
-    val fs = metaDir.getFileSystem(conf)
-    val prior = fs.listStatus(metaDir).toSeq
-      .filter(_.getPath.getName.endsWith(".json"))
-      .map { st =>
-        val in = fs.open(st.getPath)
-        try mapper.readTree(in) finally in.close()
-      }
-      .sortBy(n => Option(n.get("last-sequence-number")).map(-_.asLong()).getOrElse(0L))
-      .headOption.getOrElse(throw new IllegalStateException(
-        s"no Iceberg metadata at $location — commitMerge extends an existing table"))
+    val (root, metaDir, fs) = metaDirOf(spark, location)
+    val prior = headOf(fs, metaDir, location, "commitMerge")
     // Identity-partitioned tables merge like unpartitioned ones: the
     // batch lands in the declared partition layout (records in the
     // manifest partition field, Hive k=v paths) and the equality
@@ -1334,22 +1156,13 @@ object IcebergWriter {
         Option(f.get("name")).map(_.asText()).getOrElse(
           throw new IllegalStateException(s"unnamed partition-spec field at $location"))
       }
-    val seq = Option(prior.get("last-sequence-number")).map(_.asLong()).getOrElse(0L) + 1L
+    val seq = nextSeq(prior)
     // exact-schema rule, as on appends: positional ids must bind to
     // the same columns
     val idFields = df.schema.fields.zipWithIndex.flatMap { case (f, i) =>
       icebergType(f.dataType).map(tp => (i + 1, f.name, tp))
     }
-    val declared = Option(prior.get("schemas")).flatMap { arr =>
-      arr.elements().asScala.toSeq.headOption
-    }.flatMap(s => Option(s.get("fields"))).map { fsn =>
-      fsn.elements().asScala.toSeq.flatMap { f =>
-        for {
-          nm <- Option(f.get("name")).map(_.asText())
-          tp <- Option(f.get("type")).filter(_.isTextual).map(_.asText())
-        } yield (nm, tp)
-      }
-    }.getOrElse(Nil)
+    val declared = declaredColumns(prior)
     val mine = idFields.map { case (_, nm, tp) => (nm, tp) }.toSeq
     require(declared.isEmpty || declared == mine,
       s"merge schema mismatch for Iceberg table at $root: table declares " +
@@ -1381,82 +1194,9 @@ object IcebergWriter {
     val dd = s"$root/data_s${seq}_$token"
     val w0 = physDf.write.mode("overwrite")
     (if (partitionBy.nonEmpty) w0.partitionBy(partitionBy: _*) else w0).parquet(dd)
-    def walkParquet(p: Path): Seq[org.apache.hadoop.fs.FileStatus] =
-      fs.listStatus(p).toSeq.flatMap { st =>
-        if (st.isDirectory) walkParquet(st.getPath)
-        else if (st.getPath.getName.endsWith(".parquet")) Seq(st)
-        else Nil
-      }
-    val partCols = partitionBy.map { c =>
-      val f = df.schema.find(_.name == c).getOrElse(throw new IllegalArgumentException(
-        s"partition column $c not in the merge batch schema"))
-      (c, partitionAvro(c, f.dataType))
-    }
-    val partSchemaOpt: Option[Schema] =
-      if (partCols.isEmpty) None
-      else Some {
-        val b = SchemaBuilder.record("r102").fields()
-        partCols.foldLeft(b) { case (acc, (c, (s, _))) =>
-          acc.name(c).`type`(s).withDefault(null)
-        }.endRecord()
-      }
-    val dataFileS = dataFileSchema(partSchemaOpt)
-    val entryS = entrySchema(dataFileS)
-    // manifest-entry construction can fail after the data dir is
-    // already written (footer read, partition-value conversion):
-    // remove the staged dir rather than leaving orphan parquet
-    // (ADVICE r14 low)
-    val entries = try walkParquet(new Path(dd)).sortBy(_.getPath.toString).map { st =>
-      val (stats, nRows) = FooterStats.readWithCount(conf, st.getPath.toString)
-      val d = new GenericData.Record(dataFileS)
-      d.put("file_path", st.getPath.toString) // full URI: authority kept so object-store reads resolve
-      d.put("file_size_in_bytes", st.getLen)
-      d.put("record_count", nRows.getOrElse(-1L))
-      partSchemaOpt.foreach { ps =>
-        // k=v path segments -> typed identity values (as commitInternal)
-        val segs = st.getPath.getParent.toUri.getPath.split('/')
-          .filter(_.contains('=')).map { seg =>
-            val Array(k, v) = seg.split("=", 2)
-            k -> java.net.URLDecoder.decode(v, "UTF-8")
-          }.toMap
-        val pr = new GenericData.Record(ps)
-        partCols.foreach { case (c, (_, conv)) =>
-          // a null partition value writes the Hive sentinel segment:
-          // store a real null in the manifest partition record, not
-          // the sentinel literal (string) or a conv throw (int/long)
-          segs.get(c).filter(_ != "__HIVE_DEFAULT_PARTITION__")
-            .foreach(v => pr.put(c, conv(v)))
-        }
-        d.put("partition", pr)
-      }
-      val lows = new java.util.ArrayList[GenericRecord]()
-      val highs = new java.util.ArrayList[GenericRecord]()
-      val nulls = new java.util.ArrayList[GenericRecord]()
-      pub.foreach { c =>
-        stats.get(c.phys).foreach { r =>
-          if (!r.allNulls)
-            for (lo <- boundBytes(c.tp, r.min); hi <- boundBytes(c.tp, r.max)) {
-              def kv(b: Array[Byte]) = {
-                val k = new GenericData.Record(boundKv)
-                k.put("key", c.id); k.put("value", java.nio.ByteBuffer.wrap(b)); k
-              }
-              lows.add(kv(lo)); highs.add(kv(hi))
-            }
-          if (r.noNulls) {
-            val k = new GenericData.Record(countKv)
-            k.put("key", c.id); k.put("value", 0L); nulls.add(k)
-          }
-        }
-      }
-      d.put("lower_bounds", lows); d.put("upper_bounds", highs)
-      d.put("null_value_counts", nulls)
-      d.put("nan_value_counts", new java.util.ArrayList[GenericRecord]())
-      val e = new GenericData.Record(entryS)
-      e.put("data_file", d)
-      e
-    } catch { case t: Throwable => fs.delete(new Path(dd), true); throw t }
+    val written = manifestOf(spark, fs, dd, df.schema, partitionBy, pub)
     val dataManifest = s"$root/metadata/manifest_${token}_s$seq.avro"
-    writeAvro(fs, new Path(dataManifest), entryS, entries)
+    writeAvro(fs, new Path(dataManifest), written.entryS, written.entries)
 
     // 2. the equality delete file over the source keys
     val delDir = s"$root/deletes_s${seq}_$token"
@@ -1482,49 +1222,23 @@ object IcebergWriter {
     val delManifest = s"$root/metadata/manifest_del${token}_s$seq.avro"
     writeAvro(fs, new Path(delManifest), delEntryS, delEntries)
 
-    // 3+4. one manifest list referencing prior manifests + BOTH of
+    // 3+4. one manifest list referencing main's manifests + BOTH of
     // this snapshot's, one atomic metadata publish
-    val priorSnapshots = Option(prior.get("snapshots")).toSeq
-      .flatMap(_.elements().asScala.toSeq.map(mapper.writeValueAsString))
-    val priorManifests = {
-      val all = Option(prior.get("snapshots")).toSeq.flatMap(_.elements().asScala.toSeq)
-      // merge targets MAIN: with refs present, extend main's head
-      val base = refsOf(prior).get("main").map(_.id)
-        .flatMap(id => all.find(s => Option(s.get("snapshot-id")).exists(_.asLong() == id)))
-        .orElse(all.lastOption)
-      base.flatMap(s => Option(s.get("manifest-list")).map(_.asText())).toSeq
-        .flatMap(ml => readAvro(fs, new Path(ml)).map(_.get("manifest_path").toString))
-    }
     val mlPath = s"$root/metadata/ml_s${seq}_$token.avro"
     writeAvro(fs, new Path(mlPath), mlS,
-      (priorManifests :+ dataManifest :+ delManifest).map { mp =>
+      (mainManifests(fs, prior) :+ dataManifest :+ delManifest).map { mp =>
         val r = new GenericData.Record(mlS)
         r.put("manifest_path", mp)
         r
       })
     val snapJson = s"""{"snapshot-id": $seq, "manifest-list": ${mapper.writeValueAsString(mlPath)}, "summary": {"operation": "merge"}}"""
-    val schemasJson = Option(prior.get("schemas")).map(mapper.writeValueAsString)
-      .getOrElse("""[{"schema-id": 0, "fields": []}]""")
-    val carry = evolutionCarryJson(
-      lastColIdOf(prior, pubColsOf(prior)), retiredOf(prior), mappedMode(prior)) +
-      refsJson(refsAfterCommit(Some(prior), seq, None))
-    // carry the partition spec VERBATIM: a partitioned table whose
+    // carries the partition spec VERBATIM: a partitioned table whose
     // merge dropped the spec would stop pruning (and mis-bind the
     // next append's spec-stability check)
-    val specsJson = Option(prior.get("partition-specs"))
-      .map(n => s""",
-         |"partition-specs": ${mapper.writeValueAsString(n)}""".stripMargin).getOrElse("")
-    val body =
-      s"""{"format-version": 2, "last-sequence-number": $seq$carry,
-         |"current-schema-id": ${Option(prior.get("current-schema-id")).map(_.asInt()).getOrElse(0)},
-         |"schemas": $schemasJson$specsJson,
-         |"snapshots": [${(priorSnapshots :+ snapJson).mkString(", ")}]}""".stripMargin
-    val tmp = new Path(metaDir, s".v$seq.metadata.json.$token.tmp")
+    val body = carried(prior, seq, refsJson(refsAfterCommit(Some(prior), seq, None)),
+      snapshotsOf(prior).map(mapper.writeValueAsString) :+ snapJson)
     val dst = new Path(metaDir, s"v$seq.metadata.json")
-    val os = fs.create(tmp, true)
-    try os.write(body.getBytes("UTF-8")) finally os.close()
-    if (!fs.rename(tmp, dst)) {
-      fs.delete(tmp, false)
+    if (!Publish(fs, dst, body, () => ())) {
       fs.delete(new Path(mlPath), false)
       throw new IllegalStateException(
         s"merge lost the publish race at $dst — its read-set may be " +
@@ -1540,35 +1254,10 @@ object IcebergWriter {
     * `batchId > lastTxn`.
     */
   def lastTxn(spark: SparkSession, location: String, appId: String): Option[Long] = {
-    val metaDir = new Path(s"${location.stripSuffix("/")}/metadata")
-    val conf = org.apache.spark.sql.graft.Shim.classic(spark)
-      .sparkContext.hadoopConfiguration
-    val fs = metaDir.getFileSystem(conf)
-    if (!fs.exists(metaDir)) return None
-    // per-micro-batch read: stay O(1), not O(versions). This writer
-    // names its jsons v<seq>.metadata.json, so when every json
-    // matches that pattern ONE read (the max seq) suffices — and that
-    // json carries every prior snapshot. Foreign naming falls back to
-    // the read-all content sort.
-    val jsons = fs.listStatus(metaDir).toSeq
-      .filter(_.getPath.getName.endsWith(".json"))
-    val VName = """v(\d+)\.metadata\.json""".r
-    val named = jsons.flatMap(st => st.getPath.getName match {
-      case VName(sq) => Some((sq.toLong, st))
-      case _         => None
-    })
-    val candidates =
-      if (named.size == jsons.size && named.nonEmpty)
-        Seq(named.maxBy(_._1)._2)
-      else jsons
-    val latest = candidates
-      .map { st =>
-        val in = fs.open(st.getPath)
-        try mapper.readTree(in) finally in.close()
-      }
-      .sortBy(n => Option(n.get("last-sequence-number")).map(-_.asLong()).getOrElse(0L))
-      .headOption
-    txnMarks(latest, appId).maxOption
+    // per-micro-batch read: the head read reads only the newest json
+    // (which carries every prior snapshot) when the names allow
+    val (_, metaDir, fs) = metaDirOf(spark, location)
+    txnMarks(IcebergSnapshotResolver.metadataAt(fs, metaDir, 0), appId).maxOption
   }
 
   /** Txn marks `appId` has recorded in a metadata json's snapshot
@@ -1577,7 +1266,7 @@ object IcebergWriter {
     * JsonNode its sequence number derives from, which is what makes
     * the mark check atomic with the rename-CAS publish).
     */
-  private def txnMarks(metadata: Option[com.fasterxml.jackson.databind.JsonNode],
+  private def txnMarks(metadata: Option[Json],
       appId: String): Seq[Long] =
     metadata.toSeq.flatMap { n =>
       Option(n.get("snapshots")).toSeq.flatMap(_.elements().asScala.toSeq).flatMap { s =>
@@ -1589,7 +1278,7 @@ object IcebergWriter {
       }
     }
 
-  private def writeAvro(fs: org.apache.hadoop.fs.FileSystem, path: Path,
+  private def writeAvro(fs: FileSystem, path: Path,
       schema: Schema, rows: Seq[GenericRecord]): Unit = {
     val local = java.io.File.createTempFile("graft-iw", ".avro")
     try {
@@ -1606,7 +1295,7 @@ object IcebergWriter {
     } finally local.delete()
   }
 
-  private def readAvro(fs: org.apache.hadoop.fs.FileSystem, path: Path): Seq[GenericRecord] = {
+  private def readAvro(fs: FileSystem, path: Path): Seq[GenericRecord] = {
     val local = java.io.File.createTempFile("graft-iw-r", ".avro")
     try {
       val out = new java.io.FileOutputStream(local)

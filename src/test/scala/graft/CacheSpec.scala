@@ -22,12 +22,15 @@ class CacheSpec extends AnyFunSuite {
     assert(loads.get() == 2)
   }
 
-  test("invalidateMatching drops only keys containing the substring") {
+  test("invalidateMatching drops only keys starting with the prefix") {
     val cache = new TtlCache[String](10, 60000)
-    cache.get("db_tbl_v0")("a"); cache.get("db_other_v0")("b")
-    cache.invalidateMatching("db_tbl")
-    assert(cache.getIfPresent("db_tbl_v0").isEmpty)
-    assert(cache.getIfPresent("db_other_v0").contains("b"))
+    Seq("db.tbl#v0", "db.tbl#v1", "db.tbl_wide#v0", "xdb.tbl#v0", "db.other#v0")
+      .foreach(k => cache.get(k)(k))
+    cache.invalidateMatching("db.tbl#v")
+    assert(cache.getIfPresent("db.tbl#v0").isEmpty && cache.getIfPresent("db.tbl#v1").isEmpty)
+    // a key merely CONTAINING the prefix's table name stays
+    Seq("db.tbl_wide#v0", "xdb.tbl#v0", "db.other#v0")
+      .foreach(k => assert(cache.getIfPresent(k).contains(k), k))
   }
 
   test("single-flight: concurrent gets load once") {

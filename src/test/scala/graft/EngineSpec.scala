@@ -1192,4 +1192,34 @@ class EngineSpec extends AnyFunSuite {
     assert(selections.forall(_ == want), s"selections: $selections, want $want")
     assert(eng.query(sql).collect().map(_.getLong(0)).sorted.toSeq == Seq(292L, 295L, 298L))
   }
+
+  test("invalidating or appending to a table re-lists it alone, not a table whose name extends it") {
+    import spark.implicits._
+    val base = s"${new java.io.File("target").getAbsolutePath}/inval_prefix_${System.nanoTime()}"
+    Seq(1L, 2L).toDF("x").coalesce(1).write.parquet(s"$base/ev")
+    Seq(3L).toDF("x").coalesce(1).write.parquet(s"$base/ev_2")
+    val cat = new FixtureCatalog()
+      .register(GlueTable("d", "ev", Some(s"$base/ev")))
+      .register(GlueTable("d", "ev_2", Some(s"$base/ev_2")))
+    val listed = new java.util.concurrent.ConcurrentHashMap[String, Int]()
+    val inner = new graft.listing.HadoopFileLister(spark.sparkContext.hadoopConfiguration)
+    val lister = new graft.listing.FileLister {
+      override def list(location: String, keys: Seq[String]): Seq[graft.model.S3FileInfo] = {
+        listed.merge(new Path(location).getName, 1, _ + _)
+        inner.list(location, keys)
+      }
+    }
+    val eng = new GlueTableEngine(spark, cat, listerOverride = Some(lister))
+    def rows(t: String): Long = eng.tableDF("d", t).count()
+    assert(rows("ev") == 2L && rows("ev_2") == 1L)
+    eng.invalidateTable("d", "ev")
+    assert(rows("ev") == 2L && rows("ev_2") == 1L)
+    assert(listed.get("ev") == 2 && listed.get("ev_2") == 1, listed)
+    // an append: `ev` becomes a Delta table (its log, not the lister,
+    // is re-read after the commit); the sibling keeps its listing
+    eng.writeDeltaTable(Seq(1L, 2L).toDF("x"), "d", "ev", s"$base/ev_delta")
+    eng.appendDeltaTable(Seq(4L).toDF("x"), "d", "ev")
+    assert(rows("ev") == 3L && rows("ev_2") == 1L)
+    assert(listed.get("ev_2") == 1, listed)
+  }
 }

@@ -1002,4 +1002,34 @@ class IcebergWriterSpec extends AnyFunSuite {
       s"with delete files: (cold, warm) plan resolves = ($cold2, $warm2)")
     assert(reader2.query(sql).head().getLong(0) == 1L)
   }
+
+  test("an Iceberg delete that matches nothing publishes no snapshot and leaves the read plan alone") {
+    import org.apache.spark.sql.catalyst.plans.LeftAnti
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    val sp = Shim.classic(spark)
+    import sp.implicits._
+    val loc = s"${new java.io.File("target").getAbsolutePath}/ice_nodelete_${System.nanoTime()}"
+    val eng = new GlueTableEngine(spark, new FixtureCatalog())
+    eng.writeIcebergTable((0L until 20L).map(k => (k, s"r$k")).toDF("k", "v").coalesce(1),
+      "d", "nd", loc)
+    val seq = eng.appendIcebergTable(Seq((20L, "r20")).toDF("k", "v"), "d", "nd")
+    def antiJoins = eng.tableDF("d", "nd").queryExecution.optimizedPlan
+      .collect { case j: Join if j.joinType == LeftAnti => j }.size
+    def snapshots = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(new java.io.File(s"$loc/metadata/v$seq.metadata.json")).get("snapshots").size()
+    val (plan0, snaps0) = (antiJoins, snapshots)
+    assert(plan0 == 0 && snaps0 == 2)
+    // a position delete whose predicate matches no row, and an
+    // equality delete with an empty key batch
+    assert(eng.deleteIcebergWhere("d", "nd", col("k") > 1000L) == seq)
+    assert(eng.deleteIcebergMatching("d", "nd", Seq.empty[Long].toDF("k"), Seq("k")) == seq)
+    assert(new java.io.File(s"$loc/metadata").list().count(_.endsWith(".metadata.json")) == 2)
+    assert((antiJoins, snapshots) == (plan0, snaps0))
+    assert(!new java.io.File(loc).list().exists(_.startsWith("deletes_")),
+      "the empty delete files are removed")
+    assert(eng.tableDF("d", "nd").count() == 21L)
+    // a delete that matches does publish, and the read then anti-joins
+    assert(eng.deleteIcebergWhere("d", "nd", col("k") === 3L) == seq + 1)
+    assert(antiJoins == 1 && eng.tableDF("d", "nd").count() == 20L)
+  }
 }

@@ -185,4 +185,30 @@ class LakehouseDifferentialSpec extends AnyFunSuite {
         s"stats skipping broke after restore: scanned ${scans.head.metrics("numFiles").value} files")
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
+
+  test("an upsert whose source keys are all NULL inserts its rows in all three formats") {
+    val sp = Shim.classic(spark)
+    import sp.implicits._
+    val stamp = System.nanoTime()
+    val eng = new GlueTableEngine(spark, new FixtureCatalog())
+    def base = (0L until 10L).map(k => (Option(k), s"r$k")).toDF("k", "v").coalesce(1)
+    val root = new java.io.File("target").getAbsolutePath
+    eng.writeDeltaTable(base, "d", "nk_d", s"$root/lhnull_d_$stamp")
+    eng.writeIcebergTable(base, "d", "nk_i", s"$root/lhnull_i_$stamp")
+    eng.writeHudiTable(base, "d", "nk_h", s"$root/lhnull_h_$stamp")
+    val source = Seq((Option.empty[Long], "n1"), (Option.empty[Long], "n2")).toDF("k", "v")
+    eng.mergeDelta("d", "nk_d", source, "k")
+    eng.mergeIceberg("d", "nk_i", source, "k")
+    eng.upsertHudi("d", "nk_h", source, "k")
+    val want = (0L until 10L).map(k => (Option(k), s"r$k")).toSet ++
+      Set((Option.empty[Long], "n1"), (Option.empty[Long], "n2"))
+    Seq("nk_d", "nk_i", "nk_h").foreach { t =>
+      val got = eng.tableDF("d", t).select(col("k"), col("v")).collect()
+        .map(r => (Option(r.get(0)).map(_.asInstanceOf[Long]), r.getString(1))).toSet
+      assert(got == want, s"$t: $got")
+    }
+    // an EMPTY source still commits nothing
+    val v = eng.mergeDelta("d", "nk_d", source.limit(0), "k")
+    assert(eng.mergeDelta("d", "nk_d", source.limit(0), "k") == v)
+  }
 }
