@@ -25,12 +25,12 @@ import org.apache.spark.sql.functions._
   *    per-entity stride).
   *
   * Usage: runMain graft.GenScale [factor] [outDir]  (defaults 10,
-  * /root/repo/target/sf1)
+  * target/sf1 under the working directory)
   */
 object GenScale {
   def main(args: Array[String]): Unit = {
     val factor = args.headOption.map(_.toInt).getOrElse(10)
-    val outDir = args.drop(1).headOption.getOrElse("/root/repo/target/sf1")
+    val outDir = args.drop(1).headOption.getOrElse(new java.io.File("target/sf1").getAbsolutePath)
     val srcDir = sys.env.getOrElse("SPARK_GRAFT_SRC_SF", "/root/testdata/sf0.1")
     val spark = SparkSession.builder().master("local[32]")
       .config("spark.sql.shuffle.partitions", "32")

@@ -3,7 +3,7 @@ package graft
 import graft.queries.Queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
+/** Entry-point contract — see SURVEY.md §7 at the repository root. */
 object SparkEntry {
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.

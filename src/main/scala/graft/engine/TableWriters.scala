@@ -431,15 +431,9 @@ trait TableWriters { self: GlueTableEngine =>
         val affected = files(database, table).map(_.path)
           .filter(p => affectedCanon.contains(canonPath(p)))
         // carry forward existing positions of the re-DV'd files
-        val existing = delta.deletionVectors(loc)
-        val carried = affected.flatMap(p => existing.get(p).map(dv => (p, dv))).groupBy(_._2)
-        val dvRows = carried.toSeq.sortBy(_._1).foldLeft(matches) {
-          case (acc, (oldDv, pairs)) =>
-            val fps = pairs.map { case (p, _) => canonPath(p) }
-            acc.unionAll(spark.read.parquet(oldDv)
-              .select(canonPathCol(col("file_path")).as("file_path"), col("pos"))
-              .filter(col("file_path").isin(fps: _*)))
-        }
+        val carried = positionRows(DeleteSet.deletionVectors(delta.deletionVectors(loc)),
+          Some(affected.toSet))
+        val dvRows = matches.unionAll(carried.toDF("file_path", "pos"))
         // storedPathCol: the sidecar is re-canonicalized on every read,
         // so persist the fixed-point form (a literal '%' in a partition
         // value would otherwise decode twice and silently skip its rows)

@@ -28,9 +28,12 @@ object TestFixtures {
 
   private val lock = new Object
 
+  /** The fixture dir of a scale factor, under the running checkout's
+    * `target/fixtures` (the working directory sbt runs from).
+    */
   def root(sfDir: String): String = {
     val name = new File(sfDir).getName.replace(".", "_") // sf0.01 -> sf0_01, no pure-numeric segment
-    s"/root/repo/target/fixtures/$name"
+    new File(s"target/fixtures/$name").getAbsolutePath
   }
 
   /** Events reader: older driver testdata stored `ts` as int64

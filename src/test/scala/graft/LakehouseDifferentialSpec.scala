@@ -3,8 +3,14 @@ package graft
 import graft.catalog.FixtureCatalog
 import graft.engine.GlueTableEngine
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.{Expression, In, InSet, Literal}
+import org.apache.spark.sql.catalyst.plans.LeftAnti
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Shim
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
 /** DIFFERENTIAL check across the three lakehouse write paths: the
@@ -85,7 +91,10 @@ class LakehouseDifferentialSpec extends AnyFunSuite {
     // the MOR twin of the CoW delete stage above: the same row-level
     // delete through Delta's deletion vectors and Iceberg's position
     // deletes — neither may rewrite a data file, and both reads (and
-    // their exact metadata counts) must agree row-for-row
+    // their exact metadata counts) must agree row-for-row. A second
+    // delete hits rows of files already deleted from (on Delta a DV
+    // merge that supersedes the first sidecar), and the two
+    // changelogs must agree at every offset, through the restore
     val sp = Shim.classic(spark)
     import sp.implicits._
     val stamp = System.nanoTime()
@@ -96,22 +105,117 @@ class LakehouseDifferentialSpec extends AnyFunSuite {
     eng.writeIcebergTable(base, "d", "mor_i", s"/root/repo/target/lhmor_i_$stamp")
     val filesD = eng.files("d", "mor_d").map(_.path).toSet
     val filesI = eng.files("d", "mor_i").map(_.path).toSet
+    def changes(df: DataFrame): Seq[(Long, String, String)] =
+      df.select(col("k"), col("v"), col("_change_type")).collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSeq.sorted
+    def changelogsAgree(versions: Int): Unit = (1 until versions).foreach { k =>
+      val d = changes(eng.deltaChanges("d", "mor_d", k, 0))
+      val i = changes(eng.icebergChanges("d", "mor_i", k, 0))
+      assert(d == i, s"changelogs diverge from offset $k: Delta $d vs Iceberg $i")
+    }
+    val del1 = (0L until 100L).filter(_ % 7L == 3L).toSet
     eng.deleteDeltaWhereMor("d", "mor_d", col("k") % 7L === 3L)
     eng.deleteIcebergWhere("d", "mor_i", col("k") % 7L === 3L)
     assert(eng.files("d", "mor_d").map(_.path).toSet == filesD,
       "Delta DV delete must not rewrite data files")
     assert(eng.files("d", "mor_i").map(_.path).toSet == filesI,
       "Iceberg position delete must not rewrite data files")
-    val want = expect(0L until 100L, Set.empty, (0L until 100L).filter(_ % 7L == 3L).toSet)
+    val want = expect(0L until 100L, Set.empty, del1)
     assert(rows(eng.tableDF("d", "mor_d")) == want, "Delta MOR read diverges")
     assert(rows(eng.tableDF("d", "mor_i")) == want, "Iceberg MOR read diverges")
     assert(eng.countRows("d", "mor_d") == want.size.toLong)
     assert(eng.countRows("d", "mor_i") == want.size.toLong)
+    changelogsAgree(2)
+    assert(changes(eng.deltaChanges("d", "mor_d", 1, 0)) ==
+      del1.toSeq.sorted.map(k => (k, s"r$k", "delete")))
+    // the second delete re-deletes files the first one hit
+    val del2 = (0L until 50L).filter(_ % 5L == 1L).toSet
+    eng.deleteDeltaWhereMor("d", "mor_d", col("k") < 50L && col("k") % 5L === 1L)
+    eng.deleteIcebergWhere("d", "mor_i", col("k") < 50L && col("k") % 5L === 1L)
+    val want2 = expect(0L until 100L, Set.empty, del1 ++ del2)
+    assert(rows(eng.tableDF("d", "mor_d")) == want2, "Delta DV merge read diverges")
+    assert(rows(eng.tableDF("d", "mor_i")) == want2, "Iceberg second delete read diverges")
+    changelogsAgree(3)
+    assert(changes(eng.deltaChanges("d", "mor_d", 1, 0)) ==
+      (del2 -- del1).toSeq.sorted.map(k => (k, s"r$k", "delete")),
+      "a re-deleted file emits only its newly deleted rows")
     // both roll back with one logical restore
-    eng.restoreDeltaTable("d", "mor_d", 1)
-    eng.rollbackIcebergTable("d", "mor_i", 1)
+    eng.restoreDeltaTable("d", "mor_d", 2)
+    eng.rollbackIcebergTable("d", "mor_i", 2)
     assert(rows(eng.tableDF("d", "mor_d")) == rows(eng.tableDF("d", "mor_i")))
     assert(eng.tableDF("d", "mor_d").count() == 100)
+    changelogsAgree(4)
+    assert(changes(eng.deltaChanges("d", "mor_d", 1, 0)) ==
+      (del1 ++ del2).toSeq.sorted.map(k => (k, s"r$k", "insert")),
+      "the restore revives every deleted row once")
+    assert(changes(eng.deltaChanges("d", "mor_d", 3, 0)).isEmpty)
+  }
+
+  /** The sidecar scans of a read's physical plan (scans reading
+    * `(file_path, pos)`) with the data-file paths their filters name,
+    * and the plan's broadcast left-anti joins.
+    */
+  private def morPlan(df: DataFrame, dataPaths: Set[String])
+      : (Seq[(FileSourceScanExec, Set[String])], Seq[BroadcastHashJoinExec]) = {
+    val plan = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.initialPlan
+      case p => p
+    }
+    def named(filters: Seq[Expression]): Set[String] = filters.flatMap(_.collect {
+      case Literal(v: UTF8String, _) => Seq(v.toString)
+      case InSet(_, hset) => hset.toSeq.map(_.toString)
+    }.flatten).toSet.intersect(dataPaths)
+    val scans = plan.collect {
+      case s: FileSourceScanExec if Set("file_path", "pos").subsetOf(s.output.map(_.name).toSet) =>
+        s -> named(s.dataFilters)
+    }
+    (scans, plan.collect { case j: BroadcastHashJoinExec if j.joinType == LeftAnti => j })
+  }
+
+  test("merge-on-read reads plan one sidecar scan per scope and one anti-join per delete kind") {
+    // pins the plan pipeline_heavy's g29 runs (perfbench's table shape:
+    // one sorted data file, a position delete of its first rows and an
+    // equality delete of one flag) against a unification that adds a
+    // file filter or a join; and a Delta file re-deleted through a
+    // second deletion vector reads its positions from the new sidecar
+    // alone, the superseded one keeping only the files still on it
+    val sp = Shim.classic(spark)
+    import sp.implicits._
+    val stamp = System.nanoTime()
+    val eng = new GlueTableEngine(spark, new FixtureCatalog())
+    val li = (0 until 60).map(i => (i.toLong / 3, i % 3 + 1, Seq("A", "N", "R")(i % 3), i.toDouble))
+      .toDF("l_orderkey", "l_linenumber", "l_returnflag", "l_quantity")
+    eng.writeIcebergTable(li.repartition(1).sortWithinPartitions("l_orderkey", "l_linenumber"),
+      "d", "mor_plan_i", new java.io.File(s"target/lhplan_i_$stamp").getAbsolutePath)
+    eng.deleteIcebergWhere("d", "mor_plan_i", col("l_orderkey") < 3L)
+    eng.deleteIcebergMatching("d", "mor_plan_i", Seq("A").toDF("l_returnflag"), Seq("l_returnflag"))
+    val ice = eng.tableDF("d", "mor_plan_i")
+    assert(ice.groupBy("l_returnflag").count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap ==
+      Map("N" -> 17L, "R" -> 17L))
+    val iceData = eng.files("d", "mor_plan_i").map(f => eng.canonPath(f.path)).toSet
+    val (iceScans, iceAnti) = morPlan(ice, iceData)
+    assert(iceScans.size == 1, s"one position-sidecar scan, got ${iceScans.size}")
+    assert(iceScans.head._2.isEmpty && !iceScans.head._1.dataFilters.exists(_.exists {
+      case _: In | _: InSet => true
+      case _ => false
+    }), s"the position sidecars are read with no file filter: ${iceScans.head._1.dataFilters}")
+    assert(iceAnti.size == 2, s"one anti-join for the positions and one per equality file, got ${iceAnti.size}")
+    assert(iceAnti.count(_.right.exists(p => iceScans.exists(_._1 eq p))) == 1)
+
+    def batch(ks: Range) = ks.map(k => (k.toLong, s"r$k")).toDF("k", "v").coalesce(1)
+    eng.writeDeltaTable(batch(0 until 50), "d", "mor_plan_d", new java.io.File(s"target/lhplan_d_$stamp").getAbsolutePath)
+    eng.appendDeltaTable(batch(50 until 100), "d", "mor_plan_d")
+    val dataD = eng.files("d", "mor_plan_d").map(f => eng.canonPath(f.path)).toSet
+    eng.deleteDeltaWhereMor("d", "mor_plan_d", col("k") % 7L === 3L)
+    eng.deleteDeltaWhereMor("d", "mor_plan_d", col("k") < 20L && col("k") % 2L === 0L)
+    val dl = eng.tableDF("d", "mor_plan_d")
+    assert(rows(dl) == expect(0L until 100L, Set.empty,
+      (0L until 100L).filter(k => k % 7L == 3L || (k < 20L && k % 2L == 0L)).toSet))
+    val (dScans, dAnti) = morPlan(dl, dataD)
+    assert(dScans.size == 2, s"one scan per live sidecar, got ${dScans.size}")
+    assert(dScans.map(_._2.size) == Seq(1, 1) && dScans.flatMap(_._2).toSet == dataD,
+      s"each data file reads its positions from the one sidecar it references: ${dScans.map(_._2)}")
+    assert(dAnti.size == 1)
   }
 
   test("rolling back the same mutation returns all three formats to the identical state") {

@@ -101,8 +101,8 @@ class ScaleTechniquesSpec extends AnyFunSuite {
   }
 
   test("bucketed tables join without a shuffle on the join key") {
-    // uses the default warehouse dir (spark-warehouse under the repo
-    // root — static conf, can't be set post-session)
+    // uses the session's warehouse dir (static conf, can't be set
+    // post-session: spark-warehouse under the working directory)
     val li = spark.read.parquet(s"${TestSpark.sfDir}/lineitem.parquet")
       .select("l_orderkey", "l_quantity")
     val o = spark.read.parquet(s"${TestSpark.sfDir}/orders.parquet")
@@ -111,8 +111,9 @@ class ScaleTechniquesSpec extends AnyFunSuite {
     spark.sql("DROP TABLE IF EXISTS o_bucketed")
     // the in-memory catalog forgets tables across JVMs but their
     // managed locations persist; clear them or CTAS refuses
+    val warehouse = new org.apache.hadoop.fs.Path(spark.conf.get("spark.sql.warehouse.dir")).toUri.getPath
     Seq("li_bucketed", "o_bucketed").foreach { t =>
-      val d = new java.io.File(s"/root/repo/spark-warehouse/$t")
+      val d = new java.io.File(warehouse, t)
       if (d.exists()) {
         java.nio.file.Files.walk(d.toPath)
           .sorted(java.util.Comparator.reverseOrder())
