@@ -109,9 +109,6 @@ object CrossHash {
   def shinglesFast(text: Column, n: Int): Column =
     Shim.column(ShinglesExpr(Shim.expression(text), n))
 
-  def sortedShingleHashesFast(text: Column, n: Int): Column =
-    Shim.column(ShingleHashesExpr(Shim.expression(text), n))
-
   def sortedShingleHashes64Fast(text: Column, n: Int): Column =
     Shim.column(ShingleHashes64Expr(Shim.expression(text), n))
 
@@ -123,11 +120,6 @@ object CrossHash {
     */
   def sortedOverlapFast(a: Column, b: Column): Column =
     Shim.column(SortedOverlapExpr(Shim.expression(a), Shim.expression(b)))
-
-  /** boolean |a ∩ b| >= need with early exit (join-condition form). */
-  def sortedOverlapAtLeastFast(a: Column, b: Column, need: Column): Column =
-    Shim.column(SortedOverlapAtLeastExpr(
-      Shim.expression(a), Shim.expression(b), Shim.expression(need)))
 
   // ------------------------------------------------------------ DuckDB side
   // SQL fragment builders parameterized by an (already bound) column

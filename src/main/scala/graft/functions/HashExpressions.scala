@@ -174,16 +174,6 @@ object HashOps {
     new GenericArrayData(out.toArray)
   }
 
-  /** Distinct shingle hashes as a sorted-ascending set — the bottom-k
-    * prefix of this array drives the exact prefix-filter join in
-    * Dedup.minhashPairs.
-    */
-  def sortedShingleHashesData(t: UTF8String, n: Int): ArrayData = {
-    val hs = shingleHashes(t.toString, n).distinct
-    java.util.Arrays.sort(hs)
-    new GenericArrayData(hs.map(Long.box))
-  }
-
   /** Strong 64-bit string hash: FNV-1a over UTF-16 units, then a
     * splitmix64 finalizer. Spark-internal only (candidate generation
     * and hash-space verification in the prefix-filter join) — never
@@ -238,26 +228,6 @@ object HashOps {
     c
   }
 
-  /** Does the sorted-array overlap reach `need`? Early-exits as soon
-    * as the remaining shorter side can no longer close the gap — on
-    * mostly-disjoint pairs (the common case in an all-pairs loop)
-    * that cuts the merge to ~2*(min(na,nb)-need) steps instead of
-    * na+nb.
-    */
-  def sortedOverlapAtLeast(a: ArrayData, b: ArrayData, need: Int): Boolean = {
-    if (need <= 0) return true
-    val na = a.numElements(); val nb = b.numElements()
-    var i = 0; var j = 0; var c = 0
-    while (i < na && j < nb) {
-      if (c + math.min(na - i, nb - j) < need) return false
-      val x = a.getLong(i); val y = b.getLong(j)
-      if (x < y) i += 1
-      else if (x > y) j += 1
-      else { c += 1; i += 1; j += 1 }
-    }
-    c >= need
-  }
-
   /** [[sortedOverlapData]] over plain JVM arrays — the dense
     * AllPairs kernel ([[graft.operators.Dedup.denseJaccardPairs]])
     * runs outside codegen and holds its signatures as Array[Long].
@@ -273,8 +243,11 @@ object HashOps {
     c
   }
 
-  /** [[sortedOverlapAtLeast]] over plain JVM arrays, same early-exit
-    * bound.
+  /** Does the overlap of two ascending-sorted JVM arrays reach
+    * `need`? Early-exits as soon as the remaining shorter side can no
+    * longer close the gap — on mostly-disjoint pairs (the common case
+    * in an all-pairs loop) that cuts the merge to
+    * ~2*(min(na,nb)-need) steps instead of na+nb.
     */
   def sortedOverlapAtLeastArr(a: Array[Long], b: Array[Long], need: Int): Boolean = {
     if (need <= 0) return true
@@ -347,21 +320,6 @@ case class ShinglesExpr(child: Expression, n: Int)
   override def prettyName: String = "word_shingles"
 }
 
-/** array<bigint>: distinct word n-gram shingle hashes, sorted
-  * ascending (a set in hash order; single pass).
-  */
-case class ShingleHashesExpr(child: Expression, n: Int)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    HashOps.sortedShingleHashesData(input.asInstanceOf[UTF8String], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashOps.sortedShingleHashesData($c, $n)")
-  override protected def withNewChildInternal(newChild: Expression): ShingleHashesExpr =
-    copy(child = newChild)
-  override def prettyName: String = "shingle_hashes_sorted"
-}
-
 /** array<bigint>: strong 64-bit hashes of a doc's distinct word
   * n-gram shingles, sorted ascending; length == distinct shingle
   * count (see HashOps.sortedShingleHashes64Data).
@@ -422,24 +380,6 @@ case class SortedOverlapExpr(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): SortedOverlapExpr =
     copy(left = l, right = r)
   override def prettyName: String = "sorted_overlap"
-}
-
-/** boolean: does the overlap of two ascending-sorted long arrays
-  * reach `need`? Early-exit variant of [[SortedOverlapExpr]] for use
-  * inside join conditions, where most pairs fail fast.
-  */
-case class SortedOverlapAtLeastExpr(first: Expression, second: Expression, third: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.TernaryExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.BooleanType
-  override protected def nullSafeEval(a: Any, b: Any, n: Any): Any =
-    HashOps.sortedOverlapAtLeast(
-      a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], n.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b, n) => s"graft.functions.HashOps.sortedOverlapAtLeast($a, $b, $n)")
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): SortedOverlapAtLeastExpr =
-    copy(first = f, second = s, third = t)
-  override def prettyName: String = "sorted_overlap_at_least"
 }
 
 case class CosineSimExpr(left: Expression, right: Expression)

@@ -72,9 +72,8 @@ object Dedup {
     * 446s, vs 242s with 8x the partitions). The multiplier therefore
     * scales QUADRATICALLY with corpus rows (matching the candidate
     * volume), clamped to [1, 16]; one metadata-only `count()` of the
-    * corpus pays for it. Overridable per session via
-    * `graft.pair.partitions.mult` (the corpus-side stages always keep
-    * the session's partitioning).
+    * corpus pays for it. The corpus-side stages keep the session's
+    * partitioning.
     *
     * The clamp is MEASURED, at two scales: the quadratic growth is
     * what rescues the sf1 aggregate from GC collapse (above), but
@@ -88,10 +87,8 @@ object Dedup {
     * executor-core count — the point where every core already has
     * several waves of work per stage.
     */
-  private def pairMult(df: DataFrame, nDocs: Long): Int =
-    df.sparkSession.conf.getOption("graft.pair.partitions.mult").map(_.toInt).getOrElse {
-      math.min(16, math.max(1, math.ceil(math.pow(nDocs / 20000.0, 2)).toInt))
-    }
+  private def pairMult(nDocs: Long): Int =
+    math.min(16, math.max(1, math.ceil(math.pow(nDocs / 20000.0, 2)).toInt))
 
   /** Job-free per-file row counts for sizing [[pairMult]]: when every
     * leaf of the plan is a parquet scan, read the footers' exact
@@ -150,13 +147,13 @@ object Dedup {
     * plus the length filter t*max(|a|,|b|) <= min(|a|,|b|); exact
     * Jaccard verification keeps pairs at `threshold`.
     *
-    * vs banded LSH ([[minhashPairsBanded]]): banding with 1-row bands
-    * yields ~K*avg_jaccard*n^2/2 false candidates — on corpora with a
-    * shared vocabulary that is a quadratic blowup (observed: 27% of
-    * ALL pairs become candidates at avg j=0.02). The prefix filter
-    * admits a pair only on a shared *rare-end* hash, has no (1-t)^K
-    * miss probability, and its join keys are the same
-    * O(#docs * (1-t)|d|) longs.
+    * vs banded LSH with 1-row bands (docs sharing any of K minhash
+    * values become candidates), which yields ~K*avg_jaccard*n^2/2 false
+    * candidates — on corpora with a shared vocabulary that is a
+    * quadratic blowup (observed: 27% of ALL pairs become candidates at
+    * avg j=0.02). The prefix filter admits a pair only on a shared
+    * *rare-end* hash, has no (1-t)^K miss probability, and its join
+    * keys are the same O(#docs * (1-t)|d|) longs.
     */
   def minhashPairs(docs: DataFrame, threshold: Double = 0.8): DataFrame =
     // adaptive like d7: rare-first prefix order on real vocabularies
@@ -170,65 +167,21 @@ object Dedup {
   private[graft] def minhashPairsUnordered(docs: DataFrame, threshold: Double): DataFrame =
     ngramJaccardPairsUnordered(docs, 3, threshold)
 
-  /** Prefix-filter Jaccard join with the PPJoin positional filter
-    * (Xiao et al. WWW'08) — see [[minhashPairs]] for the prefix lemma.
-    *
-    * Shingles are ordered by a strong 64-bit hash
-    * ([[graft.functions.HashOps.strongHash64]]), which doubles as the
-    * verification domain: overlap is `|intersect|` of the two sorted
-    * hash sets (long compares, ~3x cheaper per element than string
-    * array_intersect), and the Jaccard denominator is `na+nb-overlap`
-    * where the lengths count distinct shingle STRINGS, so set sizes
-    * stay exact even under a hash collision. The result equals the
-    * quadratic string-Jaccard definition unless two distinct shingles
-    * in the corpus collide in 64 bits (P ~ D^2/2^65 for D distinct
-    * shingles — ~1e-10 at a billion shingles; the weak charFold hash
-    * of earlier rounds needed a slack slot and could still miss).
-    *
-    * Positional filter: matched prefix rows for a pair carry their
-    * 0-based positions. Grouping a pair's matches gives `c` (count of
-    * common elements inside both prefixes) and the positions (pa, pb)
-    * of the LARGEST matched element; every further common element is
-    * strictly after both (the hash order is global), so
-    * `overlap <= c + min(na-pa-1, nb-pb-1)`. Pairs whose bound misses
-    * the required overlap `ceil(t/(1+t) * (na+nb))` are dropped before
-    * the expensive verification joins — at t=0.5 this prunes every
-    * pair whose only shared prefix hash sits in the back third of the
-    * prefix. The epsilon inside ceil() guards the float landing just
-    * above an exact integer (which would over-tighten the bound);
-    * landing below only admits a candidate that verification rejects.
-    */
-  private[graft] def prefixJaccardPairs(docs: DataFrame, n: Int, threshold: Double): DataFrame = {
-    val mult = pairMult(docs, docs.count())
-    // r16: persisted for the same multi-consumer reason as the
-    // df-ordered variant (prefix explode + two verification sides)
-    val base = spread(docs).select(
-      col("doc_id"),
-      sortedShingleHashes64Fast(col("text"), n).as("hs"))
-      .withColumn("nh", size(col("hs")))
-      .persist()
-    // prefix = |d| - ceil(t|d|) + 1 smallest hashes (exact AllPairs length)
-    val plen = (col("nh") - ceil(col("nh") * lit(threshold) - lit(1e-9)) + lit(1)).cast("int")
-    val pref = pinned(base.select(col("doc_id"), col("nh"),
-      posexplode(slice(col("hs"), lit(1), plen)).as(Seq("p", "h"))), col("h"))
-    verifiedPairsFromPrefix(pref, base.select(col("doc_id"), col("hs")), mult, threshold)
-  }
-
-  /** [[prefixJaccardPairs]] with the AllPairs df-ascending prefix
-    * order (Chaudhuri et al. ICDE'06; Bayardo et al. WWW'07 §3.1):
-    * each doc's shingles order by (document frequency ASC, hash), so
-    * prefixes carry the RAREST tokens of each doc. Candidate volume
-    * for a prefix hash h is df_prefix(h)^2; under a Zipf vocabulary
-    * rare-first prefixes make that sum near-linear in corpus size,
-    * where the hash order's random-token prefixes can leave it
-    * quadratic — and even on the flat synthetic fixture the
-    * concentration effect measured faster at every SF (see
-    * [[ngramJaccardPairs]]), which is why this IS the default path.
-    * Costs one extra shuffle pair (df groupBy + join back) and a
-    * per-doc window; the PPJoin positional bound stays valid because
-    * it only needs the two sides to agree on ONE shared total order —
-    * (df, h) is one. Verification still runs on the hash-sorted
-    * arrays.
+  /** Prefix-filter Jaccard join (see [[minhashPairs]] for the prefix
+    * lemma) with the AllPairs df-ascending prefix order (Chaudhuri et
+    * al. ICDE'06; Bayardo et al. WWW'07 §3.1): each doc's shingles
+    * order by (document frequency ASC, hash), so prefixes carry the
+    * RAREST tokens of each doc. Candidate volume for a prefix hash h is
+    * df_prefix(h)^2; under a Zipf vocabulary rare-first prefixes make
+    * that sum near-linear in corpus size, where the hash order's
+    * random-token prefixes can leave it quadratic — and even on the
+    * flat synthetic fixture the concentration effect measured faster at
+    * every SF (see [[ngramJaccardPairs]]), which is why this IS the
+    * default path. Costs one extra shuffle pair (df groupBy + join
+    * back) and a per-doc window; the PPJoin positional bound stays
+    * valid because it only needs the two sides to agree on ONE shared
+    * total order — (df, h) is one. Verification still runs on the
+    * hash-sorted arrays.
     */
   def ngramJaccardPairsDfOrdered(docs: DataFrame, n: Int = 2,
       threshold: Double = 0.5): DataFrame = {
@@ -255,7 +208,7 @@ object Dedup {
       dfCounts: DataFrame, nDocs: Long, threshold: Double,
       ordered: Boolean): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val mult = pairMult(base, nDocs)
+    val mult = pairMult(nDocs)
     val plen = (col("nh") - ceil(col("nh") * lit(threshold) - lit(1e-9)) + lit(1)).cast("int")
     val w = Window.partitionBy("doc_id").orderBy(col("df"), col("h"))
     // shuffle_hash hint, two reasons: (1) the df table is
@@ -282,6 +235,31 @@ object Dedup {
     * is the 0-based position of hash `h` in SOME global order of the
     * doc's distinct shingles shared by both join sides — the hash
     * order and the (df, hash) order both qualify.
+    *
+    * Shingles are hashed with a strong 64-bit hash
+    * ([[graft.functions.HashOps.strongHash64]]), which is also the
+    * verification domain: overlap is `|intersect|` of the two sorted
+    * hash sets (long compares, ~3x cheaper per element than string
+    * array_intersect), and the Jaccard denominator is `na+nb-overlap`
+    * where the lengths count distinct shingle STRINGS, so set sizes
+    * stay exact even under a hash collision. The result equals the
+    * quadratic string-Jaccard definition unless two distinct shingles
+    * in the corpus collide in 64 bits (P ~ D^2/2^65 for D distinct
+    * shingles — ~1e-10 at a billion shingles; the weak charFold hash
+    * of earlier rounds needed a slack slot and could still miss).
+    *
+    * Positional filter: matched prefix rows for a pair carry their
+    * 0-based positions. Grouping a pair's matches gives `c` (count of
+    * common elements inside both prefixes) and the positions (pa, pb)
+    * of the LARGEST matched element; every further common element is
+    * strictly after both (the order is global), so
+    * `overlap <= c + min(na-pa-1, nb-pb-1)`. Pairs whose bound misses
+    * the required overlap `ceil(t/(1+t) * (na+nb))` are dropped before
+    * the expensive verification joins — at t=0.5 this prunes every
+    * pair whose only shared prefix hash sits in the back third of the
+    * prefix. The epsilon inside ceil() guards the float landing just
+    * above an exact integer (which would over-tighten the bound);
+    * landing below only admits a candidate that verification rejects.
     */
   private def verifiedPairsFromPrefix(pref: DataFrame, sh: DataFrame,
       mult: Int, threshold: Double, ordered: Boolean = true): DataFrame = {
@@ -367,7 +345,7 @@ object Dedup {
     * quadratic term. Emits every pair at exact Jaccard >= `threshold`
     * (word `n`-gram shingles) with at least one fresh member, `a` <
     * `b`. Same prefix-filter lemma and verification as
-    * [[prefixJaccardPairs]]; the positional filter is omitted (probe
+    * [[verifiedPairsFromPrefix]]; the positional filter is omitted (probe
     * and index prefixes are asymmetric after the least/greatest
     * normalization), a candidate-volume tradeoff, not an exactness
     * one.
@@ -379,7 +357,7 @@ object Dedup {
     // [[writeCorpusIndex]] and probe it with
     // [[incrementalPairsIndexed]] — identical pairs, no corpus
     // re-shingle (DedupSpec proves both).
-    val mult = pairMult(corpus, corpus.count() + fresh.count())
+    val mult = pairMult(corpus.count() + fresh.count())
     def prep(df: DataFrame, side: String) =
       spread(df).select(
         col("doc_id"),
@@ -553,7 +531,7 @@ object Dedup {
     val (n, threshold, buckets) = readIndexMeta(spark, path)
     val corpusDocs = spark.read.parquet(s"$path/docs")
     val corpusPref = spark.read.parquet(s"$path/prefix")
-    val mult = pairMult(fresh, corpusDocs.count() + fresh.count())
+    val mult = pairMult(corpusDocs.count() + fresh.count())
     // r16: the fresh side feeds four consumers (probe, the
     // fresh-vs-fresh right side, and both verification unions) —
     // unpersisted it was re-shingled per consumer (4 scans of the
@@ -657,39 +635,6 @@ object Dedup {
     (field("n").toInt, field("threshold").toDouble, field("buckets").toInt)
   }
 
-  /** Near-duplicate pairs via classic MinHash band LSH (1-row bands):
-    * docs sharing any of the K minhash values become candidates
-    * (shuffle join on (band, value)), verified with exact Jaccard.
-    * With K=16 bands, P(miss) at j=0.8 is (1-0.8)^16 ~ 6.6e-12 — in
-    * practice this equals the exact result, but candidate volume
-    * scales with K*avg_jaccard*n^2/2, so prefer [[minhashPairs]]
-    * unless average cross-doc similarity is known to be tiny.
-    */
-  def minhashPairsBanded(docs: DataFrame, threshold: Double = 0.8): DataFrame = {
-    val sigs = spread(docs).select(
-      col("doc_id"),
-      shinglesFast(col("text"), 3).as("sh"),
-      minhashSigFast(col("text"), 3).as("sig"))
-    val banded = pinned(
-      sigs.select(col("doc_id"), posexplode(col("sig")).as(Seq("band", "v"))),
-      col("band"), col("v"))
-    val cand = banded.withColumnRenamed("doc_id", "a")
-      .join(banded.withColumnRenamed("doc_id", "b"), Seq("band", "v"))
-      .filter(col("a") < col("b"))
-      .select("a", "b")
-      .distinct()
-    val sh = sigs.select(col("doc_id"), col("sh"))
-    cand
-      .join(sh.withColumnRenamed("doc_id", "a").withColumnRenamed("sh", "sha"), "a")
-      .join(sh.withColumnRenamed("doc_id", "b").withColumnRenamed("sh", "shb"), "b")
-      .withColumn("jac",
-        size(array_intersect(col("sha"), col("shb"))).cast("double") /
-          size(array_union(col("sha"), col("shb"))))
-      .filter(col("jac") >= threshold)
-      .select(col("a"), col("b"), round(col("jac"), 6).as("jac"))
-      .orderBy("a", "b")
-  }
-
   /** Exact n-gram Jaccard pairs, ADAPTIVE between the two exact
     * plans:
     *
@@ -718,9 +663,9 @@ object Dedup {
     * wins when that exceeds N^2/4 — i.e. the prefix join would
     * enumerate most pairs anyway, paying shuffle volume the dense
     * path never pays. Guard: the signature table (8E + 32N bytes)
-    * must fit the broadcast budget (`graft.jaccard.dense.maxBytes`,
-    * default 256 MB), so a genuinely huge corpus can never select a
-    * driver-melting broadcast; at 100 TB with a real vocabulary
+    * must fit the broadcast budget ([[DenseMaxBytes]], 256 MB), so a
+    * genuinely huge corpus can never select a driver-melting
+    * broadcast; at 100 TB with a real vocabulary
     * V >> N and the prefix join is selected unconditionally.
     * Both plans return identical pairs (DedupSpec proves it), so the
     * choice is purely physical — an operator-level analog of
@@ -739,9 +684,11 @@ object Dedup {
       threshold: Double): DataFrame =
     ngramJaccardPairsImpl(docs, n, threshold, ordered = false)
 
+  /** Byte budget for the dense path's broadcast signature table. */
+  private val DenseMaxBytes = 256L * 1024 * 1024
+
   private def ngramJaccardPairsImpl(docs: DataFrame, n: Int, threshold: Double,
       ordered: Boolean): DataFrame = {
-    val spark = docs.sparkSession
     // ONE shingle pass for everything (r17, guide §1.2/§5): `base` is
     // persisted and feeds (1) the decision statistics, (2) the df
     // aggregate, (3) the prefix explode, and (4) both verification
@@ -762,12 +709,10 @@ object Dedup {
     val e = if (st.isNullAt(0)) 0L else st.getLong(0)
     val v = st.getLong(1)
     val nDocs = base.count() // cached by the stats job above
-    val maxBytes = spark.conf.getOption("graft.jaccard.dense.maxBytes")
-      .map(_.toLong).getOrElse(256L * 1024 * 1024)
     val prefixRows = (1.0 - threshold) * e + nDocs
     val dense = v > 0 && nDocs > 1 &&
       prefixRows * prefixRows / v > nDocs.toDouble * nDocs / 4.0 &&
-      8.0 * e + 32.0 * nDocs <= maxBytes
+      8.0 * e + 32.0 * nDocs <= DenseMaxBytes
     // tiny-vocabulary corpora (templated text: V ~ thousands while E
     // grows with the corpus) defeat both signature schemes at once —
     // every prefix hash is common AND the merge verifier's early
@@ -1044,7 +989,7 @@ object Dedup {
     val nDocs = (for (c <- fileRowCounts(corpus); e <- fileRowCounts(evalDocs))
       yield (c ++ e).values.sum) // shared files count ONCE
       .getOrElse(corpus.count() + evalDocs.count())
-    val mult = pairMult(corpus, nDocs)
+    val mult = pairMult(nDocs)
     def prep(df: DataFrame) =
       spread(df).select(col("doc_id"), sortedShingleHashes64Fast(col("text"), n).as("hs"))
         .withColumn("nh", size(col("hs")))
@@ -1554,7 +1499,7 @@ object Dedup {
   def containmentPairs(docs: DataFrame, n: Int = 5,
       threshold: Double = 0.8): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val mult = pairMult(docs, docs.count())
+    val mult = pairMult(docs.count())
     val base = spread(docs).select(
       col("doc_id"),
       sortedShingleHashes64Fast(col("text"), n).as("hs"))
@@ -1918,7 +1863,7 @@ object Dedup {
     * Returns `(a, b, dist)`, a < b, one row per qualifying pair.
     *
     * Scale (tier admissions MEASURED at sf1=50k / sf3=150k docs, r12,
-    * D26Probe): tier 1 24k → 88k (3.6× for 3× docs — the PPJoin
+    * bench_history/NOTES.md): tier 1 24k → 88k (3.6× for 3× docs — the PPJoin
     * positional filter holds it BELOW the ~9× candidate-volume
     * expectation by killing late-prefix matches between long docs);
     * tier 2 52k → 425k (8.2×); tier 3 1.86M → 16.8M (9.0× — the
@@ -1956,20 +1901,19 @@ object Dedup {
       .orderBy("a", "b")
   }
 
-  /** The three candidate tiers of [[editDistancePairs]], exposed
-    * package-private so the scaling probe (D26Probe) can count each
-    * tier's admissions at a given corpus size — the measurement the
-    * tier boundaries and the tier-1 positional filter were derived
-    * from. Returns (tier1, tier2, tier3, base, pairMult).
+  /** The three candidate tiers of [[editDistancePairs]]. Each tier's
+    * admissions at a given corpus size are the measurement the tier
+    * boundaries and the tier-1 positional filter were derived from.
+    * Returns (tier1, tier2, tier3, base, pairMult).
     */
-  private[graft] def editDistanceTiers(docs: DataFrame, k: Int,
+  private def editDistanceTiers(docs: DataFrame, k: Int,
       maxTier3Bucket: Int = 10000)
       : (DataFrame, DataFrame, DataFrame, DataFrame, Int) = {
     import org.apache.spark.sql.expressions.Window
     val (n1, n2) = (5, 3)
     val p1 = k * (n1 + 1) + 1
     val p2 = k * (n2 + 1) + 1
-    val mult = pairMult(docs, docs.count())
+    val mult = pairMult(docs.count())
     val base = spread(docs).select(col("doc_id"), col("text"),
         length(col("text")).as("len"),
         sortedShingleHashes64Fast(col("text"), n1).as("g5"),
@@ -2072,10 +2016,10 @@ object Dedup {
   }
 
   /** Exact banded-Levenshtein verification of candidate (a, b) pairs
-    * against `base`'s texts — the decision stage shared by
-    * [[editDistancePairs]] and the probe.
+    * against `base`'s texts — the decision stage of
+    * [[editDistancePairs]].
     */
-  private[graft] def editDistanceVerify(cand: DataFrame, base: DataFrame,
+  private def editDistanceVerify(cand: DataFrame, base: DataFrame,
       mult: Int, k: Int): DataFrame = {
     val withA = pinnedWide(cand, mult, col("a"))
       .join(pinnedWide(base.select(col("doc_id").as("a"), col("text").as("ta")),

@@ -1095,23 +1095,11 @@ object Multimodal {
       .toDF() // unsorted: callers impose their own final ordering
   }
 
-  /** Oracle for [[imageResize]]: regenerates the nearest-neighbor
-    * sample grid from the fixture's analytic pixels.
-    */
-  def sqlImageResize(t: Int = 4): String =
-    s"""WITH p AS (SELECT doc_id, 16 + doc_id % 32 AS w, 8 + doc_id % 16 AS h
-       |           FROM documents WHERE doc_id % 2 = 0),
-       |g AS (SELECT doc_id, w, h, unnest(range(0, ${t * t})) AS i FROM p),
-       |v AS (SELECT doc_id, i,
-       |        (doc_id * 31 + ((i % $t) * w // $t) * 7 + ((i // $t) * h // $t)) % 16777216 AS rgb
-       |      FROM g)
-       |SELECT doc_id, list(rgb ORDER BY i) AS thumb FROM v
-       |GROUP BY doc_id ORDER BY doc_id""".stripMargin
-
   /** Oracle for the EXPLODED registration shape of [[imageResize]]
-    * (one `(doc_id, i, rgb)` row per grid cell): the list-valued
-    * shape crashes the pandas-based harness sort, and scalar rows
-    * hash identically across engines.
+    * (one `(doc_id, i, rgb)` row per grid cell), regenerating the
+    * nearest-neighbor sample grid from the fixture's analytic pixels:
+    * the list-valued shape crashes the pandas-based harness sort, and
+    * scalar rows hash identically across engines.
     */
   def sqlImageResizeRows(t: Int = 4): String =
     s"""WITH p AS (SELECT doc_id, 16 + doc_id % 32 AS w, 8 + doc_id % 16 AS h

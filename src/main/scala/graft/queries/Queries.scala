@@ -98,24 +98,6 @@ object Queries {
     * no tmpdir leak, and the sink genuinely re-streams every run
     * instead of no-op replaying its own old marks.
     */
-  /** Files per micro-batch for the stateful streaming replays. The
-    * registered/bench form is the constant default; the system
-    * property exists ONLY so `graft.tools.StreamAB` can A/B trigger
-    * granularity inside one JVM (box-speed variance across separate
-    * runs was larger than the effect being measured, NOTES r14).
-    *
-    * Default 2 (r13 verdict ask #2): the 4-file replays still cross
-    * multiple micro-batches — watermark advancement, state eviction,
-    * and no-data timeout batches all still exercise — at ~60% of the
-    * per-trigger fixed cost (interleaved medians, NOTES r14: st7
-    * 7.2->4.2 s, st11 7.5->5.0 s, st12 5.5->3.4 s on RocksDB+
-    * changelog). Peak buffered state doubles (watermark advances
-    * every 2 files) — still watermark-bounded, and trigger sizing is
-    * exactly the knob a production job tunes.
-    */
-  private def filesPerTrigger: String =
-    graft.streaming.EventStreams.filesPerTrigger
-
   private def stagedDocStream(spark: SparkSession, sf: String,
       tag: String): (DataFrame, String) = {
     val docs = t(spark, sf, "documents")
@@ -3606,7 +3588,7 @@ object Queries {
           .select(explode(CrossHash.shinglesFast(col("text"), 5)).as("g")).distinct()
         val stage = TestFixtures.docsStreamDir(spark, sf)
         val stream = spark.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", filesPerTrigger).parquet(stage)
+          .option("maxFilesPerTrigger", EventStreams.FilesPerTrigger).parquet(stage)
           .filter(col("doc_id") % 37 =!= 3)
         val res = EventStreams.withStatePartitions(spark, 8)(
           EventStreams.runToCompletion(
@@ -3726,7 +3708,7 @@ object Queries {
         val stage = TestFixtures.eventsStreamTimeOrderedDir(spark, sf)
         val schema = spark.read.parquet(stage).schema
         val stream = spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", filesPerTrigger).parquet(stage)
+          .option("maxFilesPerTrigger", EventStreams.FilesPerTrigger).parquet(stage)
         // registered on the ROCKSDB state store (the suite's largest
         // streaming state: two-sided join buffers) so the gate proves
         // the spillable production backend end-to-end, not just the
@@ -3764,7 +3746,7 @@ object Queries {
         val stage = TestFixtures.eventsStreamSessionDir(spark, sf)
         val schema = spark.read.parquet(stage).schema
         val stream = spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", filesPerTrigger).parquet(stage)
+          .option("maxFilesPerTrigger", EventStreams.FilesPerTrigger).parquet(stage)
         val res = EventStreams.withStatePartitions(spark, 8)(
           EventStreams.runToCompletion(
             EventStreams.sessionWindows(stream),
@@ -3830,7 +3812,7 @@ object Queries {
         val stage = TestFixtures.eventsStreamSessionDir(spark, sf)
         val schema = spark.read.parquet(stage).schema
         val stream = spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", filesPerTrigger).parquet(stage)
+          .option("maxFilesPerTrigger", EventStreams.FilesPerTrigger).parquet(stage)
         // RocksDB state store (r12 verdict ask #5): two stateful
         // stages in one query is the next-largest state holder after
         // st7/st11 — the gate proves the spillable backend on the
@@ -3865,7 +3847,7 @@ object Queries {
         val stage = TestFixtures.eventsStreamOuterDir(spark, sf)
         val schema = spark.read.parquet(stage).schema
         val stream = spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", filesPerTrigger).parquet(stage)
+          .option("maxFilesPerTrigger", EventStreams.FilesPerTrigger).parquet(stage)
         // RocksDB state store (r12 verdict ask #5): the outer join is
         // the suite's largest surviving state (expired-row emission
         // keys both sides' buffers), so its registered form runs on
@@ -3909,7 +3891,7 @@ object Queries {
         val stage = TestFixtures.eventsStreamOuterDir(spark, sf)
         val schema = spark.read.parquet(stage).schema
         val stream = spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", filesPerTrigger).parquet(stage)
+          .option("maxFilesPerTrigger", EventStreams.FilesPerTrigger).parquet(stage)
           .select(col("event_id"), col("ts"), col("user_id"),
             col("event_type"), col("value"))
           .as[EventStreams.Event]

@@ -319,27 +319,30 @@ object EventStreams {
   /** Bounded `readStream` over the events fixture: the batch reader's
     * rows (ts-type dispatch already applied) staged ONCE per scale
     * factor into a four-file directory — the file streaming source
-    * requires a directory, and four files with `maxFilesPerTrigger=1`
-    * drive four REAL micro-batches through source offsets and the
+    * requires a directory, and four files at [[FilesPerTrigger]] per
+    * trigger drive REAL micro-batches through source offsets and the
     * state store instead of one degenerate batch. So a registered
     * query exercises the actual incremental path end-to-end and still
     * terminates.
     */
-  /** Files per micro-batch for the bounded file replays (default 2,
-    * r14: same multi-batch coverage at ~60% of the per-trigger fixed
-    * cost; sys.prop override exists for `graft.tools.StreamAB`).
-    * Consumers whose POST-PROCESSING must stay batch-count-
-    * independent: Complete mode re-emits (st1/st9), Update-mode
-    * rollups take max_by over the update stream (st3).
+  /** Files per micro-batch for the bounded file replays. Two, not
+    * one: the 4-file replays still cross multiple micro-batches —
+    * watermark advancement, state eviction and no-data timeout
+    * batches all still run — at ~60% of the per-trigger fixed cost
+    * (interleaved medians, bench_history/NOTES.md r14: st7 7.2->4.2 s,
+    * st11 7.5->5.0 s, st12 5.5->3.4 s on RocksDB+changelog). Peak
+    * buffered state doubles (the watermark advances every 2 files),
+    * still watermark-bounded. Consumers whose POST-PROCESSING must stay
+    * batch-count-independent: Complete mode re-emits (st1/st9),
+    * Update-mode rollups take max_by over the update stream (st3).
     */
-  def filesPerTrigger: String =
-    sys.props.getOrElse("graft.stream.filesPerTrigger", "2")
+  val FilesPerTrigger = "2"
 
   def eventsFileStream(spark: org.apache.spark.sql.SparkSession, sfDir: String): DataFrame = {
     val staged = graft.fixtures.TestFixtures.eventsStreamDir(spark, sfDir)
     val schema = spark.read.parquet(staged).schema
     spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", filesPerTrigger).parquet(staged)
+      .option("maxFilesPerTrigger", FilesPerTrigger).parquet(staged)
   }
 
   /** Deterministic COUNT-MIN SKETCH cells over a stream of keys — the
@@ -408,14 +411,6 @@ object EventStreams {
     * same session are untouched.
     */
   def withRocksDbStateStore[A](spark: org.apache.spark.sql.SparkSession)(body: => A): A = {
-    // A/B hook (r13 verdict ask #1a): SPARK_GRAFT_STATE_STORE=memory
-    // makes the RocksDB wrapper a no-op, so the SAME registered query
-    // can be timed on both backends from one binary — the measured
-    // adjudication of what the r12 RocksDB switch costs. Unset (the
-    // default, and what Bench/Verify run) keeps the production
-    // spillable backend.
-    if (sys.env.get("SPARK_GRAFT_STATE_STORE").contains("memory") ||
-        sys.props.get("graft.stream.stateStore").contains("memory")) return body
     val key = "spark.sql.streaming.stateStore.providerClass"
     // Changelog checkpointing: each commit uploads only the batch's
     // key changes; full snapshots amortize in the background. Without

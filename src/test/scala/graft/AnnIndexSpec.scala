@@ -16,7 +16,7 @@ class AnnIndexSpec extends AnyFunSuite {
   private val emb = spark.read.parquet(s"${TestSpark.sfDir}/embeddings.parquet")
 
   private def freshPath(tag: String) =
-    s"/root/repo/target/ann_index_${tag}_${System.nanoTime()}"
+    TestSpark.scratch(s"ann_index_$tag")
 
   test("probe equals the single-probe quantized ranking computed ad hoc") {
     val path = freshPath("eq")

@@ -23,6 +23,7 @@ class PagedFakeGlueCatalog(
 
   val tableCalls = new AtomicInteger(0)
   val pageCalls = new AtomicInteger(0)
+  private val root = TestSpark.scratch("paged_glue")
 
   /** The simulated AWS paged call: one page + the continuation token. */
   def getPartitionsPage(token: Option[Int]): (Seq[PartitionInfo], Option[Int]) = {
@@ -35,7 +36,7 @@ class PagedFakeGlueCatalog(
   override def getTable(database: String, table: String): GlueTable = {
     tableCalls.incrementAndGet()
     tableFaults.next().foreach(e => throw e)
-    GlueTable(database, table, Some(s"/root/repo/target/$database/$table"),
+    GlueTable(database, table, Some(s"$root/$database/$table"),
       partitionKeys = Seq(ColumnDef("k")))
   }
 

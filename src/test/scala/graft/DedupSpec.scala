@@ -236,8 +236,8 @@ class DedupSpec extends AnyFunSuite {
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val corpus = docs.filter(col("doc_id") % 5 =!= 0)
     val fresh = docs.filter(col("doc_id") % 5 === 0)
-    val idx = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "corpusidx").toString
+    val idx = java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get(TestSpark.scratch("corpusidx"))).toString
     Dedup.writeCorpusIndex(corpus, idx, 3, 0.8)
     val indexed = Dedup.incrementalPairsIndexed(spark, idx, fresh)
     assert(pairSet(indexed) == pairSet(Dedup.incrementalPairs(corpus, fresh, 3, 0.8)))
@@ -274,8 +274,8 @@ class DedupSpec extends AnyFunSuite {
     val b1 = docs.filter(col("doc_id") % 3 === 0)
     val b2 = docs.filter(col("doc_id") % 3 === 1)
     val b3 = docs.filter(col("doc_id") % 3 === 2)
-    val idx = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "corpusidx_app").toString
+    val idx = java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get(TestSpark.scratch("corpusidx_app"))).toString
     Dedup.writeCorpusIndex(b1, idx, 3, 0.8)
     Dedup.appendCorpusIndex(b2, idx)
     val got = pairSet(Dedup.incrementalPairsIndexed(spark, idx, b3))

@@ -52,7 +52,7 @@ class DeltaSpec extends AnyFunSuite {
     // commits AT/BEFORE the checkpoint — state must come from the
     // checkpoint parquet plus the remaining tail
     val src = TestFixtures.deltaLineitem(spark, TestSpark.sfDir)
-    val dst = new java.io.File(s"/root/repo/target/delta_cp_only_${System.nanoTime()}")
+    val dst = new java.io.File(TestSpark.scratch("delta_cp_only"))
     org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(src), dst)
     new java.io.File(dst, "_delta_log/00000000000000000000.json").delete()
     // keep 1.json's file present? no: delete it too — the checkpoint at
@@ -88,7 +88,7 @@ class DeltaSpec extends AnyFunSuite {
     import spark.implicits._
     // two files with DISJOINT x ranges, stats only in the log; footer
     // reads disabled so any skip must come from add.stats
-    val root = new java.io.File(s"/root/repo/target/delta_skip_${System.nanoTime()}")
+    val root = new java.io.File(TestSpark.scratch("delta_skip"))
     def mk(sub: String, range: Range): (String, Long) = {
       range.map(_.toLong).toDF("x").coalesce(1).write.parquet(s"$root/$sub")
       val f = new java.io.File(s"$root/$sub").listFiles()
@@ -153,7 +153,7 @@ class DeltaSpec extends AnyFunSuite {
 
   test("write path: round-trip, append versioning, and self-written stats skipping") {
     import spark.implicits._
-    val loc = s"/root/repo/target/delta_write_${System.nanoTime()}"
+    val loc = TestSpark.scratch("delta_write")
     val cat = new FixtureCatalog()
     val eng = new GlueTableEngine(spark, cat,
       CacheConfig(footerStatsMaxFiles = 0)) // any skip must come from OUR log stats
@@ -193,7 +193,7 @@ class DeltaSpec extends AnyFunSuite {
 
   test("write path: partitioned writes carry partitionValues in the log") {
     import spark.implicits._
-    val loc = s"/root/repo/target/delta_write_part_${System.nanoTime()}"
+    val loc = TestSpark.scratch("delta_write_part")
     val cat = new FixtureCatalog()
     val eng = new GlueTableEngine(spark, cat)
     val data = Seq((1L, "a"), (2L, "a"), (3L, "b")).toDF("x", "k")
@@ -208,7 +208,7 @@ class DeltaSpec extends AnyFunSuite {
 
   test("optimize rewrites many small files into one commit; old versions still travel") {
     import spark.implicits._
-    val loc = s"/root/repo/target/delta_opt_${System.nanoTime()}"
+    val loc = TestSpark.scratch("delta_opt")
     val cat = new FixtureCatalog()
     val eng = new GlueTableEngine(spark, cat)
     eng.writeDeltaTable((0L until 50L).map(i => (i, i * 2)).toDF("x", "y").repartition(5),
@@ -232,7 +232,7 @@ class DeltaSpec extends AnyFunSuite {
 
   test("restore flips the table back as a new commit; history intact") {
     import spark.implicits._
-    val loc = s"/root/repo/target/delta_restore_${System.nanoTime()}"
+    val loc = TestSpark.scratch("delta_restore")
     val cat = new FixtureCatalog()
     val eng = new GlueTableEngine(spark, cat)
     eng.writeDeltaTable((0L until 50L).map(i => (i, i * 2)).toDF("x", "y").coalesce(1),
@@ -269,7 +269,7 @@ class DeltaSpec extends AnyFunSuite {
 
   test("vacuum deletes only files unreferenced by every retained version") {
     import spark.implicits._
-    val loc = s"/root/repo/target/delta_vac_${System.nanoTime()}"
+    val loc = TestSpark.scratch("delta_vac")
     val cat = new FixtureCatalog()
     val eng = new GlueTableEngine(spark, cat)
     eng.writeDeltaTable((0L until 50L).toDF("x").repartition(4), "d", "vac", loc)
@@ -288,7 +288,7 @@ class DeltaSpec extends AnyFunSuite {
 
   test("optimize with zorderBy clusters both dimensions for skipping") {
     import spark.implicits._
-    val loc = s"/root/repo/target/delta_optz_${System.nanoTime()}"
+    val loc = TestSpark.scratch("delta_optz")
     val cat = new FixtureCatalog()
     val eng = new GlueTableEngine(spark, cat, CacheConfig(footerStatsMaxFiles = 0))
     val rows = for (a <- 0L until 64L; b <- 0L until 16L) yield (a, b)
@@ -314,7 +314,7 @@ class DeltaSpec extends AnyFunSuite {
 
   test("delete-where rewrites only files whose stats admit a match") {
     import spark.implicits._
-    val loc = s"/root/repo/target/delta_del_${System.nanoTime()}"
+    val loc = TestSpark.scratch("delta_del")
     val cat = new FixtureCatalog()
     val eng = new GlueTableEngine(spark, cat)
     eng.writeDeltaTable((0L until 100L).toDF("x").coalesce(1), "d", "dw", loc)
@@ -343,7 +343,7 @@ class DeltaSpec extends AnyFunSuite {
 
   test("update-where rewrites surgically and only touches matching rows") {
     import spark.implicits._
-    val loc = s"/root/repo/target/delta_upd_${System.nanoTime()}"
+    val loc = TestSpark.scratch("delta_upd")
     val cat = new FixtureCatalog()
     val eng = new GlueTableEngine(spark, cat)
     eng.writeDeltaTable((0L until 100L).map(i => (i, 1L)).toDF("x", "flag").coalesce(1),
@@ -370,7 +370,7 @@ class DeltaSpec extends AnyFunSuite {
 
   test("merge upserts by key, rewriting only key-range-intersecting files") {
     import spark.implicits._
-    val loc = s"/root/repo/target/delta_mrg_${System.nanoTime()}"
+    val loc = TestSpark.scratch("delta_mrg")
     val cat = new FixtureCatalog()
     val eng = new GlueTableEngine(spark, cat)
     eng.writeDeltaTable((0L until 100L).map(i => (i, s"old$i")).toDF("k", "v").coalesce(1),
@@ -400,7 +400,7 @@ class DeltaSpec extends AnyFunSuite {
   test("writer checkpoint: state, time travel, and txn marks survive log cleanup") {
     import spark.implicits._
     import graft.listing.{DeltaLogResolver, DeltaLogWriter}
-    val loc = s"/root/repo/target/delta_cpw_${System.nanoTime()}"
+    val loc = TestSpark.scratch("delta_cpw")
     val w1 = (0L until 100L).map(i => (i, s"a$i")).toDF("x", "s").coalesce(1)
     val w2 = (1000L until 1100L).map(i => (i, s"b$i")).toDF("x", "s").coalesce(1)
     DeltaLogWriter.commitWith(spark, loc, w1, Nil, Nil, txn = Some(("sink", 7L)))
@@ -444,7 +444,7 @@ class DeltaSpec extends AnyFunSuite {
   test("replay gap without a covering checkpoint fails loudly") {
     import spark.implicits._
     import graft.listing.{DeltaLogResolver, DeltaLogWriter}
-    val loc = s"/root/repo/target/delta_gap_${System.nanoTime()}"
+    val loc = TestSpark.scratch("delta_gap")
     DeltaLogWriter.commit(spark, loc, (0L until 10L).toDF("x").coalesce(1))
     DeltaLogWriter.commit(spark, loc, (10L until 20L).toDF("x").coalesce(1))
     DeltaLogWriter.commit(spark, loc, (20L until 30L).toDF("x").coalesce(1))
@@ -462,7 +462,7 @@ class DeltaSpec extends AnyFunSuite {
   test("maybeCheckpoint fires on the interval; sink-style usage stays bounded") {
     import spark.implicits._
     import graft.listing.{DeltaLogResolver, DeltaLogWriter}
-    val loc = s"/root/repo/target/delta_mcp_${System.nanoTime()}"
+    val loc = TestSpark.scratch("delta_mcp")
     (0 until 5).foreach { i =>
       DeltaLogWriter.commit(spark, loc,
         Seq((i.toLong, s"r$i")).toDF("x", "s").coalesce(1))
@@ -480,7 +480,7 @@ class DeltaSpec extends AnyFunSuite {
 
   test("additive schema evolution: log schema wins over single-file inference") {
     import spark.implicits._
-    val loc = s"/root/repo/target/delta_evo_${System.nanoTime()}"
+    val loc = TestSpark.scratch("delta_evo")
     val cat = new FixtureCatalog()
     val eng = new GlueTableEngine(spark, cat)
     eng.writeDeltaTable((0L until 5L).map(i => Tuple1(i)).toDF("x").coalesce(1), "d", "ev", loc)
@@ -510,7 +510,7 @@ class DeltaSpec extends AnyFunSuite {
 
   test("schema-evolving append to a PARTITIONED table keeps the log's partitioning") {
     import spark.implicits._
-    val loc = s"/root/repo/target/delta_evo_part_${System.nanoTime()}"
+    val loc = TestSpark.scratch("delta_evo_part")
     val cat = new FixtureCatalog()
     val eng = new GlueTableEngine(spark, cat)
     eng.writeDeltaTable(Seq((1L, "a"), (2L, "b")).toDF("x", "k").coalesce(1),
@@ -543,7 +543,7 @@ class DeltaSpec extends AnyFunSuite {
   test("blind appends retry past a lost commit race; remove commits surface it") {
     import spark.implicits._
     import graft.listing.{DeltaLogResolver, DeltaLogWriter}
-    val loc = s"/root/repo/target/delta_occ_${System.nanoTime()}"
+    val loc = TestSpark.scratch("delta_occ")
     DeltaLogWriter.commit(spark, loc, (0L until 10L).toDF("x").coalesce(1))
     DeltaLogWriter.commit(spark, loc, (10L until 20L).toDF("x").coalesce(1))
     // forceVersion simulates the stale read of a lost race: this
@@ -570,8 +570,8 @@ class DeltaSpec extends AnyFunSuite {
   test("shallow clone: zero-copy read equality, independent evolution, loud on existing target") {
     import spark.implicits._
     import graft.listing.{DeltaLogResolver, DeltaLogWriter}
-    val src = s"/root/repo/target/delta_clone_src_${System.nanoTime()}"
-    val dst = s"/root/repo/target/delta_clone_dst_${System.nanoTime()}"
+    val src = TestSpark.scratch("delta_clone_src")
+    val dst = TestSpark.scratch("delta_clone_dst")
     DeltaLogWriter.commit(spark, src, (0L until 10L).toDF("x").coalesce(1))
     DeltaLogWriter.commit(spark, src, (10L until 20L).toDF("x").coalesce(1))
     val nFiles = DeltaLogWriter.shallowClone(spark, src, dst)
@@ -612,7 +612,7 @@ class DeltaSpec extends AnyFunSuite {
 
   test("deletion vectors: MOR delete, DV merge, travel, restore, rewrite retires") {
     import spark.implicits._
-    val loc = s"/root/repo/target/delta_dv_${System.nanoTime()}"
+    val loc = TestSpark.scratch("delta_dv")
     val cat = new FixtureCatalog()
     val eng = new GlueTableEngine(spark, cat)
     eng.writeDeltaTable((0L until 100L).toDF("x").coalesce(1), "d", "dv", loc)
@@ -655,7 +655,7 @@ class DeltaSpec extends AnyFunSuite {
 
   test("deltaChanges: net row-level diff across appends, DV deletes, and restores") {
     import spark.implicits._
-    val loc = s"/root/repo/target/delta_cdf_${System.nanoTime()}"
+    val loc = TestSpark.scratch("delta_cdf")
     val cat = new FixtureCatalog()
     val eng = new GlueTableEngine(spark, cat)
     def changes(from: Int, to: Int): Set[(Long, String)] =
@@ -684,7 +684,7 @@ class DeltaSpec extends AnyFunSuite {
 
   test("MOR delete + changelog on a partition value holding a literal percent-escape (ADVICE r15)") {
     import spark.implicits._
-    val loc = s"/root/repo/target/delta_pct_${System.nanoTime()}"
+    val loc = TestSpark.scratch("delta_pct")
     val cat = new FixtureCatalog()
     val eng = new GlueTableEngine(spark, cat)
     // '50%25' is the adversarial value: a sidecar storing its file's
@@ -711,7 +711,7 @@ class DeltaSpec extends AnyFunSuite {
 
   test("deletion vectors survive checkpoint+cleanup; vacuum keeps live sidecars") {
     import spark.implicits._
-    val loc = s"/root/repo/target/delta_dvcp_${System.nanoTime()}"
+    val loc = TestSpark.scratch("delta_dvcp")
     val cat = new FixtureCatalog()
     val eng = new GlueTableEngine(spark, cat)
     eng.writeDeltaTable((0L until 50L).toDF("x").coalesce(1), "d", "dvc", loc)
@@ -735,7 +735,7 @@ class DeltaSpec extends AnyFunSuite {
 
   test("column mapping: rename is metadata-only; appends, skipping, and travel hold") {
     import spark.implicits._
-    val loc = s"/root/repo/target/delta_ren_${System.nanoTime()}"
+    val loc = TestSpark.scratch("delta_ren")
     val cat = new FixtureCatalog()
     val eng = new GlueTableEngine(spark, cat)
     eng.writeDeltaTable((0L until 50L).map(k => (k, s"p$k")).toDF("k", "prio").coalesce(1),
@@ -778,7 +778,7 @@ class DeltaSpec extends AnyFunSuite {
 
   test("column mapping: drop is metadata-only; a re-added name never resurrects old bytes") {
     import spark.implicits._
-    val loc = s"/root/repo/target/delta_drop_${System.nanoTime()}"
+    val loc = TestSpark.scratch("delta_drop")
     val cat = new FixtureCatalog()
     val eng = new GlueTableEngine(spark, cat)
     eng.writeDeltaTable((0L until 20L).map(k => (k, s"old$k", k * 10))
@@ -808,7 +808,7 @@ class DeltaSpec extends AnyFunSuite {
 
   test("DV commit publishes a table-features protocol gate (ADVICE r12)") {
     import spark.implicits._
-    val loc = s"/root/repo/target/delta_dvproto_${System.nanoTime()}"
+    val loc = TestSpark.scratch("delta_dvproto")
     val cat = new FixtureCatalog()
     val eng = new GlueTableEngine(spark, cat)
     eng.writeDeltaTable((0L until 30L).toDF("x").coalesce(1), "d", "dvp", loc)
@@ -833,7 +833,7 @@ class DeltaSpec extends AnyFunSuite {
     assert(proto.getInt(0) == 3, "checkpoint downgraded the protocol gate")
     assert(proto.getSeq[String](1).contains(graft.listing.DeltaLogWriter.DvFeatureName))
     // a DV-free table keeps the permissive legacy protocol
-    val loc2 = s"/root/repo/target/delta_noproto_${System.nanoTime()}"
+    val loc2 = TestSpark.scratch("delta_noproto")
     eng.writeDeltaTable((0L until 5L).toDF("x").coalesce(1), "d", "npr", loc2)
     graft.listing.DeltaLogWriter.checkpoint(spark, loc2)
     val cp2 = new java.io.File(loc2, "_delta_log").listFiles()
@@ -845,7 +845,7 @@ class DeltaSpec extends AnyFunSuite {
 
   test("one log replay serves a cold build's listing, DVs, and schema (verdict r13 #5)") {
     import spark.implicits._
-    val loc = s"/root/repo/target/delta_memo_${System.nanoTime()}"
+    val loc = TestSpark.scratch("delta_memo")
     graft.listing.DeltaLogWriter.commit(spark,
       loc, (0L until 10L).map(i => (i, s"r$i")).toDF("k", "v").coalesce(1))
     val r = new graft.listing.DeltaLogResolver(spark)
@@ -866,7 +866,7 @@ class DeltaSpec extends AnyFunSuite {
 
   test("replay memo never serves a deleted-and-recreated log's old state (ADVICE r14)") {
     import spark.implicits._
-    val loc = s"/root/repo/target/delta_reid_${System.nanoTime()}"
+    val loc = TestSpark.scratch("delta_reid")
     graft.listing.DeltaLogWriter.commit(spark,
       loc, (0L until 10L).map(i => (i, s"a$i")).toDF("k", "v").coalesce(1))
     val r = new graft.listing.DeltaLogResolver(spark)

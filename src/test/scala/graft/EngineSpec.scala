@@ -206,8 +206,8 @@ class EngineSpec extends AnyFunSuite {
     assert(survivors.size == 1 && survivors.head.contains("st=O"), survivors)
     assert(filtered.count() == oracle("O"))
     // an EMPTY partitioned avro table is an empty frame, not an error
-    val emptyDir = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "avroempty").toString
+    val emptyDir = java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get(TestSpark.scratch("avroempty"))).toString
     cat.register(GlueTable("default", "avro_part_empty", Some(emptyDir),
       partitionKeys = Seq(ColumnDef("k")),
       parameters = Map("classification" -> "avro")))
@@ -289,8 +289,8 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("lister skips folder markers and metadata files (reference src/util/s3.ts:51-53)") {
-    val dir = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "listertest").toFile
+    val dir = java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get(TestSpark.scratch("listertest"))).toFile
     def touch(name: String, content: String = "x"): Unit = {
       val f = new java.io.File(dir, name)
       java.nio.file.Files.write(f.toPath, content.getBytes)
@@ -305,8 +305,8 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("lister captures real file sizes and mtimes at listing time") {
-    val dir = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "listersize").toFile
+    val dir = java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get(TestSpark.scratch("listersize"))).toFile
     val f = new java.io.File(dir, "sized.parquet")
     java.nio.file.Files.write(f.toPath, ("x" * 1234).getBytes)
     val lister = new graft.listing.HadoopFileLister(
@@ -330,8 +330,8 @@ class EngineSpec extends AnyFunSuite {
     import org.apache.avro.{Schema, SchemaBuilder}
     import org.apache.avro.file.DataFileWriter
     import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
-    val root = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "iceoldmanifest").toFile
+    val root = java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get(TestSpark.scratch("iceoldmanifest"))).toFile
     new java.io.File(root, "metadata").mkdirs()
     val data = new java.io.File(root, "part-0.parquet")
     java.nio.file.Files.write(data.toPath, ("y" * 777).getBytes)
@@ -365,8 +365,8 @@ class EngineSpec extends AnyFunSuite {
     import org.apache.avro.SchemaBuilder
     import org.apache.avro.file.DataFileWriter
     import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
-    val root = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "icedeleted").toFile
+    val root = java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get(TestSpark.scratch("icedeleted"))).toFile
     new java.io.File(root, "metadata").mkdirs()
     val kept = new java.io.File(root, "kept.parquet")
     val gone = new java.io.File(root, "gone.parquet")
@@ -410,8 +410,8 @@ class EngineSpec extends AnyFunSuite {
     import org.apache.avro.file.DataFileWriter
     import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "iceincdel").toFile
+    val root = java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get(TestSpark.scratch("iceincdel"))).toFile
     new java.io.File(root, "metadata").mkdirs()
     // three REAL one-row parquet data files (the incremental scan plans them)
     def dataFile(sub: String, v: Long): String = {
@@ -503,8 +503,8 @@ class EngineSpec extends AnyFunSuite {
     import org.apache.avro.SchemaBuilder
     import org.apache.avro.file.DataFileWriter
     import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
-    val root = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "icebadmanifest").toFile
+    val root = java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get(TestSpark.scratch("icebadmanifest"))).toFile
     new java.io.File(root, "metadata").mkdirs()
     // size field present but string-typed: a malformed manifest
     val dfSchema = SchemaBuilder.record("r2").fields()
@@ -560,8 +560,8 @@ class EngineSpec extends AnyFunSuite {
     val mlSchema = SchemaBuilder.record("manifest_file").fields()
       .requiredString("manifest_path").endRecord()
     def layout(partSchema: Schema, fill: GenericData.Record => Unit): String = {
-      val root = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get("/root/repo/target"), "icelogical").toFile
+      val root = java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get(TestSpark.scratch("icelogical"))).toFile
       new java.io.File(root, "metadata").mkdirs()
       val dfSchema = SchemaBuilder.record("r2").fields()
         .requiredString("file_path").requiredLong("file_size_in_bytes")
@@ -612,10 +612,10 @@ class EngineSpec extends AnyFunSuite {
     val li = spark.read.parquet(s"${TestSpark.sfDir}/lineitem.parquet")
       .select("l_orderkey", "l_quantity", "l_returnflag")
     engine.writeTable(li.repartition(8), "default", "li_frag",
-      "/root/repo/target/li_frag", Seq("l_returnflag"))
+      TestSpark.scratch("li_frag"), Seq("l_returnflag"))
     val before = engine.files("default", "li_frag")
     val compacted = engine.compactTable("default", "li_frag",
-      "li_frag_compacted", "/root/repo/target/li_frag_compacted",
+      "li_frag_compacted", TestSpark.scratch("li_frag_compacted"),
       targetFileBytes = 1L << 30) // one fat target → minimal file count
     assert(compacted.partitionKeys.map(_.name) == Seq("l_returnflag"))
     val after = engine.files("default", "li_frag_compacted")
@@ -661,7 +661,7 @@ class EngineSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val agg = spark.read.parquet(s"${TestSpark.sfDir}/orders.parquet")
       .groupBy("o_orderstatus").agg(count(lit(1)).as("n"))
-    val loc = "/root/repo/target/fixtures/sf0_001/orders_agg_sink"
+    val loc = TestSpark.scratch("orders_agg_sink")
     engine.writeTable(agg, "default", "orders_agg", loc, partitionBy = Seq("o_orderstatus"))
     val got = engine.query(
       "SELECT n FROM glue.default.orders_agg WHERE o_orderstatus = 'F'")
@@ -680,7 +680,7 @@ class EngineSpec extends AnyFunSuite {
     // catalog declares the superset — reads must reconcile per file
     // (old rows read c as null) instead of failing or silently picking
     // one footer's shape
-    val loc = "/root/repo/target/fixtures/sf0_001/evolve_tbl"
+    val loc = TestSpark.scratch("evolve_tbl")
     Seq((1L, "old")).toDF("a", "b")
       .write.mode("overwrite").parquet(s"$loc/batch1")
     Seq((2L, "new", 2.5)).toDF("a", "b", "c")
@@ -702,8 +702,8 @@ class EngineSpec extends AnyFunSuite {
     // Glue allows a partition's location to live outside the table
     // root; the reference lists only the root and silently misses such
     // partitions (reference: src/util/s3.ts:34-58).
-    val rootLoc = "/root/repo/target/fixtures/sf0_001/oor_root"
-    val extLoc = "/root/repo/target/fixtures/sf0_001/oor_external"
+    val rootLoc = TestSpark.scratch("oor_root")
+    val extLoc = TestSpark.scratch("oor_external")
     Seq((1, "x")).toDF("v", "w").withColumn("k", lit("a"))
       .write.mode("overwrite").partitionBy("k").parquet(rootLoc)
     // external partition: bare parquet files, no key=value path segment
@@ -743,7 +743,7 @@ class EngineSpec extends AnyFunSuite {
     val df = Seq(
       ("a=b", 1), ("a=b", 2), ("c:d", 3), ("plain", 4), (null: String, 5)
     ).toDF("k", "v")
-    val loc = "/root/repo/target/fixtures/sf0_001/escaped_parts"
+    val loc = TestSpark.scratch("escaped_parts")
     engine.writeTable(df, "default", "escaped_parts", loc, partitionBy = Seq("k"))
 
     val listing = engine.listingDF("default", "escaped_parts")
@@ -793,7 +793,7 @@ class EngineSpec extends AnyFunSuite {
     import spark.implicits._
     // partitioned CSV with declared data columns: partition column is
     // appended by discovery, not part of the declared schema
-    val loc = "/root/repo/target/fixtures/sf0_001/csv_part"
+    val loc = TestSpark.scratch("csv_part")
     Seq((1L, "x", "F"), (2L, "y", "O"), (3L, "z", "F"))
       .toDF("k", "name", "st")
       .write.mode("overwrite").partitionBy("st").option("header", "true").csv(loc)
@@ -867,7 +867,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("files variable survives quotes in paths in every literal mode") {
-    val dir = new java.io.File("/root/repo/target/fixtures/sf0_001/quote'dir")
+    val dir = new java.io.File(TestSpark.scratch("quote'dir"))
     dir.mkdirs()
     import spark.implicits._
     Seq((1, "x")).toDF("id", "s").write.mode("overwrite").parquet(dir.getAbsolutePath)
@@ -1011,7 +1011,7 @@ class EngineSpec extends AnyFunSuite {
 
   test("clearCache drops every cached product: metadata, listing, and derived reads") {
     import spark.implicits._
-    val loc = s"${new java.io.File("target").getAbsolutePath}/clear_cache_${System.nanoTime()}"
+    val loc = TestSpark.scratch("clear_cache")
     (0 until 10).toDF("x").coalesce(1).write.parquet(loc)
     val cat = new FixtureCatalog().register(GlueTable("d", "t", Some(loc)))
     val eng = new GlueTableEngine(spark, cat)
@@ -1032,7 +1032,7 @@ class EngineSpec extends AnyFunSuite {
     val writer = new GlueTableEngine(spark, cat)
     val reader = new GlueTableEngine(spark, cat)
     writer.writeDeltaTable((0L until 50L).toDF("x").coalesce(1), "d", "dv",
-      s"${new java.io.File("target").getAbsolutePath}/clear_dv_${System.nanoTime()}")
+      TestSpark.scratch("clear_dv"))
     assert(reader.tableDF("d", "dv").count() == 50)
     writer.deleteDeltaWhereMor("d", "dv", col("x") >= 40)
     reader.clearCache()
@@ -1045,7 +1045,7 @@ class EngineSpec extends AnyFunSuite {
     val writer = new GlueTableEngine(spark, cat)
     val reader = new GlueTableEngine(spark, cat)
     writer.writeDeltaTable((0L until 50L).toDF("x").coalesce(1), "d", "vac",
-      s"${new java.io.File("target").getAbsolutePath}/vacuum_dv_${System.nanoTime()}")
+      TestSpark.scratch("vacuum_dv"))
     assert(reader.tableDF("d", "vac").count() == 50)
     writer.deleteDeltaWhereMor("d", "vac", col("x") >= 40)
     val deleted = reader.vacuumDeltaTable("d", "vac")
@@ -1055,7 +1055,7 @@ class EngineSpec extends AnyFunSuite {
 
   test("an evicted listing never pairs with derived state of an older version") {
     import spark.implicits._
-    val base = s"${new java.io.File("target").getAbsolutePath}/evict_${System.nanoTime()}"
+    val base = TestSpark.scratch("evict")
     val cat = new FixtureCatalog()
     val writer = new GlueTableEngine(spark, cat)
     val reader = new GlueTableEngine(spark, cat, CacheConfig(maxEntries = 2))
@@ -1096,7 +1096,7 @@ class EngineSpec extends AnyFunSuite {
 
   test("the typed listing the read path plans over matches listingDF on every layout") {
     import spark.implicits._
-    val base = s"${new java.io.File("target").getAbsolutePath}/typed_listing_${System.nanoTime()}"
+    val base = TestSpark.scratch("typed_listing")
     // Hive: an escaped '=', a literal '%' (dir k=50%25), a null
     // (__HIVE_DEFAULT_PARTITION__), a typed int key, and a partition
     // whose catalog location lies outside the table root
@@ -1134,7 +1134,7 @@ class EngineSpec extends AnyFunSuite {
 
   test("footer reads follow the query: only a data filter's partition, once per snapshot") {
     import spark.implicits._
-    val loc = s"${new java.io.File("target").getAbsolutePath}/footer_reads_${System.nanoTime()}"
+    val loc = TestSpark.scratch("footer_reads")
     // three files per partition, with disjoint id ranges
     (0L until 300L).map(i => (i, Seq("a", "b", "c")((i % 3).toInt))).toDF("id", "k")
       .repartitionByRange(3, col("id")).write.partitionBy("k").parquet(loc)
@@ -1162,7 +1162,7 @@ class EngineSpec extends AnyFunSuite {
   test("one cold table planned from four threads at once gets one file selection") {
     import spark.implicits._
     import org.apache.spark.sql.execution.FileSourceScanExec
-    val loc = s"${new java.io.File("target").getAbsolutePath}/cold_threads_${System.nanoTime()}"
+    val loc = TestSpark.scratch("cold_threads")
     (0L until 300L).map(i => (i, Seq("a", "b", "c")((i % 3).toInt))).toDF("id", "k")
       .repartitionByRange(3, col("id")).write.partitionBy("k").parquet(loc)
     val cat = new FixtureCatalog().register(
@@ -1195,7 +1195,7 @@ class EngineSpec extends AnyFunSuite {
 
   test("invalidating or appending to a table re-lists it alone, not a table whose name extends it") {
     import spark.implicits._
-    val base = s"${new java.io.File("target").getAbsolutePath}/inval_prefix_${System.nanoTime()}"
+    val base = TestSpark.scratch("inval_prefix")
     Seq(1L, 2L).toDF("x").coalesce(1).write.parquet(s"$base/ev")
     Seq(3L).toDF("x").coalesce(1).write.parquet(s"$base/ev_2")
     val cat = new FixtureCatalog()

@@ -89,7 +89,7 @@ class FileSkipSpec extends AnyFunSuite {
   }
 
   test("footer stats: ranges read from real parquet files") {
-    val dir = "/root/repo/target/fskip_footer"
+    val dir = TestSpark.scratch("fskip_footer")
     import spark.implicits._
     (0L until 100L).map(i => (i, s"n$i")).toDF("id", "name")
       .coalesce(1).write.mode("overwrite").parquet(dir)
@@ -100,7 +100,7 @@ class FileSkipSpec extends AnyFunSuite {
   }
 
   test("selective scan reads only the files whose range matches") {
-    val dir = "/root/repo/target/fskip_tbl"
+    val dir = TestSpark.scratch("fskip_tbl")
     import spark.implicits._
     // 4 files with disjoint id ranges
     (0L until 1000L).map(i => (i, i % 7)).toDF("id", "v")
@@ -153,7 +153,7 @@ class FileSkipSpec extends AnyFunSuite {
 
   test("clustered compaction turns overlapping-range scans into 1-file scans") {
     import graft.model.CacheConfig
-    val dir = "/root/repo/target/fskip_messy"
+    val dir = TestSpark.scratch("fskip_messy")
     import spark.implicits._
     // hash-distributed: every file spans the whole id range, so
     // min/max skipping can't drop anything
@@ -170,7 +170,7 @@ class FileSkipSpec extends AnyFunSuite {
           .head.metrics("numFiles").value
       }
       assert(numFiles("SELECT * FROM glue.d.messy WHERE id = 42") == 4)
-      eng.compactTable("d", "messy", "tidy", "/root/repo/target/fskip_tidy",
+      eng.compactTable("d", "messy", "tidy", TestSpark.scratch("fskip_tidy"),
         targetFileBytes = 4096, clusterBy = Seq("id"))
       assert(eng.files("d", "tidy").size > 1, "compaction should write multiple files")
       assert(numFiles("SELECT * FROM glue.d.tidy WHERE id = 42") == 1)
@@ -180,7 +180,7 @@ class FileSkipSpec extends AnyFunSuite {
   }
 
   test("ORC tables skip files from ORC footer statistics") {
-    val dir = "/root/repo/target/fskip_orc"
+    val dir = TestSpark.scratch("fskip_orc")
     import spark.implicits._
     (0L until 1000L).map(i => (i, s"v${i % 3}")).toDF("id", "tag")
       .repartitionByRange(4, col("id")).sortWithinPartitions("id")
@@ -202,7 +202,7 @@ class FileSkipSpec extends AnyFunSuite {
   }
 
   test("float/double stats: NaN-immune shapes prune, max-side proofs refuse") {
-    val dir = "/root/repo/target/fskip_float"
+    val dir = TestSpark.scratch("fskip_float")
     import spark.implicits._
     (0L until 400L).map(i => (i, i.toDouble)).toDF("id", "d")
       .repartitionByRange(4, col("id")).sortWithinPartitions("id")
@@ -230,14 +230,14 @@ class FileSkipSpec extends AnyFunSuite {
   }
 
   test("a hidden NaN row survives max-side predicates (why the refusal exists)") {
-    val dir = "/root/repo/target/fskip_float_nan"
+    val dir = TestSpark.scratch("fskip_float_nan")
     import spark.implicits._
     // file A: clean [0..10]; file B: [500..600] plus one NaN row.
     Seq.tabulate(11)(i => (i.toLong, i.toDouble)).toDF("id", "d")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/a")
     (Seq.tabulate(5)(i => (100L + i, 500.0 + i)) :+ ((999L, Double.NaN)))
       .toDF("id", "d").coalesce(1).write.mode("overwrite").parquet(s"$dir/b")
-    val merged = "/root/repo/target/fskip_float_nan_tbl"
+    val merged = TestSpark.scratch("fskip_float_nan_tbl")
     val md = new java.io.File(merged); md.mkdirs()
     md.listFiles().foreach(_.delete())
     Seq("a", "b").foreach { sub =>
@@ -266,7 +266,7 @@ class FileSkipSpec extends AnyFunSuite {
   }
 
   test("skipping is sound under adversarial values (nulls, NaN, ±0.0)") {
-    val dir = "/root/repo/target/fskip_adversarial"
+    val dir = TestSpark.scratch("fskip_adversarial")
     import spark.implicits._
     val rows = Seq[(java.lang.Long, String, java.lang.Double)](
       (1L, "aa", 1.5), (2L, null, Double.NaN), (3L, "ab", -0.0), (4L, "b", 0.0),
@@ -293,7 +293,7 @@ class FileSkipSpec extends AnyFunSuite {
   }
 
   test("skipping never changes results (range + IN + string predicates)") {
-    val dir = "/root/repo/target/fskip_tbl2"
+    val dir = TestSpark.scratch("fskip_tbl2")
     import spark.implicits._
     (0L until 500L).map(i => (i, f"k$i%03d")).toDF("id", "k")
       .repartitionByRange(5, col("id")).sortWithinPartitions("id")

@@ -47,7 +47,7 @@ class HudiSpec extends AnyFunSuite {
     import org.apache.spark.sql.graft.Shim
     val sp = Shim.classic(spark)
     import sp.implicits._
-    val loc = s"/root/repo/target/hudi_part_${System.nanoTime()}"
+    val loc = TestSpark.scratch("hudi_part")
     // two partitions, one file group each, Hive-style partition dirs
     def writeSlice(part: String, name: String, rows: Seq[(Long, String)]): java.io.File = {
       val tmp = s"$loc/_tmp"
@@ -90,7 +90,7 @@ class HudiSpec extends AnyFunSuite {
 
   test("write path: round-trip, append instants, time travel") {
     import spark.implicits._
-    val loc = s"/root/repo/target/hudi_write_${System.nanoTime()}"
+    val loc = TestSpark.scratch("hudi_write")
     val eng = new graft.engine.GlueTableEngine(spark, new graft.catalog.FixtureCatalog())
     eng.writeHudiTable((0L until 100L).map(i => (i, s"r$i")).toDF("k", "v").coalesce(1),
       "d", "hw", loc)
@@ -107,7 +107,7 @@ class HudiSpec extends AnyFunSuite {
 
   test("column rename and drop are metadata-only; re-added names never resurrect") {
     import spark.implicits._
-    val loc = s"/root/repo/target/hudi_ren_${System.nanoTime()}"
+    val loc = TestSpark.scratch("hudi_ren")
     val eng = new graft.engine.GlueTableEngine(spark, new graft.catalog.FixtureCatalog())
     eng.writeHudiTable((0L until 100L).map(i => (i, s"r$i")).toDF("k", "v").coalesce(1),
       "d", "hrn", loc)
@@ -126,7 +126,7 @@ class HudiSpec extends AnyFunSuite {
     // pre-rename instant still travels with the old name
     assert(eng.tableDF("d", "hrn", 2).columns.toSeq == Seq("k", "v"))
     // DROP + re-add: fresh physical column, pre-drop rows read NULL
-    val loc2 = s"/root/repo/target/hudi_drop_${System.nanoTime()}"
+    val loc2 = TestSpark.scratch("hudi_drop")
     eng.writeHudiTable(Seq((1L, "a", 10L), (2L, "b", 20L)).toDF("k", "v", "n").coalesce(1),
       "d", "hdr", loc2)
     val dFiles0 = eng.files("d", "hdr").map(_.path).toSet
@@ -151,7 +151,7 @@ class HudiSpec extends AnyFunSuite {
 
   test("rollback reinstates an earlier instant's slices; timeline intact") {
     import spark.implicits._
-    val loc = s"/root/repo/target/hudi_rb_${System.nanoTime()}"
+    val loc = TestSpark.scratch("hudi_rb")
     val eng = new graft.engine.GlueTableEngine(spark, new graft.catalog.FixtureCatalog())
     eng.writeHudiTable((0L until 100L).map(i => (i, s"old$i")).toDF("k", "v").coalesce(1),
       "d", "hrb", loc)
@@ -179,7 +179,7 @@ class HudiSpec extends AnyFunSuite {
 
   test("upsert retires only key-intersecting file groups; others keep their files") {
     import spark.implicits._
-    val loc = s"/root/repo/target/hudi_ups_${System.nanoTime()}"
+    val loc = TestSpark.scratch("hudi_ups")
     val eng = new graft.engine.GlueTableEngine(spark, new graft.catalog.FixtureCatalog())
     eng.writeHudiTable((0L until 100L).map(i => (i, s"old$i")).toDF("k", "v").coalesce(1),
       "d", "hu", loc)
@@ -207,7 +207,7 @@ class HudiSpec extends AnyFunSuite {
 
   test("compaction clusters small groups in one replacecommit; cleaning deletes stale slices") {
     import spark.implicits._
-    val loc = s"/root/repo/target/hudi_cc_${System.nanoTime()}"
+    val loc = TestSpark.scratch("hudi_cc")
     val eng = new graft.engine.GlueTableEngine(spark, new graft.catalog.FixtureCatalog())
     eng.writeHudiTable((0L until 50L).map(i => (i, i * 2)).toDF("k", "y").repartition(5),
       "d", "hc", loc)
@@ -233,7 +233,7 @@ class HudiSpec extends AnyFunSuite {
 
   test("partitioned Hudi writes land in k=v dirs and prune through the extractors") {
     import spark.implicits._
-    val loc = s"/root/repo/target/hudi_wpart_${System.nanoTime()}"
+    val loc = TestSpark.scratch("hudi_wpart")
     val eng = new graft.engine.GlueTableEngine(spark, new graft.catalog.FixtureCatalog())
     val data = Seq((1L, "a"), (2L, "a"), (3L, "b")).toDF("x", "part").coalesce(1)
     eng.writeHudiTable(data, "d", "hp", loc, partitionBy = Seq("part"))
@@ -254,7 +254,7 @@ class HudiSpec extends AnyFunSuite {
 
   test("deleteHudiWhere rewrites only footer-intersecting groups; no-op proves no commit") {
     import spark.implicits._
-    val loc = s"/root/repo/target/hudi_del_${System.nanoTime()}"
+    val loc = TestSpark.scratch("hudi_del")
     val eng = new graft.engine.GlueTableEngine(spark, new graft.catalog.FixtureCatalog())
     eng.writeHudiTable((0L until 100L).map(i => (i, s"r$i")).toDF("k", "v").coalesce(1),
       "d", "hd", loc)
@@ -292,7 +292,7 @@ class HudiSpec extends AnyFunSuite {
 
   test("re-adding a renamed column's old name binds additively, not byPhys onto its ghost") {
     import spark.implicits._
-    val loc = s"/root/repo/target/hudi_readd_${System.nanoTime()}"
+    val loc = TestSpark.scratch("hudi_readd")
     val eng = new graft.engine.GlueTableEngine(spark, new graft.catalog.FixtureCatalog())
     eng.writeHudiTable((0L until 10L).map(i => (s"a$i", i)).toDF("a", "x").coalesce(1),
       "d", "hrd", loc)

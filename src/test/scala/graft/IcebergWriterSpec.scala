@@ -18,7 +18,7 @@ class IcebergWriterSpec extends AnyFunSuite {
   test("write + append round-trip with time travel and incremental reads") {
     val sp = Shim.classic(spark)
     import sp.implicits._
-    val loc = s"/root/repo/target/ice_write_${System.nanoTime()}"
+    val loc = TestSpark.scratch("ice_write")
     val cat = new FixtureCatalog()
     val eng = new GlueTableEngine(spark, cat)
     eng.writeIcebergTable((0L until 100L).map(i => (i, s"r$i")).toDF("k", "v").coalesce(1),
@@ -46,7 +46,7 @@ class IcebergWriterSpec extends AnyFunSuite {
   test("rollback reinstates an earlier snapshot's file set; history intact") {
     val sp = Shim.classic(spark)
     import sp.implicits._
-    val loc = s"/root/repo/target/ice_rollback_${System.nanoTime()}"
+    val loc = TestSpark.scratch("ice_rollback")
     val cat = new FixtureCatalog()
     val eng = new GlueTableEngine(spark, cat)
     eng.writeIcebergTable((0L until 100L).map(i => (i, s"r$i")).toDF("k", "v").coalesce(1),
@@ -72,7 +72,7 @@ class IcebergWriterSpec extends AnyFunSuite {
   test("merge-on-read deletes: zero rewrites, position and equality variants") {
     val sp = Shim.classic(spark)
     import sp.implicits._
-    val loc = s"/root/repo/target/ice_mor_del_${System.nanoTime()}"
+    val loc = TestSpark.scratch("ice_mor_del")
     val cat = new FixtureCatalog()
     val eng = new GlueTableEngine(spark, cat)
     eng.writeIcebergTable((0L until 100L).map(i => (i, i % 10)).toDF("k", "grp").coalesce(1),
@@ -106,7 +106,7 @@ class IcebergWriterSpec extends AnyFunSuite {
   test("self-written manifest bounds skip files with footers disabled") {
     val sp = Shim.classic(spark)
     import sp.implicits._
-    val loc = s"/root/repo/target/ice_write_skip_${System.nanoTime()}"
+    val loc = TestSpark.scratch("ice_write_skip")
     val cat = new FixtureCatalog()
     val eng = new GlueTableEngine(spark, cat, CacheConfig(footerStatsMaxFiles = 0))
     eng.writeIcebergTable((0L until 100L).map(i => (i, s"r$i")).toDF("k", "v").coalesce(1),
@@ -132,7 +132,7 @@ class IcebergWriterSpec extends AnyFunSuite {
   test("append with a reordered or retyped batch fails loudly (positional field ids)") {
     val sp = Shim.classic(spark)
     import sp.implicits._
-    val loc = s"/root/repo/target/ice_guard_${System.nanoTime()}"
+    val loc = TestSpark.scratch("ice_guard")
     val cat = new FixtureCatalog()
     val eng = new GlueTableEngine(spark, cat)
     eng.writeIcebergTable(Seq((1L, "a")).toDF("k", "v").coalesce(1), "d", "ig", loc)
@@ -149,7 +149,7 @@ class IcebergWriterSpec extends AnyFunSuite {
   test("partitioned writes carry identity values in the manifest partition record") {
     val sp = Shim.classic(spark)
     import sp.implicits._
-    val loc = s"/root/repo/target/ice_wpart_${System.nanoTime()}"
+    val loc = TestSpark.scratch("ice_wpart")
     val cat = new FixtureCatalog()
     val eng = new GlueTableEngine(spark, cat)
     val data = Seq((1L, "a"), (2L, "a"), (3L, "b")).toDF("x", "part").coalesce(1)
@@ -183,7 +183,7 @@ class IcebergWriterSpec extends AnyFunSuite {
   test("compaction rewrites the live set, applies MOR deletes, then expiry reclaims") {
     val sp = Shim.classic(spark)
     import sp.implicits._
-    val loc = s"/root/repo/target/ice_opt_${System.nanoTime()}"
+    val loc = TestSpark.scratch("ice_opt")
     val cat = new FixtureCatalog()
     val eng = new GlueTableEngine(spark, cat)
     eng.writeIcebergTable((0L until 50L).map(i => (i, i * 2)).toDF("k", "y").repartition(5),
@@ -214,7 +214,7 @@ class IcebergWriterSpec extends AnyFunSuite {
   test("expire snapshots deletes only what no retained version references") {
     val sp = Shim.classic(spark)
     import sp.implicits._
-    val loc = s"/root/repo/target/ice_exp_${System.nanoTime()}"
+    val loc = TestSpark.scratch("ice_exp")
     val cat = new FixtureCatalog()
     val eng = new GlueTableEngine(spark, cat)
     eng.writeIcebergTable((0L until 50L).toDF("x").coalesce(1), "d", "ix", loc)
@@ -239,7 +239,7 @@ class IcebergWriterSpec extends AnyFunSuite {
   test("metadata schema wins over single-file inference under evolution") {
     val sp = Shim.classic(spark)
     import sp.implicits._
-    val loc = s"/root/repo/target/ice_evo_${System.nanoTime()}"
+    val loc = TestSpark.scratch("ice_evo")
     val cat = new FixtureCatalog()
     val eng = new GlueTableEngine(spark, cat)
     eng.writeIcebergTable(Seq((1L, "a"), (2L, "b")).toDF("k", "v").coalesce(1), "d", "ie", loc)
@@ -271,7 +271,7 @@ class IcebergWriterSpec extends AnyFunSuite {
   test("one-snapshot MERGE: updates + inserts land atomically, history travels") {
     val sp = Shim.classic(spark)
     import sp.implicits._
-    val loc = s"/root/repo/target/ice_merge_${System.nanoTime()}"
+    val loc = TestSpark.scratch("ice_merge")
     val cat = new FixtureCatalog()
     val eng = new GlueTableEngine(spark, cat)
     eng.writeIcebergTable((0L until 100L).map(k => (k, s"r$k")).toDF("k", "v").coalesce(2),
@@ -307,7 +307,7 @@ class IcebergWriterSpec extends AnyFunSuite {
   test("icebergChanges: changelog across appends, position deletes, and rollbacks") {
     val sp = Shim.classic(spark)
     import sp.implicits._
-    val loc = s"/root/repo/target/ice_cdf_${System.nanoTime()}"
+    val loc = TestSpark.scratch("ice_cdf")
     val cat = new FixtureCatalog()
     val eng = new GlueTableEngine(spark, cat)
     def changes(from: Int, to: Int): Set[(Long, String)] =
@@ -354,7 +354,7 @@ class IcebergWriterSpec extends AnyFunSuite {
 
     val sp = Shim.classic(spark)
     import sp.implicits._
-    val loc = s"/root/repo/target/ice_bucket_${System.nanoTime()}"
+    val loc = TestSpark.scratch("ice_bucket")
     val cat = new FixtureCatalog()
     val eng = new GlueTableEngine(spark, cat)
     val df = (0L until 1000L).map(k => (k, s"r$k")).toDF("k", "v")
@@ -409,7 +409,7 @@ class IcebergWriterSpec extends AnyFunSuite {
 
     val sp = Shim.classic(spark)
     import sp.implicits._
-    val loc = s"/root/repo/target/ice_trunc_${System.nanoTime()}"
+    val loc = TestSpark.scratch("ice_trunc")
     val cat = new FixtureCatalog()
     val eng = new GlueTableEngine(spark, cat)
     eng.writeIcebergTableTruncated(
@@ -450,7 +450,7 @@ class IcebergWriterSpec extends AnyFunSuite {
 
     // STRING truncate: equality prunes by prefix; ranges do NOT prune
     // (kept sound rather than clever)
-    val loc2 = s"/root/repo/target/ice_truncs_${System.nanoTime()}"
+    val loc2 = TestSpark.scratch("ice_truncs")
     val eng2 = new GlueTableEngine(spark, new FixtureCatalog())
     val docs = Seq("alpha", "alloy", "beta", "bravo", "gamma", "gala")
       .zipWithIndex.map { case (w, i) => (i.toLong, w) }.toDF("k", "w")
@@ -464,7 +464,7 @@ class IcebergWriterSpec extends AnyFunSuite {
   test("icebergChanges over a MERGE snapshot: equality CDC (r12 ask #3)") {
     val sp = Shim.classic(spark)
     import sp.implicits._
-    val loc = s"/root/repo/target/ice_mcdf_${System.nanoTime()}"
+    val loc = TestSpark.scratch("ice_mcdf")
     val cat = new FixtureCatalog()
     val eng = new GlueTableEngine(spark, cat)
     def changes(from: Int, to: Int): Set[(Long, String, String)] =
@@ -497,7 +497,7 @@ class IcebergWriterSpec extends AnyFunSuite {
   test("branch staging is invisible to main; publish fast-forwards; divergence refused") {
     val sp = Shim.classic(spark)
     import sp.implicits._
-    val loc = s"/root/repo/target/ice_wap_${System.nanoTime()}"
+    val loc = TestSpark.scratch("ice_wap")
     val cat = new FixtureCatalog()
     val eng = new GlueTableEngine(spark, cat)
     eng.writeIcebergTable((0L until 100L).map(k => (k, s"r$k")).toDF("k", "v").coalesce(1),
@@ -526,7 +526,7 @@ class IcebergWriterSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("fast-forward"))
     // the clean path: stage -> audit -> publish on an undisturbed main
-    val loc2 = s"/root/repo/target/ice_wap2_${System.nanoTime()}"
+    val loc2 = TestSpark.scratch("ice_wap2")
     eng.writeIcebergTable((0L until 50L).map(k => (k, s"r$k")).toDF("k", "v").coalesce(1),
       "d", "iwap2", loc2)
     eng.appendIcebergBranch((100L until 150L).map(k => (k, s"r$k")).toDF("k", "v")
@@ -540,7 +540,7 @@ class IcebergWriterSpec extends AnyFunSuite {
   test("partition-spec evolution: old files always read, new files prune, zero rewrites") {
     val sp = Shim.classic(spark)
     import sp.implicits._
-    val loc = s"/root/repo/target/ice_specevo_${System.nanoTime()}"
+    val loc = TestSpark.scratch("ice_specevo")
     val cat = new FixtureCatalog()
     val eng = new GlueTableEngine(spark, cat)
     // generation 1: unpartitioned, one file covering keys 0..199
@@ -592,7 +592,7 @@ class IcebergWriterSpec extends AnyFunSuite {
   test("column rename is metadata-only; reads, appends, and bounds bind by field id") {
     val sp = Shim.classic(spark)
     import sp.implicits._
-    val loc = s"/root/repo/target/ice_ren_${System.nanoTime()}"
+    val loc = TestSpark.scratch("ice_ren")
     val cat = new FixtureCatalog()
     // footers off: file skipping below must come from manifest bounds
     val eng = new GlueTableEngine(spark, cat, CacheConfig(footerStatsMaxFiles = 0))
@@ -633,7 +633,7 @@ class IcebergWriterSpec extends AnyFunSuite {
     assert(after.count() == 200)
     assert(after.filter(col("id") === 0L).head().getString(1) == "u0")
     // structural columns stay fixed: renaming a partition column throws
-    val loc2 = s"/root/repo/target/ice_ren_part_${System.nanoTime()}"
+    val loc2 = TestSpark.scratch("ice_ren_part")
     eng.writeIcebergTable(Seq((1L, "a", "p1"), (2L, "b", "p2")).toDF("k", "v", "p"),
       "d", "irnp", loc2, partitionBy = Seq("p"))
     val e = intercept[IllegalArgumentException] {
@@ -645,7 +645,7 @@ class IcebergWriterSpec extends AnyFunSuite {
   test("column drop retires the field id; a re-added name binds fresh (no resurrection)") {
     val sp = Shim.classic(spark)
     import sp.implicits._
-    val loc = s"/root/repo/target/ice_drop_${System.nanoTime()}"
+    val loc = TestSpark.scratch("ice_drop")
     val cat = new FixtureCatalog()
     val eng = new GlueTableEngine(spark, cat)
     eng.writeIcebergTable(Seq((1L, "a", 10L), (2L, "b", 20L)).toDF("k", "v", "n").coalesce(1),
@@ -680,7 +680,7 @@ class IcebergWriterSpec extends AnyFunSuite {
     val cat = new FixtureCatalog()
     val eng = new GlueTableEngine(spark, cat)
     // BRANCH leg: staged rows are reachable from NO retained main head
-    val locB = s"/root/repo/target/ice_exprefb_${System.nanoTime()}"
+    val locB = TestSpark.scratch("ice_exprefb")
     eng.writeIcebergTable((0L until 50L).map(k => (k, s"r$k")).toDF("k", "v")
       .coalesce(1), "d", "ierb", locB)
     eng.appendIcebergBranch((1000L until 1050L).map(k => (k, s"r$k")).toDF("k", "v")
@@ -694,7 +694,7 @@ class IcebergWriterSpec extends AnyFunSuite {
       "post-expiry publish must fast-forward onto intact data")
     // TAG leg: a main REWRITE retires the original file from main's
     // head — only the tag still references it across expiry
-    val locT = s"/root/repo/target/ice_expreft_${System.nanoTime()}"
+    val locT = TestSpark.scratch("ice_expreft")
     eng.writeIcebergTable((0L until 50L).map(k => (k, s"r$k")).toDF("k", "v")
       .coalesce(1), "d", "iert", locT)
     eng.tagIcebergSnapshot("d", "iert", "v1tag")
@@ -711,7 +711,7 @@ class IcebergWriterSpec extends AnyFunSuite {
     val cat = new FixtureCatalog()
     val eng = new GlueTableEngine(spark, cat)
     // POSITION-delete delta: partition values must ride the delete leg
-    val locP = s"/root/repo/target/ice_pcdc_${System.nanoTime()}"
+    val locP = TestSpark.scratch("ice_pcdc")
     eng.writeIcebergTable(
       (0L until 40L).map(i => (i, s"r$i", if (i % 2 == 0) "even" else "odd"))
         .toDF("k", "v", "p").repartition(2),
@@ -725,7 +725,7 @@ class IcebergWriterSpec extends AnyFunSuite {
       (k, if (k % 2 == 0) "even" else "odd")),
       s"delete leg must carry manifest partition values, got ${dels.toSeq}")
     // EQUALITY-delete delta (merge) on a partitioned table
-    val locM = s"/root/repo/target/ice_pmrg_${System.nanoTime()}"
+    val locM = TestSpark.scratch("ice_pmrg")
     eng.writeIcebergTable(
       (0L until 40L).map(i => (i, s"r$i", if (i % 2 == 0) "even" else "odd"))
         .toDF("k", "v", "p").repartition(2),
@@ -756,7 +756,7 @@ class IcebergWriterSpec extends AnyFunSuite {
     val cat = new FixtureCatalog()
     val eng = new GlueTableEngine(spark, cat)
     // unpartitioned + position-delete delta (fast path)
-    val locU = s"/root/repo/target/ice_mapcdc_${System.nanoTime()}"
+    val locU = TestSpark.scratch("ice_mapcdc")
     eng.writeIcebergTable((0L until 20L).map(i => (i, s"r$i")).toDF("k", "v")
       .coalesce(1), "d", "imc", locU)
     eng.renameIcebergColumn("d", "imc", "v", "label") // files still hold 'v'
@@ -768,7 +768,7 @@ class IcebergWriterSpec extends AnyFunSuite {
       .select("k", "label").collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
     assert(dels.toSeq == (0L until 5L).map(k => (k, s"r$k")))
     // partitioned + equality delta (general path) on a mapped table
-    val locP = s"/root/repo/target/ice_mapcdcp_${System.nanoTime()}"
+    val locP = TestSpark.scratch("ice_mapcdcp")
     eng.writeIcebergTable(
       (0L until 20L).map(i => (i, s"r$i", if (i % 2 == 0) "e" else "o"))
         .toDF("k", "v", "p").repartition(2), "d", "imcp", locP, partitionBy = Seq("p"))
@@ -788,7 +788,7 @@ class IcebergWriterSpec extends AnyFunSuite {
   test("re-adding a renamed column's old name binds additively, not to its physical ghost") {
     val sp = Shim.classic(spark)
     import sp.implicits._
-    val loc = s"/root/repo/target/ice_readd_${System.nanoTime()}"
+    val loc = TestSpark.scratch("ice_readd")
     val cat = new FixtureCatalog()
     val eng = new GlueTableEngine(spark, cat)
     eng.writeIcebergTable((0L until 10L).map(i => (s"a$i", i)).toDF("a", "x").coalesce(1),
@@ -817,7 +817,7 @@ class IcebergWriterSpec extends AnyFunSuite {
   test("boolean/decimal/binary columns survive schema evolution (published schema)") {
     val sp = Shim.classic(spark)
     import sp.implicits._
-    val loc = s"/root/repo/target/ice_wide_${System.nanoTime()}"
+    val loc = TestSpark.scratch("ice_wide")
     val cat = new FixtureCatalog()
     val eng = new GlueTableEngine(spark, cat)
     val df = Seq(
@@ -846,7 +846,7 @@ class IcebergWriterSpec extends AnyFunSuite {
     val eng = new GlueTableEngine(spark, cat)
     // STRING partition: the sentinel segment must become a null in
     // the manifest partition record, never the literal
-    val loc = s"/root/repo/target/ice_nullpart_${System.nanoTime()}"
+    val loc = TestSpark.scratch("ice_nullpart")
     val df = Seq((1L, Option("a")), (2L, Option("a")), (3L, Option.empty[String]))
       .toDF("k", "p")
     eng.writeIcebergTable(df.coalesce(1), "d", "inp", loc, partitionBy = Seq("p"))
@@ -859,7 +859,7 @@ class IcebergWriterSpec extends AnyFunSuite {
     // INT partition: the sentinel previously threw NumberFormatException
     // AFTER the data dir was written — now it stores null, and a build
     // failure would clean the staged dir up
-    val loc2 = s"/root/repo/target/ice_nullpart2_${System.nanoTime()}"
+    val loc2 = TestSpark.scratch("ice_nullpart2")
     eng.writeIcebergTable(Seq((1L, Option(10)), (2L, Option.empty[Int]))
       .toDF("k", "pi").coalesce(1), "d", "inp2", loc2, partitionBy = Seq("pi"))
     assert(eng.tableDF("d", "inp2").count() == 2)
@@ -874,7 +874,7 @@ class IcebergWriterSpec extends AnyFunSuite {
     import sp.implicits._
     val cat = new FixtureCatalog()
     val eng = new GlueTableEngine(spark, cat)
-    val loc = s"/root/repo/target/ice_dangling_${System.nanoTime()}"
+    val loc = TestSpark.scratch("ice_dangling")
     eng.writeIcebergTable((0L until 20L).map(k => (k, s"r$k")).toDF("k", "v")
       .coalesce(1), "d", "idr", loc)
     eng.tagIcebergSnapshot("d", "idr", "cut")
@@ -911,7 +911,7 @@ class IcebergWriterSpec extends AnyFunSuite {
   test("spec evolution on an identity-partitioned table keeps both dimensions (r15 ask #3)") {
     val sp = Shim.classic(spark)
     import sp.implicits._
-    val loc = s"/root/repo/target/ice_ievo_${System.nanoTime()}"
+    val loc = TestSpark.scratch("ice_ievo")
     val cat = new FixtureCatalog()
     val eng = new GlueTableEngine(spark, cat)
     eng.writeIcebergTable(
@@ -939,7 +939,7 @@ class IcebergWriterSpec extends AnyFunSuite {
   test("changelog partition attach: record-less files read null cells, unlisted files raise (r15 ask #3)") {
     val sp = Shim.classic(spark)
     import sp.implicits._
-    val loc = s"/root/repo/target/ice_pna_${System.nanoTime()}"
+    val loc = TestSpark.scratch("ice_pna")
     val cat = new FixtureCatalog()
     val eng = new GlueTableEngine(spark, cat)
     // files written UNPARTITIONED (no manifest partition record), but
@@ -976,7 +976,7 @@ class IcebergWriterSpec extends AnyFunSuite {
     val cat = new FixtureCatalog()
     val writer = new GlueTableEngine(spark, cat)
     writer.writeIcebergTableBucketed((0L until 100L).map(k => (k, s"r$k")).toDF("k", "v"),
-      "d", "ires", s"${new java.io.File("target").getAbsolutePath}/ice_resolves_${System.nanoTime()}", "k", 4)
+      "d", "ires", TestSpark.scratch("ice_resolves"), "k", 4)
     (1 to 5).foreach(i => // six metadata versions
       writer.appendIcebergTable(Seq((100L + i, s"r${100 + i}")).toDF("k", "v"), "d", "ires"))
     val sql = "SELECT count(*) AS n FROM glue.d.ires WHERE k IN (40, 41, 42)"
@@ -1008,7 +1008,7 @@ class IcebergWriterSpec extends AnyFunSuite {
     import org.apache.spark.sql.catalyst.plans.logical.Join
     val sp = Shim.classic(spark)
     import sp.implicits._
-    val loc = s"${new java.io.File("target").getAbsolutePath}/ice_nodelete_${System.nanoTime()}"
+    val loc = TestSpark.scratch("ice_nodelete")
     val eng = new GlueTableEngine(spark, new FixtureCatalog())
     eng.writeIcebergTable((0L until 20L).map(k => (k, s"r$k")).toDF("k", "v").coalesce(1),
       "d", "nd", loc)

@@ -40,7 +40,6 @@ class LakehouseDifferentialSpec extends AnyFunSuite {
   test("same mutations through Delta, Iceberg, and Hudi read back identically") {
     val sp = Shim.classic(spark)
     import sp.implicits._
-    val stamp = System.nanoTime()
     val cat = new FixtureCatalog()
     val eng = new GlueTableEngine(spark, cat)
 
@@ -49,9 +48,9 @@ class LakehouseDifferentialSpec extends AnyFunSuite {
     def upsertBatch = (0L until 10L).map(k => (k, s"u$k")).toDF("k", "v").coalesce(1)
 
     // stage 0: initial write
-    eng.writeDeltaTable(base, "d", "diff_d", s"/root/repo/target/lhdiff_d_$stamp")
-    eng.writeIcebergTable(base, "d", "diff_i", s"/root/repo/target/lhdiff_i_$stamp")
-    eng.writeHudiTable(base, "d", "diff_h", s"/root/repo/target/lhdiff_h_$stamp")
+    eng.writeDeltaTable(base, "d", "diff_d", TestSpark.scratch("lhdiff_d"))
+    eng.writeIcebergTable(base, "d", "diff_i", TestSpark.scratch("lhdiff_i"))
+    eng.writeHudiTable(base, "d", "diff_h", TestSpark.scratch("lhdiff_h"))
     def all = Seq("diff_d", "diff_i", "diff_h").map(t => t -> rows(eng.tableDF("d", t)))
     val want0 = expect(0L until 100L, Set.empty, Set.empty)
     all.foreach { case (t, got) => assert(got == want0, s"$t diverges after write") }
@@ -97,12 +96,11 @@ class LakehouseDifferentialSpec extends AnyFunSuite {
     // changelogs must agree at every offset, through the restore
     val sp = Shim.classic(spark)
     import sp.implicits._
-    val stamp = System.nanoTime()
     val cat = new FixtureCatalog()
     val eng = new GlueTableEngine(spark, cat)
     def base = (0L until 100L).map(k => (k, s"r$k")).toDF("k", "v").coalesce(2)
-    eng.writeDeltaTable(base, "d", "mor_d", s"/root/repo/target/lhmor_d_$stamp")
-    eng.writeIcebergTable(base, "d", "mor_i", s"/root/repo/target/lhmor_i_$stamp")
+    eng.writeDeltaTable(base, "d", "mor_d", TestSpark.scratch("lhmor_d"))
+    eng.writeIcebergTable(base, "d", "mor_i", TestSpark.scratch("lhmor_i"))
     val filesD = eng.files("d", "mor_d").map(_.path).toSet
     val filesI = eng.files("d", "mor_i").map(_.path).toSet
     def changes(df: DataFrame): Seq[(Long, String, String)] =
@@ -181,12 +179,11 @@ class LakehouseDifferentialSpec extends AnyFunSuite {
     // alone, the superseded one keeping only the files still on it
     val sp = Shim.classic(spark)
     import sp.implicits._
-    val stamp = System.nanoTime()
     val eng = new GlueTableEngine(spark, new FixtureCatalog())
     val li = (0 until 60).map(i => (i.toLong / 3, i % 3 + 1, Seq("A", "N", "R")(i % 3), i.toDouble))
       .toDF("l_orderkey", "l_linenumber", "l_returnflag", "l_quantity")
     eng.writeIcebergTable(li.repartition(1).sortWithinPartitions("l_orderkey", "l_linenumber"),
-      "d", "mor_plan_i", new java.io.File(s"target/lhplan_i_$stamp").getAbsolutePath)
+      "d", "mor_plan_i", TestSpark.scratch("lhplan_i"))
     eng.deleteIcebergWhere("d", "mor_plan_i", col("l_orderkey") < 3L)
     eng.deleteIcebergMatching("d", "mor_plan_i", Seq("A").toDF("l_returnflag"), Seq("l_returnflag"))
     val ice = eng.tableDF("d", "mor_plan_i")
@@ -203,7 +200,7 @@ class LakehouseDifferentialSpec extends AnyFunSuite {
     assert(iceAnti.count(_.right.exists(p => iceScans.exists(_._1 eq p))) == 1)
 
     def batch(ks: Range) = ks.map(k => (k.toLong, s"r$k")).toDF("k", "v").coalesce(1)
-    eng.writeDeltaTable(batch(0 until 50), "d", "mor_plan_d", new java.io.File(s"target/lhplan_d_$stamp").getAbsolutePath)
+    eng.writeDeltaTable(batch(0 until 50), "d", "mor_plan_d", TestSpark.scratch("lhplan_d"))
     eng.appendDeltaTable(batch(50 until 100), "d", "mor_plan_d")
     val dataD = eng.files("d", "mor_plan_d").map(f => eng.canonPath(f.path)).toSet
     eng.deleteDeltaWhereMor("d", "mor_plan_d", col("k") % 7L === 3L)
@@ -228,18 +225,17 @@ class LakehouseDifferentialSpec extends AnyFunSuite {
     // behaviorally below via the scan's numFiles metric).
     val sp = Shim.classic(spark)
     import sp.implicits._
-    val stamp = System.nanoTime()
     val cat = new FixtureCatalog()
     val eng = new GlueTableEngine(spark, cat)
 
     def base = (0L until 100L).map(k => (k, s"r$k")).toDF("k", "v").coalesce(2)
     def appendBatch = (100L until 150L).map(k => (k, s"r$k")).toDF("k", "v").coalesce(1)
     def upsertBatch = (0L until 10L).map(k => (k, s"u$k")).toDF("k", "v").coalesce(1)
-    val deltaLoc = s"/root/repo/target/lhroll_d_$stamp"
+    val deltaLoc = TestSpark.scratch("lhroll_d")
 
     eng.writeDeltaTable(base, "d", "roll_d", deltaLoc)
-    eng.writeIcebergTable(base, "d", "roll_i", s"/root/repo/target/lhroll_i_$stamp")
-    eng.writeHudiTable(base, "d", "roll_h", s"/root/repo/target/lhroll_h_$stamp")
+    eng.writeIcebergTable(base, "d", "roll_i", TestSpark.scratch("lhroll_i"))
+    eng.writeHudiTable(base, "d", "roll_h", TestSpark.scratch("lhroll_h"))
     eng.appendDeltaTable(appendBatch, "d", "roll_d")
     eng.appendIcebergTable(appendBatch, "d", "roll_i")
     eng.appendHudiTable(appendBatch, "d", "roll_h")
@@ -293,13 +289,11 @@ class LakehouseDifferentialSpec extends AnyFunSuite {
   test("an upsert whose source keys are all NULL inserts its rows in all three formats") {
     val sp = Shim.classic(spark)
     import sp.implicits._
-    val stamp = System.nanoTime()
     val eng = new GlueTableEngine(spark, new FixtureCatalog())
     def base = (0L until 10L).map(k => (Option(k), s"r$k")).toDF("k", "v").coalesce(1)
-    val root = new java.io.File("target").getAbsolutePath
-    eng.writeDeltaTable(base, "d", "nk_d", s"$root/lhnull_d_$stamp")
-    eng.writeIcebergTable(base, "d", "nk_i", s"$root/lhnull_i_$stamp")
-    eng.writeHudiTable(base, "d", "nk_h", s"$root/lhnull_h_$stamp")
+    eng.writeDeltaTable(base, "d", "nk_d", TestSpark.scratch("lhnull_d"))
+    eng.writeIcebergTable(base, "d", "nk_i", TestSpark.scratch("lhnull_i"))
+    eng.writeHudiTable(base, "d", "nk_h", TestSpark.scratch("lhnull_h"))
     val source = Seq((Option.empty[Long], "n1"), (Option.empty[Long], "n2")).toDF("k", "v")
     eng.mergeDelta("d", "nk_d", source, "k")
     eng.mergeIceberg("d", "nk_i", source, "k")

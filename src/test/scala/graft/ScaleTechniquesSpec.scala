@@ -27,7 +27,7 @@ class ScaleTechniquesSpec extends AnyFunSuite {
     // the dim must be a SOURCE with a live selective Filter above it —
     // a pre-filtered LocalRelation constant-folds the filter away and
     // the PartitionPruning rule sees nothing selective to exploit
-    val dimPath = "/root/repo/target/dpp_dim"
+    val dimPath = TestSpark.scratch("dpp_dim")
     Seq(("A", "accepted"), ("N", "unused"), ("R", "unused")).toDF("flag", "note")
       .write.mode("overwrite").parquet(dimPath)
     val dim = spark.read.parquet(dimPath).filter(col("note") === "accepted")

@@ -16,7 +16,7 @@ class SearchIndexSpec extends AnyFunSuite {
   private val terms = Seq("spark", "vector", "merge")
 
   private def freshPath(tag: String) =
-    s"/root/repo/target/search_index_${tag}_${System.nanoTime()}"
+    TestSpark.scratch(s"search_index_$tag")
 
   private def scores(df: org.apache.spark.sql.DataFrame): Seq[(Long, Double)] =
     df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq

@@ -5,26 +5,92 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Main code must not name the checkout it is built in: an absolute
-  * path into the working tree (fixture roots, generator outputs, a
-  * doc link) silently reads and writes the wrong tree when the code
-  * runs from any other clone. Paths under the checkout resolve from
-  * the working directory instead (`TestFixtures.root`).
+/** Source lints over the checkout.
+  *
+  * Paths: no source file may name the checkout it is built in. An
+  * absolute path into the working tree (fixture roots, generator
+  * outputs, spec scratch tables, a doc link) silently reads and writes
+  * the wrong tree when the code runs from any other clone. Paths under
+  * the checkout resolve from the working directory instead
+  * (`TestFixtures.root`, `TestSpark.scratch`).
+  *
+  * Knobs: main code reads system properties, environment variables and
+  * `graft.*` session settings only through [[SourcePathLintSpec.Allowed]].
+  * A setting that only an A/B experiment turns hides a second code
+  * path that no spec, workload or oracle runs.
   */
 class SourcePathLintSpec extends AnyFunSuite {
+  import SourcePathLintSpec._
 
-  test("no file under src/main names the checkout's absolute path") {
-    val checkout = new File(".").getCanonicalFile
-    val main = new File(checkout, "src/main")
-    assert(main.isDirectory, s"run from the repository root, not $checkout")
+  private val checkout = new File(".").getCanonicalFile
+
+  private def sources(dir: String): Seq[File] = {
+    val root = new File(checkout, dir)
+    assert(root.isDirectory, s"run from the repository root, not $checkout")
     def walk(f: File): Seq[File] =
       if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.sortBy(_.getName).flatMap(walk) else Seq(f)
+    walk(root)
+  }
+
+  private def lines(f: File): Seq[(String, Int)] =
+    new String(Files.readAllBytes(f.toPath), StandardCharsets.UTF_8).split('\n').toSeq.zipWithIndex
+
+  private def where(f: File, i: Int, line: String): String =
+    s"${checkout.toPath.relativize(f.toPath)}:${i + 1}: ${line.trim}"
+
+  private def assertNoCheckoutPath(dir: String): Unit = {
     val needle = checkout.getPath
     val hits = for {
-      f <- walk(main)
-      (line, i) <- new String(Files.readAllBytes(f.toPath), StandardCharsets.UTF_8).split('\n').zipWithIndex
+      f <- sources(dir)
+      (line, i) <- lines(f)
       if line.contains(needle)
-    } yield s"${checkout.toPath.relativize(f.toPath)}:${i + 1}: ${line.trim}"
-    assert(hits.isEmpty, s"main code names the checkout ($needle):\n${hits.mkString("\n")}")
+    } yield where(f, i, line)
+    assert(hits.isEmpty, s"$dir names the checkout ($needle):\n${hits.mkString("\n")}")
   }
+
+  test("no file under src/main names the checkout's absolute path") {
+    assertNoCheckoutPath("src/main")
+  }
+
+  test("no file under src/test names the checkout's absolute path") {
+    assertNoCheckoutPath("src/test")
+  }
+
+  test("main code reads settings only through the allow-list") {
+    val hits = for {
+      f <- sources("src/main") if f.getName.endsWith(".scala")
+      (line, i) <- lines(f)
+      code = line.trim
+      if !(code.startsWith("//") || code.startsWith("*") || code.startsWith("/*"))
+      key <- settingReads(line)
+      if !key.exists(Allowed.contains)
+    } yield s"${key.getOrElse("<no literal key>")} at ${where(f, i, line)}"
+    assert(hits.isEmpty, s"setting reads outside the allow-list:\n${hits.mkString("\n")}")
+  }
+}
+
+object SourcePathLintSpec {
+
+  /** Every setting main code may read, with the reason it exists. */
+  val Allowed: Map[String, String] = Map(
+    "SPARK_GRAFT_SF_DIR" -> "deployment: the scale-factor directory Bench reads",
+    "SPARK_GRAFT_CPUS" -> "deployment: local[N] cores for Bench and Verify",
+    "SPARK_GRAFT_QUERIES" -> "deployment: the query subset Bench runs",
+    "SPARK_GRAFT_SRC_SF" -> "deployment: the source scale factor GenScale derives from",
+    "graft.index.root" -> "deployment: where the persisted corpus indexes live",
+    "java.io.tmpdir" -> "deployment: the default parent of graft.index.root",
+    "SPARK_GRAFT_STREAM_METRICS" ->
+      "observability: per-query micro-batch accounting, until the engine owns a query profile",
+  )
+
+  private val SysRead =
+    """(?:sys\.(?:props|env)|System\.get(?:Property|env))\b(?:\s*\.\s*\w+)?\s*(\(\s*"([^"]*)")?""".r
+  private val GraftConfRead =
+    """conf\s*\.\s*(?:get|getOption|contains)\s*\(\s*"(graft\.[^"]*)"""".r
+
+  /** The keys a source line reads: `Some(key)` for a literal key,
+    * `None` for a process-setting read whose key is not a literal. */
+  private def settingReads(line: String): Seq[Option[String]] =
+    SysRead.findAllMatchIn(line).map(m => Option(m.group(2))).toSeq ++
+      GraftConfRead.findAllMatchIn(line).map(m => Some(m.group(1))).toSeq
 }

@@ -28,8 +28,8 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming near-dup ingest drops corpus dups and in-batch dups") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val idx = s"/root/repo/target/stream_ndi_idx_${System.nanoTime()}"
-    val out = s"/root/repo/target/stream_ndi_out_${System.nanoTime()}"
+    val idx = TestSpark.scratch("stream_ndi_idx")
+    val out = TestSpark.scratch("stream_ndi_out")
     val corpus = Seq(
       (1L, "alpha beta gamma delta epsilon zeta"),
       (2L, "one two three four five six")).toDF("doc_id", "text")
@@ -90,8 +90,8 @@ class StreamingSpec extends AnyFunSuite {
   test("index stays bounded and idempotent across many small ingest batches") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val idx = s"/root/repo/target/stream_ndi_cmp_${System.nanoTime()}"
-    val out = s"/root/repo/target/stream_ndi_cmp_out_${System.nanoTime()}"
+    val idx = TestSpark.scratch("stream_ndi_cmp")
+    val out = TestSpark.scratch("stream_ndi_cmp_out")
     val corpus = Seq((1L, "alpha beta gamma delta epsilon zeta")).toDF("doc_id", "text")
     graft.operators.Dedup.writeCorpusIndex(corpus, idx, n = 3, threshold = 0.8, buckets = 4)
     def batchDirs(sub: String): Seq[String] = {
@@ -306,7 +306,7 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming iceberg sink is exactly-once under batch replay") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val loc = s"/root/repo/target/stream_iceberg_${System.nanoTime()}"
+    val loc = TestSpark.scratch("stream_iceberg")
     val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
     val q = EventStreams.icebergIngest(mem.toDF().toDF("id", "v"), loc, appId = "spec-ice")
     try {
@@ -333,7 +333,7 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming hudi sink is exactly-once under batch replay") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val loc = s"/root/repo/target/stream_hudi_${System.nanoTime()}"
+    val loc = TestSpark.scratch("stream_hudi")
     val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
     val q = EventStreams.hudiIngest(mem.toDF().toDF("id", "v"), loc, appId = "spec-hudi")
     try {
@@ -358,7 +358,7 @@ class StreamingSpec extends AnyFunSuite {
   test("iceberg txn commit: two CONCURRENT writers replaying one batch append it once") {
     import spark.implicits._
     import graft.listing.IcebergWriter
-    val loc = s"/root/repo/target/race_iceberg_${System.nanoTime()}"
+    val loc = TestSpark.scratch("race_iceberg")
     val batch = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
     // seed an unrelated batch so the race runs against a live table
     assert(IcebergWriter.commitTxn(spark, loc,
@@ -394,7 +394,7 @@ class StreamingSpec extends AnyFunSuite {
   test("hudi txn commit: two CONCURRENT writers replaying one batch append it once") {
     import spark.implicits._
     import graft.listing.HudiTimelineWriter
-    val loc = s"/root/repo/target/race_hudi_${System.nanoTime()}"
+    val loc = TestSpark.scratch("race_hudi")
     val batch = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
     assert(HudiTimelineWriter.commitTxn(spark, loc,
       Seq((0L, "z")).toDF("id", "v"), "race-app", 0L).nonEmpty)
@@ -580,8 +580,8 @@ class StreamingSpec extends AnyFunSuite {
   test("refreshing enrichment sees a dim update in a later batch") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val dimPath = s"/root/repo/target/enrich_dim_${System.nanoTime()}"
-    val out = s"/root/repo/target/enrich_out_${System.nanoTime()}"
+    val dimPath = TestSpark.scratch("enrich_dim")
+    val out = TestSpark.scratch("enrich_out")
     Seq(("click", 1.0)).toDF("event_type", "weight")
       .write.mode("overwrite").parquet(dimPath)
     val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
@@ -607,7 +607,7 @@ class StreamingSpec extends AnyFunSuite {
 
     // TTL'd path: within one TTL window the resolver runs ONCE
     val calls = new java.util.concurrent.atomic.AtomicInteger(0)
-    val out2 = s"/root/repo/target/enrich_out2_${System.nanoTime()}"
+    val out2 = TestSpark.scratch("enrich_out2")
     val mem2 = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
     val q2 = EventStreams.enrichIngest(
       mem2.toDF().toDF("event_id", "event_type"), "event_type", out2,
@@ -623,7 +623,7 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming delta sink is exactly-once under batch replay") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val loc = s"/root/repo/target/stream_delta_${System.nanoTime()}"
+    val loc = TestSpark.scratch("stream_delta")
     val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
     val q = EventStreams.deltaIngest(mem.toDF().toDF("id", "v"), loc, appId = "spec-app")
     try {
@@ -653,7 +653,7 @@ class StreamingSpec extends AnyFunSuite {
   test("delta sink auto-checkpoints: log stays bounded, replay horizon intact") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val loc = s"/root/repo/target/stream_delta_cp_${System.nanoTime()}"
+    val loc = TestSpark.scratch("stream_delta_cp")
     val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
     val q = EventStreams.deltaIngest(mem.toDF().toDF("id", "v"), loc,
       appId = "cp-app", checkpointEvery = 3)
@@ -683,7 +683,7 @@ class StreamingSpec extends AnyFunSuite {
   test("windowed delta ingest lands only watermark-finalized windows, exactly once") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val loc = s"/root/repo/target/stream_wdelta_${System.nanoTime()}"
+    val loc = TestSpark.scratch("stream_wdelta")
     def ts(h: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 $h%02d:10:00")
     val mem = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, java.sql.Timestamp, Long, String, Double)]
@@ -722,7 +722,7 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming search ingest keeps BM25 exact against the growing corpus") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val idx = s"/root/repo/target/stream_search_${System.nanoTime()}"
+    val idx = TestSpark.scratch("stream_search")
     val base = Seq((1L, "spark shuffles data"), (2L, "vector math")).toDF("doc_id", "text")
     graft.operators.Search.writeSearchIndex(base, idx)
     val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]

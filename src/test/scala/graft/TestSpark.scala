@@ -19,6 +19,20 @@ object TestSpark {
   }
   val sfDir = "/root/testdata/sf0.001"
 
+  /** Root of the specs' scratch tables: the working checkout's
+    * `target/spec-scratch`, emptied on first use in each test JVM, so
+    * a run leaves only its own tables and never writes into another
+    * checkout. */
+  private lazy val scratchRoot: java.io.File = {
+    val root = new java.io.File("target/spec-scratch").getAbsoluteFile
+    org.apache.commons.io.FileUtils.deleteDirectory(root)
+    root.mkdirs()
+    root
+  }
+
+  /** A fresh, not yet existing path under the scratch root. */
+  def scratch(name: String): String = s"${scratchRoot.getPath}/${name}_${System.nanoTime()}"
+
   /** Shuffle exchanges in `df`'s initial AQE plan, not counting those
     * inside cached relations (their plans run once, when filled). */
   def initialShuffles(df: DataFrame): Int = df.queryExecution.executedPlan match {

@@ -54,7 +54,7 @@ class ZOrderSpec extends AnyFunSuite {
     assert(!z(2).isNullAt(1) && z(2).getLong(1) == 0L, "null b must clamp to 0")
     // and the write path tolerates them: range partitioning groups
     // nulls, rows are neither dropped nor duplicated
-    val out = s"/root/repo/target/zorder_nulls_${System.nanoTime()}"
+    val out = TestSpark.scratch("zorder_nulls")
     df.withColumn("__z", ZOrder.zvalue(Seq(
         ZOrder.normalize(col("a"), 0.0, 100.0, 8),
         ZOrder.normalize(col("b"), 0.0, 100.0, 8)), 8))
@@ -65,7 +65,7 @@ class ZOrderSpec extends AnyFunSuite {
 
   test("z-ordered compaction guards degenerate stats and non-numeric columns") {
     import spark.implicits._
-    val src = s"/root/repo/target/zorder_guard_src_${System.nanoTime()}"
+    val src = TestSpark.scratch("zorder_guard_src")
     // an all-null dimension and a normal one
     Seq((1L, Option.empty[Double], "x"), (2L, Option.empty[Double], "y"))
       .toDF("k", "allnull", "s").write.parquet(src)
@@ -74,7 +74,7 @@ class ZOrderSpec extends AnyFunSuite {
     val eng = new graft.engine.GlueTableEngine(spark, cat)
     // all-null min/max used to NPE in stats.getDouble; now the
     // dimension degrades to grid cell 0 and the compaction succeeds
-    val out = s"/root/repo/target/zorder_guard_out_${System.nanoTime()}"
+    val out = TestSpark.scratch("zorder_guard_out")
     eng.compactTableZOrder("default", "zguard", "zguard_out", out,
       zorderBy = Seq("k", "allnull"))
     assert(spark.read.parquet(out).count() == 2)
@@ -96,7 +96,7 @@ class ZOrderSpec extends AnyFunSuite {
     val sf = TestSpark.sfDir
     val cat = graft.fixtures.TestFixtures.catalogFor(spark, sf)
     val eng = new graft.engine.GlueTableEngine(spark, cat)
-    val out = s"/root/repo/target/zorder_spec_${System.nanoTime()}"
+    val out = TestSpark.scratch("zorder_spec")
     // ~20 output files: each then pins ~4 leading z-bits (two per
     // dimension), giving quartile-scale spans — 5 files would leave
     // boundary-straddling middle files with near-full spans

@@ -10,8 +10,8 @@ import org.apache.spark.sql.SparkSession
   *
   * Iterative operators (graph loops, BPE training) return a
   * collected-result DataFrame whose plan is a LocalRelation — their
-  * per-round internals are captured by dedicated probes instead; this
-  * tool still records the fact (the file says "local-relation result").
+  * per-round internals do not show here; the file records only that
+  * the result is a local relation.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
