@@ -4,9 +4,8 @@ import graft.cache.{Retry, TtlCache}
 import graft.catalog.CatalogProvider
 import graft.listing.{FileLister, HadoopFileLister, IcebergSnapshotResolver}
 import graft.model._
-import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedRelation}
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, SubqueryAlias}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias, UnresolvedWith}
 import org.apache.spark.sql.graft.Shim
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
@@ -17,7 +16,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * Where the reference converts `glue.db.tbl` SQL into DuckDB setup
   * statements + a rewritten query string (string-level dataflow), this
   * engine rewrites the *logical plan*: each `UnresolvedRelation` over
-  * the `glue` catalog becomes the plan of a (partition-pruned) parquet
+  * the `glue` catalog becomes the plan of a (file-pruned) parquet
   * read, and Spark executes it. No SQL re-serialization, no variables
   * — the idiomatic equivalents are documented per method. The read
   * half is the mixed-in [[TableReads]]; the write half, which the
@@ -114,11 +113,11 @@ final class GlueTableEngine(
     * flagship entry point (≈ reference `convertGlueTableQuery` +
     * caller execution, src/glue-table-cache.ts:242-251). Each glue
     * relation becomes a read of its whole cached listing; the
-    * query's partition predicates prune it per-relation inside the
-    * [[PreListedFileIndex]] at planning.
+    * query's filters prune it per-relation inside the
+    * [[PreListedFileIndex]] at optimization.
     */
   def query(sql: String): DataFrame =
-    Shim.ofRows(spark, rewriteWithPruning(Shim.parsePlan(spark, sql)))
+    Shim.ofRows(spark, rewriteGlueRelations(Shim.parsePlan(spark, sql)))
 
   /** Register `GLUE__<db>_<tbl>` temp views for every glue ref in the
     * query (≈ reference `getGlueTableViewSetupSql`,
@@ -150,9 +149,8 @@ final class GlueTableEngine(
     * inspect or ship the rewritten SQL use this together with
     * [[setupFor]] (which registers those views):
     * `spark.sql(engine.rewrittenSql(q))` is then equivalent to
-    * `engine.query(q)` minus the proxy rewrite and Iceberg
-    * hidden-transform pruning (partition predicates on a view prune
-    * inside the same [[PreListedFileIndex]]).
+    * `engine.query(q)` minus the proxy rewrite (filters on a view
+    * prune inside the same [[PreListedFileIndex]]).
     *
     * Refs are DISCOVERED by the parser ([[glueTableRefs]]) — only the
     * textual substitution is regex-based, handling optional backtick
@@ -218,222 +216,32 @@ final class GlueTableEngine(
   /** Rewrite each glue relation into its [[PreListedFileIndex]] read,
     * keeping every other node untouched. Also the workhorse of the
     * injected [[graft.resolve.GlueResolutionRule]], so plain
-    * `spark.sql` gets the same partition pruning as [[query]].
+    * `spark.sql` gets the same file pruning as [[query]].
     */
-  private[graft] def rewriteWithPruning(plan: LogicalPlan): LogicalPlan = {
+  private[graft] def rewriteGlueRelations(plan: LogicalPlan): LogicalPlan = {
     // Every glue relation reads its whole listing, through the proxy
     // when one is set (the reference's files-variable scan). The
-    // Filter kept above it is the one partition prune:
-    // FileSourceStrategy pushes its partition-only conjuncts, resolved
-    // and typed, into PreListedFileIndex.listFiles. Only Iceberg
-    // hidden-transform specs, which the index has no columns for,
-    // narrow the files here; a selection that keeps nothing reads an
-    // empty relation.
-    def relationPlan(ref: GlueRefId, hiddenKeep: Option[Set[String]] = None): LogicalPlan = {
-      val read = readTable(ref.database, ref.table, 0, keep = hiddenKeep.filter(_.nonEmpty),
-        proxied = true)
-      Shim.analyzedPlan(if (hiddenKeep.exists(_.isEmpty)) read.limit(0) else read)
-    }
-
-    // An unaliased relation keeps its name qualifiers after rewrite:
-    // SELECT tbl.col / db.tbl.col / glue.db.tbl.col must still
-    // resolve, so wrap the bare parquet plan the same way Spark's
-    // SessionCatalog wraps catalog tables.
-    def qualified(ref: GlueRefId, plan: LogicalPlan): LogicalPlan =
-      SubqueryAlias(Seq("glue", ref.database, ref.table), plan)
-
-    // Top-down so the Filter case sees the still-unresolved relation
-    // below it and can derive the hidden-spec selection before the
-    // bare relation case would rewrite it without one.
+    // filters above it, resolved and typed, prune it at optimization
+    // (PruneListedPartitions): partition values, then file stats,
+    // Iceberg hidden-transform values included. An unaliased relation
+    // keeps its name qualifiers: SELECT tbl.col / db.tbl.col /
+    // glue.db.tbl.col must still resolve, so wrap the bare parquet
+    // plan the same way Spark's SessionCatalog wraps catalog tables.
     // CTE definitions live OUTSIDE UnresolvedWith.children, so they
     // must be recursed explicitly — this is where the reference's
     // top-level-WHERE-only pruning silently skipped CTE bodies
     // (SURVEY §2a#5); we rewrite (and prune) inside them too.
     def rewrite(p: LogicalPlan): LogicalPlan = p.transformDownWithSubqueries {
-      case w: org.apache.spark.sql.catalyst.plans.logical.UnresolvedWith =>
+      case w: UnresolvedWith =>
         w.copy(cteRelations = w.cteRelations.map { case (name, sub, maxRec) =>
           (name, rewrite(sub).asInstanceOf[SubqueryAlias], maxRec)
         })
-      case f @ Filter(cond, child) =>
-        // Peel SubqueryAlias to find a relation right below the filter.
-        def relationBelow(n: LogicalPlan): Option[UnresolvedRelation] = n match {
-          case u: UnresolvedRelation => Some(u)
-          case SubqueryAlias(_, u: UnresolvedRelation) => Some(u)
-          case _ => None
-        }
-        relationBelow(child) match {
-          case Some(u) if GlueRefId.parse(u.multipartIdentifier).isDefined =>
-            val ref = GlueRefId.parse(u.multipartIdentifier).get
-            // an aliased relation must be referenced via the alias;
-            // unaliased may use table or db.table qualifiers
-            val quals: Set[String] = child match {
-              case SubqueryAlias(id, _) => Set(id.name.toLowerCase)
-              case _ => Set(ref.table.toLowerCase,
-                s"${ref.database}.${ref.table}".toLowerCase,
-                s"glue.${ref.database}.${ref.table}".toLowerCase)
-            }
-            val newRel = relationPlan(ref, icebergHiddenKeep(ref, cond, quals))
-            val newChild = child match {
-              case SubqueryAlias(id, _) => SubqueryAlias(id, newRel)
-              case _ => qualified(ref, newRel)
-            }
-            Filter(cond, newChild)
-          case _ => f
-        }
       case u: UnresolvedRelation if GlueRefId.parse(u.multipartIdentifier).isDefined =>
         val ref = GlueRefId.parse(u.multipartIdentifier).get
-        qualified(ref, relationPlan(ref))
+        SubqueryAlias(Seq("glue", ref.database, ref.table), Shim.analyzedPlan(
+          readTable(ref.database, ref.table, 0, keep = None, proxied = true)))
     }
     rewrite(plan)
-  }
-
-  /** Hidden-partition pruning for Iceberg transform specs. Plain
-    * equality / IN conjuncts on a hidden-spec SOURCE column translate
-    * through the transform ([[graft.listing.IcebergBucket]] /
-    * [[graft.listing.IcebergTruncate]]) to the admissible partition
-    * values, and — because truncate PRESERVES ORDER on integers —
-    * range conjuncts (>, >=, <, <=, BETWEEN) prune truncate specs by
-    * window overlap. Only files whose manifest partition record can
-    * satisfy every constrained spec are kept. Sound by construction:
-    * only whole top-level conjuncts of those exact shapes prune (an
-    * OR involving the column keeps everything), unknown partition
-    * values keep the file, string truncate serves equality only, and
-    * the file listing is driver-side metadata, so the filter costs no
-    * Spark job. Returns None when nothing prunes.
-    */
-  private def icebergHiddenKeep(ref: GlueRefId, cond: Expression,
-      quals: Set[String]): Option[Set[String]] = {
-    if (tableMetadata(ref.database, ref.table).tableType != TableType.Iceberg) return None
-    val snap = snapshot(ref.database, ref.table, 0)
-    val specs = snap.specFields.filter(_._3 != "identity")
-    if (specs.isEmpty) return None
-    import org.apache.spark.sql.catalyst.{expressions => ce}
-    def split(e: Expression): Seq[Expression] = e match {
-      case ce.And(l, r) => split(l) ++ split(r)
-      case other => Seq(other)
-    }
-    def attrOk(a: UnresolvedAttribute, src: String): Boolean =
-      a.nameParts.last.equalsIgnoreCase(src) &&
-        (a.nameParts.length == 1 ||
-          quals.contains(a.nameParts.init.map(_.toLowerCase).mkString(".")))
-    def litVal(l: ce.Literal): Option[Any] = l.value match {
-      case null => None
-      case u: org.apache.spark.unsafe.types.UTF8String => Some(u.toString)
-      case i: Int => Some(i)
-      case lo: Long => Some(lo)
-      case _ => None // other types never constrain a hidden spec here
-    }
-    def asLong(v: Any): Option[Long] = v match {
-      case i: Int => Some(i.toLong); case l: Long => Some(l); case _ => None
-    }
-    val conjuncts = split(cond)
-    // per source column: intersected equality value sets + numeric bounds
-    final case class Cons(eq: Option[Seq[Any]],
-        lo: Seq[(Long, Boolean)], hi: Seq[(Long, Boolean)]) {
-      def isFree: Boolean = eq.isEmpty && lo.isEmpty && hi.isEmpty
-    }
-    def consFor(src: String): Cons = {
-      val eqSets = conjuncts.flatMap {
-        case ce.EqualTo(a: UnresolvedAttribute, l: ce.Literal) if attrOk(a, src) =>
-          litVal(l).map(Seq(_))
-        case ce.EqualTo(l: ce.Literal, a: UnresolvedAttribute) if attrOk(a, src) =>
-          litVal(l).map(Seq(_))
-        case ce.In(a: UnresolvedAttribute, vs) if attrOk(a, src) &&
-            vs.forall(_.isInstanceOf[ce.Literal]) =>
-          val lits = vs.map(v => litVal(v.asInstanceOf[ce.Literal]))
-          if (lits.forall(_.isDefined)) Some(lits.flatten) else None
-        case _ => None
-      }
-      // attr-side vs literal-side comparisons normalize to bounds on the attr
-      // Spark 4 parses BETWEEN as an unresolved function (the analyzer
-      // later lowers it to >= AND <=); match it here since pruning
-      // runs on the UNRESOLVED plan
-      def between(e: Expression): Option[(Long, Long)] = e match {
-        case f: org.apache.spark.sql.catalyst.analysis.UnresolvedFunction
-            if f.nameParts.map(_.toLowerCase) == Seq("between") =>
-          f.arguments match {
-            case Seq(a: UnresolvedAttribute, l1: ce.Literal, l2: ce.Literal)
-                if attrOk(a, src) =>
-              for (lo1 <- litVal(l1).flatMap(asLong); hi1 <- litVal(l2).flatMap(asLong))
-                yield (lo1, hi1)
-            case _ => None
-          }
-        case _ => None
-      }
-      val lo = conjuncts.flatMap {
-        case e if between(e).isDefined => between(e).map(b => (b._1, true))
-        case ce.GreaterThan(a: UnresolvedAttribute, l: ce.Literal) if attrOk(a, src) =>
-          litVal(l).flatMap(asLong).map((_, false))
-        case ce.GreaterThanOrEqual(a: UnresolvedAttribute, l: ce.Literal) if attrOk(a, src) =>
-          litVal(l).flatMap(asLong).map((_, true))
-        case ce.LessThan(l: ce.Literal, a: UnresolvedAttribute) if attrOk(a, src) =>
-          litVal(l).flatMap(asLong).map((_, false))
-        case ce.LessThanOrEqual(l: ce.Literal, a: UnresolvedAttribute) if attrOk(a, src) =>
-          litVal(l).flatMap(asLong).map((_, true))
-        case _ => None
-      }
-      val hi = conjuncts.flatMap {
-        case e if between(e).isDefined => between(e).map(b => (b._2, true))
-        case ce.LessThan(a: UnresolvedAttribute, l: ce.Literal) if attrOk(a, src) =>
-          litVal(l).flatMap(asLong).map((_, false))
-        case ce.LessThanOrEqual(a: UnresolvedAttribute, l: ce.Literal) if attrOk(a, src) =>
-          litVal(l).flatMap(asLong).map((_, true))
-        case ce.GreaterThan(l: ce.Literal, a: UnresolvedAttribute) if attrOk(a, src) =>
-          litVal(l).flatMap(asLong).map((_, false))
-        case ce.GreaterThanOrEqual(l: ce.Literal, a: UnresolvedAttribute) if attrOk(a, src) =>
-          litVal(l).flatMap(asLong).map((_, true))
-        case _ => None
-      }
-      Cons(
-        if (eqSets.isEmpty) None else Some(eqSets.reduce((a, b) => a.filter(b.toSet))),
-        lo, hi)
-    }
-    val BucketRe = """bucket\[(\d+)\]""".r
-    val TruncRe = """truncate\[(\d+)\]""".r
-    // (spec field, keep-predicate over the file's partition value)
-    val fieldPreds: Seq[(String, String => Boolean)] = specs.flatMap { case (field, src, tr) =>
-      val c = consFor(src)
-      if (c.isFree) None
-      else tr match {
-        case BucketRe(n0) =>
-          val n = n0.toInt
-          c.eq.map { vals =>
-            val buckets = vals.map(v => graft.listing.IcebergBucket.of(v, n)).toSet
-            (field, (pv: String) =>
-              scala.util.Try(pv.toInt).toOption.forall(buckets.contains))
-          }
-        case TruncRe(w0) =>
-          val w = w0.toInt
-          val eqLongs = c.eq.map(_.flatMap(asLong))
-          val eqStrings = c.eq.map(_.collect { case st: String => st })
-          Some((field, (pv: String) => {
-            scala.util.Try(pv.toLong).toOption match {
-              case Some(t) => // integer window [t, t + w - 1]
-                val eqOk = eqLongs.forall(vs =>
-                  vs.exists(v => graft.listing.IcebergTruncate.ofLong(v, w) == t))
-                val loOk = c.lo.forall { case (l, incl) =>
-                  if (incl) t + w - 1 >= l else t + w - 1 > l }
-                val hiOk = c.hi.forall { case (u, incl) =>
-                  if (incl) t <= u else t < u }
-                eqOk && loOk && hiOk
-              case None => // string truncate: equality (prefix) only
-                eqStrings.forall(vs =>
-                  vs.exists(v => graft.listing.IcebergTruncate.ofString(v, w) == pv))
-            }
-          }))
-        case _ => None // unknown transform: never prune on it
-      }
-    }
-    if (fieldPreds.isEmpty) return None
-    val keep = snap.files.filter { f =>
-      fieldPreds.forall { case (field, ok) =>
-        f.partitionValues.get(field) match {
-          case Some(v) => ok(v)
-          case None    => true // unknown partition value: keep (sound)
-        }
-      }
-    }.map(_.path).toSet
-    Some(keep)
   }
 
   /** S3 credential configuration (≈ reference `setCredentials` /

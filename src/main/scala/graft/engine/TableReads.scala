@@ -65,14 +65,15 @@ private[engine] object DeleteSet {
   *    paged LIST ([[graft.listing.HadoopFileLister]]).
   *  - The index's partition columns carry the listed values (Hive
   *    `key=value`, projection patterns, lake metadata), so it is the
-  *    query path's one partition prune: `FileSourceStrategy` pushes
-  *    each relation's partition conjuncts into it, resolved and typed
-  *    — sound under OR/CTE/subquery predicates, fixing the reference's
-  *    OR-to-AND over-pruning (reference: src/sql-transformer.ts:244-247,
+  *    query path's one file prune: each relation's resolved, typed
+  *    filters keep partitions, then skip files by stats — sound under
+  *    OR/CTE/subquery predicates, fixing the reference's OR-to-AND
+  *    over-pruning (reference: src/sql-transformer.ts:244-247,
   *    src/glue-table-cache.ts:329-331). Planning a warm query runs no
   *    Spark action.
   *  - File-skipping stats are fetched on demand, only for the files a
   *    query with data filters still reads after its partition prune.
+  *    Iceberg hidden-transform values are stats too.
   *  - Merge-on-read deletes cost one broadcast anti-join per delete
   *    kind; changelogs scan only the files a change touches.
   */
@@ -128,9 +129,8 @@ trait TableReads { self: GlueTableEngine =>
     snapshot(database, table, versionOffset).files
 
   /** One table version as the read path sees it: the file listing and
-    * everything the SAME metadata pass yields — the [[DeleteSet]],
-    * schema and Iceberg partition spec (one metadata JSON, log replay
-    * or timeline walk). Typed partitions are derived lazily, skipping
+    * everything the SAME metadata pass yields — the [[DeleteSet]] and
+    * schema (one metadata JSON, log replay or timeline walk). Typed partitions are derived lazily, skipping
     * stats per file on demand. One cache entry holds all of it, so a
     * listing never pairs with derived state of another version.
     */
@@ -138,9 +138,7 @@ trait TableReads { self: GlueTableEngine =>
       val files: Seq[S3FileInfo],
       /** Schema the format's own metadata records (None: Hive/plain). */
       val formatSchema: Option[StructType] = None,
-      val deletes: DeleteSet = DeleteSet.empty,
-      /** Iceberg current partition spec `(field, source, transform)`. */
-      val specFields: Seq[(String, String, String)] = Nil) {
+      val deletes: DeleteSet = DeleteSet.empty) {
 
     /** The schema of [[partitions]]' values. */
     val partitionSchema: StructType = partitionSchemaOf(meta)
@@ -160,7 +158,8 @@ trait TableReads { self: GlueTableEngine =>
       * `paths` (Hadoop path strings of listed files; an empty map
       * means "cannot skip"). Iceberg manifest bounds and Delta
       * add-action stats are already in the listing (zero extra I/O,
-      * the 10M-file path); otherwise parquet/ORC footers of the asked
+      * the 10M-file path; Iceberg hidden partition values are folded in
+    * as ranges and buckets); otherwise parquet/ORC footers of the asked
       * files are read on the driver in parallel and memoized for the
       * snapshot's life (none above footerStatsMaxFiles files).
       */
@@ -209,8 +208,7 @@ trait TableReads { self: GlueTableEngine =>
           deletes = DeleteSet(
             v.deletes.filter(_.content == 1).map(d => PositionDelete(d.path, None)),
             v.deletes.filter(_.content == 2),
-            if (v.deletes.isEmpty) Map.empty else v.files.map(f => f.path -> f.seq).toMap),
-          specFields = v.specFields)
+            if (v.deletes.isEmpty) Map.empty else v.files.map(f => f.path -> f.seq).toMap))
       case TableType.Delta =>
         // Same zero-extra-I/O contract: sizes, partition values, stats
         // ranges, deletion vectors and the schema all come from the

@@ -336,9 +336,6 @@ case class ShingleHashes64Expr(child: Expression, n: Int)
   override def prettyName: String = "shingle_hashes64_sorted"
 }
 
-/** bigint: min rolling shingle hash (document fingerprint); -1 when
-  * fewer than n tokens.
-  */
 /** array&lt;long&gt;: content-defined chunk hashes, one pass per doc. */
 case class ChunkHashesExpr(child: Expression, window: Int, divisor: Int)
     extends UnaryExpression {
@@ -352,6 +349,9 @@ case class ChunkHashesExpr(child: Expression, window: Int, divisor: Int)
   override def prettyName: String = "chunk_hashes"
 }
 
+/** bigint: min rolling shingle hash (document fingerprint); -1 when
+  * fewer than n tokens.
+  */
 case class FingerprintExpr(child: Expression, n: Int)
     extends UnaryExpression {
   override def dataType: DataType = LongType
@@ -364,11 +364,6 @@ case class FingerprintExpr(child: Expression, n: Int)
   override def prettyName: String = "doc_fingerprint"
 }
 
-/** double: cosine similarity of two float-array columns, with the
-  * exact left-fold evaluation order of VectorFunctions.cosine /
-  * sqlCosine (dot and both norms accumulated in index order in
-  * double).
-  */
 /** int: intersection size of two ascending-sorted long arrays. */
 case class SortedOverlapExpr(left: Expression, right: Expression)
     extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
@@ -382,6 +377,11 @@ case class SortedOverlapExpr(left: Expression, right: Expression)
   override def prettyName: String = "sorted_overlap"
 }
 
+/** double: cosine similarity of two float-array columns, with the
+  * exact left-fold evaluation order of VectorFunctions.cosine /
+  * sqlCosine (dot and both norms accumulated in index order in
+  * double).
+  */
 case class CosineSimExpr(left: Expression, right: Expression)
     extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
   override def dataType: DataType = DoubleType

@@ -42,9 +42,23 @@ import scala.util.Try
   * keeps min-side and equality proofs and refuses max-side ones.
   * Iceberg ranges gated on `nan_value_counts == 0` are NaN-free and
   * leave this false (full two-sided pruning).
+  *
+  * `bucket`: `(N, b)` when every row's value hashes to Iceberg bucket
+  * `b` of `N` (a hidden `bucket[N]` partition value). A null `min` or
+  * `max` is an unknown side.
   */
 final case class ColRange(min: Any, max: Any, allNulls: Boolean, noNulls: Boolean = false,
-    mayHideNaN: Boolean = false)
+    mayHideNaN: Boolean = false, bucket: Option[(Int, Int)] = None) {
+
+  /** Both facts at once: the tighter bound on each side (this one's
+    * when they do not compare), and this bucket or else the other's.
+    */
+  def intersect(o: ColRange): ColRange = {
+    def pick(a: Any, b: Any, tighter: Int => Boolean): Any =
+      if (a == null || (b != null && FooterStats.cmp(b, a).exists(tighter))) b else a
+    copy(min = pick(min, o.min, _ > 0), max = pick(max, o.max, _ < 0), bucket = bucket.orElse(o.bucket))
+  }
+}
 
 object FooterStats {
 

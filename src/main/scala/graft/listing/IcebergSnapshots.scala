@@ -5,6 +5,7 @@ import org.apache.avro.file.DataFileReader
 import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.unsafe.types.UTF8String
 
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
@@ -108,7 +109,8 @@ final class IcebergSnapshotResolver(hadoopConf: Configuration) {
     * unpartitioned or the manifest omits the field), and per-column
     * min/max ranges decoded from `lower_bounds`/`upper_bounds` —
     * Iceberg's own data-skipping metadata, free with the manifest
-    * read (empty when the manifest omits them).
+    * read (empty when the manifest omits them) — narrowed by the
+    * file's hidden partition values ([[hiddenFact]]).
     */
   final case class IcebergDataFile(path: String, size: Long,
       partition: Map[String, String], bounds: Map[String, ColRange],
@@ -136,15 +138,13 @@ final class IcebergSnapshotResolver(hadoopConf: Configuration) {
     * data files (manifests carry `data_file.file_size_in_bytes` and
     * `data_file.partition`, so the read path builds `FileStatus`es
     * AND prunes identity partitions without touching the filesystem
-    * again), its live delete files, and the schema and partition spec
-    * of the same metadata JSON. At 100 TB this is the difference
-    * between planning from KB-scale manifests and a million-object
-    * LIST+HEAD storm.
+    * again), its live delete files, and the schema of the same
+    * metadata JSON. At 100 TB this is the difference between planning
+    * from KB-scale manifests and a million-object LIST+HEAD storm.
     */
   final case class IcebergVersion(files: Seq[IcebergDataFile],
       deletes: Seq[IcebergDeleteFile],
-      schema: Option[org.apache.spark.sql.types.StructType],
-      specFields: Seq[(String, String, String)])
+      schema: Option[org.apache.spark.sql.types.StructType])
 
   /** Metadata passes (list, parse and order the metadata JSONs) made
     * by this resolver — test instrumentation for the one-pass-per-
@@ -328,10 +328,7 @@ final class IcebergSnapshotResolver(hadoopConf: Configuration) {
     * This is the append path's authority for how new files must land
     * after a partition-spec evolution — the spec, not the catalog,
     * holds the evolved layout (a table partitioned by an identity key
-    * that adopts a hidden transform keeps both dimensions). The
-    * non-identity (hidden) fields — `bucket[N]`, `truncate[W]` — are
-    * what the engine's query rewrite prunes the file listing on,
-    * without the spec field ever appearing as a table column.
+    * that adopts a hidden transform keeps both dimensions).
     */
   def specFields(location: String, versionOffset: Int = 0): Seq[(String, String, String)] =
     metadataAt(location, versionOffset).toSeq.flatMap(specFieldsOf)
@@ -344,28 +341,32 @@ final class IcebergSnapshotResolver(hadoopConf: Configuration) {
           for (id <- Option(f.get("id")); nm <- Option(f.get("name")))
             yield id.asInt() -> nm.asText()
         }).toMap
+    specOf(meta).flatMap { case (nm, tr, srcId) =>
+      // identity fields name themselves when the source id is
+      // unresolvable (hand-built fixtures use source-id -1)
+      nameById.get(srcId).orElse(if (tr == "identity") Some(nm) else None).map((nm, _, tr))
+    }
+  }
+
+  /** The current spec's `(field name, transform, source field-id)`,
+    * in spec order; -1 for a missing source id.
+    */
+  private def specOf(meta: JsonNode): Seq[(String, String, Int)] =
     Option(meta.get("partition-specs")).toSeq
       .flatMap(_.elements().asScala.toSeq.headOption)
       .flatMap(s => Option(s.get("fields")).toSeq)
       .flatMap(_.elements().asScala.toSeq.flatMap { f =>
-        for {
-          nm <- Option(f.get("name")).map(_.asText())
-          tr <- Option(f.get("transform")).map(_.asText())
-          src <- Option(f.get("source-id")).map(_.asInt()).flatMap(nameById.get)
-            // identity fields name themselves when the source id is
-            // unresolvable (hand-built fixtures use source-id -1)
-            .orElse(if (tr == "identity") Some(nm) else None)
-        } yield (nm, src, tr)
+        for (nm <- Option(f.get("name")); tr <- Option(f.get("transform")))
+          yield (nm.asText(), tr.asText(), Option(f.get("source-id")).fold(-1)(_.asInt()))
       })
-  }
 
   /** One metadata pass over the selected version, then its manifest
     * walk (reference: src/util/iceberg.ts:11-36).
     */
   def resolve(location: String, versionOffset: Int = 0): IcebergVersion =
-    metadataAt(location, versionOffset).fold(IcebergVersion(Nil, Nil, None, Nil)) { meta =>
+    metadataAt(location, versionOffset).fold(IcebergVersion(Nil, Nil, None)) { meta =>
       val (files, deletes) = liveFiles(meta)
-      IcebergVersion(files, deletes, schemaOf(meta), specFieldsOf(meta))
+      IcebergVersion(files, deletes, schemaOf(meta))
     }
 
   private def liveFiles(meta: JsonNode): (Seq[IcebergDataFile], Seq[IcebergDeleteFile]) = {
@@ -385,6 +386,7 @@ final class IcebergSnapshotResolver(hadoopConf: Configuration) {
         } yield id -> (Option(f.get("physical")).filter(_.isTextual)
           .map(_.asText()).getOrElse(nm), tp)
       }.toMap
+    val hidden = specOf(meta).filter(_._2 != "identity")
 
     // the CURRENT snapshot: refs.main when refs exist (a staged
     // branch snapshot may have published last in the array and must
@@ -533,8 +535,17 @@ final class IcebergSnapshotResolver(hadoopConf: Configuration) {
                     noNulls = nulls.get(id).contains(0L))
               }
             }.toMap
+            // a hidden spec value is a fact about every row's source
+            // value: the file-level stats prune on it like on a bound
+            val facts = hidden.flatMap { case (field, tr, src) =>
+              for ((nm, tp) <- fieldById.get(src); pv <- partition.get(field); r <- hiddenFact(tr, tp, pv))
+                yield nm -> r
+            }
+            val stats = facts.foldLeft(bounds) { case (acc, (nm, r)) =>
+              acc.updated(nm, acc.get(nm).fold(r)(_.intersect(r)))
+            }
             (content, equalityCols,
-              IcebergDataFile(df.get("file_path").toString, size, partition, bounds,
+              IcebergDataFile(df.get("file_path").toString, size, partition, stats,
                 rowCount, entrySeq))
             }
           }).flatten
@@ -626,6 +637,30 @@ final class IcebergSnapshotResolver(hadoopConf: Configuration) {
     }
   }
 
+  /** The range a hidden partition value `pv` puts on its source column
+    * of Iceberg type `tp`: `truncate[W]` of an integer `t` is the window
+    * [t, t+W-1]; of a string `p`, every string with prefix `p` (up to
+    * `p` + 0xFF, a byte no UTF-8 string holds); `bucket[N]` of an
+    * int/long/string column, bucket `pv`. None for any other shape.
+    */
+  private def hiddenFact(transform: String, tp: String, pv: String): Option[ColRange] = {
+    val Bucket = """bucket\[(\d+)\]""".r
+    val Truncate = """truncate\[(\d+)\]""".r
+    (transform, tp) match {
+      case (Bucket(n), "int" | "long" | "string") =>
+        pv.toIntOption.map(b => ColRange(null, null, allNulls = false, bucket = Some((n.toInt, b))))
+      case (Truncate(w), "int") =>
+        pv.toIntOption.map(t => ColRange(t, math.min(t.toLong + w.toInt - 1, Int.MaxValue).toInt, allNulls = false))
+      case (Truncate(w), "long") =>
+        pv.toLongOption.map(t => ColRange(t, if (t > Long.MaxValue - w.toInt + 1) Long.MaxValue
+          else t + w.toInt - 1, allNulls = false))
+      case (Truncate(_), "string") =>
+        val p = pv.getBytes("UTF-8")
+        Some(ColRange(UTF8String.fromBytes(p), UTF8String.fromBytes(p :+ 0xFF.toByte), allNulls = false))
+      case _ => None
+    }
+  }
+
   /** Extract a `lower_bounds`/`upper_bounds` field-id→bytes map from
     * a `data_file` record. Iceberg serializes these `map<int, binary>`
     * fields in Avro as an array of key/value records (non-string map
@@ -710,7 +745,7 @@ final class IcebergSnapshotResolver(hadoopConf: Configuration) {
         val f = le.getFloat; if (f.isNaN) None else Some(f)
       case "double" if bytes.length == 8 =>
         val d = le.getDouble; if (d.isNaN) None else Some(d)
-      case "string" => Some(org.apache.spark.unsafe.types.UTF8String.fromBytes(bytes))
+      case "string" => Some(UTF8String.fromBytes(bytes))
       case _ => None
     }
   }

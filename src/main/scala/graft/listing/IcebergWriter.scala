@@ -98,13 +98,15 @@ object IcebergBucket {
 /** Iceberg's truncate partition transform (spec §Partition
   * Transforms): integers truncate to `v - (((v % W) + W) % W)` (the
   * floor of the W-wide window, correct for negatives), strings to
-  * their first W characters. Unlike bucket, truncate PRESERVES
-  * ORDER on integers, so hidden-partition pruning can serve range
-  * predicates, not just equality.
+  * their first W code points, so a value is always a UTF-8 prefix of
+  * its source (a surrogate pair is never split). Unlike bucket,
+  * truncate PRESERVES ORDER, so hidden-partition pruning can serve
+  * range predicates, not just equality.
   */
 object IcebergTruncate {
   def ofLong(v: Long, w: Int): Long = v - (((v % w) + w) % w)
-  def ofString(s: String, w: Int): String = if (s.length <= w) s else s.substring(0, w)
+  def ofString(s: String, w: Int): String =
+    if (s.codePointCount(0, s.length) <= w) s else s.substring(0, s.offsetByCodePoints(0, w))
 }
 
 object IcebergWriter {

@@ -2,7 +2,7 @@ package graft.listing
 
 import graft.listing.FooterStats.cmp
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.types.BooleanType
+import org.apache.spark.sql.types.{BooleanType, DataType, IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Sound prove-false evaluation of pushed data filters against a
@@ -38,10 +38,10 @@ object StatsPruning {
       case And(l, r) => proveFalse(l, stats, resolver) || proveFalse(r, stats, resolver)
       case Or(l, r)  => proveFalse(l, stats, resolver) && proveFalse(r, stats, resolver)
 
-      case EqualTo(a: Attribute, Literal(v, _)) => outside(a, v, sk)
-      case EqualTo(Literal(v, _), a: Attribute) => outside(a, v, sk)
-      case EqualNullSafe(a: Attribute, Literal(v, _)) if v != null => outside(a, v, sk)
-      case EqualNullSafe(Literal(v, _), a: Attribute) if v != null => outside(a, v, sk)
+      case EqualTo(a: Attribute, Literal(v, t)) => outside(a, v, t, sk)
+      case EqualTo(Literal(v, t), a: Attribute) => outside(a, v, t, sk)
+      case EqualNullSafe(a: Attribute, Literal(v, t)) if v != null => outside(a, v, t, sk)
+      case EqualNullSafe(Literal(v, t), a: Attribute) if v != null => outside(a, v, t, sk)
 
       // Max-side proofs ("no row can exceed max") are refused on
       // mayHideNaN ranges: a NaN row hidden behind finite footer
@@ -60,9 +60,9 @@ object StatsPruning {
       case LessThanOrEqual(Literal(v, _), a: Attribute)    => sk(a, v)(r => !r.mayHideNaN && cmp(r.max, v).exists(_ < 0))
 
       case In(a: Attribute, vs) if vs.forall(_.isInstanceOf[Literal]) =>
-        vs.map(_.asInstanceOf[Literal].value).forall(v => outside(a, v, sk))
+        vs.forall { case Literal(v, t) => outside(a, v, t, sk) }
       case InSet(a: Attribute, hset) =>
-        hset.forall(v => outside(a, v, sk))
+        hset.forall(v => outside(a, v, a.dataType, sk))
 
       case StartsWith(a: Attribute, Literal(p: UTF8String, _)) =>
         // s startsWith p  =>  truncate(s, |p|) == p; truncation is
@@ -85,7 +85,15 @@ object StatsPruning {
     }
   }
 
-  private def outside(a: Attribute, v: Any,
+  /** `a = v` is never true: `v` lies outside the range, or hashes to
+    * another bucket. The bucket is only computed for a literal of the
+    * column's own int, long or string type, the types Iceberg's bucket
+    * hash is defined on here.
+    */
+  private def outside(a: Attribute, v: Any, t: DataType,
       sk: (Attribute, Any) => (ColRange => Boolean) => Boolean): Boolean =
-    sk(a, v)(r => cmp(v, r.min).exists(_ < 0) || cmp(v, r.max).exists(_ > 0))
+    sk(a, v)(r => cmp(v, r.min).exists(_ < 0) || cmp(v, r.max).exists(_ > 0) ||
+      r.bucket.exists { case (n, b) =>
+        t == a.dataType && Seq(IntegerType, LongType, StringType).contains(t) && IcebergBucket.of(v, n) != b
+      })
 }

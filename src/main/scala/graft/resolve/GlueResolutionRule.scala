@@ -36,8 +36,8 @@ class GlueResolutionRule(session: SparkSession) extends Rule[LogicalPlan] {
       // Delegate whole-plan rewriting to the engine so this path gets
       // the SAME pruning as engine.query: every layout, projected
       // (non-`key=value` dirs) included, reads through a
-      // PreListedFileIndex whose partition columns the query's
-      // partition conjuncts prune at planning. The
+      // PreListedFileIndex that the query's filters prune at
+      // optimization. The
       // glue-ref scan below keeps the common no-glue-tables query from
       // paying a plan traversal in every analyzer fixed-point pass.
       var hasGlueRef = false
@@ -47,7 +47,7 @@ class GlueResolutionRule(session: SparkSession) extends Rule[LogicalPlan] {
           hasGlueRef = true
         case _ =>
       }
-      if (!hasGlueRef) plan else eng.rewriteWithPruning(plan)
+      if (!hasGlueRef) plan else eng.rewriteGlueRelations(plan)
   }
 }
 

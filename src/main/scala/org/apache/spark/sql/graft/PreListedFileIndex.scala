@@ -44,39 +44,52 @@ final class PreListedFileIndex(
     stats: PreListedFileIndex.Stats = PreListedFileIndex.NoStats)
   extends FileIndex {
 
-  private val dirs: Seq[PartitionDirectory] =
-    partitions.map { case (values, statuses) => PartitionDirectory(values, statuses.toArray) }
-
   override def rootPaths: Seq[Path] = roots
 
   override def listFiles(
       partitionFilters: Seq[Expression],
-      dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-    skipByStats(pruneByPartition(partitionFilters), dataFilters)
+      dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
+    select(partitionFilters, dataFilters).map { case (values, fs) => PartitionDirectory(values, fs.toArray) }
+
+  /** This index narrowed to the files the filters keep, or `this` when
+    * they keep every file. [[PruneListedPartitions]] plans with it, so
+    * `sizeInBytes` and `inputFiles` describe what the scan reads.
+    */
+  def narrowed(partitionFilters: Seq[Expression], dataFilters: Seq[Expression]): PreListedFileIndex = {
+    val kept = select(partitionFilters, dataFilters)
+    if (kept.iterator.map(_._2.size).sum == partitions.iterator.map(_._2.size).sum) this
+    else new PreListedFileIndex(partitionSchema, kept, roots, stats)
   }
 
-  private def pruneByPartition(partitionFilters: Seq[Expression]): Seq[PartitionDirectory] =
-    partitionPredicate(partitionFilters).fold(dirs)(keep => dirs.filter(d => keep(d.values)))
-
-  /** This index narrowed to the partitions `partitionFilters` keep, or
-    * `this` when they keep every partition. [[PruneListedPartitions]]
-    * plans with it, so `sizeInBytes` and `inputFiles` describe the
-    * selection rather than the whole table.
+  /** The one file selection: the partitions `partitionFilters` keep,
+    * then, within them, the files no data filter is provably false on
+    * (footer/manifest min-max and Iceberg hidden-partition facts —
+    * the Delta/Iceberg data-skipping design). Stats are asked for only
+    * when a usable data filter exists, and only for the files the
+    * partition prune kept. A filter that can't be bound or proved
+    * (subquery-bearing, non-deterministic, an unknown shape, a file
+    * with no stats) keeps the files — a superset is always safe; the
+    * filters still run above the scan.
     */
-  def filterPartitions(partitionFilters: Seq[Expression]): PreListedFileIndex =
-    partitionPredicate(partitionFilters).fold(this) { keep =>
-      val kept = partitions.filter(p => keep(p._1))
-      if (kept.length == partitions.length) this
-      else new PreListedFileIndex(partitionSchema, kept, roots, stats)
-    }
+  private def select(partitionFilters: Seq[Expression],
+      dataFilters: Seq[Expression]): Seq[(InternalRow, Seq[FileStatus])] = {
+    val byPartition = partitionPredicate(partitionFilters).fold(partitions)(keep => partitions.filter(p => keep(p._1)))
+    val usable = dataFilters.filter(f => f.deterministic && !SubqueryExpression.hasSubquery(f))
+    if (usable.isEmpty || byPartition.isEmpty) return byPartition
+    val paths = byPartition.flatMap(_._2.map(_.getPath.toString))
+    val ranges = paths.zip(stats(paths)).toMap
+    val resolver = SQLConf.get.resolver
+    byPartition.map { case (values, fs) =>
+      values -> fs.filter { f =>
+        val st = ranges(f.getPath.toString)
+        st.isEmpty || !usable.exists(e => graft.listing.StatsPruning.proveFalse(e, st, resolver))
+      }
+    }.filter(_._2.nonEmpty)
+  }
 
   private def partitionPredicate(partitionFilters: Seq[Expression]): Option[InternalRow => Boolean] = {
     if (partitionSchema.isEmpty) return None
     val resolver = SQLConf.get.resolver
-    // Bind by name against the partition schema. A filter that can't
-    // be bound here (subquery-bearing, non-deterministic, or
-    // referencing something else) is skipped — returning a superset
-    // is always safe; the filter still runs above the scan.
     val bindable = partitionFilters.filter { f =>
       f.deterministic && !SubqueryExpression.hasSubquery(f) &&
         f.references.forall(a => partitionSchema.exists(sf => resolver(sf.name, a.name)))
@@ -92,32 +105,8 @@ final class PreListedFileIndex(
     Some(predicate.eval)
   }
 
-  /** File-level data skipping: drop a file when some pushed data
-    * filter is provably false on its column ranges (footer/manifest
-    * min-max — the Delta/Iceberg data-skipping design). Ranges are
-    * asked for only when a usable data filter exists, and only for the
-    * files the partition prune kept. A file with no stats, or a filter
-    * shape the prover doesn't know, is always kept; the filter still
-    * runs in the scan above.
-    */
-  private def skipByStats(selected: Seq[PartitionDirectory],
-      dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-    val usable = dataFilters.filter(f => f.deterministic && !SubqueryExpression.hasSubquery(f))
-    if (usable.isEmpty || selected.isEmpty) return selected
-    val paths = selected.flatMap(_.files.map(_.getPath.toString))
-    val ranges = paths.zip(stats(paths)).toMap
-    val resolver = SQLConf.get.resolver
-    selected.map { d =>
-      val kept = d.files.filter { f =>
-        val st = ranges(f.getPath.toString)
-        st.isEmpty || !usable.exists(e => graft.listing.StatsPruning.proveFalse(e, st, resolver))
-      }
-      if (kept.length == d.files.length) d else PartitionDirectory(d.values, kept)
-    }
-  }
-
   override def inputFiles: Array[String] =
-    dirs.iterator.flatMap(_.files.map(_.getPath.toString)).toArray
+    partitions.iterator.flatMap(_._2.map(_.getPath.toString)).toArray
 
   override def refresh(): Unit = () // engine TTL caches own freshness
 
@@ -126,7 +115,7 @@ final class PreListedFileIndex(
     * threshold.
     */
   override val sizeInBytes: Long = {
-    val raw = dirs.iterator.flatMap(_.files).map(_.getLen).sum
+    val raw = partitions.iterator.flatMap(_._2).map(_.getLen).sum
     (raw * SQLConf.get.fileCompressionFactor).toLong
   }
 }
@@ -178,16 +167,16 @@ object PreListedFileIndex {
 }
 
 /** Optimizer rule: narrow each [[PreListedFileIndex]] relation to the
-  * partitions its filters keep — what Spark's
-  * `PruneFileSourcePartitions` does, which only handles catalog
-  * tables. The scan would prune the same way when it lists its
-  * files; doing it before physical planning makes the relation's
-  * `sizeInBytes` the selection's, so a partition slice of a large
-  * table can still be a join's broadcast side (and keep dynamic
-  * partition pruning on the other side), and `inputFiles` names the
-  * files the scan reads. It evaluates the filters over the cached
-  * listing: no Spark action. [[PreListedFileIndex.dataFrame]] adds it
-  * to the session that plans the relation.
+  * files its filters keep — what Spark's `PruneFileSourcePartitions`
+  * does for catalog tables' partitions, plus the index's stats skip.
+  * The scan would select the same files when it lists them; doing it
+  * before physical planning makes the relation's `sizeInBytes` the
+  * selection's, so a slice of a large table can still be a join's
+  * broadcast side (and keep dynamic partition pruning on the other
+  * side), and `inputFiles` names the files the scan reads. It
+  * evaluates the filters over the cached listing and stats: no Spark
+  * action. [[PreListedFileIndex.dataFrame]] adds it to the session
+  * that plans the relation.
   */
 object PruneListedPartitions extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan = plan transformDown {
@@ -197,8 +186,9 @@ object PruneListedPartitions extends Rule[LogicalPlan] {
           val resolver = SQLConf.get.resolver
           val partitionCols = AttributeSet(lr.output.filter(a =>
             index.partitionSchema.exists(f => resolver(f.name, a.name))))
-          val pruned = index.filterPartitions(filters.filter(f =>
-            f.references.nonEmpty && f.references.subsetOf(partitionCols)))
+          val (onPartitions, rest) = filters.partition(f =>
+            f.references.nonEmpty && f.references.subsetOf(partitionCols))
+          val pruned = index.narrowed(onPartitions, rest.filter(_.references.intersect(partitionCols).isEmpty))
           if (pruned eq index) op
           else {
             val prunedRelation = lr.copy(relation = fs.copy(location = pruned)(fs.sparkSession))

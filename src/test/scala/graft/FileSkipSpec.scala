@@ -59,6 +59,31 @@ class FileSkipSpec extends AnyFunSuite {
     assert(!prove(IsNull(id)))
   }
 
+  test("prover: an Iceberg bucket fact rejects literals of other buckets") {
+    import graft.listing.IcebergBucket
+    val b = IcebergBucket.of(421L, 8)
+    val Seq(other, other2) = (0L until 100L).filter(IcebergBucket.of(_, 8) != b).take(2)
+    val buckets = Map("id" -> ColRange(null, null, allNulls = false, bucket = Some((8, b))))
+    def p(e: Expression) = StatsPruning.proveFalse(e, buckets, resolver)
+    assert(!p(EqualTo(id, Literal(421L))))
+    assert(p(EqualTo(id, Literal(other))))
+    assert(p(EqualTo(Literal(other), id)))
+    assert(p(In(id, Seq(Literal(other), Literal(other2)))))
+    assert(!p(In(id, Seq(Literal(other), Literal(421L)))))
+    assert(p(InSet(id, Set(other))))
+    // a literal of another type than the column's never hashes
+    assert(!p(EqualTo(id, Literal(other.toInt))))
+    assert(!p(EqualTo(id, Literal(u(other.toString)))))
+    // OR: the unproven side keeps the file
+    assert(!p(Or(EqualTo(id, Literal(other)), EqualTo(name, Literal(u("zed"))))))
+    // string columns hash their UTF-8 bytes
+    val sb = IcebergBucket.of(u("eve"), 4)
+    val sBuckets = Map("name" -> ColRange(u("bob"), u("eve"), allNulls = false, bucket = Some((4, sb))))
+    val otherName = Seq("bob", "carl", "dan", "dora").find(n => IcebergBucket.of(u(n), 4) != sb).get
+    assert(StatsPruning.proveFalse(EqualTo(name, Literal(u(otherName))), sBuckets, resolver))
+    assert(!StatsPruning.proveFalse(EqualTo(name, Literal(u("eve"))), sBuckets, resolver))
+  }
+
   test("prover: null semantics") {
     val nullStats = Map("id" -> ColRange(null, null, allNulls = true))
     assert(StatsPruning.proveFalse(IsNotNull(id), nullStats, resolver))

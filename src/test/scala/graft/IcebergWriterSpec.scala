@@ -461,6 +461,57 @@ class IcebergWriterSpec extends AnyFunSuite {
     assert(filesScanned(sq) == 1, "string equality prunes to its prefix window")
   }
 
+  /** Files each Iceberg/parquet relation of `df`'s optimized plan reads. */
+  private def filesPerRelation(df: org.apache.spark.sql.DataFrame): Seq[Int] =
+    df.queryExecution.optimizedPlan.collect {
+      case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+        r.relation match {
+          case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
+            h.location.inputFiles.length
+          case _ => 0
+        }
+    }
+
+  test("string truncate windows: a digit-only prefix stays a string, a surrogate pair stays whole") {
+    val sp = Shim.classic(spark)
+    import sp.implicits._
+    val eng = new GlueTableEngine(spark, new FixtureCatalog())
+    val docs = Seq("421", "435", "alpha", "beta").zipWithIndex
+      .map { case (w, i) => (i.toLong, w) }.toDF("k", "w")
+    eng.writeIcebergTableTruncated(docs, "d", "tnum", TestSpark.scratch("ice_tnum"), "w", 2)
+    assert(eng.files("d", "tnum").size == 4, "prefixes 42/43/al/be")
+    val q = eng.query("SELECT k FROM glue.d.tnum WHERE w = '421'")
+    assert(q.collect().map(_.getLong(0)).toSeq == Seq(0L))
+    assert(filesPerRelation(q) == Seq(1), "the '42' window alone")
+    // truncation counts code points: a surrogate pair is never split,
+    // so a window is a UTF-8 prefix of each of its rows
+    assert(graft.listing.IcebergTruncate.ofString("a\uD83D\uDE00x", 2) == "a\uD83D\uDE00")
+  }
+
+  test("hidden bucket pruning reaches filters that are not directly on the relation") {
+    val sp = Shim.classic(spark)
+    import sp.implicits._
+    val eng = new GlueTableEngine(spark, new FixtureCatalog())
+    eng.writeIcebergTableBucketed((0L until 1000L).map(k => (k, s"r$k")).toDF("k", "v"),
+      "d", "ib", TestSpark.scratch("ice_bucket_reach"), "k", 8)
+    assert(eng.files("d", "ib").size == 8)
+    // through a subquery
+    val sub = eng.query("SELECT v FROM (SELECT * FROM glue.d.ib) t WHERE k = 421")
+    assert(sub.collect().map(_.getString(0)).toSeq == Seq("r421"))
+    assert(filesPerRelation(sub) == Seq(1))
+    // plain spark.sql over the setupFor view
+    val Seq(view) = eng.setupFor("SELECT * FROM glue.d.ib")
+    val viaView = spark.sql(s"SELECT v FROM $view WHERE k = 421")
+    assert(viaView.collect().map(_.getString(0)).toSeq == Seq("r421"))
+    assert(filesPerRelation(viaView) == Seq(1))
+    // both sides of a self-join: the filter is above the join, and the
+    // optimizer infers it for the other side
+    val join = eng.query(
+      "SELECT a.v, b.v FROM glue.d.ib a JOIN glue.d.ib b ON a.k = b.k WHERE a.k = 421")
+    assert(join.collect().map(r => (r.getString(0), r.getString(1))).toSeq == Seq(("r421", "r421")))
+    assert(filesPerRelation(join) == Seq(1, 1))
+  }
+
   test("icebergChanges over a MERGE snapshot: equality CDC (r12 ask #3)") {
     val sp = Shim.classic(spark)
     import sp.implicits._

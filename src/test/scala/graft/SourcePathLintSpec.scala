@@ -7,12 +7,12 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Source lints over the checkout.
   *
-  * Paths: no source file may name the checkout it is built in. An
-  * absolute path into the working tree (fixture roots, generator
-  * outputs, spec scratch tables, a doc link) silently reads and writes
-  * the wrong tree when the code runs from any other clone. Paths under
-  * the checkout resolve from the working directory instead
-  * (`TestFixtures.root`, `TestSpark.scratch`).
+  * Paths: no source file may name a checkout of this repository, its
+  * own or another clone's. An absolute path into a working tree
+  * (fixture roots, generator outputs, spec scratch tables, a doc link)
+  * silently reads and writes the wrong tree when the code runs from
+  * any other clone. Paths under the checkout resolve from the working
+  * directory instead (`TestFixtures.root`, `TestSpark.scratch`).
   *
   * Knobs: main code reads system properties, environment variables and
   * `graft.*` session settings only through [[SourcePathLintSpec.Allowed]].
@@ -38,14 +38,24 @@ class SourcePathLintSpec extends AnyFunSuite {
   private def where(f: File, i: Int, line: String): String =
     s"${checkout.toPath.relativize(f.toPath)}:${i + 1}: ${line.trim}"
 
+  /** An absolute path into ANY checkout of this repository, wherever
+    * it was cloned: at least one directory, then one of the checkout's
+    * top-level entries (`src`, `target`, `perfbench`, ...). Built from
+    * the running checkout's entries, so a clone also sees literals
+    * that name another checkout, and the spec names none itself.
+    */
+  private lazy val checkoutPath: scala.util.matching.Regex = {
+    val entries = checkout.list().filterNot(_.startsWith(".")).sorted.map(java.util.regex.Pattern.quote)
+    ("""(?<![\w.~-])(?:/[\w.@+-]+)+/(?:""" + entries.mkString("|") + """)(?![\w.-])""").r
+  }
+
   private def assertNoCheckoutPath(dir: String): Unit = {
-    val needle = checkout.getPath
     val hits = for {
       f <- sources(dir)
       (line, i) <- lines(f)
-      if line.contains(needle)
+      if checkoutPath.findFirstIn(line).isDefined
     } yield where(f, i, line)
-    assert(hits.isEmpty, s"$dir names the checkout ($needle):\n${hits.mkString("\n")}")
+    assert(hits.isEmpty, s"$dir names a checkout:\n${hits.mkString("\n")}")
   }
 
   test("no file under src/main names the checkout's absolute path") {
