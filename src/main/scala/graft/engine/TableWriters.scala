@@ -431,7 +431,7 @@ trait TableWriters { self: GlueTableEngine =>
         val affected = files(database, table).map(_.path)
           .filter(p => affectedCanon.contains(canonPath(p)))
         // carry forward existing positions of the re-DV'd files
-        val carried = positionRows(DeleteSet.deletionVectors(delta.deletionVectors(loc)),
+        val carried = positionRows(DeleteSet.deletionVectors(delta.versionAt(loc)._2),
           Some(affected.toSet))
         val dvRows = matches.unionAll(carried.toDF("file_path", "pos"))
         // storedPathCol: the sidecar is re-canonicalized on every read,

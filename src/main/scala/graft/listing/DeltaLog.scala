@@ -1,8 +1,8 @@
 package graft.listing
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.sql.{Encoders, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -18,47 +18,14 @@ final case class DeltaDataFile(path: String, size: Long,
     partition: Map[String, String], bounds: Map[String, ColRange],
     rowCount: Option[Long])
 
-/** Delta Lake transaction-log → data-file resolution, without a
-  * Delta runtime — the Delta counterpart of
-  * [[IcebergSnapshotResolver]], and a deliberate beyond-reference
-  * extension: the reference's classifier declares the DELTA table
-  * type but can never return it (reference: src/util/glue.ts:13-19),
-  * so Delta-registered Glue tables are unreadable there.
-  *
-  * Pure-metadata walk of the public Delta protocol
-  * (https://github.com/delta-io/delta/blob/master/PROTOCOL.md):
-  *   1. versions are the `_delta_log/<20-digit>.json` commits; the
-  *      latest version minus `versionOffset` is the read target
-  *      (time travel, same offset convention as Iceberg's);
-  *   2. state starts from the newest `<v>.checkpoint[.N.M].parquet`
-  *      at or below the target (classic and multi-part checkpoints),
-  *      read as parquet — a checkpoint IS the replayed state, so a
-  *      million-commit table costs one checkpoint read plus the
-  *      commits after it, never a full log replay;
-  *   3. the remaining JSON commits replay in order: `add` upserts a
-  *      file (last writer wins per path), `remove` deletes it,
-  *      `metaData` refreshes the schema used to type file statistics.
-  *
-  * Per-file `stats` (numRecords / minValues / maxValues / nullCount)
-  * decode into [[ColRange]]s for the planner's file-skipping tier —
-  * the same zero-extra-I/O path as Iceberg manifest bounds. Float and
-  * double ranges are marked `mayHideNaN` (Delta writers disagree on
-  * NaN handling, so only NaN-safe proofs may use them); timestamp
-  * stats are skipped entirely (writer-dependent serialization),
-  * which only costs skipping opportunity, never correctness.
-  *
-  * Like the Iceberg resolver, everything here is driver-side
-  * metadata: at 100 TB only paths and stats move through the driver,
-  * and commit JSONs are KB-scale regardless of table size.
-  */
 /** Delta transaction-log WRITER — the engine's transactional write
   * path, readable back by [[DeltaLogResolver]] (round-trip
   * spec-proven) and by any Delta reader that follows the protocol —
   * EXCEPT tables carrying deletion vectors, whose sidecar format is
-  * engine-private: the first DV commit publishes protocol
-  * (minReaderVersion 3, reader feature [[DvFeatureName]]) so such
-  * readers refuse the table loudly instead of resurrecting deleted
-  * rows (Delta table-features rule).
+  * engine-private: every commit that leaves DVs live publishes
+  * protocol (minReaderVersion 3, reader feature [[DvFeatureName]]) so
+  * such readers refuse the table loudly instead of resurrecting
+  * deleted rows (Delta table-features rule).
   * Each [[commit]] writes the batch's data files under a
   * per-version subdirectory, derives per-file statistics from the
   * parquet FOOTERS just written (numRecords + min/max + null
@@ -67,6 +34,12 @@ final case class DeltaDataFile(path: String, size: Long,
   * never observe a half-written commit, and data files without a
   * published commit are invisible garbage, the standard lakehouse
   * crash contract.
+  *
+  * Every log write is one commit step: one listing of the log
+  * ([[DeltaLogResolver.listLog]]) names the next version, one
+  * renderer per action writes its lines ([[metaDataLine]],
+  * [[addLine]], [[protocolLine]]), and one [[publish]] renames them
+  * into place and keeps [[stateCache]] in step.
   */
 object DeltaLogWriter {
   /** Reader/writer table-feature name published by the first DV
@@ -76,8 +49,8 @@ object DeltaLogWriter {
     */
   private[graft] val DvFeatureName = "graft.parquetDeletionVectors"
 
-  private def jstr(s: String): String =
-    new ObjectMapper().writeValueAsString(s)
+  private val json = new ObjectMapper()
+  private def jstr(s: String): String = json.writeValueAsString(s)
 
   /** Percent-encode a path for persistence in a log action or
     * checkpoint row. The Delta protocol stores add/remove paths as
@@ -123,16 +96,17 @@ object DeltaLogWriter {
     */
   private[graft] val PhysNameKey = "delta.columnMapping.physicalName"
 
+  /** The parquet column name `f` binds to: its annotation, else its
+    * own name.
+    */
+  private[graft] def physicalName(f: StructField): String =
+    if (f.metadata.contains(PhysNameKey)) f.metadata.getString(PhysNameKey) else f.name
+
   /** logical -> physical names for the fields whose physical name
     * differs (empty for unmapped tables — the common fast path).
     */
   private[graft] def mappingOf(schema: StructType): Map[String, String] =
-    schema.fields.flatMap { f =>
-      if (f.metadata.contains(PhysNameKey)) {
-        val p = f.metadata.getString(PhysNameKey)
-        if (p != f.name) Some(f.name -> p) else None
-      } else None
-    }.toMap
+    schema.fields.collect { case f if physicalName(f) != f.name => f.name -> physicalName(f) }.toMap
 
   /** True when the schema carries column-mapping annotations (name
     * mode on) — even if every physical currently equals its logical
@@ -141,6 +115,106 @@ object DeltaLogWriter {
     */
   private[graft] def isMapped(schema: StructType): Boolean =
     schema.fields.exists(_.metadata.contains(PhysNameKey))
+
+  /** The one `metaData` action. The id derives from the table root,
+    * so every re-declaration names the same table; a schema carrying
+    * physical-name annotations also carries
+    * `delta.columnMapping.mode=name`, which a protocol-following
+    * reader needs to bind through them — on every re-declaration (an
+    * additive append, a restore, a clone and a checkpoint included).
+    */
+  private def metaDataLine(root: String, schemaString: String,
+      partitionColumns: Seq[String]): String = {
+    val mode =
+      if (DeltaLogResolver.parseSchema(schemaString).exists(isMapped))
+        ""","configuration":{"delta.columnMapping.mode":"name"}"""
+      else ""
+    s"""{"metaData":{"id":${jstr(java.util.UUID.nameUUIDFromBytes(root.getBytes("UTF-8")).toString)},""" +
+      s""""format":{"provider":"parquet"},"schemaString":${jstr(schemaString)},""" +
+      s""""partitionColumns":[${partitionColumns.map(jstr).mkString(", ")}]$mode}}"""
+  }
+
+  /** The one `add` action: path (encoded as the protocol stores it),
+    * size, partition values, the stats JSON verbatim and the
+    * deletion-vector sidecar, if any.
+    */
+  private def addLine(a: DeltaAdd): String = {
+    val pv = a.partitionValues.map { case (k, v) => s"${jstr(k)}: ${jstr(v)}" }.mkString("{", ", ", "}")
+    s"""{"add":{"path":${jpath(a.path)},"size":${a.size},"partitionValues":$pv,"dataChange":true""" +
+      a.stats.map(s => s""","stats":${jstr(s)}""").getOrElse("") +
+      a.dv.map(d => s""","deletionVector":{"storagePath":${jpath(d)}}""").getOrElse("") + "}}"
+  }
+
+  private def removeLine(path: String, dataChange: Boolean): String =
+    s"""{"remove":{"path":${jpath(path)},"dataChange":$dataChange}}"""
+
+  private def txnLine(appId: String, version: Long): String =
+    s"""{"txn":{"appId":${jstr(appId)},"version":$version}}"""
+
+  /** The one protocol rule, decided from the state a commit leaves.
+    * Live deletion vectors need reader 3 / writer 7 with the
+    * engine-private [[DvFeatureName]] feature (plus `columnMapping`
+    * on a mapped schema): the descriptor here is engine-shaped
+    * (storagePath -> parquet positions sidecar), NOT the spec's
+    * roaring-bitmap DV, so a protocol-following reader must REFUSE
+    * the table rather than silently resurrect deleted rows, which
+    * Delta's table-features rule does for an unknown reader feature.
+    * (Claiming the standard `deletionVectors` feature would be worse:
+    * DV-capable readers would then mis-parse the sidecar.) A mapped
+    * schema alone needs 2 / 5; anything else is the legacy 1 / 2.
+    * Protocol actions replace prior ones on replay, so every commit
+    * that re-declares state from a replay (schema, DV, restore, clone
+    * and checkpoint) publishes this rule's line, and none downgrades
+    * the gate while DV-bearing adds are live.
+    */
+  private def protocolLine(dvsLive: Boolean, mapped: Boolean): String =
+    if (dvsLive) {
+      val feats = (DvFeatureName +: (if (mapped) Seq("columnMapping") else Nil))
+        .map(jstr).mkString("[", ",", "]")
+      s"""{"protocol":{"minReaderVersion":3,"minWriterVersion":7,""" +
+        s""""readerFeatures":$feats,"writerFeatures":$feats}}"""
+    } else if (mapped) """{"protocol":{"minReaderVersion":2,"minWriterVersion":5}}"""
+    else """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}"""
+
+  /** Prior table state per root: (version it reflects, data schema,
+    * partition columns). A streaming sink commits every micro-batch;
+    * without this, each commit replays the full log (checkpoint
+    * parquet read + commit tail) just to re-learn an unchanged
+    * schema. The cache is only TRUSTED when its version is exactly
+    * `version - 1` of the commit in flight — any interleaved writer
+    * (same process or external) advances the freshly-listed version
+    * past the cached one and forces a real replay, so staleness
+    * cannot corrupt a commit. Only [[publish]] writes it.
+    */
+  private val stateCache =
+    new java.util.concurrent.ConcurrentHashMap[String, (Long, Option[StructType], Seq[String])]()
+
+  /** The one publish of every Delta log write: `lines` become
+    * `version` of the listed log through [[Publish]]'s rename-CAS,
+    * `onBeforePublish` running just before the rename (the seam a
+    * race spec interleaves a second writer through). [[stateCache]]
+    * advances to `after` — the data schema and partition columns
+    * the table holds once this commit is in — when the publish
+    * landed and the caller knows that state, and is dropped
+    * otherwise. A lost race raises the one lost-race error unless
+    * the caller `retry`s; true iff the commit landed.
+    */
+  private def publish(log: DeltaLogListing, version: Long, lines: Seq[String],
+      after: Option[(Option[StructType], Seq[String])],
+      onBeforePublish: () => Unit = () => (), retry: Boolean = false): Boolean = {
+    val landed = Publish(log.fs, log.commitPath(version), lines.mkString("", "\n", "\n"),
+      onBeforePublish)
+    after.filter(_ => landed) match {
+      case Some((schema, pc)) => stateCache.put(log.root, (version, schema, pc))
+      case None               => stateCache.remove(log.root)
+    }
+    if (!landed && !retry) lostRace(log, version, "re-resolve and retry")
+    landed
+  }
+
+  private def lostRace(log: DeltaLogListing, version: Long, why: String): Nothing =
+    throw new IllegalStateException(
+      s"commit $version already published at ${log.commitPath(version)} — $why")
 
   /** DROP a column as a METADATA-ONLY commit — the column-mapping
     * twin of [[renameColumn]]: the field leaves the schemaString,
@@ -153,44 +227,13 @@ object DeltaLogWriter {
     * assigns `<name>_c<version>` physicals to columns added to mapped
     * tables for exactly this reason. Returns the new version.
     */
-  def dropColumn(spark: SparkSession, location: String, name: String): Long = {
-    val root = location.stripSuffix("/")
-    val resolver = new DeltaLogResolver(spark)
-    val st = resolver.rawState(root, 0).getOrElse(throw new IllegalStateException(
-      s"cannot drop a column at $location: no Delta log"))
-    val schema = st.schemaString
-      .flatMap(j => try Some(DataType.fromJson(j).asInstanceOf[StructType])
-        catch { case _: Exception => None })
-      .getOrElse(throw new IllegalStateException(s"no parseable schema at $root"))
-    require(schema.fieldNames.contains(name), s"$name is not a column of $root")
-    require(!st.partitionColumns.contains(name),
-      s"dropping partition column $name is not supported")
-    require(schema.fields.length > 1, s"cannot drop the only column of $root")
-    val newSchema = StructType(schema.fields.filterNot(_.name == name).map { f =>
-      val phys =
-        if (f.metadata.contains(PhysNameKey)) f.metadata.getString(PhysNameKey) else f.name
-      StructField(f.name, f.dataType, f.nullable,
-        new MetadataBuilder().withMetadata(f.metadata).putString(PhysNameKey, phys).build())
-    })
-    val lines = Seq(
-      """{"protocol":{"minReaderVersion":2,"minWriterVersion":5}}""",
-      s"""{"metaData":{"id":${jstr(java.util.UUID.nameUUIDFromBytes(root.getBytes("UTF-8")).toString)},""" +
-        s""""format":{"provider":"parquet"},"schemaString":${jstr(newSchema.json)},""" +
-        s""""partitionColumns":[${st.partitionColumns.map(jstr).mkString(", ")}],""" +
-        s""""configuration":{"delta.columnMapping.mode":"name"}}}""")
-    val conf = org.apache.spark.sql.graft.Shim.classic(spark)
-      .sparkContext.hadoopConfiguration
-    val logDir = new Path(s"$root/_delta_log")
-    val fs = logDir.getFileSystem(conf)
-    val version = st.version + 1
-    val dst = new Path(logDir, f"${version}%020d.json")
-    if (!Publish(fs, dst, lines.mkString("", "\n", "\n"), () => ())) {
-      throw new IllegalStateException(
-        s"drop-column commit lost the publish race at $dst — re-resolve and retry")
+  def dropColumn(spark: SparkSession, location: String, name: String): Long =
+    commitSchema(spark, location, "drop a column") { (schema, partitionColumns) =>
+      require(schema.fieldNames.contains(name), s"$name is not a column of $location")
+      require(!partitionColumns.contains(name), s"dropping partition column $name is not supported")
+      require(schema.fields.length > 1, s"cannot drop the only column of $location")
+      schema.fields.filterNot(_.name == name)
     }
-    stateCache.remove(root)
-    version
-  }
 
   /** RENAME a column as a METADATA-ONLY commit — Delta column mapping
     * (name mode): the new schemaString annotates EVERY field with its
@@ -199,65 +242,46 @@ object DeltaLogWriter {
     * this engine and any column-mapping-capable Delta reader resolve
     * columns through the annotation. The commit also publishes the
     * protocol gate the feature requires (minReaderVersion 2 /
-    * minWriterVersion 5 + delta.columnMapping.mode=name), so a
-    * pre-mapping reader refuses the table instead of reading the
-    * renamed column as missing. Partition columns are refused (their
-    * names are baked into every file path). Returns the new version.
+    * minWriterVersion 5, or the `columnMapping` feature beside a live
+    * DV gate, + delta.columnMapping.mode=name), so a pre-mapping
+    * reader refuses the table instead of reading the renamed column
+    * as missing. Partition columns are refused (their names are baked
+    * into every file path). Returns the new version.
     */
   def renameColumn(spark: SparkSession, location: String,
-      oldName: String, newName: String): Long = {
-    val root = location.stripSuffix("/")
-    val resolver = new DeltaLogResolver(spark)
-    val st = resolver.rawState(root, 0).getOrElse(throw new IllegalStateException(
-      s"cannot rename at $location: no Delta log"))
-    val schema = st.schemaString
-      .flatMap(j => try Some(DataType.fromJson(j).asInstanceOf[StructType])
-        catch { case _: Exception => None })
-      .getOrElse(throw new IllegalStateException(s"no parseable schema at $root"))
-    require(schema.fieldNames.contains(oldName), s"$oldName is not a column of $root")
-    require(!schema.fieldNames.contains(newName), s"$newName already exists at $root")
-    require(!st.partitionColumns.contains(oldName),
-      s"renaming partition column $oldName is not supported (its name is in every file path)")
-    val newSchema = StructType(schema.fields.map { f =>
-      val phys =
-        if (f.metadata.contains(PhysNameKey)) f.metadata.getString(PhysNameKey) else f.name
-      val nm = if (f.name == oldName) newName else f.name
-      val md = new MetadataBuilder().withMetadata(f.metadata)
-        .putString(PhysNameKey, phys).build()
-      StructField(nm, f.dataType, f.nullable, md)
-    })
-    val lines = Seq(
-      """{"protocol":{"minReaderVersion":2,"minWriterVersion":5}}""",
-      s"""{"metaData":{"id":${jstr(java.util.UUID.nameUUIDFromBytes(root.getBytes("UTF-8")).toString)},""" +
-        s""""format":{"provider":"parquet"},"schemaString":${jstr(newSchema.json)},""" +
-        s""""partitionColumns":[${st.partitionColumns.map(jstr).mkString(", ")}],""" +
-        s""""configuration":{"delta.columnMapping.mode":"name"}}}""")
-    val conf = org.apache.spark.sql.graft.Shim.classic(spark)
-      .sparkContext.hadoopConfiguration
-    val logDir = new Path(s"$root/_delta_log")
-    val fs = logDir.getFileSystem(conf)
-    val version = st.version + 1
-    val dst = new Path(logDir, f"${version}%020d.json")
-    if (!Publish(fs, dst, lines.mkString("", "\n", "\n"), () => ())) {
-      throw new IllegalStateException(
-        s"rename commit lost the publish race at $dst — re-resolve and retry")
+      oldName: String, newName: String): Long =
+    commitSchema(spark, location, "rename") { (schema, partitionColumns) =>
+      require(schema.fieldNames.contains(oldName), s"$oldName is not a column of $location")
+      require(!schema.fieldNames.contains(newName), s"$newName already exists at $location")
+      require(!partitionColumns.contains(oldName),
+        s"renaming partition column $oldName is not supported (its name is in every file path)")
+      schema.fields.map(f => if (f.name == oldName) f.copy(name = newName) else f)
     }
-    stateCache.remove(root)
+
+  /** The one schema commit: `evolve` maps the current fields — each
+    * already annotated with its physical name, so name mode is on
+    * from here — and the table's partition columns to the new fields,
+    * published as a metadata-only commit with the protocol the new
+    * state needs.
+    */
+  private def commitSchema(spark: SparkSession, location: String, what: String)(
+      evolve: (StructType, Seq[String]) => Seq[StructField]): Long = {
+    val resolver = new DeltaLogResolver(spark)
+    val log = resolver.listLog(location)
+    val st = resolver.stateAt(log, 0).getOrElse(throw new IllegalStateException(
+      s"cannot $what at $location: no Delta log"))
+    val schema = st.schema.getOrElse(
+      throw new IllegalStateException(s"no parseable schema at ${log.root}"))
+    val annotated = StructType(schema.fields.map(f => f.copy(metadata = new MetadataBuilder()
+      .withMetadata(f.metadata).putString(PhysNameKey, physicalName(f)).build())))
+    val next = StructType(evolve(annotated, st.partitionColumns))
+    val version = st.version + 1
+    publish(log, version,
+      Seq(protocolLine(st.dvsLive, mapped = true),
+        metaDataLine(log.root, next.json, st.partitionColumns)),
+      Some((Some(DeltaLogResolver.dataSchema(next, st.partitionColumns)), st.partitionColumns)))
     version
   }
-
-  /** Prior table state per root: (version it reflects, data schema,
-    * partition columns). A streaming sink commits every micro-batch;
-    * without this, each commit replays the full log (checkpoint
-    * parquet read + commit tail) just to re-learn an unchanged
-    * schema. The cache is only TRUSTED when its version is exactly
-    * `version - 1` of the commit in flight — any interleaved writer
-    * (same process or external) advances the freshly-listed version
-    * past the cached one and forces a real replay, so staleness
-    * cannot corrupt a commit.
-    */
-  private val stateCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, Option[StructType], Seq[String])]()
 
   /** Write `df` as the next commit of the Delta table at `location`
     * (version 0 creates the table and records `metaData`). Returns
@@ -275,29 +299,43 @@ object DeltaLogWriter {
     */
   def commitWith(spark: SparkSession, location: String, df: org.apache.spark.sql.DataFrame,
       partitionBy: Seq[String], removePaths: Seq[String],
-      txn: Option[(String, Long)] = None,
-      forceVersion: Option[Long] = None): Long = {
-    // forceVersion: test seam simulating a STALE READ — the writer
-    // believes this is the next free version even though a
-    // concurrent winner may already hold it (the race window between
-    // listing and rename, impossible to hit deterministically from
-    // outside)
-    val root = location.stripSuffix("/")
-    val logDir = new Path(s"$root/_delta_log")
-    val conf = org.apache.spark.sql.graft.Shim.classic(spark)
-      .sparkContext.hadoopConfiguration
-    val fs = logDir.getFileSystem(conf)
-    fs.mkdirs(logDir)
-    val CommitRe = """(\d{20})\.json""".r
-    val CheckpointRe = """(\d{20})\.checkpoint(?:\.\d+\.\d+)?\.parquet""".r
+      onBeforePublish: () => Unit = () => ()): Long =
+    commitData(spark, location, df, partitionBy, removePaths, txn = None, onBeforePublish).get
+
+  /** Append `df` IFF its `(appId, batchId)` mark is not in the log yet
+    * — the Delta streaming-sink idempotence protocol, and the twin of
+    * [[IcebergWriter.commitTxn]] and [[HudiTimelineWriter.commitTxn]].
+    * The commit records the mark as a `txn` action. The mark is
+    * checked against the head state this commit's publish validates:
+    * the commit's version is that state's successor, so the
+    * rename-CAS fails if anyone published after it. After a lost
+    * rename the head is re-read: a mark there means a racing writer
+    * committed this batch, so this call deletes its unpublished data
+    * directory and returns None; otherwise a blind append retries at
+    * the next free version. Returns the committed version, or None
+    * for a recognized replay.
+    */
+  def commitTxn(spark: SparkSession, location: String, df: org.apache.spark.sql.DataFrame,
+      appId: String, batchId: Long, partitionBy: Seq[String] = Nil,
+      onBeforePublish: () => Unit = () => ()): Option[Long] =
+    commitData(spark, location, df, partitionBy, Nil, Some((appId, batchId)), onBeforePublish)
+
+  private def commitData(spark: SparkSession, location: String,
+      df: org.apache.spark.sql.DataFrame, partitionBy: Seq[String], removePaths: Seq[String],
+      txn: Option[(String, Long)], onBeforePublish: () => Unit): Option[Long] = {
+    val resolver = new DeltaLogResolver(spark)
     // a cleaned log may hold ONLY a checkpoint — the version sequence
     // continues from it, never restarts
-    val listedVersion = fs.listStatus(logDir).toSeq.flatMap(_.getPath.getName match {
-      case CommitRe(v)     => Some(v.toLong)
-      case CheckpointRe(v) => Some(v.toLong)
-      case _               => None
-    }).maxOption.map(_ + 1L).getOrElse(0L)
-    val version = forceVersion.getOrElse(listedVersion)
+    val log = resolver.listLog(location)
+    val root = log.root
+    val version = log.next
+    // the head state this commit's publish validates, replayed only
+    // for a txn mark check or a state-cache miss
+    lazy val head = resolver.stateAt(log, 0)
+    def marked(st: => Option[RawDeltaState]): Boolean = txn.exists { case (appId, batchId) =>
+      st.flatMap(_.txns.get(appId)).exists(_ >= batchId)
+    }
+    if (marked(head)) return None
 
     // prior state (data schema + partition columns) through
     // version-1 — ONE cached or replayed resolve, BEFORE the data
@@ -309,11 +347,7 @@ object DeltaLogWriter {
       if (version == 0L) None
       else Option(stateCache.get(root)).collect {
         case (v, s, pc) if v == version - 1 => (s, pc)
-      }.orElse {
-        val st = new DeltaLogResolver(spark).commitState(root)
-        st.foreach { case (s, pc) => stateCache.put(root, (version - 1, s, pc)) }
-        st
-      }
+      }.orElse(head.map(st => (st.dataSchema, st.partitionColumns)))
     val effPartitionBy: Seq[String] = prior match {
       case Some((_, pc)) =>
         require(partitionBy.isEmpty || partitionBy == pc,
@@ -357,29 +391,25 @@ object DeltaLogWriter {
     // per-file add actions, stats from the footers just written
     // (PHYSICAL column names — what the files carry and what the
     // read path's skipping tier keys on)
-    val dataSchema = org.apache.spark.sql.types.StructType(
-      physDf.schema.filterNot(f => effPartitionBy.contains(f.name)))
-    val dataSchemaLogical = org.apache.spark.sql.types.StructType(
-      df.schema.filterNot(f => effPartitionBy.contains(f.name)))
-    def walk(p: Path): Seq[Path] = {
+    val conf = org.apache.spark.sql.graft.Shim.classic(spark).sparkContext.hadoopConfiguration
+    val fs = log.fs
+    val dataSchema = StructType(physDf.schema.filterNot(f => effPartitionBy.contains(f.name)))
+    val dataSchemaLogical = StructType(df.schema.filterNot(f => effPartitionBy.contains(f.name)))
+    def walk(p: Path): Seq[FileStatus] =
       fs.listStatus(p).toSeq.flatMap { st =>
         if (st.isDirectory) walk(st.getPath)
-        else if (st.getPath.getName.endsWith(".parquet")) Seq(st.getPath)
+        else if (st.getPath.getName.endsWith(".parquet")) Seq(st)
         else Nil
       }
-    }
-    val adds = walk(new Path(out)).sortBy(_.toString).map { p =>
+    val adds = walk(new Path(out)).sortBy(_.getPath.toString).map { st =>
+      val p = st.getPath
       val rel = p.toUri.getPath.stripPrefix(new Path(root).toUri.getPath).stripPrefix("/")
       val pv = rel.split('/').dropRight(1).collect {
         case seg if seg.contains('=') =>
           val Array(k, v) = seg.split("=", 2)
           k -> java.net.URLDecoder.decode(v, "UTF-8")
       }.toMap
-      val pvJson = pv.map { case (k, v) => s"${jstr(k)}: ${jstr(v)}" }.mkString("{", ", ", "}")
-      val size = fs.getFileStatus(p).getLen
-      val stats = statsJson(conf, p.toString, dataSchema)
-      s"""{"add":{"path":${jpath(rel)},"size":$size,"partitionValues":$pvJson,"dataChange":true""" +
-        stats.map(s => s""","stats":${jstr(s)}""").getOrElse("") + "}}"
+      addLine(DeltaAdd(rel, st.getLen, pv, statsJson(conf, p.toString, dataSchema)))
     }
     // v0 declares the schema; a later commit whose batch ADDS columns
     // re-declares the MERGED schema so readers pick up the additions
@@ -387,14 +417,11 @@ object DeltaLogWriter {
     // A batch missing columns is a legal subset append (no metaData).
     // A type change would silently corrupt reads of existing files,
     // so it fails loudly instead.
-    def metaJson(schema: StructType): String =
-      s"""{"metaData":{"id":${jstr(java.util.UUID.nameUUIDFromBytes(root.getBytes("UTF-8")).toString)},""" +
-        s""""format":{"provider":"parquet"},"schemaString":${jstr(schema.json)},""" +
-        s""""partitionColumns":[${effPartitionBy.map(jstr).mkString(", ")}]}}"""
+    def metaJson(schema: StructType): String = metaDataLine(root, schema.json, effPartitionBy)
     // schema the table holds AFTER this commit (for the state cache)
     val (metaLine, committedSchema) =
       if (version == 0L) (Seq(metaJson(dataSchemaLogical)), dataSchemaLogical)
-      else prior.flatMap(_._1) match {
+      else priorSchema match {
         case Some(cur) =>
           val curByName = cur.fields.map(f => f.name -> f.dataType).toMap
           val retyped = dataSchemaLogical.fields.filter(f =>
@@ -422,56 +449,55 @@ object DeltaLogWriter {
       // record table-root-relative paths when possible (the form adds
       // use); the resolver resolves either form
       val uriPath = new Path(p).toUri.getPath
-      val rel = if (uriPath.startsWith(rootPath))
-        uriPath.stripPrefix(rootPath).stripPrefix("/") else p
-      s"""{"remove":{"path":${jpath(rel)},"dataChange":false}}"""
+      removeLine(if (uriPath.startsWith(rootPath))
+        uriPath.stripPrefix(rootPath).stripPrefix("/") else p, dataChange = false)
     }
     // streaming exactly-once: a txn action records (appId, version) so
-    // a replayed micro-batch can be recognized and skipped (the Delta
-    // streaming-sink idempotence protocol)
-    val txnLine = txn.toSeq.map { case (appId, v) =>
-      s"""{"txn":{"appId":${jstr(appId)},"version":$v}}"""
-    }
-    val body = (metaLine ++ txnLine ++ removes ++ adds).mkString("", "\n", "\n")
+    // a replayed micro-batch can be recognized and skipped
+    val lines = metaLine ++ txn.map { case (appId, v) => txnLine(appId, v) } ++ removes ++ adds
 
-    // atomic publish: write to a temp name, rename into place. A
-    // lost rename race (another writer took this version) is
+    // A lost rename race (another writer took this version) is
     // RETRYABLE for blind appends — the adds reference only files
     // this writer just created, so re-publishing the same actions at
     // the next version is exactly optimistic concurrency control.
-    // Commits that REMOVE files or carry txn marks must NOT retry
-    // blindly: their read-set may have been invalidated by the
-    // winning commit (removes) or the replay-detection check must
-    // re-run (txn) — those surface the conflict to the caller.
-    val retryable = removePaths.isEmpty && txn.isEmpty && metaLine.isEmpty
-    var attempt = 0
-    var v = version
-    while (true) {
-      val dst = new Path(logDir, f"${v}%020d.json")
-      if (Publish(fs, dst, body, () => ())) {
-        // publish at the expected version advances the cached state;
-        // a retried publish (another writer won a version we never
-        // replayed) just invalidates it — the next commit re-resolves
-        if (v == version) stateCache.put(root, (v, Some(committedSchema), effPartitionBy))
-        else stateCache.remove(root)
-        return v
+    // Commits that REMOVE files or re-declare metaData must NOT retry
+    // blindly: the winning commit may have invalidated their read-set
+    // — those surface the conflict to the caller. A txn commit first
+    // re-reads the head for its mark.
+    val retryable = removePaths.isEmpty && metaLine.isEmpty
+    var (cur, v, attempt) = (log, version, 0)
+    while (!publish(cur, v, lines, Option.when(v == version)((Some(committedSchema), effPartitionBy)),
+        onBeforePublish, retry = true)) {
+      cur = resolver.listLog(location)
+      // a racing writer committed this batch, or the conflict
+      // surfaces: either way this call's data was never published, so
+      // no reader can see it
+      val replayed = marked(resolver.stateAt(cur, 0))
+      if (replayed || !retryable || attempt >= 4) {
+        fs.delete(new Path(out), true)
+        if (replayed) return None
+        lostRace(cur, v, if (retryable) "gave up after 5 attempts" else
+          "re-resolve and reapply (commits that remove files or re-declare metadata " +
+            "are not blindly retryable)")
       }
-      if (!retryable || attempt >= 4)
-        throw new IllegalStateException(
-          s"commit $v already published at $dst" +
-            (if (retryable) " after 5 attempts" else
-              " — re-resolve and reapply (remove/txn commits are not blindly retryable)"))
-      // re-list for the next free version; the winner may have
-      // advanced it by more than one
-      v = math.max(v + 1, fs.listStatus(logDir).toSeq.flatMap(_.getPath.getName match {
-        case CommitRe(x)     => Some(x.toLong)
-        case CheckpointRe(x) => Some(x.toLong)
-        case _               => None
-      }).maxOption.map(_ + 1L).getOrElse(v + 1))
+      // the winner may have advanced the log by more than one version
+      v = math.max(v + 1, cur.next)
       attempt += 1
     }
-    v // unreachable
+    Some(v)
   }
+
+  /** Parquet schema of a checkpoint: one row per action, protocol,
+    * metaData, txn and add as their commit JSON lines carry them.
+    */
+  private val CheckpointSchema = StructType.fromDDL(
+    "`protocol` STRUCT<minReaderVersion: INT, minWriterVersion: INT, " +
+      "readerFeatures: ARRAY<STRING>, writerFeatures: ARRAY<STRING>>, " +
+    "`metaData` STRUCT<id: STRING, `format`: STRUCT<provider: STRING>, schemaString: STRING, " +
+      "partitionColumns: ARRAY<STRING>, configuration: MAP<STRING, STRING>>, " +
+    "`txn` STRUCT<appId: STRING, version: BIGINT>, " +
+    "`add` STRUCT<path: STRING, size: BIGINT, partitionValues: MAP<STRING, STRING>, " +
+      "dataChange: BOOLEAN, stats: STRING, deletionVector: STRUCT<storagePath: STRING>>")
 
   /** Write a CHECKPOINT of the table's current state: one parquet
     * file `_delta_log/<v>.checkpoint.parquet` holding the fully
@@ -484,91 +510,54 @@ object DeltaLogWriter {
     * every 30 s writes ~2,900 commits/day, and without checkpoints
     * every reader replays all of them.
     *
-    * The state rows are driver-side metadata (same as the replay
-    * itself); a table whose live-file count outgrows driver memory
-    * would shard this into the protocol's multi-part
+    * The rows are the state's own action lines, rendered by the same
+    * renderers as the commits and read back through
+    * [[CheckpointSchema]]. They are driver-side metadata (same as the
+    * replay itself); a table whose live-file count outgrows driver
+    * memory would shard this into the protocol's multi-part
     * `<v>.checkpoint.<i>.<n>.parquet` form, which the reader side
     * here already consumes. Returns the checkpointed version.
     */
   def checkpoint(spark: SparkSession, location: String): Long = {
-    import org.apache.spark.sql.Row
-    val root = location.stripSuffix("/")
-    val st = new DeltaLogResolver(spark).rawState(location, 0).getOrElse(
-      throw new IllegalStateException(s"cannot checkpoint $location: no Delta log"))
+    val resolver = new DeltaLogResolver(spark)
+    checkpointOf(spark, resolver, resolver.listLog(location))
+  }
 
-    val addType = StructType(Seq(
-      StructField("path", StringType),
-      StructField("size", LongType),
-      StructField("partitionValues", MapType(StringType, StringType)),
-      StructField("stats", StringType),
-      StructField("dataChange", BooleanType),
-      StructField("deletionVectorPath", StringType)))
-    val schema = StructType(Seq(
-      StructField("protocol", StructType(Seq(
-        StructField("minReaderVersion", IntegerType),
-        StructField("minWriterVersion", IntegerType),
-        StructField("readerFeatures", ArrayType(StringType)),
-        StructField("writerFeatures", ArrayType(StringType))))),
-      StructField("metaData", StructType(Seq(
-        StructField("id", StringType),
-        StructField("format", StructType(Seq(StructField("provider", StringType)))),
-        StructField("schemaString", StringType),
-        StructField("partitionColumns", ArrayType(StringType))))),
-      StructField("txn", StructType(Seq(
-        StructField("appId", StringType),
-        StructField("version", LongType)))),
-      StructField("add", addType)))
-
-    val rootPath = new Path(root).toUri.getPath
+  private def checkpointOf(spark: SparkSession, resolver: DeltaLogResolver,
+      log: DeltaLogListing): Long = {
+    val st = resolver.stateAt(log, 0).getOrElse(
+      throw new IllegalStateException(s"cannot checkpoint ${log.root}: no Delta log"))
+    val rootPath = new Path(log.root).toUri.getPath
     def rel(p: String): String = {
       val u = new Path(p).toUri.getPath
       if (u.startsWith(rootPath)) u.stripPrefix(rootPath).stripPrefix("/") else p
     }
     // A checkpoint REPLACES the json prefix as the replay base, so it
-    // must not downgrade the protocol gate while DV-bearing adds are
-    // live — an external reader replaying from it would skip the
-    // table-features refusal and silently resurrect DV-deleted rows.
-    val hasMap = st.schemaString
-      .flatMap(j => try Some(DataType.fromJson(j).asInstanceOf[StructType])
-        catch { case _: Exception => None })
-      .exists(sc => mappingOf(sc).nonEmpty)
-    val protoRow =
-      if (st.adds.exists(_.dv.isDefined)) {
-        val feats = Seq(DvFeatureName) ++ (if (hasMap) Seq("columnMapping") else Nil)
-        Row(3, 7, feats, feats)
-      } else if (hasMap) Row(2, 5, null, null)
-      else Row(1, 2, null, null)
-    val rows = Seq(Row(protoRow, null, null, null)) ++
-      Seq(Row(null, Row(java.util.UUID.nameUUIDFromBytes(root.getBytes("UTF-8")).toString,
-        Row("parquet"), st.schemaString.orNull, st.partitionColumns), null, null)) ++
-      st.txns.toSeq.sortBy(_._1).map { case (appId, v) => Row(null, null, Row(appId, v), null) } ++
-      st.adds.map { a =>
-        // same protocol encoding as the JSON actions — the checkpoint
-        // reader resolves (decodes) these identically
-        Row(null, null, null,
-          Row(encLogPath(rel(a.path)), a.size, a.partitionValues, a.stats.orNull, true,
-            a.dv.map(d => encLogPath(rel(d))).orNull))
-      }
+    // carries the protocol of the state it holds — never a downgrade
+    // while DV-bearing adds are live, where an external reader
+    // replaying from it would skip the table-features refusal
+    val lines = protocolLine(st.dvsLive, st.schema.exists(isMapped)) +:
+      (st.schemaString.map(metaDataLine(log.root, _, st.partitionColumns)).toSeq ++
+        st.txns.toSeq.sortBy(_._1).map { case (appId, v) => txnLine(appId, v) } ++
+        st.adds.map(a => addLine(a.copy(path = rel(a.path), dv = a.dv.map(rel)))))
 
-    val sp = org.apache.spark.sql.graft.Shim.classic(spark)
-    val conf = sp.sparkContext.hadoopConfiguration
-    val logDir = new Path(s"$root/_delta_log")
-    val fs = logDir.getFileSystem(conf)
-    val tmpDir = new Path(logDir, f".cp_${st.version}%020d_tmp")
-    sp.createDataFrame(sp.sparkContext.parallelize(rows, 1), schema)
-      .write.mode("overwrite").parquet(tmpDir.toString)
+    val fs = log.fs
+    val tmpDir = new Path(log.logDir, f".cp_${st.version}%020d_tmp")
+    spark.read.schema(CheckpointSchema).option("mode", "FAILFAST")
+      .json(spark.createDataset(lines)(Encoders.STRING))
+      .coalesce(1).write.mode("overwrite").parquet(tmpDir.toString)
     val part = fs.listStatus(tmpDir).map(_.getPath)
       .find(_.getName.endsWith(".parquet")).getOrElse(
         throw new IllegalStateException(s"checkpoint write produced no parquet under $tmpDir"))
-    val dst = new Path(logDir, f"${st.version}%020d.checkpoint.parquet")
+    val dst = new Path(log.logDir, f"${st.version}%020d.checkpoint.parquet")
     fs.delete(dst, false)
     if (!fs.rename(part, dst))
       throw new IllegalStateException(s"cannot publish checkpoint $dst")
     fs.delete(tmpDir, true)
 
-    val lc = new Path(logDir, "_last_checkpoint")
+    val lc = new Path(log.logDir, "_last_checkpoint")
     val os = fs.create(lc, true)
-    try os.write(s"""{"version":${st.version},"size":${rows.size}}""".getBytes("UTF-8"))
+    try os.write(s"""{"version":${st.version},"size":${lines.size}}""".getBytes("UTF-8"))
     finally os.close()
     st.version
   }
@@ -580,25 +569,10 @@ object DeltaLogWriter {
     * the checkpoint version itself.
     */
   def cleanupLog(spark: SparkSession, location: String): Int = {
-    val conf = org.apache.spark.sql.graft.Shim.classic(spark)
-      .sparkContext.hadoopConfiguration
-    val logDir = new Path(s"${location.stripSuffix("/")}/_delta_log")
-    val fs = logDir.getFileSystem(conf)
-    if (!fs.exists(logDir)) return 0
-    val CommitRe = """(\d{20})\.json""".r
-    val CheckpointRe = """(\d{20})\.checkpoint(?:\.\d+\.\d+)?\.parquet""".r
-    val statuses = fs.listStatus(logDir).toSeq
-    val cp = statuses.flatMap(_.getPath.getName match {
-      case CheckpointRe(v) => Some(v.toLong)
-      case _               => None
-    }).maxOption.getOrElse(return 0)
-    val stale = statuses.flatMap { s =>
-      s.getPath.getName match {
-        case CommitRe(v) if v.toLong <= cp => Some(s.getPath)
-        case _                             => None
-      }
-    }
-    stale.foreach(fs.delete(_, false))
+    val log = new DeltaLogResolver(spark).listLog(location)
+    val cp = log.checkpoints.keys.maxOption.getOrElse(return 0)
+    val stale = log.commits.collect { case (v, p) if v <= cp => p }
+    stale.foreach(log.fs.delete(_, false))
     stale.size
   }
 
@@ -614,7 +588,8 @@ object DeltaLogWriter {
     * the target state, so file skipping keeps working after the
     * rollback. If the target version's schema differs (the restore
     * crosses a schema evolution), the commit re-declares the target
-    * metaData so reads resolve against the restored shape.
+    * metaData so reads resolve against the restored shape, and the
+    * protocol is the target state's.
     *
     * `versionOffset` counts back from the latest version (the g26
     * time-travel convention): offset 1 restores the table to the
@@ -629,53 +604,34 @@ object DeltaLogWriter {
     */
   def restore(spark: SparkSession, location: String, versionOffset: Int): Long = {
     require(versionOffset > 0, s"restore needs a positive offset, got $versionOffset")
-    val root = location.stripSuffix("/")
     val resolver = new DeltaLogResolver(spark)
-    val cur = resolver.rawState(root, 0).getOrElse(
+    val log = resolver.listLog(location)
+    val cur = resolver.stateAt(log, 0).getOrElse(
       throw new IllegalStateException(s"cannot restore $location: no Delta log"))
-    val tgt = resolver.rawState(root, versionOffset).getOrElse(
+    val tgt = resolver.stateAt(log, versionOffset).getOrElse(
       throw new IllegalArgumentException(
         s"cannot restore $location: no version at offset $versionOffset"))
     require(cur.partitionColumns == tgt.partitionColumns,
-      s"restore across a partitioning change is not supported at $root " +
+      s"restore across a partitioning change is not supported at ${log.root} " +
         s"(${tgt.partitionColumns.mkString(",")} -> ${cur.partitionColumns.mkString(",")})")
     val curByPath = cur.adds.map(a => a.path -> a).toMap
     val tgtPaths = tgt.adds.map(_.path).toSet
-    val removes = cur.adds.collect { case a if !tgtPaths(a.path) =>
-      s"""{"remove":{"path":${jpath(a.path)},"dataChange":true}}"""
-    }
+    val removes = cur.adds.collect { case a if !tgtPaths(a.path) => removeLine(a.path, dataChange = true) }
     // re-add a file that is (a) absent from the current state, or
     // (b) live but with a DIFFERENT deletion-vector descriptor — a
     // DV added after the target version must roll back too, and the
     // re-add (with the target's descriptor, possibly none) is what
     // restores the pre-DV rows
     val adds = tgt.adds.collect {
-      case a if !curByPath.contains(a.path) || curByPath(a.path).dv != a.dv =>
-        val pvJson = a.partitionValues
-          .map { case (k, v) => s"${jstr(k)}: ${jstr(v)}" }.mkString("{", ", ", "}")
-        s"""{"add":{"path":${jpath(a.path)},"size":${a.size},"partitionValues":$pvJson,"dataChange":true""" +
-          a.stats.map(s => s""","stats":${jstr(s)}""").getOrElse("") +
-          a.dv.map(d => s""","deletionVector":{"storagePath":${jpath(d)}}""").getOrElse("") + "}}"
+      case a if !curByPath.contains(a.path) || curByPath(a.path).dv != a.dv => addLine(a)
     }
     val metaLine =
       if (cur.schemaString == tgt.schemaString) Nil
-      else tgt.schemaString.toSeq.map { ss =>
-        s"""{"metaData":{"id":${jstr(java.util.UUID.nameUUIDFromBytes(root.getBytes("UTF-8")).toString)},""" +
-          s""""format":{"provider":"parquet"},"schemaString":${jstr(ss)},""" +
-          s""""partitionColumns":[${tgt.partitionColumns.map(jstr).mkString(", ")}]}}"""
-      }
-    val body = (metaLine ++ removes ++ adds).mkString("", "\n", "\n")
-    val conf = org.apache.spark.sql.graft.Shim.classic(spark)
-      .sparkContext.hadoopConfiguration
-    val logDir = new Path(s"$root/_delta_log")
-    val fs = logDir.getFileSystem(conf)
+      else tgt.schemaString.map(metaDataLine(log.root, _, tgt.partitionColumns)).toSeq
     val version = cur.version + 1
-    val dst = new Path(logDir, f"${version}%020d.json")
-    if (!Publish(fs, dst, body, () => ())) {
-      throw new IllegalStateException(
-        s"restore lost the publish race at $dst — re-resolve and retry the restore")
-    }
-    stateCache.remove(root) // schema may have flipped; next commit re-resolves
+    publish(log, version,
+      protocolLine(tgt.dvsLive, tgt.schema.exists(isMapped)) +: (metaLine ++ removes ++ adds),
+      Some((tgt.dataSchema, tgt.partitionColumns)))
     version
   }
 
@@ -690,53 +646,26 @@ object DeltaLogWriter {
     * restore) re-adds it without the descriptor, retiring the DV —
     * the protocol's own lifecycle. The sidecar is a parquet of
     * `(file_path, pos)` rows (this engine's simplified descriptor;
-    * real Delta packs a roaring bitmap, same semantics). Returns the
-    * committed version.
+    * real Delta packs a roaring bitmap, same semantics). The commit
+    * carries the DV protocol gate ([[protocolLine]], ADVICE r12).
+    * Returns the committed version.
     */
   def commitDeletionVectors(spark: SparkSession, location: String,
       dvByFile: Map[String, String]): Long = {
     require(dvByFile.nonEmpty, "commitDeletionVectors needs at least one (file -> DV) pair")
-    val root = location.stripSuffix("/")
     val resolver = new DeltaLogResolver(spark)
-    val cur = resolver.rawState(root, 0).getOrElse(
+    val log = resolver.listLog(location)
+    val cur = resolver.stateAt(log, 0).getOrElse(
       throw new IllegalStateException(
         s"cannot attach deletion vectors at $location: no Delta log"))
     val byPath = cur.adds.map(a => a.path -> a).toMap
-    // Protocol gate (ADVICE r12): the descriptor here is engine-shaped
-    // (storagePath -> parquet positions sidecar), NOT the spec's
-    // roaring-bitmap DV, so a protocol-following external reader must
-    // REFUSE the table rather than silently resurrect deleted rows.
-    // Delta's table-features rule does exactly that for an unknown
-    // reader feature: minReaderVersion 3 forces feature evaluation and
-    // readers without `graft.parquetDeletionVectors` fail loudly.
-    // (Claiming the standard `deletionVectors` feature would be worse:
-    // DV-capable readers would then mis-parse the sidecar descriptor.)
-    // Emitted on EVERY DV commit — protocol actions replace prior ones
-    // on replay, so repetition is idempotent and needs no state.
-    val protocolLine =
-      """{"protocol":{"minReaderVersion":3,"minWriterVersion":7,""" +
-        s""""readerFeatures":[${jstr(DvFeatureName)}],"writerFeatures":[${jstr(DvFeatureName)}]}}"""
-    val lines = protocolLine +: dvByFile.toSeq.sortBy(_._1).map { case (p, dv) =>
-      val a = byPath.getOrElse(p, throw new IllegalArgumentException(
-        s"deletion vector targets $p, which is not a live file of $root"))
-      val pvJson = a.partitionValues
-        .map { case (k, v) => s"${jstr(k)}: ${jstr(v)}" }.mkString("{", ", ", "}")
-      s"""{"add":{"path":${jpath(a.path)},"size":${a.size},"partitionValues":$pvJson,"dataChange":true""" +
-        a.stats.map(s => s""","stats":${jstr(s)}""").getOrElse("") +
-        s""","deletionVector":{"storagePath":${jpath(dv)}}}}"""
+    val adds = dvByFile.toSeq.sortBy(_._1).map { case (p, dv) =>
+      addLine(byPath.getOrElse(p, throw new IllegalArgumentException(
+        s"deletion vector targets $p, which is not a live file of ${log.root}")).copy(dv = Some(dv)))
     }
-    val conf = org.apache.spark.sql.graft.Shim.classic(spark)
-      .sparkContext.hadoopConfiguration
-    val logDir = new Path(s"$root/_delta_log")
-    val fs = logDir.getFileSystem(conf)
     val version = cur.version + 1
-    val dst = new Path(logDir, f"${version}%020d.json")
-    if (!Publish(fs, dst, lines.mkString("", "\n", "\n"), () => ())) {
-      throw new IllegalStateException(
-        s"deletion-vector commit lost the publish race at $dst — its read-set " +
-          "(the live state the positions were computed against) may be invalid; " +
-          "re-resolve and retry")
-    }
+    publish(log, version, protocolLine(dvsLive = true, cur.schema.exists(isMapped)) +: adds,
+      Some((cur.dataSchema, cur.partitionColumns)))
     version
   }
 
@@ -756,41 +685,22 @@ object DeltaLogWriter {
     */
   def shallowClone(spark: SparkSession, source: String, target: String,
       versionOffset: Int = 0): Int = {
-    val src = source.stripSuffix("/")
-    val dst = target.stripSuffix("/")
-    val st = new DeltaLogResolver(spark).rawState(src, versionOffset).getOrElse(
+    val resolver = new DeltaLogResolver(spark)
+    val st = resolver.rawState(source, versionOffset).getOrElse(
       throw new IllegalArgumentException(s"cannot clone $source: no Delta log"))
     val ss = st.schemaString.getOrElse(throw new IllegalStateException(
       s"cannot clone $source: no schema in the log"))
-    val srcRoot = new Path(src).toUri.getPath
-    val adds = st.adds.sortBy(_.path).map { a =>
-      def abs(p: String) =
-        if (p.contains("://") || p.startsWith("/")) p else s"$srcRoot/$p"
-      val pvJson = a.partitionValues
-        .map { case (k, v) => s"${jstr(k)}: ${jstr(v)}" }.mkString("{", ", ", "}")
-      s"""{"add":{"path":${jpath(abs(a.path))},"size":${a.size},"partitionValues":$pvJson,"dataChange":true""" +
-        a.stats.map(s => s""","stats":${jstr(s)}""").getOrElse("") +
-        // the clone borrows the source's deletion vectors by absolute
-        // path too — same vacuum-coordination caveat as the data
-        a.dv.map(d => s""","deletionVector":{"storagePath":${jpath(abs(d))}}""").getOrElse("") + "}}"
-    }
-    val meta =
-      s"""{"metaData":{"id":${jstr(java.util.UUID.nameUUIDFromBytes(dst.getBytes("UTF-8")).toString)},""" +
-        s""""format":{"provider":"parquet"},"schemaString":${jstr(ss)},""" +
-        s""""partitionColumns":[${st.partitionColumns.map(jstr).mkString(", ")}]}}"""
-    val conf = org.apache.spark.sql.graft.Shim.classic(spark)
-      .sparkContext.hadoopConfiguration
-    val logDir = new Path(s"$dst/_delta_log")
-    val fs = logDir.getFileSystem(conf)
-    require(!fs.exists(new Path(logDir, f"${0L}%020d.json")),
-      s"clone target $target already holds a Delta log")
-    fs.mkdirs(logDir)
-    val body = (meta +: adds).mkString("", "\n", "\n")
-    val out = new Path(logDir, f"${0L}%020d.json")
-    if (!Publish(fs, out, body, () => ())) {
-      throw new IllegalStateException(
-        s"clone lost the publish race at $out — another writer created the table")
-    }
+    val log = resolver.listLog(target)
+    require(log.latest.isEmpty, s"clone target $target already holds a Delta log")
+    val srcRoot = new Path(source.stripSuffix("/")).toUri.getPath
+    def abs(p: String) = if (p.contains("://") || p.startsWith("/")) p else s"$srcRoot/$p"
+    // the clone borrows the source's deletion vectors by absolute path
+    // too — same vacuum-coordination caveat as the data
+    val adds = st.adds.sortBy(_.path).map(a => addLine(a.copy(path = abs(a.path), dv = a.dv.map(abs))))
+    publish(log, 0L,
+      Seq(protocolLine(st.dvsLive, st.schema.exists(isMapped)),
+        metaDataLine(log.root, ss, st.partitionColumns)) ++ adds,
+      Some((st.dataSchema, st.partitionColumns)))
     adds.size
   }
 
@@ -801,8 +711,9 @@ object DeltaLogWriter {
     */
   def maybeCheckpoint(spark: SparkSession, location: String, every: Int): Option[Long] = {
     require(every > 0, s"checkpoint interval must be positive: $every")
-    val latest = new DeltaLogResolver(spark).latestVersion(location)
-    latest.filter(v => v > 0 && v % every == 0).map(_ => checkpoint(spark, location))
+    val resolver = new DeltaLogResolver(spark)
+    val log = resolver.listLog(location)
+    log.latest.filter(v => v > 0 && v % every == 0).map(_ => checkpointOf(spark, resolver, log))
   }
 
   /** Footer-derived stats JSON for one data file: numRecords always;
@@ -857,92 +768,86 @@ private[listing] final case class DeltaAdd(path: String, size: Long,
 /** Fully replayed Delta state at one version: the raw protocol-level
   * facts a checkpoint must persist (schema JSON, partition columns,
   * live adds with their original stats strings, txn high-water
-  * marks per appId).
+  * marks per appId), and what the writer decides from them.
   */
 private[listing] final case class RawDeltaState(version: Long,
     schemaString: Option[String], partitionColumns: Seq[String],
     adds: Seq[DeltaAdd],
-    txns: Map[String, Long])
+    txns: Map[String, Long]) {
+  /** The declared table schema, partition columns included. */
+  lazy val schema: Option[StructType] = schemaString.flatMap(DeltaLogResolver.parseSchema)
+  def dataSchema: Option[StructType] = schema.map(DeltaLogResolver.dataSchema(_, partitionColumns))
+  def dvsLive: Boolean = adds.exists(_.dv.isDefined)
+}
+
+/** One listing of a table's `_delta_log`: the commit JSONs and
+  * checkpoint parts by version, the `FileSystem` that holds them, and
+  * the log's identity for the replay memo. Every reader and writer
+  * step that needs a version starts from one of these.
+  */
+private[listing] final case class DeltaLogListing(root: String, logDir: Path, fs: FileSystem,
+    commits: Seq[(Long, Path)], checkpoints: Map[Long, Seq[Path]], identity: String) {
+  /** Latest version, or None for a missing/empty log. A checkpoint
+    * with every prefix commit cleaned away still names its version —
+    * a checkpoint IS that version's state — so the sequence continues
+    * from it, never restarts.
+    */
+  def latest: Option[Long] = (commits.map(_._1) ++ checkpoints.keys).maxOption
+  def next: Long = latest.fold(0L)(_ + 1)
+  def commitPath(version: Long): Path = new Path(logDir, f"$version%020d.json")
+}
+
+object DeltaLogResolver {
+  private val CommitRe = """(\d{20})\.json""".r
+  private val CheckpointRe = """(\d{20})\.checkpoint(?:\.\d+\.\d+)?\.parquet""".r
+
+  /** A `schemaString`, or None when it does not parse as a struct. */
+  def parseSchema(json: String): Option[StructType] =
+    try DataType.fromJson(json) match {
+      case s: StructType => Some(s)
+      case _             => None
+    } catch { case _: Exception => None }
+
+  /** The DATA schema of a table schema: partition columns (part of
+    * the table schema per the protocol, but never present in data
+    * files) are excluded; they return as partition columns of the scan.
+    */
+  private[listing] def dataSchema(schema: StructType, partitionColumns: Seq[String]): StructType = {
+    val pc = partitionColumns.map(_.toLowerCase).toSet
+    StructType(schema.filterNot(f => pc.contains(f.name.toLowerCase)))
+  }
+}
 
 final class DeltaLogResolver(spark: SparkSession) {
+  import DeltaLogResolver._
   private val mapper = new ObjectMapper()
   private def hadoopConf =
     org.apache.spark.sql.graft.Shim.classic(spark).sparkContext.hadoopConfiguration
 
-  private val CommitRe = """(\d{20})\.json""".r
-  private val CheckpointRe = """(\d{20})\.checkpoint(?:\.\d+\.\d+)?\.parquet""".r
-
-  /** Latest version, or None for a missing/empty log. A checkpoint
-    * with every prefix commit cleaned away still names its version —
-    * a checkpoint IS that version's state.
-    */
-  def latestVersion(location: String): Option[Long] = {
-    val (_, commits, checkpoints, _) = listLog(location)
-    (commits.map(_._1) ++ checkpoints.keys).maxOption
-  }
+  /** Latest version, or None for a missing/empty log. */
+  def latestVersion(location: String): Option[Long] = listLog(location).latest
 
   /** Highest `txn` version recorded for `appId` — the reader half of
     * the streaming-sink idempotence protocol
-    * ([[DeltaLogWriter.commitWith]]'s `txn`). Checkpoints persist
-    * the per-app high-water marks, so log cleanup never shrinks the
-    * sink's replay-detection horizon.
+    * ([[DeltaLogWriter.commitTxn]]). Checkpoints persist the per-app
+    * high-water marks, so log cleanup never shrinks the sink's
+    * replay-detection horizon.
     */
   def lastTxnVersion(location: String, appId: String): Option[Long] =
     rawState(location, 0).flatMap(_.txns.get(appId))
 
-  /** Table DATA schema at a version, straight from the log's
-    * metaData action — authoritative under schema evolution, where
-    * single-file inference would silently drop every column added
-    * after that file was written (old files read back with nulls in
-    * the new columns, the standard additive-evolution contract).
-    * Partition columns (part of the table schema per the protocol,
-    * but never present in data files) are excluded; they return as
-    * partition columns of the scan.
-    */
-  def dataSchemaAt(location: String, versionOffset: Int = 0): Option[StructType] =
-    rawState(location, versionOffset).flatMap(dataSchemaOf)
-
-  private def dataSchemaOf(st: RawDeltaState): Option[StructType] =
-    st.schemaString.flatMap(parseSchema).map { s =>
-      val pc = st.partitionColumns.map(_.toLowerCase).toSet
-      StructType(s.filterNot(f => pc.contains(f.name.toLowerCase)))
-    }
-
-  /** Commit-time prior state in ONE log replay: (data schema if the
-    * log declares one, partition columns). The writer needs both —
-    * resolving them separately would replay the log twice per
-    * commit.
-    */
-  private[listing] def commitState(location: String)
-      : Option[(Option[StructType], Seq[String])] =
-    rawState(location, 0).map(st => (dataSchemaOf(st), st.partitionColumns))
-
   /** Live data files of the selected version (latest − offset). */
   def dataFilesDetailed(location: String, versionOffset: Int = 0): Seq[DeltaDataFile] =
-    filesAndDeletionVectors(location, versionOffset)._1
+    versionAt(location, versionOffset)._1
 
-  /** Live deletion-vector descriptors of the selected version:
-    * data-file path → DV sidecar path, for every add that carries
-    * one. Empty for a DV-free table — the common case, and the read
-    * path's fast path.
-    */
-  def deletionVectors(location: String, versionOffset: Int = 0): Map[String, String] =
-    filesAndDeletionVectors(location, versionOffset)._2
-
-  /** Files AND DV descriptors from ONE log replay (ADVICE r12: the
-    * listing build needs both, and calling the two getters above
-    * separately replayed the full log — or re-read the checkpoint —
-    * twice per cold build).
-    */
-  def filesAndDeletionVectors(location: String,
-      versionOffset: Int = 0): (Seq[DeltaDataFile], Map[String, String]) = {
-    val (files, dvs, _) = versionAt(location, versionOffset)
-    (files, dvs)
-  }
-
-  /** [[filesAndDeletionVectors]] plus [[dataSchemaAt]], from one log
-    * listing and one replay — everything a reader's snapshot of the
-    * version holds.
+  /** Everything a reader's snapshot of the version holds, from one log
+    * listing and one replay: the live data files, the live
+    * deletion-vector descriptors (data-file path → DV sidecar path;
+    * empty for a DV-free table, the read path's fast path) and the
+    * data schema. The schema comes from the log's metaData action —
+    * authoritative under schema evolution, where single-file
+    * inference would silently drop every column added after that
+    * file was written.
     */
   def versionAt(location: String, versionOffset: Int = 0)
       : (Seq[DeltaDataFile], Map[String, String], Option[StructType]) = {
@@ -951,20 +856,15 @@ final class DeltaLogResolver(spark: SparkSession) {
     // stats carry the parquet column names, and the read path's
     // skipping tier evaluates pushed predicates against the physical
     // scan schema (identical to logical for unmapped tables)
-    val schema = st.schemaString.flatMap(parseSchema).map { sc =>
-      StructType(sc.fields.map { f =>
-        val p = if (f.metadata.contains(DeltaLogWriter.PhysNameKey))
-          f.metadata.getString(DeltaLogWriter.PhysNameKey) else f.name
-        f.copy(name = p)
-      })
-    }
+    val schema = st.schema.map(sc =>
+      StructType(sc.fields.map(f => f.copy(name = DeltaLogWriter.physicalName(f)))))
     val files = st.adds.map { a =>
       DeltaDataFile(a.path, a.size, a.partitionValues,
         a.stats.flatMap(s => schema.map(boundsOf(s, _))).getOrElse(Map.empty),
         a.stats.flatMap(numRecordsOf))
     }.sortBy(_.path)
     val dvs = st.adds.collect { case a if a.dv.isDefined => a.path -> a.dv.get }.toMap
-    (files, dvs, dataSchemaOf(st))
+    (files, dvs, st.dataSchema)
   }
 
   /** `stats.numRecords` of one add action — unparseable/absent is
@@ -981,11 +881,13 @@ final class DeltaLogResolver(spark: SparkSession) {
     * version is unreconstructible, and silence there would mean
     * silently dropping data.
     */
-  private[listing] def rawState(location: String, versionOffset: Int): Option[RawDeltaState] = {
+  private[listing] def rawState(location: String, versionOffset: Int): Option[RawDeltaState] =
+    stateAt(listLog(location), versionOffset)
+
+  /** State of `log` at its latest version minus `versionOffset`. */
+  private[listing] def stateAt(log: DeltaLogListing, versionOffset: Int): Option[RawDeltaState] = {
     require(versionOffset >= 0, s"versionOffset must be >= 0: $versionOffset")
-    val (logDir, commits, checkpoints, logId) = listLog(location)
-    val latest = (commits.map(_._1) ++ checkpoints.keys).maxOption.getOrElse(return None)
-    val target = latest - versionOffset
+    val target = log.latest.getOrElse(return None) - versionOffset
     if (target < 0) return None
     // MEMOIZE the replay per (root, log identity, resolved version):
     // a cold listing build needs the state twice (files+DVs, then the
@@ -996,9 +898,9 @@ final class DeltaLogResolver(spark: SparkSession) {
     // so a short-TTL LRU is sound; the identity component (oldest
     // commit's mtime+len) keeps a deleted-and-recreated log at the
     // same location from serving the old table's state (ADVICE r14).
-    Some(replayCache.get(s"${location.stripSuffix("/")}#$logId#v$target") {
+    Some(replayCache.get(s"${log.root}#${log.identity}#v$target") {
       replayCount += 1
-      replay(location.stripSuffix("/"), logDir, commits, checkpoints, target)
+      replay(log, target)
     })
   }
 
@@ -1008,17 +910,17 @@ final class DeltaLogResolver(spark: SparkSession) {
   private val replayCache =
     new graft.cache.TtlCache[RawDeltaState](maxEntries = 16, ttlMs = 5 * 60 * 1000L)
 
-  private def replay(root: String, logDir: Path, commits: Seq[(Long, Path)],
-      checkpoints: Map[Long, Seq[Path]], target: Long): RawDeltaState = {
+  private def replay(log: DeltaLogListing, target: Long): RawDeltaState = {
+    val root = log.root
     // mutable replay state: path -> (size, partitionValues, stats, dvPath)
     val live = scala.collection.mutable.LinkedHashMap.empty[String, (Long, Map[String, String], String, String)]
     val txns = scala.collection.mutable.LinkedHashMap.empty[String, Long]
     var schemaString: Option[String] = None
     var partitionColumns: Seq[String] = Nil
 
-    val cpVer = checkpoints.keySet.filter(_ <= target).maxOption
+    val cpVer = log.checkpoints.keySet.filter(_ <= target).maxOption
     cpVer.foreach { v =>
-      val df = spark.read.parquet(checkpoints(v).map(_.toString): _*)
+      val df = spark.read.parquet(log.checkpoints(v).map(_.toString): _*)
       if (df.columns.contains("metaData")) {
         val metaCols = df.select("metaData.*").columns.toSet
         val m = df.filter(col("metaData").isNotNull)
@@ -1034,10 +936,10 @@ final class DeltaLogResolver(spark: SparkSession) {
       if (df.columns.contains("add")) {
         val addCols = df.select("add.*").columns.toSet
         val hasStats = addCols.contains("stats")
-        val hasDv = addCols.contains("deletionVectorPath")
+        val hasDv = addCols.contains("deletionVector")
         val cols = Seq(col("add.path"), col("add.size"), col("add.partitionValues")) ++
           (if (hasStats) Seq(col("add.stats")) else Nil) ++
-          (if (hasDv) Seq(col("add.deletionVectorPath")) else Nil)
+          (if (hasDv) Seq(col("add.deletionVector.storagePath")) else Nil)
         df.filter(col("add").isNotNull).select(cols: _*).collect().foreach { r =>
           val pv = Option(r.getMap[String, String](2)).map(_.toMap).getOrElse(Map.empty)
           val st = if (hasStats && !r.isNullAt(3)) r.getString(3) else null
@@ -1050,7 +952,7 @@ final class DeltaLogResolver(spark: SparkSession) {
     }
 
     val base = cpVer.getOrElse(-1L)
-    val tail = commits.filter { case (v, _) => v > base && v <= target }
+    val tail = log.commits.filter { case (v, _) => v > base && v <= target }
     val expected = (base + 1) to target
     if (tail.map(_._1) != expected)
       throw new IllegalStateException(
@@ -1058,9 +960,8 @@ final class DeltaLogResolver(spark: SparkSession) {
           s"checkpoint ${cpVer.getOrElse("none")}, found ${tail.map(_._1).mkString(",")} — " +
           "a commit was cleaned away without a covering checkpoint")
 
-    val fs = logDir.getFileSystem(hadoopConf)
     tail.foreach { case (_, p) =>
-        val in = fs.open(p)
+        val in = log.fs.open(p)
         val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
         text.split('\n').iterator.map(_.trim).filter(_.nonEmpty).foreach { line =>
           val node = mapper.readTree(line)
@@ -1100,10 +1001,14 @@ final class DeltaLogResolver(spark: SparkSession) {
       txns.toMap)
   }
 
-  private def listLog(location: String): (Path, Seq[(Long, Path)], Map[Long, Seq[Path]], String) = {
-    val logDir = new Path(s"${location.stripSuffix("/")}/_delta_log")
+  /** The one listing of a table's log: every commit and checkpoint
+    * name is matched here, for readers and the writer alike.
+    */
+  private[listing] def listLog(location: String): DeltaLogListing = {
+    val root = location.stripSuffix("/")
+    val logDir = new Path(s"$root/_delta_log")
     val fs = logDir.getFileSystem(hadoopConf)
-    if (!fs.exists(logDir)) return (logDir, Nil, Map.empty, "")
+    if (!fs.exists(logDir)) return DeltaLogListing(root, logDir, fs, Nil, Map.empty, "")
     val statuses = fs.listStatus(logDir).toSeq
     val commits = statuses.flatMap { s =>
       s.getPath.getName match {
@@ -1136,7 +1041,7 @@ final class DeltaLogResolver(spark: SparkSession) {
       }
       s"${sig(commits.minBy(_._1))}|${sig(commits.maxBy(_._1))}|n${commits.size}"
     }
-    (logDir, commits, checkpoints, identity)
+    DeltaLogListing(root, logDir, fs, commits, checkpoints, identity)
   }
 
   /** `add.path` is URL-encoded and relative to the table root unless
@@ -1153,12 +1058,6 @@ final class DeltaLogResolver(spark: SparkSession) {
     if (decoded.contains("://") || decoded.startsWith("/")) decoded
     else s"$root/$decoded"
   }
-
-  private def parseSchema(json: String): Option[StructType] =
-    try DataType.fromJson(json) match {
-      case s: StructType => Some(s)
-      case _             => None
-    } catch { case _: Exception => None }
 
   /** Decode one add-action `stats` JSON into per-column ranges, typed
     * by the table schema so they compare directly against pushed

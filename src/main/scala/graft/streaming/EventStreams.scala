@@ -596,19 +596,14 @@ object EventStreams {
 
   /** Commit one micro-batch into a Delta table IFF its (appId,
     * batchId) txn hasn't already committed — the Delta streaming-sink
-    * idempotence protocol. Returns true when a commit happened, false
-    * for a recognized replay.
+    * idempotence protocol ([[graft.listing.DeltaLogWriter.commitTxn]]
+    * checks the mark against the state its publish validates).
+    * Returns true when a commit happened, false for a recognized
+    * replay.
     */
   def commitDeltaBatchIdempotent(df: DataFrame, location: String,
-      appId: String, batchId: Long): Boolean = {
-    val resolver = new graft.listing.DeltaLogResolver(df.sparkSession)
-    if (resolver.lastTxnVersion(location, appId).exists(_ >= batchId)) false
-    else {
-      graft.listing.DeltaLogWriter.commitWith(
-        df.sparkSession, location, df, Nil, Nil, txn = Some((appId, batchId)))
-      true
-    }
-  }
+      appId: String, batchId: Long): Boolean =
+    graft.listing.DeltaLogWriter.commitTxn(df.sparkSession, location, df, appId, batchId).nonEmpty
 
   /** Streaming Delta sink with EXACTLY-ONCE table contents: each
     * micro-batch commits through [[commitDeltaBatchIdempotent]], so a

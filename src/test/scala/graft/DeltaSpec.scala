@@ -8,6 +8,8 @@ import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import scala.jdk.CollectionConverters._
+
 /** Delta transaction-log resolution (graft.listing.DeltaLogResolver)
   * — the beyond-reference table type (the reference's classifier
   * declares DELTA but can never return it, src/util/glue.ts:13-19):
@@ -403,8 +405,8 @@ class DeltaSpec extends AnyFunSuite {
     val loc = TestSpark.scratch("delta_cpw")
     val w1 = (0L until 100L).map(i => (i, s"a$i")).toDF("x", "s").coalesce(1)
     val w2 = (1000L until 1100L).map(i => (i, s"b$i")).toDF("x", "s").coalesce(1)
-    DeltaLogWriter.commitWith(spark, loc, w1, Nil, Nil, txn = Some(("sink", 7L)))
-    DeltaLogWriter.commitWith(spark, loc, w2, Nil, Nil, txn = Some(("sink", 9L)))
+    DeltaLogWriter.commitTxn(spark, loc, w1, "sink", 7L)
+    DeltaLogWriter.commitTxn(spark, loc, w2, "sink", 9L)
     val cpv = DeltaLogWriter.checkpoint(spark, loc)
     assert(cpv == 1L)
     assert(new java.io.File(s"$loc/_delta_log/00000000000000000001.checkpoint.parquet").isFile)
@@ -546,25 +548,35 @@ class DeltaSpec extends AnyFunSuite {
     val loc = TestSpark.scratch("delta_occ")
     DeltaLogWriter.commit(spark, loc, (0L until 10L).toDF("x").coalesce(1))
     DeltaLogWriter.commit(spark, loc, (10L until 20L).toDF("x").coalesce(1))
-    // forceVersion simulates the stale read of a lost race: this
-    // writer believes 1 is free, but versions 1 AND 2 are taken —
-    // a blind append retries forward and lands at 3
+    // a second writer commits between this writer's listing and its
+    // rename: the version it listed as free (2) is taken, and a blind
+    // append retries forward and lands at 3
+    var fired = false
+    def interleave(from: Long): () => Unit = () => if (!fired) {
+      fired = true
+      DeltaLogWriter.commit(spark, loc, (from until from + 10L).toDF("x").coalesce(1))
+    }
     val v = DeltaLogWriter.commitWith(spark, loc,
-      (20L until 30L).toDF("x").coalesce(1), Nil, Nil, forceVersion = Some(1L))
-    assert(v == 2L, s"append must land at the next free version, got $v")
-    assert(new DeltaLogResolver(spark).dataFilesDetailed(loc).size == 3)
+      (20L until 30L).toDF("x").coalesce(1), Nil, Nil, onBeforePublish = interleave(30L))
+    assert(fired)
+    assert(v == 3L, s"append must land at the next free version, got $v")
+    assert(new DeltaLogResolver(spark).dataFilesDetailed(loc).size == 4)
     assert(spark.read.parquet(
-      new DeltaLogResolver(spark).dataFilesDetailed(loc).map(_.path): _*).count() == 30)
+      new DeltaLogResolver(spark).dataFilesDetailed(loc).map(_.path): _*).count() == 40)
     // a remove-carrying commit must NOT blindly retry: its read-set
     // may have been invalidated by the winner — the conflict surfaces
     val victim = new DeltaLogResolver(spark).dataFilesDetailed(loc).head.path
+    fired = false
     val e = intercept[IllegalStateException] {
       DeltaLogWriter.commitWith(spark, loc, (90L until 95L).toDF("x").coalesce(1),
-        Nil, removePaths = Seq(victim), forceVersion = Some(1L))
+        Nil, removePaths = Seq(victim), onBeforePublish = interleave(40L))
     }
+    assert(fired)
     assert(e.getMessage.contains("not blindly retryable"))
-    assert(new DeltaLogResolver(spark).dataFilesDetailed(loc).size == 3,
+    val after = new DeltaLogResolver(spark).dataFilesDetailed(loc).map(_.path)
+    assert(after.size == 5 && after.contains(victim),
       "the failed conflicting commit must not have changed the table")
+    assert(spark.read.parquet(after: _*).count() == 50)
   }
 
   test("shallow clone: zero-copy read equality, independent evolution, loud on existing target") {
@@ -649,7 +661,7 @@ class DeltaSpec extends AnyFunSuite {
     assert(eng.tableDF("d", "dv").count() == 195,
       "compaction reads through the DV and bakes it into the rewrite")
     val resolver = new graft.listing.DeltaLogResolver(spark)
-    assert(resolver.deletionVectors(loc).isEmpty,
+    assert(resolver.versionAt(loc)._2.isEmpty,
       "the rewrite's re-adds must carry no deletion vectors")
   }
 
@@ -724,7 +736,7 @@ class DeltaSpec extends AnyFunSuite {
     assert(eng.tableDF("d", "dvc").count() == 40,
       "the checkpoint must persist the deletion-vector descriptor")
     val resolver = new graft.listing.DeltaLogResolver(spark)
-    assert(resolver.deletionVectors(loc).size == 1)
+    assert(resolver.versionAt(loc)._2.size == 1)
     // vacuum with only the current version retained must NOT reclaim
     // the live DV sidecar (that would resurrect the deleted rows)
     eng.appendDeltaTable((2000L until 2010L).toDF("x").coalesce(1), "d", "dvc")
@@ -843,6 +855,70 @@ class DeltaSpec extends AnyFunSuite {
     assert(p2.getInt(0) == 1)
   }
 
+  /** Every action line of a table's commit JSON at `version`. */
+  private def logActions(loc: String, version: Long): Seq[com.fasterxml.jackson.databind.JsonNode] = {
+    val text = scala.io.Source.fromFile(
+      new java.io.File(loc, f"_delta_log/$version%020d.json"), "UTF-8").mkString
+    val m = new com.fasterxml.jackson.databind.ObjectMapper()
+    text.split('\n').toSeq.filter(_.trim.nonEmpty).map(m.readTree)
+  }
+
+  test("schema commits after a DV delete keep the DV reader gate") {
+    import spark.implicits._
+    import graft.listing.DeltaLogWriter.DvFeatureName
+    val loc = TestSpark.scratch("delta_dvren")
+    val eng = new GlueTableEngine(spark, new FixtureCatalog())
+    eng.writeDeltaTable((0L until 30L).map(k => (k, s"p$k", k * 2)).toDF("k", "prio", "w")
+      .coalesce(1), "d", "dvr", loc)
+    eng.deleteDeltaWhereMor("d", "dvr", col("k") >= 25L)
+    // a rename and a drop re-declare the protocol; the DV-deleted rows
+    // are still hidden only by the sidecar, so neither may drop the gate
+    val renamed = eng.renameDeltaColumn("d", "dvr", "prio", "priority")
+    val dropped = eng.dropDeltaColumn("d", "dvr", "w")
+    for (v <- Seq(renamed, dropped)) {
+      val protos = logActions(loc, v).flatMap(n => Option(n.get("protocol")))
+      assert(protos.size == 1, s"commit $v: one protocol action expected")
+      val p = protos.head
+      assert(p.get("minReaderVersion").asInt == 3 && p.get("minWriterVersion").asInt == 7,
+        s"commit $v downgraded the protocol: $p")
+      for (k <- Seq("readerFeatures", "writerFeatures")) {
+        val feats = Option(p.get(k)).toSeq.flatMap(_.elements().asScala.map(_.asText)).toSet
+        assert(feats == Set(DvFeatureName, "columnMapping"), s"commit $v $k: $feats")
+      }
+    }
+    assert(eng.tableDF("d", "dvr").count() == 25)
+    assert(eng.tableDF("d", "dvr").columns.toSeq == Seq("k", "priority"))
+  }
+
+  test("every mapped metaData action carries the column-mapping mode, checkpoint included") {
+    import spark.implicits._
+    val loc = TestSpark.scratch("delta_cmmode")
+    val eng = new GlueTableEngine(spark, new FixtureCatalog())
+    eng.writeDeltaTable((0L until 20L).map(k => (k, s"p$k")).toDF("k", "prio").coalesce(1),
+      "d", "cmm", loc)                                                       // v0
+    eng.renameDeltaColumn("d", "cmm", "prio", "priority")                   // v1
+    eng.appendDeltaTable((20L until 25L).map(k => (k, s"p$k", k)).toDF("k", "priority", "extra")
+      .coalesce(1), "d", "cmm")                                             // v2: re-declares
+    eng.restoreDeltaTable("d", "cmm", 1)                                    // v3: back to v1's schema
+    val cpv = graft.listing.DeltaLogWriter.checkpoint(spark, loc)
+    assert(cpv == 3L)
+    val physKey = "delta.columnMapping.physicalName"
+    def modeOk(md: com.fasterxml.jackson.databind.JsonNode): Boolean =
+      !md.get("schemaString").asText.contains(physKey) ||
+        md.path("configuration").path("delta.columnMapping.mode").asText == "name"
+    val commitMeta = (0L to 3L).flatMap(v => logActions(loc, v).flatMap(n => Option(n.get("metaData"))))
+    assert(commitMeta.count(_.get("schemaString").asText.contains(physKey)) == 3,
+      "the rename, the additive append and the restore each re-declare a mapped schema")
+    assert(commitMeta.forall(modeOk), s"a mapped metaData lost the mode: $commitMeta")
+    val cp = new java.io.File(loc, f"_delta_log/$cpv%020d.checkpoint.parquet").toString
+    val m = new com.fasterxml.jackson.databind.ObjectMapper()
+    val cpMeta = spark.read.parquet(cp).filter(col("metaData").isNotNull)
+      .select(to_json(col("metaData"))).collect().map(r => m.readTree(r.getString(0))).toSeq
+    assert(cpMeta.size == 1 && cpMeta.head.get("schemaString").asText.contains(physKey))
+    assert(cpMeta.forall(modeOk), s"the checkpoint's metaData lost the mode: $cpMeta")
+    assert(eng.tableDF("d", "cmm").columns.toSeq == Seq("k", "priority"))
+  }
+
   test("one log replay serves a cold build's listing, DVs, and schema (verdict r13 #5)") {
     import spark.implicits._
     val loc = TestSpark.scratch("delta_memo")
@@ -850,17 +926,17 @@ class DeltaSpec extends AnyFunSuite {
       loc, (0L until 10L).map(i => (i, s"r$i")).toDF("k", "v").coalesce(1))
     val r = new graft.listing.DeltaLogResolver(spark)
     assert(r.replayCount == 0L)
-    // the cold listing build's exact call shape: files+DVs, then schema
-    val (files, dvs) = r.filesAndDeletionVectors(loc, 0)
+    // the cold listing build's exact call: files, DVs and schema
+    val (files, dvs, schema) = r.versionAt(loc, 0)
     assert(files.nonEmpty && dvs.isEmpty)
-    assert(r.dataSchemaAt(loc, 0).exists(_.fieldNames.toSeq == Seq("k", "v")))
+    assert(schema.exists(_.fieldNames.toSeq == Seq("k", "v")))
     assert(r.replayCount == 1L,
       s"cold build must replay the log ONCE, got ${r.replayCount}")
     // a new commit moves the resolved version -> a fresh replay (the
     // memo can never serve a stale table state)
     graft.listing.DeltaLogWriter.commit(spark,
       loc, Seq((100L, "x")).toDF("k", "v").coalesce(1))
-    assert(r.filesAndDeletionVectors(loc, 0)._1.size > files.size)
+    assert(r.versionAt(loc, 0)._1.size > files.size)
     assert(r.replayCount == 2L, "a new commit must invalidate the memo by key")
   }
 
@@ -870,7 +946,7 @@ class DeltaSpec extends AnyFunSuite {
     graft.listing.DeltaLogWriter.commit(spark,
       loc, (0L until 10L).map(i => (i, s"a$i")).toDF("k", "v").coalesce(1))
     val r = new graft.listing.DeltaLogResolver(spark)
-    val before = r.filesAndDeletionVectors(loc, 0)._1
+    val before = r.versionAt(loc, 0)._1
     assert(before.nonEmpty)
     // delete the table and recreate it at the SAME location, reaching
     // the SAME version number within the memo's TTL: the key's log
@@ -882,7 +958,7 @@ class DeltaSpec extends AnyFunSuite {
     Thread.sleep(5) // local-fs mtime is millisecond-resolution
     graft.listing.DeltaLogWriter.commit(spark,
       loc, (0L until 3L).map(i => (i, s"b$i")).toDF("k", "v").coalesce(1))
-    val after = r.filesAndDeletionVectors(loc, 0)._1
+    val after = r.versionAt(loc, 0)._1
     assert(after.map(_.path).toSet != before.map(_.path).toSet,
       "recreated log at the same (location, version) must not serve the old file list")
     assert(after.size == spark.read.parquet(after.map(_.path): _*).inputFiles.length)

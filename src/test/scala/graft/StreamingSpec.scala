@@ -420,6 +420,37 @@ class StreamingSpec extends AnyFunSuite {
     assert(onDisk == referenced.map(p => new org.apache.hadoop.fs.Path(p).toUri.getPath).sorted)
   }
 
+  test("delta txn commit: two CONCURRENT writers replaying one batch append it once") {
+    import spark.implicits._
+    import graft.listing.DeltaLogWriter
+    val loc = TestSpark.scratch("race_delta")
+    val batch = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
+    assert(DeltaLogWriter.commitTxn(spark, loc,
+      Seq((0L, "z")).toDF("id", "v"), "race-app", 0L).nonEmpty)
+    // writer B passes the replay check, and BEFORE B's rename-CAS
+    // writer A commits the SAME batch: B must lose the CAS, re-read
+    // the head, see A's mark and abort as a replay
+    var fired = false
+    val b = DeltaLogWriter.commitTxn(spark, loc, batch, "race-app", 1L,
+      onBeforePublish = () => {
+        if (!fired) {
+          fired = true
+          assert(DeltaLogWriter.commitTxn(spark, loc, batch, "race-app", 1L).nonEmpty,
+            "writer A (the interleaved winner) must commit")
+        }
+      })
+    assert(fired)
+    assert(b.isEmpty, "writer B must recognize the replay after losing the CAS")
+    val conf = org.apache.spark.sql.graft.Shim.classic(spark).sparkContext.hadoopConfiguration
+    val referenced = new graft.listing.DeltaLogResolver(spark).dataFilesDetailed(loc).map(_.path)
+    val ids = spark.read.parquet(referenced: _*)
+      .select("id").collect().map(_.getLong(0)).toSeq.sorted
+    assert(ids == Seq(0L, 1L, 2L), "the raced batch must appear exactly once")
+    // B's abort deleted its never-published data files
+    val onDisk = walkParquet(conf, loc).filterNot(_.contains("/_delta_log/")).sorted
+    assert(onDisk == referenced.map(p => new org.apache.hadoop.fs.Path(p).toUri.getPath).sorted)
+  }
+
   test("CMS sketch: stream grid equals batch grid; estimates never undercount") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
