@@ -936,10 +936,15 @@ final class DeltaLogResolver(spark: SparkSession) {
       if (df.columns.contains("add")) {
         val addCols = df.select("add.*").columns.toSet
         val hasStats = addCols.contains("stats")
-        val hasDv = addCols.contains("deletionVector")
+        // the descriptor as commit lines carry it, or the flat column
+        // of checkpoints written before the checkpoint reused them —
+        // a DV dropped on read would resurrect its deleted rows
+        val dvCol = Seq("deletionVector" -> "add.deletionVector.storagePath",
+          "deletionVectorPath" -> "add.deletionVectorPath")
+          .collectFirst { case (c, path) if addCols.contains(c) => col(path) }
+        val hasDv = dvCol.isDefined
         val cols = Seq(col("add.path"), col("add.size"), col("add.partitionValues")) ++
-          (if (hasStats) Seq(col("add.stats")) else Nil) ++
-          (if (hasDv) Seq(col("add.deletionVector.storagePath")) else Nil)
+          (if (hasStats) Seq(col("add.stats")) else Nil) ++ dvCol
         df.filter(col("add").isNotNull).select(cols: _*).collect().foreach { r =>
           val pv = Option(r.getMap[String, String](2)).map(_.toMap).getOrElse(Map.empty)
           val st = if (hasStats && !r.isNullAt(3)) r.getString(3) else null

@@ -745,6 +745,33 @@ class DeltaSpec extends AnyFunSuite {
       s"vacuum deleted a live sidecar (reclaimed: $deleted)")
   }
 
+  test("a checkpoint holding the older flat DV column still hides the deleted rows") {
+    import spark.implicits._
+    val loc = TestSpark.scratch("delta_dvcp_flat")
+    val eng = new GlueTableEngine(spark, new FixtureCatalog())
+    eng.writeDeltaTable((0L until 50L).toDF("x").coalesce(1), "d", "dvf", loc)
+    eng.deleteDeltaWhereMor("d", "dvf", col("x") >= 40L)
+    val v = graft.listing.DeltaLogWriter.checkpoint(spark, loc)
+    // rewrite the checkpoint in the form earlier writers used: the DV
+    // sidecar as a flat `add.deletionVectorPath` string
+    val hfs = new org.apache.hadoop.fs.Path(loc).getFileSystem(
+      org.apache.spark.sql.graft.Shim.classic(spark).sparkContext.hadoopConfiguration)
+    val cp = new org.apache.hadoop.fs.Path(f"$loc/_delta_log/$v%020d.checkpoint.parquet")
+    val tmp = TestSpark.scratch("delta_dvcp_flat_tmp")
+    spark.read.parquet(cp.toString).withColumn("add", when(col("add").isNotNull, struct(
+      col("add.path"), col("add.size"), col("add.partitionValues"), col("add.dataChange"),
+      col("add.stats"), col("add.deletionVector.storagePath").as("deletionVectorPath"))))
+      .coalesce(1).write.parquet(tmp)
+    val part = hfs.listStatus(new org.apache.hadoop.fs.Path(tmp)).map(_.getPath)
+      .find(_.getName.endsWith(".parquet")).get
+    hfs.delete(cp, false)
+    assert(hfs.rename(part, cp))
+    graft.listing.DeltaLogWriter.cleanupLog(spark, loc)
+    eng.invalidateTable("d", "dvf")
+    assert(new graft.listing.DeltaLogResolver(spark).versionAt(loc)._2.size == 1)
+    assert(eng.tableDF("d", "dvf").count() == 40)
+  }
+
   test("column mapping: rename is metadata-only; appends, skipping, and travel hold") {
     import spark.implicits._
     val loc = TestSpark.scratch("delta_ren")
